@@ -20,7 +20,7 @@ from nyc_open_data_pipeline_spark.serving import (
 )
 
 
-def create_app(spark, storage_root: str, commit: str = "swap"):
+def create_app(spark, storage_root: str):
     try:
         from fastapi import FastAPI, Response
         from fastapi.middleware.cors import CORSMiddleware
@@ -34,7 +34,7 @@ def create_app(spark, storage_root: str, commit: str = "swap"):
             "storage_root)) would serve live"
         ) from e
 
-    storage = ParquetStorage(storage_root, commit=commit)
+    storage = ParquetStorage(storage_root)
     app = FastAPI(title="nyc-open-data-pipeline-spark")
     app.add_middleware(
         CORSMiddleware, allow_origins=["*"], allow_methods=["GET"], allow_headers=["*"]

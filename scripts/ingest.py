@@ -27,13 +27,6 @@ def main() -> int:
     ap.add_argument("--dry-run", action="store_true")
     ap.add_argument("--force", action="store_true", help="re-download cached files")
     ap.add_argument("--filter", default=None, help="JSON filter dict pushed to source")
-    ap.add_argument(
-        "--commit-mode",
-        choices=["swap", "pointer"],
-        default="swap",
-        help="table publish protocol: swap = POSIX/HDFS atomic directory "
-        "rename; pointer = object-store-portable manifest flip (S3-safe)",
-    )
     args = ap.parse_args()
 
     logging.basicConfig(level=logging.INFO)
@@ -47,7 +40,7 @@ def main() -> int:
 
     spark = get_spark("ingest")
     register_data_sources(spark)
-    storage = ParquetStorage(args.storage_root, commit=args.commit_mode)
+    storage = ParquetStorage(args.storage_root)
 
     registry = load_registry(args.registry)
     keys = (
@@ -70,6 +63,11 @@ def main() -> int:
                 spark, cfg, storage, filters=filters, dry_run=args.dry_run, force=args.force
             )
             print(f"{key}: {res.status} records={res.record_count} stored={res.stored_count}")
+            if res.status == "success":
+                # a commit leaves the segments it superseded on disk until
+                # vacuum; sweep them so the warehouse does not grow per run
+                storage.vacuum(entry.table_name)
+                storage.vacuum(storage.META_TABLE)
         except Exception as e:  # keep going on 'all' (reference :180-210)
             logging.exception("%s failed: %s", key, e)
             rc = 1

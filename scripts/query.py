@@ -27,21 +27,12 @@ def main() -> int:
     ap.add_argument("--sf-dir", default=None, help="testdata-style dir of <name>.parquet")
     ap.add_argument("--storage-root", default=None, help="engine ParquetStorage root")
     ap.add_argument(
-        "--commit-mode",
-        choices=["swap", "pointer"],
-        default="swap",
-        help="how --storage-root tables were published (must match the "
-        "ingest CLI's --commit-mode; pointer tables resolve through the "
-        "manifest, not a bare parquet read)",
-    )
-    ap.add_argument(
         "--as-of",
         type=int,
         default=None,
         metavar="GEN",
         help="time-travel: resolve every --storage-root table at this "
-        "retained generation (commit-mode pointer only; see "
-        "ParquetStorage.history)",
+        "retained generation (see ParquetStorage.history)",
     )
     ap.add_argument("--format", choices=["jsonl", "table"], default="jsonl")
     ap.add_argument("--limit", type=int, default=1000, help="max rows printed")
@@ -49,13 +40,12 @@ def main() -> int:
     args = ap.parse_args()
     if not args.sf_dir and not args.storage_root:
         ap.error("one of --sf-dir / --storage-root is required")
+    if args.as_of is not None and args.sf_dir:
+        ap.error("--as-of requires --storage-root")
 
     from nyc_open_data_pipeline_spark.session import get_spark
 
     spark = get_spark("query-cli")
-
-    if args.as_of is not None and (args.sf_dir or args.commit_mode != "pointer"):
-        ap.error("--as-of requires --storage-root with --commit-mode pointer")
 
     if args.sf_dir:
         from nyc_open_data_pipeline_spark.catalog import TESTDATA_TABLES, register_tables
@@ -70,13 +60,13 @@ def main() -> int:
         from nyc_open_data_pipeline_spark.pipeline.storage import ParquetStorage
 
         root = args.storage_root
-        storage = ParquetStorage(root, commit=args.commit_mode)
+        storage = ParquetStorage(root)
         for name in sorted(os.listdir(root)):
             p = os.path.join(root, name)
             if not (os.path.isdir(p) and not name.startswith(("_", "."))):
                 continue
-            if name.endswith("__lock") or "__" in name:
-                continue  # lock dirs / swap work dirs are not tables
+            if "__" in name:
+                continue  # lock dirs (<table>__lock) are not tables
             storage.read(spark, name, as_of=args.as_of).createOrReplaceTempView(name)
 
     df = spark.sql(args.sql)

@@ -27,13 +27,6 @@ def main() -> int:
     ap.add_argument("--checkpoint", required=True, help="checkpoint directory")
     ap.add_argument("--poll-interval", default="60 seconds")
     ap.add_argument("--pages-per-batch", type=int, default=10)
-    ap.add_argument(
-        "--commit-mode",
-        choices=["swap", "pointer"],
-        default="swap",
-        help="table publish protocol: swap = POSIX/HDFS atomic directory "
-        "rename; pointer = object-store-portable manifest flip (S3-safe)",
-    )
     args = ap.parse_args()
 
     logging.basicConfig(level=logging.INFO)
@@ -47,7 +40,7 @@ def main() -> int:
     spark = get_spark("stream_ingest")
     register_data_sources(spark)
     cfg = load_dataset_config(args.registry, args.dataset)
-    storage = ParquetStorage(args.storage_root, commit=args.commit_mode)
+    storage = ParquetStorage(args.storage_root)
     q = stream_ingest(
         spark,
         cfg,

@@ -110,7 +110,7 @@ def test_storage_upsert_idempotent(spark, tmp_path):
     batch2 = spark.createDataFrame([(2, "B2"), (3, "c")], ["k", "v"])
     assert storage.upsert(spark, batch2, schema) == 3
     rows = {
-        r["k"]: r["v"] for r in spark.read.parquet(storage.path("t")).collect()
+        r["k"]: r["v"] for r in storage.read(spark, "t").collect()
     }
     assert rows == {1: "a", 2: "B2", 3: "c"}
 
@@ -138,19 +138,19 @@ def test_storage_upsert_partition_pruned(spark, tmp_path):
     assert storage.upsert(spark, base, schema) == 4
 
     def files_of(part: str) -> dict[str, float]:
-        d = os.path.join(storage.path("t"), part)
         return {
-            f: os.path.getmtime(os.path.join(d, f))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
+            f: os.path.getmtime(f)
+            for f in storage._live_data_files("t")
+            if os.path.basename(os.path.dirname(f)) == part
         }
 
     before_2023 = files_of("year=2023")
+    assert before_2023
     # update one 2024 row + insert a new 2024 row: only year=2024 is rewritten
     batch = spark.createDataFrame([(3, 2024, "C2"), (5, 2024, "e")], ["k", "year", "v"])
     assert storage.upsert(spark, batch, schema) == 5
     assert files_of("year=2023") == before_2023  # same files, same mtimes
-    rows = {r["k"]: r["v"] for r in spark.read.parquet(storage.path("t")).collect()}
+    rows = {r["k"]: r["v"] for r in storage.read(spark, "t").collect()}
     assert rows == {1: "a", 2: "b", 3: "C2", 4: "d", 5: "e"}
     # idempotence holds on the pruned path too
     assert storage.upsert(spark, batch, schema) == 5
@@ -169,7 +169,7 @@ def test_storage_upsert_dedup_deterministic(spark, tmp_path):
         [(1, "z"), (1, "a"), (1, "m")], ["k", "v"]
     ).repartition(3)
     storage.upsert(spark, dup, schema)
-    rows = spark.read.parquet(storage.path("t")).collect()
+    rows = storage.read(spark, "t").collect()
     assert len(rows) == 1 and rows[0]["v"] == "a"
 
 
@@ -179,7 +179,7 @@ def test_storage_append_and_metadata(spark, tmp_path):
     df = spark.createDataFrame([(1,), (2,)], ["x"])
     storage.create_or_append(df, schema)
     storage.create_or_append(df, schema)  # append: no unique keys -> grows
-    assert spark.read.parquet(storage.path("logs")).count() == 4
+    assert storage.read(spark, "logs").count() == 4
 
     storage.update_metadata(spark, "ds1", "logs", 4, last_ingestion="2026-01-01")
     storage.update_metadata(spark, "ds1", "logs", 4, last_ingestion="2026-01-02")
@@ -210,18 +210,18 @@ def test_storage_delete_keys_partition_pruned(spark, tmp_path):
     assert storage.upsert(spark, base, schema) == 4
 
     def files_of(part):
-        d = os.path.join(storage.path("t"), part)
         return {
-            f: os.path.getmtime(os.path.join(d, f))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
+            f: os.path.getmtime(f)
+            for f in storage._live_data_files("t")
+            if os.path.basename(os.path.dirname(f)) == part
         }
 
     before_2023 = files_of("year=2023")
+    assert before_2023
     gone = spark.createDataFrame([(3, 2024)], ["k", "year"])
     assert storage.delete_keys(spark, gone, schema) == 3
     assert files_of("year=2023") == before_2023
-    rows = {r["k"] for r in spark.read.parquet(storage.path("t")).collect()}
+    rows = {r["k"] for r in storage.read(spark, "t").collect()}
     assert rows == {1, 2, 4}
     # idempotent: deleting the same keys again is a no-op
     assert storage.delete_keys(spark, gone, schema) == 3
@@ -259,31 +259,8 @@ def test_storage_purge_partitions_metadata_only(spark, tmp_path):
     storage.upsert(spark, base, schema)
     dropped = storage.purge_partitions(schema, lambda v: int(v["year"]) >= 2020)
     assert sorted(d["year"] for d in dropped) == ["2019"]
-    rows = {r["year"] for r in spark.read.parquet(storage.path("t")).collect()}
+    rows = {r["year"] for r in storage.read(spark, "t").collect()}
     assert rows == {2020, 2021}
-
-
-def test_storage_atomic_write_crash_recovery(spark, tmp_path):
-    """A crash between the swap's two renames (final gone, __old_x intact)
-    must be healed on the next access: the table is restored and a
-    subsequent upsert MERGES into it instead of starting fresh."""
-    import os
-
-    storage = ParquetStorage(str(tmp_path))
-    schema = TableSchema(
-        table_name="t",
-        columns=[ColumnSpec("k", "integer", primary_key=True), ColumnSpec("v", "string")],
-        unique_keys=["k"],
-    )
-    storage.upsert(spark, spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), schema)
-    # simulate the crash window: final renamed away, new table never landed
-    final = storage.path("t")
-    os.rename(final, f"{final}__old_deadbeef")
-    assert storage.exists("t")  # recovery restored the old state
-    # the next upsert merges into the RESTORED table — no data loss
-    assert storage.upsert(spark, spark.createDataFrame([(3, "c")], ["k", "v"]), schema) == 3
-    rows = {r["k"]: r["v"] for r in spark.read.parquet(storage.path("t")).collect()}
-    assert rows == {1: "a", 2: "b", 3: "c"}
 
 
 def test_storage_upsert_schema_evolution(spark, tmp_path):
@@ -307,31 +284,8 @@ def test_storage_upsert_schema_evolution(spark, tmp_path):
     )
     batch = spark.createDataFrame([(2, "B2", "x"), (3, "c", "y")], ["k", "v", "extra"])
     assert storage.upsert(spark, batch, schema_v2) == 3
-    rows = {r["k"]: (r["v"], r["extra"]) for r in spark.read.parquet(storage.path("t")).collect()}
+    rows = {r["k"]: (r["v"], r["extra"]) for r in storage.read(spark, "t").collect()}
     assert rows == {1: ("a", None), 2: ("B2", "x"), 3: ("c", "y")}
-
-
-def test_storage_vacuum_removes_orphans_keeps_recovery_source(spark, tmp_path):
-    import os
-
-    storage = ParquetStorage(str(tmp_path))
-    schema = TableSchema(
-        table_name="t",
-        columns=[ColumnSpec("k", "integer", primary_key=True)],
-        unique_keys=["k"],
-    )
-    storage.upsert(spark, spark.createDataFrame([(1,)], ["k"]), schema)
-    final = storage.path("t")
-    for orphan in (f"{final}__tmp_dead", f"{final}__stage_dead", f"{final}__old_dead"):
-        os.makedirs(orphan)
-    removed = storage.vacuum("t")
-    assert len(removed) == 3
-    assert os.path.exists(final)
-    # crash window: old is the ONLY copy -> vacuum must first recover, not delete
-    os.rename(final, f"{final}__old_x")
-    storage.vacuum("t")
-    assert os.path.exists(final)  # restored by recovery
-    assert {r["k"] for r in spark.read.parquet(final).collect()} == {1}
 
 
 def test_autosize_shuffle_partitions(spark, tmp_path):
@@ -392,8 +346,8 @@ def test_autosize_shuffle_partitions(spark, tmp_path):
 
 def test_storage_concurrent_upserts_serialize(spark, tmp_path):
     """Round-12 commit protocol: two writers hammering ONE table must
-    produce the serialized result — before the per-table writer lock, the
-    atomic-swap renames could interleave and silently drop a whole batch
+    produce the serialized result — before the per-table writer lock,
+    concurrent publishes could interleave and silently drop a whole batch
     (VERDICT r11 'What's missing' #2)."""
     import threading
 
@@ -421,44 +375,13 @@ def test_storage_concurrent_upserts_serialize(spark, tmp_path):
     t2 = threading.Thread(target=writer, args=(200,))
     t1.start(); t2.start(); t1.join(); t2.join()
     assert not errors, errors
-    rows = {r["k"]: r["v"] for r in spark.read.parquet(storage.path("t")).collect()}
+    rows = {r["k"]: r["v"] for r in storage.read(spark, "t").collect()}
     # no batch lost: every non-contended key from BOTH writers survived
     assert set(rows) == {0, 999, *range(100, 104), *range(200, 204)}
     # the contended key holds the value of SOME single batch (a serialization
     # exists); 9 committed writes -> generation counted them all
     assert rows[999] in {f"w{b}b{i}" for b in (100, 200) for i in range(4)}
     assert storage.generation("t") == 9
-
-
-def test_storage_crash_mid_swap_recovers_and_resumes(spark, tmp_path):
-    """Crash INSIDE the swap window (final renamed away, tmp not yet
-    promoted): recovery restores the previous committed state AND its
-    generation marker, and the retried upsert lands on top of it."""
-    import os
-
-    storage = ParquetStorage(str(tmp_path))
-    schema = TableSchema(
-        table_name="t",
-        columns=[ColumnSpec("k", "integer", primary_key=True), ColumnSpec("v", "string")],
-        unique_keys=["k"],
-    )
-    storage.upsert(spark, spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), schema)
-    assert storage.generation("t") == 1
-    # simulate the crash: a writer got through `os.rename(final, old)` and
-    # died before `os.rename(tmp, final)`; its tmp dir is garbage
-    final = storage.path("t")
-    os.rename(final, f"{final}__old_deadbeef")
-    os.makedirs(f"{final}__tmp_deadbeef")
-    assert storage.exists("t")  # _recover restored the committed state
-    assert storage.generation("t") == 1
-    rows = {r["k"]: r["v"] for r in spark.read.parquet(final).collect()}
-    assert rows == {1: "a", 2: "b"}
-    # the interrupted upsert retries and commits on top
-    storage.upsert(spark, spark.createDataFrame([(2, "B2"), (3, "c")], ["k", "v"]), schema)
-    assert storage.generation("t") == 2
-    rows = {r["k"]: r["v"] for r in spark.read.parquet(final).collect()}
-    assert rows == {1: "a", 2: "B2", 3: "c"}
-    assert storage.vacuum("t")  # the dead writer's tmp dir is swept
 
 
 def test_storage_stale_lock_takeover_and_fence(spark, tmp_path):
@@ -554,7 +477,7 @@ def test_storage_concurrent_upserts_to_different_partitioned_tables(spark, tmp_p
     t1.start(); t2.start(); t1.join(); t2.join()
     assert not errors, errors
     for name in ("tx", "ty"):
-        rows = spark.read.parquet(storage.path(name)).collect()
+        rows = storage.read(spark, name).collect()
         parts = {r["part"] for r in rows}
         assert parts == {0, 1, 2, 3}, f"{name} lost partitions: {parts}"
         assert len(rows) == 8  # 2 per partition, upserts replaced in place

@@ -137,9 +137,9 @@ def test_upsert_idempotent(spark, tmp_path_factory, batch):
     df = spark.createDataFrame(sorted(dedup.items()), ["k", "v"])
 
     storage.upsert(spark, df, schema)
-    once = sorted(map(tuple, spark.read.parquet(storage.path("prop_table")).collect()))
+    once = sorted(map(tuple, storage.read(spark, "prop_table").collect()))
     storage.upsert(spark, df, schema)
-    twice = sorted(map(tuple, spark.read.parquet(storage.path("prop_table")).collect()))
+    twice = sorted(map(tuple, storage.read(spark, "prop_table").collect()))
     assert once == twice == sorted(dedup.items())
 
 
@@ -301,7 +301,7 @@ def test_upsert_then_delete_roundtrip(spark, tmp_path_factory, base, gone):
         assert storage.delete_keys(
             spark, spark.createDataFrame([(k,) for k in gone], ["k"]), schema
         ) == len(kept)
-    got = {r["k"] for r in spark.read.parquet(storage.path("t")).collect()}
+    got = {r["k"] for r in storage.read(spark, "t").collect()}
     assert got == kept
 
 

@@ -1,14 +1,11 @@
-"""Pointer-file (manifest) commit mode + lock lease heartbeat (round 13).
+"""Pointer-file (manifest) commit protocol + lock lease heartbeat.
 
-The swap-mode protocol publishes via directory rename / Spark job commits —
-POSIX/HDFS-atomic but not raw-object-store-safe (S3 directory rename is
-copy+delete). Pointer mode writes every change to an immutable segment and
-publishes by atomically replacing ONE ``_current`` manifest file, so these
-tests re-run the swap suite's concurrency/crash scenarios in pointer mode
-and add the two cases swap mode cannot pass: a simulated non-atomic
-directory rename, and a live-but-slow cross-host writer that the lease
-heartbeat must protect from takeover (VERDICT r12 next-round #1/#2,
-ADVICE r12 storage findings).
+Every write lands in an immutable segment and publishes by atomically
+replacing ONE ``_current`` manifest file. These tests cover the
+concurrency, crash, fencing and fault-injection scenarios, the
+percent-escaped partition values Spark writes, time travel, and a
+live-but-slow cross-host writer that the lease heartbeat must protect from
+takeover.
 """
 
 from __future__ import annotations
@@ -51,7 +48,7 @@ def _part_schema() -> TableSchema:
 
 
 def test_pointer_upsert_idempotent_and_merge(spark, tmp_path):
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _kv_schema()
     batch1 = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
     assert storage.upsert(spark, batch1, schema) == 2
@@ -64,11 +61,11 @@ def test_pointer_upsert_idempotent_and_merge(spark, tmp_path):
 
 
 def test_pointer_upsert_partition_pruned_never_rewrites_untouched(spark, tmp_path):
-    """The pointer twin of the swap suite's pruned-upsert contract: the
+    """The pruned-upsert contract at the segment level: the
     untouched partition's FILES (inside their owning segment) keep their
     mtimes, and the manifest still points the untouched partition at the
     original segment."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _part_schema()
     base = spark.createDataFrame(
         [(1, 2023, "a"), (2, 2023, "b"), (3, 2024, "c"), (4, 2024, "d")],
@@ -99,7 +96,7 @@ def test_pointer_upsert_partition_pruned_never_rewrites_untouched(spark, tmp_pat
 
 
 def test_pointer_append_grows_segment_list_and_metadata_roundtrip(spark, tmp_path):
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = TableSchema(table_name="logs", columns=[ColumnSpec("x", "integer")])
     df = spark.createDataFrame([(1,), (2,)], ["x"])
     storage.create_or_append(df, schema)
@@ -116,7 +113,7 @@ def test_pointer_append_grows_segment_list_and_metadata_roundtrip(spark, tmp_pat
 
 
 def test_pointer_delete_keys_pruned_and_unpartitioned(spark, tmp_path):
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _part_schema()
     base = spark.createDataFrame(
         [(1, 2023, "a"), (2, 2023, "b"), (3, 2024, "c"), (4, 2024, "d")],
@@ -135,14 +132,14 @@ def test_pointer_delete_keys_pruned_and_unpartitioned(spark, tmp_path):
     assert storage.delete_keys(spark, both, schema) == 2
     assert "year=2024" not in storage._read_manifest("t")["parts"]
 
-    st2 = ParquetStorage(str(tmp_path / "u"), commit="pointer")
+    st2 = ParquetStorage(str(tmp_path / "u"))
     kv = _kv_schema()
     st2.upsert(spark, spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), kv)
     assert st2.delete_keys(spark, spark.createDataFrame([(2,)], ["k"]), kv) == 1
 
 
 def test_pointer_purge_partitions_is_manifest_only(spark, tmp_path):
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _part_schema()
     base = spark.createDataFrame(
         [(1, 2019, "a"), (2, 2020, "b"), (3, 2021, "c")], ["k", "year", "v"]
@@ -157,7 +154,7 @@ def test_pointer_purge_partitions_is_manifest_only(spark, tmp_path):
 
 
 def test_pointer_schema_evolution(spark, tmp_path):
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     storage.upsert(
         spark, spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), _kv_schema()
     )
@@ -176,7 +173,7 @@ def test_pointer_schema_evolution(spark, tmp_path):
     assert rows == {1: ("a", None), 2: ("B2", "x"), 3: ("c", "y")}
 
     # evolution through APPEND: old segments lack the new column -> NULL
-    st2 = ParquetStorage(str(tmp_path / "ap"), commit="pointer")
+    st2 = ParquetStorage(str(tmp_path / "ap"))
     s1 = TableSchema(table_name="logs", columns=[ColumnSpec("x", "integer")])
     s2 = TableSchema(
         table_name="logs",
@@ -189,9 +186,9 @@ def test_pointer_schema_evolution(spark, tmp_path):
 
 
 def test_pointer_concurrent_upserts_serialize(spark, tmp_path):
-    """The swap suite's two-writer interleave, in pointer mode: the
-    manifest flip under the table lock must serialize every batch."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    """Two-writer interleave: the manifest flip under the table lock must
+    serialize every batch."""
+    storage = ParquetStorage(str(tmp_path))
     schema = _kv_schema()
     storage.upsert(spark, spark.createDataFrame([(0, "seed")], ["k", "v"]), schema)
     errors: list[BaseException] = []
@@ -217,11 +214,11 @@ def test_pointer_concurrent_upserts_serialize(spark, tmp_path):
 
 
 def test_pointer_crash_before_flip_leaves_committed_state(spark, tmp_path):
-    """The pointer twin of the mid-swap crash test: a writer that wrote its
+    """Crash between segment write and flip: a writer that wrote its
     segment but died before the manifest flip leaves the PREVIOUS commit
     fully intact (manifest + every referenced segment), the orphan segment
     invisible to readers, and vacuum sweeps it."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _kv_schema()
     storage.upsert(spark, spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), schema)
     m_before = storage._read_manifest("t")
@@ -245,10 +242,10 @@ def test_pointer_crash_before_flip_leaves_committed_state(spark, tmp_path):
 
 
 def test_pointer_stale_lock_takeover_and_fence(spark, tmp_path):
-    """The swap suite's takeover/fence scenario in pointer mode: a dead
+    """Takeover/fence at the manifest flip: a dead
     writer's lock breaks, the zombie is refused at the manifest flip."""
     storage = ParquetStorage(
-        str(tmp_path), lock_timeout=0.5, lock_stale_after=0.2, commit="pointer"
+        str(tmp_path), lock_timeout=0.5, lock_stale_after=0.2
     )
     schema = _kv_schema()
     lock = storage._lock_dir("t")
@@ -265,53 +262,6 @@ def test_pointer_stale_lock_takeover_and_fence(spark, tmp_path):
     with pytest.raises(WriterFencedError):
         storage._flip_manifest("t", {"gen": 99, "parts": {}}, "zombie")
     assert storage.generation("t") == 1  # zombie's manifest never landed
-
-
-def test_simulated_non_atomic_rename_breaks_swap_not_pointer(spark, tmp_path):
-    """THE object-store case (VERDICT r12 next-round #1): directory rename
-    implemented as copy+delete that dies mid-copy. Swap mode corrupts or
-    loses the table; pointer mode never renames a directory, so the same
-    fault injection cannot even fire and the upsert commits exactly."""
-
-    def faulty_rename(src: str, dst: str) -> None:
-        # copy the data files, delete them from src, then die before the
-        # metadata — the observable wreckage of a crashed S3 copy+delete
-        # "rename": neither dir is a complete table
-        import shutil as _sh
-
-        os.makedirs(dst, exist_ok=True)
-        for e in sorted(os.listdir(src)):
-            if not e.endswith(".parquet"):
-                continue
-            s = os.path.join(src, e)
-            d = os.path.join(dst, e)
-            (_sh.copytree if os.path.isdir(s) else _sh.copyfile)(s, d)
-            (_sh.rmtree if os.path.isdir(s) else os.remove)(s)
-        raise OSError("simulated mid-copy crash of a non-atomic rename")
-
-    schema = _kv_schema()
-    base = [(1, "a"), (2, "b")]
-
-    swap = ParquetStorage(str(tmp_path / "swap"))
-    swap.upsert(spark, spark.createDataFrame(base, ["k", "v"]), schema)
-    swap._dir_rename = faulty_rename  # instance-level fault injection
-    with pytest.raises(OSError, match="non-atomic"):
-        swap.upsert(spark, spark.createDataFrame([(3, "c")], ["k", "v"]), schema)
-    # the table is wrecked: the committed {1,2} state is NOT intact at its path
-    intact = False
-    try:
-        got = {r["k"] for r in spark.read.parquet(swap.path("t")).collect()}
-        intact = got == {1, 2, 3} or got == {1, 2}
-    except Exception:
-        intact = False
-    assert not intact, "swap survived a non-atomic rename? fault injection broken"
-
-    pointer = ParquetStorage(str(tmp_path / "ptr"), commit="pointer")
-    pointer.upsert(spark, spark.createDataFrame(base, ["k", "v"]), schema)
-    pointer._dir_rename = faulty_rename  # never called in pointer mode
-    assert pointer.upsert(spark, spark.createDataFrame([(3, "c")], ["k", "v"]), schema) == 3
-    rows = {r["k"]: r["v"] for r in pointer.read(spark, "t").collect()}
-    assert rows == {1: "a", 2: "b", 3: "c"}
 
 
 def test_heartbeat_protects_live_crosshost_writer(spark, tmp_path):
@@ -371,7 +321,7 @@ def test_pointer_compact_segments_bounds_manifest_growth(spark, tmp_path):
     maintenance fold must collapse over-threshold partitions into one
     segment, preserve every row, leave untouched partitions' pointers and
     bytes alone, and make the superseded segments vacuum-able."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = TableSchema(
         table_name="logs",
         columns=[ColumnSpec("x", "integer"), ColumnSpec("part", "integer")],
@@ -401,8 +351,6 @@ def test_pointer_compact_segments_bounds_manifest_growth(spark, tmp_path):
     assert rows2 == rows
     # idempotent below threshold
     assert storage.compact_segments(spark, schema, max_segments=4) == {}
-    # swap mode: explicit no-op
-    assert ParquetStorage(str(tmp_path / "sw")).compact_segments(spark, schema) == {}
 
 
 def _str_part_schema() -> TableSchema:
@@ -418,45 +366,60 @@ def _str_part_schema() -> TableSchema:
     )
 
 
-def test_pointer_rejects_escapable_partition_values_loudly(spark, tmp_path):
-    """Round-13 self-review: pointer-mode repointing matches partitions by
-    Hive DIR NAME, and Spark percent-escapes some characters — a mismatch
-    would silently leave the stale pointer serving old rows while the
-    merged partition dropped from the manifest. Safe values (spaces,
-    dashes, dots) must round-trip exactly; escapable ones must raise, not
-    corrupt. Swap mode keeps accepting them (Spark escapes for itself)."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+def test_escaped_partition_values_round_trip(spark, tmp_path):
+    """Spark percent-escapes some characters in Hive dir names ("a:b" is
+    written as ``src=a%3Ab``). Touched partitions are matched to manifest
+    entries by UNESCAPED value, so upsert, append, delete-to-empty and
+    purge all round-trip such values, and the purge predicate sees the
+    values, not the escaped dir text."""
+    storage = ParquetStorage(str(tmp_path))
     schema = _str_part_schema()
-    ok = spark.createDataFrame(
-        [(1, "common crawl", "a"), (2, "web-2024.v1", "b")], ["k", "src", "v"]
+    base = spark.createDataFrame(
+        [(1, "a:b", "x"), (2, "x/y", "y"), (3, "50%", "z"), (4, "keep", "w")],
+        ["k", "src", "v"],
     )
-    assert storage.upsert(spark, ok, schema) == 2
-    upd = spark.createDataFrame([(1, "common crawl", "A2")], ["k", "src", "v"])
-    assert storage.upsert(spark, upd, schema) == 2
-    rows = {r["k"]: (r["src"], r["v"]) for r in storage.read(spark, "t").collect()}
-    assert rows == {1: ("common crawl", "A2"), 2: ("web-2024.v1", "b")}
+    assert storage.upsert(spark, base, schema) == 4
+    upd = spark.createDataFrame([(1, "a:b", "X2"), (5, "x/y", "n")], ["k", "src", "v"])
+    assert storage.upsert(spark, upd, schema) == 5
+    storage.create_or_append(
+        spark.createDataFrame([(6, "a:b", "app")], ["k", "src", "v"]), schema
+    )
 
-    bad = spark.createDataFrame([(3, "a:b", "c")], ["k", "src", "v"])
-    with pytest.raises(ValueError, match="percent-escapes"):
-        storage.upsert(spark, bad, schema)
-    # nothing was published by the refused write
-    assert storage.read(spark, "t").count() == 2
+    def rows() -> set:
+        return {(r["k"], r["src"], r["v"]) for r in storage.read(spark, "t").collect()}
 
-    swap = ParquetStorage(str(tmp_path / "sw"))
-    swap.upsert(spark, ok, schema)
-    assert swap.upsert(spark, bad, schema) == 3  # swap handles escaping fine
+    assert rows() == {
+        (1, "a:b", "X2"), (2, "x/y", "y"), (3, "50%", "z"),
+        (4, "keep", "w"), (5, "x/y", "n"), (6, "a:b", "app"),
+    }
+    # a partial delete keeps the partition; deleting its last row drops it
+    def parts() -> set:
+        return set(storage._read_manifest("t")["parts"])
+
+    gone = spark.createDataFrame([(2, "x/y")], ["k", "src"])
+    assert storage.delete_keys(spark, gone, schema) == 5
+    assert "src=x%2Fy" in parts()
+    gone = spark.createDataFrame([(5, "x/y")], ["k", "src"])
+    assert storage.delete_keys(spark, gone, schema) == 4
+    assert parts() == {"src=a%3Ab", "src=50%25", "src=keep"}
+
+    seen: list[str] = []
+
+    def keep(values: dict) -> bool:
+        seen.append(values["src"])
+        return values["src"] != "50%"
+
+    assert storage.purge_partitions(schema, keep) == [{"src": "50%"}]
+    assert sorted(seen) == ["50%", "a:b", "keep"]
+    assert rows() == {(1, "a:b", "X2"), (4, "keep", "w"), (6, "a:b", "app")}
 
 
 def test_pointer_readers_get_snapshot_isolation(spark, tmp_path):
-    """A property swap mode cannot offer: a DataFrame resolved from the
-    manifest BEFORE a rewrite keeps reading the OLD segments after the
-    flip, because published segments are immutable and survive until
-    vacuum — in swap mode the old directory is rmtree'd inside the swap,
-    so a long-running reader's scan breaks or goes torn mid-job. This is
-    the read-side reason the pointer protocol is the 100-TB mode: queries
-    running for minutes against a table being upserted see one consistent
-    snapshot."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    """A DataFrame resolved from the manifest BEFORE a rewrite keeps
+    reading the OLD segments after the flip, because published segments
+    are immutable and survive until vacuum — queries running for minutes
+    against a table being upserted see one consistent snapshot."""
+    storage = ParquetStorage(str(tmp_path))
     schema = _kv_schema()
     storage.upsert(spark, spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), schema)
     old_reader = storage.read(spark, "t")  # resolves gen-1's segments NOW
@@ -478,7 +441,7 @@ def test_pointer_empty_string_partition_value_repoints_correctly(spark, tmp_path
     computing 'col=' for an empty string orphaned the merged slice — the
     upsert silently kept serving old rows. The canonical relpath must
     fold '' the same way Spark does."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _str_part_schema()
     base = spark.createDataFrame([(1, "", "a"), (2, "x", "b")], ["k", "src", "v"])
     assert storage.upsert(spark, base, schema) == 2
@@ -493,7 +456,7 @@ def test_pointer_corrupt_manifest_refuses_instead_of_fresh_start(spark, tmp_path
     committed' — the next append would build a fresh gen-1 manifest that
     orphans every committed segment, and vacuum would then delete them.
     Corruption must raise loudly on every entry point."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _kv_schema()
     storage.upsert(spark, spark.createDataFrame([(1, "a")], ["k", "v"]), schema)
     with open(storage._manifest_path("t"), "w") as f:
@@ -513,7 +476,7 @@ def test_pointer_delete_to_empty_table_reads_typed_empty(spark, tmp_path):
     """A legitimately-committed pointer table whose every partition was
     deleted must stay readable (typed empty frame from the stamped
     schema), not crash after the commit succeeded."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _part_schema()
     storage.upsert(
         spark, spark.createDataFrame([(1, 2024, "a")], ["k", "year", "v"]), schema
@@ -581,51 +544,19 @@ def test_heartbeat_survives_transient_utime_failures(tmp_path, monkeypatch):
     storage._release_lock("t", token)
 
 
-def test_swap_delete_empties_partition_directory(spark, tmp_path):
-    """Round-13 review: dynamic partition overwrite only replaces
-    partitions PRESENT in the written data, so a delete that removed a
-    partition's every row previously left the stale directory serving
-    the 'deleted' rows. The emptied dir must be removed — including for
-    Hive percent-escaped partition values (matched on unescaped text)."""
-    storage = ParquetStorage(str(tmp_path))  # swap mode
-    schema = _str_part_schema()
-    base = spark.createDataFrame(
-        [(1, "a:b", "x"), (2, "a:b", "y"), (3, "keep", "z")], ["k", "src", "v"]
-    )
-    assert storage.upsert(spark, base, schema) == 3
-    assert os.path.exists(os.path.join(storage.path("t"), "src=a%3Ab"))
-    gone = spark.createDataFrame([(1, "a:b"), (2, "a:b")], ["k", "src"])
-    assert storage.delete_keys(spark, gone, schema) == 1
-    assert not os.path.exists(os.path.join(storage.path("t"), "src=a%3Ab")), (
-        "emptied (escaped-name) partition directory kept serving deleted rows"
-    )
-    rows = {(r["k"], r["src"]) for r in storage.read(spark, "t").collect()}
-    assert rows == {(3, "keep")}
-    # partial delete must NOT remove a partition that still has rows
-    storage.upsert(spark, base, schema)
-    one = spark.createDataFrame([(1, "a:b")], ["k", "src"])
-    assert storage.delete_keys(spark, one, schema) == 2
-    assert os.path.exists(os.path.join(storage.path("t"), "src=a%3Ab"))
-    # deleting EVERY row of EVERY partition: the commit succeeds and the
-    # count resolves to 0 (only _SUCCESS/_generation remain on disk)
-    rest = spark.createDataFrame([(2, "a:b"), (3, "keep")], ["k", "src"])
-    assert storage.delete_keys(spark, rest, schema) == 0
-    assert not storage.exists("t")
-
-
-def _steal_lock_during_stage_write(monkeypatch, storage):
-    """Arrange for the table lock to be stolen WHILE the Spark staging job
-    of the next swap-mode write runs: wrap DataFrameWriter.parquet so that
-    any write landing in a __stage_ dir first completes, then has the lock
-    owner token swapped — modeling a stale-lock takeover that happens
-    mid-job. The write must then FENCE and publish nothing."""
+def _steal_lock_during_segment_write(monkeypatch, storage):
+    """Arrange for the table lock to be stolen WHILE the Spark job writing
+    the next segment runs: wrap DataFrameWriter.parquet so that any write
+    into a ``seg_`` dir first completes, then has the lock owner token
+    swapped — modeling a stale-lock takeover that happens mid-job. The
+    write must then FENCE and publish nothing."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     orig = DataFrameWriter.parquet
 
     def stealing(self, path, *a, **kw):
         out = orig(self, path, *a, **kw)
-        if "__stage_" in path:
+        if os.path.basename(path).startswith("seg_"):
             owner = os.path.join(storage._lock_dir("t"), "owner.json")
             with open(owner) as f:
                 rec = json.load(f)
@@ -637,18 +568,31 @@ def _steal_lock_during_stage_write(monkeypatch, storage):
     monkeypatch.setattr(DataFrameWriter, "parquet", stealing)
 
 
-def test_swap_append_fences_takeover_during_write_job(spark, tmp_path, monkeypatch):
-    """ADVICE r12 #2 closed structurally in SWAP mode: create_or_append
-    stages the batch and publishes by post-fence renames, so a stale-lock
-    takeover during the (possibly minutes-long) append job leaves the
-    zombie's rows UNPUBLISHED — previously the job commit itself was the
-    publish and the zombie's rows landed before the fence could refuse."""
+def _winner_releases_and_vacuum_sweeps_orphan(storage) -> None:
+    """The takeover winner finishes and releases the lock; the fenced
+    writer's segment is an orphan no manifest references, and vacuum
+    sweeps it."""
+    import shutil
+
+    shutil.rmtree(storage._lock_dir("t"))
+    live = {s for segs in storage._read_manifest("t")["parts"].values() for s in segs}
+    removed = storage.vacuum("t")
+    assert any(os.path.basename(p).startswith("seg_") for p in removed)
+    left = {e for e in os.listdir(storage.path("t")) if e.startswith("seg_")}
+    assert left == live
+
+
+def test_append_fences_takeover_during_write_job(spark, tmp_path, monkeypatch):
+    """ADVICE r12 #2: create_or_append writes an invisible segment and
+    publishes by the post-fence manifest flip, so a stale-lock takeover
+    during the (possibly minutes-long) append job leaves the zombie's rows
+    UNPUBLISHED."""
     storage = ParquetStorage(str(tmp_path))
     schema = _part_schema()
     storage.create_or_append(
         spark.createDataFrame([(1, 2020, "a")], ["k", "year", "v"]), schema
     )
-    _steal_lock_during_stage_write(monkeypatch, storage)
+    _steal_lock_during_segment_write(monkeypatch, storage)
     with pytest.raises(WriterFencedError):
         storage.create_or_append(
             spark.createDataFrame([(2, 2021, "b")], ["k", "year", "v"]), schema
@@ -656,22 +600,21 @@ def test_swap_append_fences_takeover_during_write_job(spark, tmp_path, monkeypat
     monkeypatch.undo()
     rows = {tuple(r) for r in storage.read(spark, "t").select("k", "year", "v").collect()}
     assert rows == {(1, 2020, "a")}, "fenced append must publish zero rows"
-    root = storage.path("t")
-    leftovers = [d for d in os.listdir(os.path.dirname(root)) if "__stage_" in d]
-    assert leftovers == [], "fenced append must clean its staging dir"
+    assert storage.generation("t") == 1
+    _winner_releases_and_vacuum_sweeps_orphan(storage)
 
 
-def test_swap_upsert_fences_takeover_during_write_job(spark, tmp_path, monkeypatch):
-    """Same structural close for the partition-overwrite path: a takeover
-    during the merged-slice staging job fences before any live partition
-    dir is touched — old rows keep serving, no half-overwritten table."""
+def test_upsert_fences_takeover_during_write_job(spark, tmp_path, monkeypatch):
+    """Same close for the partition-overwrite path: a takeover during the
+    merged-slice segment job fences before the manifest moves — old rows
+    keep serving, no half-overwritten table."""
     storage = ParquetStorage(str(tmp_path))
     schema = _part_schema()
     base = spark.createDataFrame(
         [(1, 2020, "a"), (2, 2021, "b")], ["k", "year", "v"]
     )
     assert storage.upsert(spark, base, schema) == 2
-    _steal_lock_during_stage_write(monkeypatch, storage)
+    _steal_lock_during_segment_write(monkeypatch, storage)
     with pytest.raises(WriterFencedError):
         storage.upsert(
             spark, spark.createDataFrame([(1, 2020, "CHANGED")], ["k", "year", "v"]), schema
@@ -682,89 +625,18 @@ def test_swap_upsert_fences_takeover_during_write_job(spark, tmp_path, monkeypat
         "fenced overwrite must leave every live partition untouched"
     )
     assert storage.generation("t") == 1
-
-
-def test_swap_append_preserves_hive_escaping_via_rename(spark, tmp_path):
-    """The staged-file ingest copies Hive dir names verbatim, so appends
-    into percent-escaped partition dirs land in the SAME dir Spark's own
-    append would use (no duplicate a:b vs a%3Ab trees), and generations
-    advance per append."""
-    storage = ParquetStorage(str(tmp_path))
-    schema = _str_part_schema()
-    storage.create_or_append(
-        spark.createDataFrame([(1, "a:b", "x")], ["k", "src", "v"]), schema
-    )
-    storage.create_or_append(
-        spark.createDataFrame([(2, "a:b", "y"), (3, "keep", "z")], ["k", "src", "v"]),
-        schema,
-    )
-    root = storage.path("t")
-    escaped = os.path.join(root, "src=a%3Ab")
-    assert os.path.isdir(escaped)
-    n_files = [f for f in os.listdir(escaped) if f.endswith(".parquet")]
-    assert len(n_files) >= 2, "both appends' files share the one escaped dir"
-    rows = {(r["k"], r["src"]) for r in storage.read(spark, "t").collect()}
-    assert rows == {(1, "a:b"), (2, "a:b"), (3, "keep")}
-    assert storage.generation("t") == 2
-
-
-def test_swap_partition_publish_rolls_back_on_midloop_failure(spark, tmp_path, monkeypatch):
-    """A driver-side failure in the middle of the partition-swap publish
-    loop must unwind completely: new slices return to the stage dir and
-    PARKED old slices are restored before the trash dir is deleted — the
-    live table reads exactly as before, and a retry then succeeds."""
-    storage = ParquetStorage(str(tmp_path))
-    schema = _part_schema()
-    base = spark.createDataFrame([(1, 2020, "a"), (2, 2021, "b")], ["k", "year", "v"])
-    assert storage.upsert(spark, base, schema) == 2
-    before = {tuple(r) for r in storage.read(spark, "t").select("k", "year", "v").collect()}
-
-    calls = {"n": 0}
-    real_rename = os.rename
-
-    def failing(src, dst):
-        if "__stage_" in src and "year=" in dst:
-            calls["n"] += 1
-            if calls["n"] == 2:  # second partition: parked, placement fails
-                raise OSError("simulated rename failure mid-publish")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", failing)
-    update = spark.createDataFrame(
-        [(1, 2020, "NEW"), (2, 2021, "NEW")], ["k", "year", "v"]
-    )
-    with pytest.raises(OSError, match="simulated rename failure"):
-        storage.upsert(spark, update, schema)
-    monkeypatch.undo()
-
-    after = {tuple(r) for r in storage.read(spark, "t").select("k", "year", "v").collect()}
-    assert after == before, "failed publish must leave the table untouched"
-    parent = os.path.dirname(storage.path("t"))
-    leftovers = [d for d in os.listdir(parent) if "__stage_" in d or "__old_" in d]
-    assert leftovers == [], "rollback must leave no stage/trash residue"
-    assert calls["n"] == 2, "the failure must have hit the mid-loop point"
-    assert storage.upsert(spark, update, schema) == 2  # retry succeeds
-    got = {tuple(r) for r in storage.read(spark, "t").select("k", "year", "v").collect()}
-    assert got == {(1, 2020, "NEW"), (2, 2021, "NEW")}
+    _winner_releases_and_vacuum_sweeps_orphan(storage)
 
 
 def test_pointer_read_rejects_uncommitted_table(spark, tmp_path):
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     assert not storage.exists("nope")
     with pytest.raises(FileNotFoundError):
         storage.read(spark, "nope")
 
 
-def test_differential_fuzz_swap_vs_pointer(spark, tmp_path):
-    """Differential evidence the two commit protocols implement ONE table
-    semantics: a seeded random program of upserts / appends / deletes /
-    segment compactions / vacuums runs against both modes, and after
-    EVERY op the full row sets must be identical (and match a plain dict
-    model of latest-wins-by-key plus appended rows)."""
-    import random
-
-    rng = random.Random(1307)
-    schema = TableSchema(
+def _fuzz_schema() -> TableSchema:
+    return TableSchema(
         table_name="t",
         columns=[
             ColumnSpec("k", "integer", primary_key=True),
@@ -774,200 +646,209 @@ def test_differential_fuzz_swap_vs_pointer(spark, tmp_path):
         unique_keys=["k"],
         partition_by=["part"],
     )
-    swap = ParquetStorage(str(tmp_path / "sw"))
-    ptr = ParquetStorage(str(tmp_path / "pt"), commit="pointer")
+
+
+def _fuzz_upsert_rows(rng, step: int) -> tuple[list, dict]:
+    """A random upsert batch and its effect on the dict model. part = k % 3
+    keeps a key's partition stable — the documented upsert contract.
+    Within-batch dedup keeps the min row per key (the dedup_first
+    contract), then incoming wins over stored."""
+    rows = [
+        (k, k % 3, f"s{step}i{i}")
+        for i in range(rng.randrange(1, 5))
+        for k in [rng.randrange(12)]
+    ]
+    batch: dict[int, tuple[int, str]] = {}
+    for k, p, v in sorted(rows):
+        batch.setdefault(k, (p, v))
+    return rows, batch
+
+
+def _fuzz_append_rows(rng, step: int, first_key: int) -> list:
+    """Fresh keys only, so appended rows never collide with upserted ones."""
+    return [
+        (first_key + i, (first_key + i) % 3, f"a{step}i{i}")
+        for i in range(rng.randrange(1, 4))
+    ]
+
+
+def test_differential_fuzz_storage_vs_model(spark, tmp_path):
+    """Differential evidence for the table semantics: a seeded random
+    program of upserts / appends / deletes / segment compactions / vacuums
+    runs against the store, and after EVERY op the full row set must equal
+    a plain dict model of latest-wins-by-key plus appended rows."""
+    import random
+
+    rng = random.Random(1307)
+    schema = _fuzz_schema()
+    storage = ParquetStorage(str(tmp_path))
     model: dict[int, tuple[int, str]] = {}
-    snapshots: dict[int, set] = {}  # pointer generation -> expected row set
+    snapshots: dict[int, set] = {}  # generation -> expected row set
+    next_append_key = 1000
 
-    def df_of(rows):
-        return spark.createDataFrame(rows, ["k", "part", "v"])
-
-    def state(storage) -> set:
+    def state() -> set:
         if not storage.exists("t"):
             return set()
         return {(r["k"], r["part"], r["v"]) for r in storage.read(spark, "t").collect()}
 
     ops = []
-    for step in range(14):
-        op = rng.choice(["upsert", "upsert", "delete", "compact", "vacuum"])
+    for step in range(16):
+        op = rng.choice(["upsert", "upsert", "append", "delete", "compact", "vacuum"])
         if op == "upsert":
-            # part = k % 3 keeps a key's partition stable — the documented
-            # upsert contract. (A moving key is only merged correctly when
-            # its OLD partition happens to be touched by the same batch;
-            # the previous rng.randrange(3) generator relied on the seed
-            # avoiding the other case.)
-            rows = [
-                (k, k % 3, f"s{step}i{i}")
-                for i in range(rng.randrange(1, 5))
-                for k in [rng.randrange(12)]
-            ]
-            # model: within-batch dedup keeps the min row per key (the
-            # dedup_first contract), then incoming wins over stored
-            batch: dict[int, tuple[int, str]] = {}
-            for k, p, v in sorted(rows, key=lambda r: (r[0], r[1], r[2])):
-                batch.setdefault(k, (p, v))
-            for s in (swap, ptr):
-                s.upsert(spark, df_of(rows), schema)
+            rows, batch = _fuzz_upsert_rows(rng, step)
+            storage.upsert(spark, spark.createDataFrame(rows, ["k", "part", "v"]), schema)
             model.update(batch)
+        elif op == "append":
+            rows = _fuzz_append_rows(rng, step, next_append_key)
+            next_append_key += len(rows)
+            storage.create_or_append(spark.createDataFrame(rows, ["k", "part", "v"]), schema)
+            model.update({k: (p, v) for k, p, v in rows})
         elif op == "delete" and model:
             keys = rng.sample(sorted(model), min(len(model), rng.randrange(1, 3)))
-            kdf = spark.createDataFrame(
-                [(k, model[k][0]) for k in keys], ["k", "part"]
-            )
-            for s in (swap, ptr):
-                s.delete_keys(spark, kdf, schema)
+            kdf = spark.createDataFrame([(k, model[k][0]) for k in keys], ["k", "part"])
+            storage.delete_keys(spark, kdf, schema)
             for k in keys:
                 model.pop(k)
         elif op == "compact":
-            ptr.compact_segments(spark, schema, max_segments=2)
+            storage.compact_segments(spark, schema, max_segments=2)
         elif op == "vacuum":
-            for s in (swap, ptr):
-                s.vacuum("t")
+            storage.vacuum("t")
         ops.append(op)
         want = {(k, p, v) for k, (p, v) in model.items()}
-        got_swap, got_ptr = state(swap), state(ptr)
-        assert got_swap == want, f"swap diverged from model after {ops}"
-        assert got_ptr == want, f"pointer diverged from model after {ops}"
-        if ptr.exists("t"):
-            snapshots[ptr.generation("t")] = want
-    assert any(o == "delete" for o in ops) and ops.count("upsert") >= 5
+        assert state() == want, f"store diverged from model after {ops}"
+        if storage.exists("t"):
+            snapshots[storage.generation("t")] = want
+    assert ops.count("upsert") >= 4 and {"append", "delete"} <= set(ops), ops
     # time-travel coda: every generation still retained after the random
     # vacuums must read back EXACTLY the model snapshot recorded when that
-    # generation was current — pointer history is consistent under the
-    # whole op mix (including compactions, which bump the generation
-    # without changing visible rows)
-    retained = [g for g in ptr.history("t") if g in snapshots]
+    # generation was current — history is consistent under the whole op
+    # mix (including compactions, which bump the generation without
+    # changing visible rows)
+    retained = [g for g in storage.history("t") if g in snapshots]
     assert retained, "fuzz never observed a retained generation"
     for g in retained:
         got = {
             (r["k"], r["part"], r["v"])
-            for r in ptr.read(spark, "t", as_of=g).collect()
+            for r in storage.read(spark, "t", as_of=g).collect()
         }
         assert got == snapshots[g], f"as_of={g} snapshot diverged after {ops}"
 
 
-def test_differential_fuzz_swap_publish_fault_injection(spark, tmp_path, monkeypatch):
-    """Crash-consistency fuzz for the staged swap publish: a seeded random
-    program of upserts / appends / deletes runs with os.rename randomly
-    failing on PUBLISH renames only (staged-file ingest, partition swaps,
-    atomic-swap dance — recovery renames stay reliable, as a filesystem
-    that failed everything forever would). Invariants, checked after every
-    event: (a) any op that raises leaves the swap table EXACTLY as before
-    (the mid-loop rollback + crashed-swap recovery), (b) a bounded retry
-    then succeeds, (c) swap and a fault-free pointer store agree with the
-    dict model throughout."""
+def test_differential_fuzz_publish_fault_injection(spark, tmp_path, monkeypatch):
+    """Crash-consistency fuzz for the manifest publish: a seeded random
+    program of upserts / appends / deletes runs while, at a seeded rate,
+    the segment write job fails (after writing its files) or the
+    os.replace of the history file or of ``_current`` fails. Invariants:
+    (a) after every injected failure the read state and generation() are
+    unchanged, (b) a bounded retry then lands, (c) the store agrees with
+    the dict model throughout, (d) no write path renames anything — the
+    property that makes the protocol safe where rename is copy+delete —
+    and (e) vacuum then removes every orphan segment and tmp file."""
     import random
+
+    from pyspark.sql.readwriter import DataFrameWriter
 
     fault = random.Random(4113)
     rng = random.Random(2913)
-    schema = TableSchema(
-        table_name="t",
-        columns=[
-            ColumnSpec("k", "integer", primary_key=True),
-            ColumnSpec("part", "integer"),
-            ColumnSpec("v", "string"),
-        ],
-        unique_keys=["k"],
-        partition_by=["part"],
-    )
-    swap = ParquetStorage(str(tmp_path / "sw"))
-    ptr = ParquetStorage(str(tmp_path / "pt"), commit="pointer")
+    schema = _fuzz_schema()
+    storage = ParquetStorage(str(tmp_path))
     model: dict[int, tuple[int, str]] = {}
-
-    real_rename = os.rename
     armed = {"on": False}
+    fired: dict[str, int] = {}
+    real_parquet, real_replace = DataFrameWriter.parquet, os.replace
 
-    def flaky(src, dst):
-        publishy = "__stage_" in src or "__tmp_" in src or "__old_" in dst
-        if armed["on"] and publishy and fault.random() < 0.35:
-            raise OSError("injected publish-rename fault")
-        return real_rename(src, dst)
+    def maybe_fail(what: str) -> None:
+        if armed["on"] and fault.random() < 0.25:
+            fired[what] = fired.get(what, 0) + 1
+            raise OSError(f"injected {what} fault")
 
-    monkeypatch.setattr(os, "rename", flaky)
+    def flaky_parquet(self, path, *a, **kw):
+        out = real_parquet(self, path, *a, **kw)
+        if os.path.basename(path).startswith("seg_"):
+            maybe_fail("segment-write")
+        return out
 
-    def state(storage) -> set:
+    def flaky_replace(src, dst):
+        name = os.path.basename(dst)
+        if name == ParquetStorage.MANIFEST:
+            maybe_fail("current-replace")
+        elif name.startswith(ParquetStorage.HISTORY_PREFIX):
+            maybe_fail("history-replace")
+        return real_replace(src, dst)
+
+    def no_rename(src, dst):
+        raise AssertionError(f"a write path renamed {src} -> {dst}")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", flaky_parquet)
+    monkeypatch.setattr(os, "replace", flaky_replace)
+    monkeypatch.setattr(os, "rename", no_rename)
+
+    def state() -> set:
         if not storage.exists("t"):
             return set()
         return {(r["k"], r["part"], r["v"]) for r in storage.read(spark, "t").collect()}
 
-    def run_swap_with_faults(op) -> int:
-        """Run op against the swap store under injected faults; after every
-        failure assert full rollback; return the number of injected
-        failures survived."""
-        failures = 0
+    def run_with_faults(op) -> None:
         for attempt in range(8):
+            before, gen = state(), storage.generation("t")
             armed["on"] = attempt < 7  # last attempt fault-free: must land
             try:
-                op(swap)
-                armed["on"] = False
-                return failures
+                op()
+                return
             except OSError as e:
                 assert "injected" in str(e), e
-                failures += 1
+            finally:
                 armed["on"] = False
-                want = {(k, p, v) for k, (p, v) in model.items()}
-                assert state(swap) == want, (
-                    f"swap not rolled back after injected failure #{failures}"
-                )
+            assert state() == before, "read state moved after an injected failure"
+            assert storage.generation("t") == gen, "generation moved after a failed publish"
         raise AssertionError("unreachable")
 
     next_append_key = 1000
-    survived = 0
     ops = []
     for step in range(12):
         kind = rng.choice(["upsert", "upsert", "append", "delete"])
         if kind == "upsert":
-            # part = k % 3: the upsert contract requires a key's partition
-            # to be stable (as any Hive-style dynamic-overwrite MERGE does)
-            rows = [
-                (k, k % 3, f"s{step}i{i}")
-                for i in range(rng.randrange(1, 5))
-                for k in [rng.randrange(12)]
-            ]
-            batch: dict[int, tuple[int, str]] = {}
-            for k, p, v in sorted(rows, key=lambda r: (r[0], r[1], r[2])):
-                batch.setdefault(k, (p, v))
+            rows, batch = _fuzz_upsert_rows(rng, step)
             df = spark.createDataFrame(rows, ["k", "part", "v"])
-            survived += run_swap_with_faults(lambda s: s.upsert(spark, df, schema))
-            ptr.upsert(spark, df, schema)
+            run_with_faults(lambda: storage.upsert(spark, df, schema))
             model.update(batch)
         elif kind == "append":
-            rows = [
-                (next_append_key + i, (next_append_key + i) % 3, f"a{step}i{i}")
-                for i in range(rng.randrange(1, 4))
-            ]
+            rows = _fuzz_append_rows(rng, step, next_append_key)
             next_append_key += len(rows)
             df = spark.createDataFrame(rows, ["k", "part", "v"])
-            survived += run_swap_with_faults(lambda s: s.create_or_append(df, schema))
-            ptr.create_or_append(df, schema)
+            run_with_faults(lambda: storage.create_or_append(df, schema))
             model.update({k: (p, v) for k, p, v in rows})
         elif kind == "delete" and model:
             keys = rng.sample(sorted(model), min(len(model), rng.randrange(1, 3)))
             kdf = spark.createDataFrame([(k, model[k][0]) for k in keys], ["k", "part"])
-            survived += run_swap_with_faults(
-                lambda s: s.delete_keys(spark, kdf, schema)
-            )
-            ptr.delete_keys(spark, kdf, schema)
+            run_with_faults(lambda: storage.delete_keys(spark, kdf, schema))
             for k in keys:
                 model.pop(k)
         else:
             continue
         ops.append(kind)
         want = {(k, p, v) for k, (p, v) in model.items()}
-        assert state(swap) == want, f"swap diverged from model after {ops}"
-        assert state(ptr) == want, f"pointer diverged from model after {ops}"
-    assert survived >= 3, (
-        f"fault schedule exercised only {survived} failures — raise the rate"
+        assert state() == want, f"store diverged from model after {ops}"
+    assert set(fired) == {"segment-write", "history-replace", "current-replace"}, (
+        f"fault schedule exercised only {fired} — raise the rate"
     )
 
+    removed = storage.vacuum("t")
+    assert any(os.path.basename(p).startswith("seg_") for p in removed)
+    root = storage.path("t")
+    live = {s for segs in storage._read_manifest("t")["parts"].values() for s in segs}
+    assert {e for e in os.listdir(root) if e.startswith("seg_")} == live
+    assert not [e for e in os.listdir(root) if ".tmp_" in e]
+    assert state() == {(k, p, v) for k, (p, v) in model.items()}
 
-def test_swap_append_schema_evolution_is_deterministic(spark, tmp_path):
-    """Swap-mode appends across a schema change used to read under
-    whichever part file's footer Spark happened to pick (UUID file names
-    make the winner listing-order random). The generation marker now
-    stamps the evolved union schema and read() applies it explicitly:
-    old rows surface the new column as NULL, a NARROWER later append
-    does not shrink the view, and the column set is stable."""
+
+def test_append_schema_evolution_is_deterministic(spark, tmp_path):
+    """Appends across a schema change would read under whichever part
+    file's footer Spark happened to pick (UUID file names make the winner
+    listing-order random). The manifest stamps the evolved union schema
+    and read() applies it explicitly: old rows surface the new column as
+    NULL, a NARROWER later append does not shrink the view, the column set
+    is stable, and resolving the table launches no schema-inference job."""
     storage = ParquetStorage(str(tmp_path))
     v1 = TableSchema(
         table_name="t",
@@ -992,17 +873,23 @@ def test_swap_append_schema_evolution_is_deterministic(spark, tmp_path):
     assert {tuple(r) for r in df.collect()} == {(1, "a", None), (2, "b", "x")}
     # a narrower append after the widening must NOT shrink the view
     storage.create_or_append(spark.createDataFrame([(3, "c")], ["k", "v"]), v1)
-    df = storage.read(spark, "t")
+    sc = spark.sparkContext
+    sc.setJobGroup("storage-read-probe", "storage.read resolves the manifest")
+    try:
+        df = storage.read(spark, "t")
+        assert sc.statusTracker().getJobIdsForGroup("storage-read-probe") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert df.columns == ["k", "v", "extra"], "union view survives a narrow append"
     assert {tuple(r) for r in df.collect()} == {
         (1, "a", None), (2, "b", "x"), (3, "c", None),
     }
 
 
-def test_swap_partitioned_upsert_schema_evolution(spark, tmp_path):
-    """The partition-swap publish path stamps the evolved schema too: after
+def test_partitioned_upsert_schema_evolution(spark, tmp_path):
+    """The partition-replace publish stamps the evolved schema too: after
     a widened upsert touches ONE partition, the untouched partition's old
-    files still read under the union schema (new column NULL)."""
+    segment still reads under the union schema (new column NULL)."""
     storage = ParquetStorage(str(tmp_path))
     v1 = _part_schema()
     storage.upsert(
@@ -1039,7 +926,7 @@ def test_pointer_time_travel_and_rollback(spark, tmp_path):
     read as consistent snapshots (read(as_of=gen)), rollback republishes
     an old generation's pointer map as a NEW generation without copying
     data, and crash orphans above the current generation are refused."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _kv_schema()
     storage.upsert(spark, spark.createDataFrame([(1, "a")], ["k", "v"]), schema)
     storage.upsert(spark, spark.createDataFrame([(2, "b")], ["k", "v"]), schema)
@@ -1065,16 +952,13 @@ def test_pointer_time_travel_and_rollback(spark, tmp_path):
     storage.upsert(spark, spark.createDataFrame([(3, "c")], ["k", "v"]), schema)
     assert snap() == {(1, "a"), (3, "c")}
 
-    with pytest.raises(ValueError, match="requires commit='pointer'"):
-        ParquetStorage(str(tmp_path / "sw")).rollback("t", to_gen=1)
-
 
 def test_pointer_vacuum_retention_bounds_time_travel(spark, tmp_path):
     """vacuum(retain_generations=K) keeps the last K prior generations
     time-travelable (their manifests AND the segments they reference);
     everything older is pruned and its exclusive segments swept; default
     K=0 collapses to the current snapshot only."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _kv_schema()
     for step in range(3):
         storage.upsert(
@@ -1105,7 +989,7 @@ def test_pointer_diff_generations_change_feed(spark, tmp_path):
     snapshots: keyed mode classifies insert / update_post / delete with
     NULL-proof presence markers and null-safe change detection; keyless
     mode pairs changes as delete + insert via exceptAll."""
-    storage = ParquetStorage(str(tmp_path), commit="pointer")
+    storage = ParquetStorage(str(tmp_path))
     schema = _kv_schema()
     storage.upsert(
         spark,
@@ -1144,42 +1028,28 @@ def test_pointer_diff_generations_change_feed(spark, tmp_path):
         (4, "d", "insert"),
     }
 
-    with pytest.raises(ValueError, match="requires commit='pointer'"):
-        ParquetStorage(str(tmp_path / "sw")).diff_generations(spark, "t", 1, keys=["k"])
-
 
 def test_count_reads_footers_not_data(spark, tmp_path, monkeypatch):
     """upsert/delete return counts; at 100 TB a scan-based count would be
     a full table read per write. _count must resolve from parquet footer
-    metadata of the LIVE files only: exact across both modes (escaped
-    partitions, multi-segment pointer tables with superseded segments
-    still on disk) and proven scan-free by making read() explode."""
-    swap = ParquetStorage(str(tmp_path / "sw"))
-    ptr = ParquetStorage(str(tmp_path / "pt"), commit="pointer")
+    metadata of the LIVE files only: exact with escaped partitions and with
+    superseded segments still on disk until vacuum, and proven scan-free
+    by making read() explode."""
+    storage = ParquetStorage(str(tmp_path))
     schema = _str_part_schema()
-    # swap gets an escapable partition value (pointer rejects those by
-    # design); pointer gets a plain one — the point is superseded
-    # segments staying on disk until vacuum must not be counted
-    for s, hot in ((swap, "a:b"), (ptr, "left")):
-        base = spark.createDataFrame(
-            [(1, hot, "x"), (2, hot, "y"), (3, "keep", "z")], ["k", "src", "v"]
-        )
-        assert s.upsert(spark, base, schema) == 3
-        assert s.upsert(
-            spark, spark.createDataFrame([(1, hot, "X2")], ["k", "src", "v"]), schema
-        ) == 3
-        assert s.delete_keys(
-            spark, spark.createDataFrame([(2, hot)], ["k", "src"]), schema
-        ) == 2
+    base = spark.createDataFrame(
+        [(1, "a:b", "x"), (2, "a:b", "y"), (3, "keep", "z")], ["k", "src", "v"]
+    )
+    assert storage.upsert(spark, base, schema) == 3
+    assert storage.upsert(
+        spark, spark.createDataFrame([(1, "a:b", "X2")], ["k", "src", "v"]), schema
+    ) == 3
+    assert storage.delete_keys(
+        spark, spark.createDataFrame([(2, "a:b")], ["k", "src"]), schema
+    ) == 2
 
     def boom(*a, **kw):
         raise AssertionError("_count must not scan via read()")
 
     monkeypatch.setattr(ParquetStorage, "read", boom)
-    assert swap._count(spark, "t") == 2
-    assert ptr._count(spark, "t") == 2
-
-
-def test_commit_mode_validated():
-    with pytest.raises(ValueError, match="commit"):
-        ParquetStorage("/tmp/x", commit="s3")
+    assert storage._count(spark, "t") == 2
