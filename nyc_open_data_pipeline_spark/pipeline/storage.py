@@ -434,7 +434,7 @@ class ParquetStorage:
         order of UUID-named part files), old segments' missing columns
         read as NULL, and no schema-inference Spark job runs per read.
         Per-segment ``basePath`` keeps the Hive partition columns.
-        Manifests stamped before schema stamping fall back to footer
+        Manifests written before schema stamping fall back to footer
         inference. ``as_of=<generation>`` TIME-TRAVELS to a retained
         generation's snapshot — valid until vacuum retention prunes it;
         generations above the current one are refused (a crash orphan is
@@ -632,13 +632,13 @@ class ParquetStorage:
         from the new slice (a delete emptied it) drops out of the
         manifest."""
         table = schema.table_name
-        gone = {tuple(self._hive_value_str(r[p]) for p in parts) for r in touched}
+        touched_vals = {tuple(self._hive_value_str(r[p]) for p in parts) for r in touched}
         seg, rps = self._write_segment(merged, schema)
         m = self._read_manifest(table) or {"gen": 0, "parts": {}}
         m["parts"] = {
             rp: segs
             for rp, segs in m["parts"].items()
-            if tuple(self._rp_values(rp).values()) not in gone
+            if tuple(self._rp_values(rp).values()) not in touched_vals
         }
         for rp in rps:
             m["parts"][rp] = [seg]
