@@ -369,9 +369,9 @@ def _str_part_schema() -> TableSchema:
 def test_escaped_partition_values_round_trip(spark, tmp_path):
     """Spark percent-escapes some characters in Hive dir names ("a:b" is
     written as ``src=a%3Ab``). Touched partitions are matched to manifest
-    entries by UNESCAPED value, so upsert, append, delete-to-empty and
-    purge all round-trip such values, and the purge predicate sees the
-    values, not the escaped dir text."""
+    entries by UNESCAPED value, so upsert, append and purge all round-trip
+    such values, and the purge predicate sees the values, not the escaped
+    dir text."""
     storage = ParquetStorage(str(tmp_path))
     schema = _str_part_schema()
     base = spark.createDataFrame(
@@ -392,16 +392,9 @@ def test_escaped_partition_values_round_trip(spark, tmp_path):
         (1, "a:b", "X2"), (2, "x/y", "y"), (3, "50%", "z"),
         (4, "keep", "w"), (5, "x/y", "n"), (6, "a:b", "app"),
     }
-    # a partial delete keeps the partition; deleting its last row drops it
-    def parts() -> set:
-        return set(storage._read_manifest("t")["parts"])
-
-    gone = spark.createDataFrame([(2, "x/y")], ["k", "src"])
-    assert storage.delete_keys(spark, gone, schema) == 5
-    assert "src=x%2Fy" in parts()
-    gone = spark.createDataFrame([(5, "x/y")], ["k", "src"])
-    assert storage.delete_keys(spark, gone, schema) == 4
-    assert parts() == {"src=a%3Ab", "src=50%25", "src=keep"}
+    assert set(storage._read_manifest("t")["parts"]) == {
+        "src=a%3Ab", "src=x%2Fy", "src=50%25", "src=keep",
+    }
 
     seen: list[str] = []
 
@@ -410,8 +403,52 @@ def test_escaped_partition_values_round_trip(spark, tmp_path):
         return values["src"] != "50%"
 
     assert storage.purge_partitions(schema, keep) == [{"src": "50%"}]
-    assert sorted(seen) == ["50%", "a:b", "keep"]
-    assert rows() == {(1, "a:b", "X2"), (4, "keep", "w"), (6, "a:b", "app")}
+    assert sorted(seen) == ["50%", "a:b", "keep", "x/y"]
+    assert rows() == {
+        (1, "a:b", "X2"), (2, "x/y", "y"), (4, "keep", "w"),
+        (5, "x/y", "n"), (6, "a:b", "app"),
+    }
+
+
+def test_swap_delete_empties_partition_directory(spark, tmp_path):
+    """Dynamic partition overwrite only replaces partitions PRESENT in the
+    written data, so a delete that removes a partition's every row must
+    drop that partition from the manifest, or its stale segment would keep
+    serving the 'deleted' rows — including for Hive percent-escaped
+    partition values (matched on unescaped text). A partial delete keeps
+    the partition, and deleting every row of every partition commits a
+    table that reads as empty."""
+    storage = ParquetStorage(str(tmp_path))
+    schema = _str_part_schema()
+
+    def parts() -> set:
+        return set(storage._read_manifest("t")["parts"])
+
+    base = spark.createDataFrame(
+        [(1, "a:b", "x"), (2, "a:b", "y"), (3, "keep", "z")], ["k", "src", "v"]
+    )
+    assert storage.upsert(spark, base, schema) == 3
+    assert parts() == {"src=a%3Ab", "src=keep"}
+    gone = spark.createDataFrame([(1, "a:b"), (2, "a:b")], ["k", "src"])
+    assert storage.delete_keys(spark, gone, schema) == 1
+    assert parts() == {"src=keep"}, (
+        "emptied (escaped-name) partition kept serving deleted rows"
+    )
+    rows = {(r["k"], r["src"]) for r in storage.read(spark, "t").collect()}
+    assert rows == {(3, "keep")}
+    # partial delete must NOT remove a partition that still has rows
+    storage.upsert(spark, base, schema)
+    one = spark.createDataFrame([(1, "a:b")], ["k", "src"])
+    assert storage.delete_keys(spark, one, schema) == 2
+    assert parts() == {"src=a%3Ab", "src=keep"}
+    # deleting EVERY row of EVERY partition: the commit succeeds and the
+    # count resolves to 0
+    rest = spark.createDataFrame([(2, "a:b"), (3, "keep")], ["k", "src"])
+    assert storage.delete_keys(spark, rest, schema) == 0
+    assert not storage.exists("t")
+    # vacuum then sweeps the emptied partitions' segments off disk
+    storage.vacuum("t")
+    assert not [e for e in os.listdir(storage.path("t")) if e.startswith("seg_")]
 
 
 def test_pointer_readers_get_snapshot_isolation(spark, tmp_path):
