@@ -517,16 +517,30 @@ class ParquetStorage:
         }
 
     @staticmethod
-    def _hive_value_str(v) -> str:
-        """Canonical Hive dir-name text for one partition value (None and
-        '' fold to the default-partition token — Spark folds both into
-        ``__HIVE_DEFAULT_PARTITION__``; booleans lowercase as Spark
-        writes them)."""
-        if v is None or v == "":
-            return "__HIVE_DEFAULT_PARTITION__"
-        if isinstance(v, bool):
-            return "true" if v else "false"
-        return str(v)
+    def _touched_partitions(frame: DataFrame, parts: list[str]):
+        """The partitions ``frame`` touches, collected to the driver (one
+        row per partition — tiny, like the reference's batch bookkeeping):
+        a predicate over the typed values that prunes a table scan to
+        those partitions, and the set of their Hive dir-name value tuples.
+        The dir text is Spark's own string cast, run in the session (and
+        time zone) that writes the partition dirs, so it matches where
+        Python's ``str`` does not (``1.0E20`` vs ``1e+20``, ``...00.123``
+        vs ``...00.123000``). None and '' fold to the default-partition
+        token, as Spark folds both."""
+        texts = [F.col(p).cast("string").alias(f"__text_{p}") for p in parts]
+        rows = frame.select(*parts, *texts).distinct().collect()
+        pred = None
+        for row in rows:
+            clause = None
+            for p in parts:
+                c = F.col(p).eqNullSafe(F.lit(row[p]))
+                clause = c if clause is None else clause & c
+            pred = clause if pred is None else pred | clause
+        vals = {
+            tuple(row[f"__text_{p}"] or "__HIVE_DEFAULT_PARTITION__" for p in parts)
+            for row in rows
+        }
+        return pred, vals
 
     # ------------------------------------------------------------------
     # writes
@@ -620,25 +634,26 @@ class ParquetStorage:
         merged: DataFrame,
         schema: TableSchema,
         parts: list[str],
-        touched,
+        touched_vals: set[tuple[str, ...]],
         token: str,
     ) -> None:
-        """Publish a merged slice over exactly the ``touched`` partitions
-        (driver-side rows of partition values): the slice lands in a new
-        segment and the touched partitions' manifest entries are replaced
-        in one flip. Touched partitions are matched to manifest entries by
-        UNESCAPED value tuple, so values Spark percent-escapes in dir names
-        (``a:b`` -> ``a%3Ab``) repoint exactly; a touched partition absent
-        from the new slice (a delete emptied it) drops out of the
-        manifest."""
+        """Publish a merged slice over exactly the touched partitions (their
+        dir-name value tuples over ``parts``, from ``_touched_partitions``):
+        the slice lands in a new segment and the touched partitions'
+        manifest entries are replaced in one flip. Manifest entries are
+        matched by UNESCAPED value tuple over ``parts``, so values Spark
+        percent-escapes in dir names (``a:b`` -> ``a%3Ab``) repoint
+        exactly, and a key batch carrying only some partition columns
+        replaces every partition under the values it names; a touched
+        partition absent from the new slice (a delete emptied it) drops
+        out of the manifest."""
         table = schema.table_name
-        touched_vals = {tuple(self._hive_value_str(r[p]) for p in parts) for r in touched}
         seg, rps = self._write_segment(merged, schema)
         m = self._read_manifest(table) or {"gen": 0, "parts": {}}
         m["parts"] = {
             rp: segs
             for rp, segs in m["parts"].items()
-            if tuple(self._rp_values(rp).values()) not in touched_vals
+            if tuple(self._rp_values(rp)[p] for p in parts) not in touched_vals
         }
         for rp in rps:
             m["parts"][rp] = [seg]
@@ -659,22 +674,12 @@ class ParquetStorage:
         batch touches (Catalyst prunes the scan to those directories), merge,
         and replace exactly those partitions. Untouched partitions' files
         are never read or rewritten."""
-        # the touched-partition list is tiny (one tuple per partition) — a
-        # driver-side scalar like the reference's batch bookkeeping
-        touched = incoming.select(*parts).distinct().collect()
-        pred = None
-        for row in touched:
-            clause = None
-            for p in parts:
-                c = F.col(p).eqNullSafe(F.lit(row[p]))
-                clause = c if clause is None else clause & c
-            pred = clause if pred is None else pred | clause
-
+        pred, touched_vals = self._touched_partitions(incoming, parts)
         existing = self.read(spark, schema.table_name)
         pruned = existing.filter(pred) if pred is not None else existing.limit(0)
         survivors = pruned.join(incoming.select(*keys).distinct(), on=keys, how="left_anti")
         merged = survivors.unionByName(incoming, allowMissingColumns=True)
-        self._replace_partitions(merged, schema, parts, touched, token)
+        self._replace_partitions(merged, schema, parts, touched_vals, token)
         return self._count(spark, schema.table_name)
 
     def delete_keys(self, spark: SparkSession, keys_df: DataFrame, schema: TableSchema) -> int:
@@ -691,24 +696,18 @@ class ParquetStorage:
             raise ValueError("delete_keys requires unique_keys on the schema")
         if not self.exists(schema.table_name):
             return 0
+        keys_df = conform(keys_df, schema)
         wanted = keys_df.select(
             *[c for c in keys_df.columns if c in set(keys) | set(schema.partition_by)]
         ).distinct()
         parts = [c for c in schema.partition_by if c in wanted.columns]
         with self._locked(schema.table_name) as token:
             if parts:
-                touched = wanted.select(*parts).distinct().collect()
-                pred = None
-                for row in touched:
-                    clause = None
-                    for p in parts:
-                        c = F.col(p).eqNullSafe(F.lit(row[p]))
-                        clause = c if clause is None else clause & c
-                    pred = clause if pred is None else pred | clause
+                pred, touched_vals = self._touched_partitions(wanted, parts)
                 existing = self.read(spark, schema.table_name)
                 pruned = existing.filter(pred) if pred is not None else existing.limit(0)
                 survivors = pruned.join(wanted.select(*keys), on=keys, how="left_anti")
-                self._replace_partitions(survivors, schema, parts, touched, token)
+                self._replace_partitions(survivors, schema, parts, touched_vals, token)
             else:
                 existing = self.read(spark, schema.table_name)
                 survivors = existing.join(wanted.select(*keys), on=keys, how="left_anti")

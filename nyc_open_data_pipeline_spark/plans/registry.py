@@ -30,376 +30,6 @@ class QuerySpec:
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
-# The correctness driver iterates ``queries()`` in dict order and stops after
-# ~50 entries (observed rounds 1-3: exactly the first 50 names get CORRECTNESS
-# rows). The ordering is DERIVED, not hand-maintained: driver_green.json (see
-# scripts/update_driver_green.py) records each query's last fully-green driver
-# round, and ``all_queries()`` sorts no-green-ever queries first (registration
-# order), then greens stalest-round-first. A query added late in a round
-# therefore always outranks every already-proven query and can never fall past
-# the cap — the round-3 failure mode where 5 late additions landed at hand
-# -curated slots 51-55 and got no driver row.
-
-
-_PKG_PREFIX = "nyc_open_data_pipeline_spark"
-
-
-def _const_repr(obj) -> str | None:
-    """Deterministic canonical repr for primitive constants and containers
-    of them, or None when ``obj`` holds anything non-primitive.
-
-    set/frozenset/dict iterate in hash order, which varies with
-    PYTHONHASHSEED — raw ``repr`` would make ``impl_hash`` differ between
-    driver runs and spuriously reset every stamp each round (ADVICE r10).
-    Canonicalize by SORTING element/item reprs instead of trusting
-    iteration order."""
-    if isinstance(obj, (bool, int, float, str, bytes)) or obj is None:
-        return repr(obj)
-    if isinstance(obj, (tuple, list)):
-        parts = [_const_repr(x) for x in obj]
-        if any(p is None for p in parts):
-            return None
-        return f"{type(obj).__name__}[{','.join(parts)}]"
-    if isinstance(obj, (set, frozenset)):
-        parts = [_const_repr(x) for x in obj]
-        if any(p is None for p in parts):
-            return None
-        return f"{type(obj).__name__}{{{','.join(sorted(parts))}}}"
-    if isinstance(obj, dict):
-        items = []
-        for k, v in obj.items():
-            kr, vr = _const_repr(k), _const_repr(v)
-            if kr is None or vr is None:
-                return None
-            items.append(f"{kr}:{vr}")
-        return f"dict{{{','.join(sorted(items))}}}"
-    return None
-
-
-def _carries_material(obj) -> bool:
-    """True when folding ``obj`` into the walk can emit behavior material:
-    a package module/callable, a primitive constant, or any container
-    (walked for package callables; fully-primitive ones hash by value)."""
-    import inspect
-
-    if inspect.ismodule(obj):
-        return (getattr(obj, "__name__", "") or "").startswith(_PKG_PREFIX)
-    if callable(obj):
-        mod = getattr(obj, "__module__", None)
-        return isinstance(mod, str) and mod.startswith(_PKG_PREFIX)
-    return isinstance(
-        obj, (bool, int, float, str, bytes, tuple, frozenset, dict, list, set)
-    ) or obj is None
-
-
-def _walk_value(
-    nm: str,
-    obj,
-    seen: set[int],
-    out: list[str],
-    depth: int,
-    attr_names: frozenset = frozenset(),
-    in_container: bool = False,
-) -> None:
-    """Fold one referenced global/closure value into the behavior material:
-    package modules/callables by source (transitively), primitives and
-    FULLY-primitive containers by canonical repr, and — the round-10
-    verdict's container blind spot — dispatch tables holding package
-    callables by recursing into their elements, in a deterministic order.
-
-    ``in_container``: inside a MIXED container only package callables/
-    modules/nested containers are followed; primitive leaves are NOT
-    emitted. A mixed container with primitive leaves is a runtime cache
-    (e.g. llmdata._HV_CACHE's (corpus-mtime, DataFrame) tuples), and
-    hashing its mutable primitives made impl_hash differ before vs after
-    running a query — the driver would then re-order its window
-    mid-session (round-11 bug, caught by the contract check)."""
-    import inspect
-
-    if inspect.ismodule(obj):
-        # NOT tracked in ``seen``: two fns in one closure may reach the
-        # same module with DIFFERENT attr_names, and a module-level guard
-        # would drop the second fn's members from the hash (round-11
-        # review). Re-walks are cheap — member callables dedupe on their
-        # own ids, and cycles cannot recurse (a module-typed attr hashes
-        # as whole source without descending).
-        if depth > 8:
-            return
-        if (getattr(obj, "__name__", "") or "").startswith(_PKG_PREFIX):
-            # Per-ATTRIBUTE granularity (round 11): every ``MOD.attr``
-            # access puts ``attr`` in the referencing code's co_names
-            # (LOAD_ATTR), so hash exactly the members this code can
-            # reach instead of the whole module source — a whole-module
-            # hash made ANY edit to a shared operator file (e.g. one
-            # function of operators/dedup.py) spuriously reset every
-            # query in the package that imports the module, flooding the
-            # driver's re-check window with false positives. co_names
-            # over-approximates (it also holds unrelated globals), which
-            # only ever hashes MORE than reached — never less. Fallback:
-            # if nothing resolves (dynamic getattr dispatch), keep the
-            # conservative whole-module hash.
-            # ``hit`` counts only members that CARRY behavior material
-            # (package callables/modules, hashable constants/containers).
-            # Counting every resolvable attr made the whole-module
-            # fallback unreachable — co_names almost always contains some
-            # incidental name that resolves on the module (``F``,
-            # ``Window``), so a member reached only via computed
-            # getattr strings was silently excluded (ADVICE r11).
-            hit = False
-            for attr in sorted(attr_names):
-                if attr.startswith("__"):
-                    continue
-                try:
-                    member = getattr(obj, attr)
-                except AttributeError:
-                    # A PACKAGE exposes a submodule as an attribute only
-                    # after something imported it — getattr-only resolution
-                    # made impl_hash depend on this process's import state
-                    # (round 12: mm2's body-local `from pkg.functions
-                    # import multimodal` hashed nothing when no prior code
-                    # had imported the submodule). Import it explicitly so
-                    # the walk is deterministic.
-                    if not hasattr(obj, "__path__"):
-                        continue
-                    import importlib
-
-                    try:
-                        member = importlib.import_module(f"{obj.__name__}.{attr}")
-                    except Exception:  # noqa: BLE001
-                        # not only ImportError: a submodule whose top-level
-                        # code raises anything must degrade to the fallback
-                        # hash, not crash every dependent stamp (round-12
-                        # review)
-                        continue
-                if _carries_material(member):
-                    hit = True
-                _walk_value(f"{nm}.{attr}", member, seen, out, depth + 1)
-            if not hit:
-                try:
-                    out.append(inspect.getsource(obj))
-                except (OSError, TypeError):
-                    pass
-        return
-    if callable(obj):
-        mod = getattr(obj, "__module__", None)
-        if not (isinstance(mod, str) and mod.startswith(_PKG_PREFIX)):
-            return
-        if inspect.isclass(obj):
-            try:
-                out.append(inspect.getsource(obj))
-            except (OSError, TypeError):
-                pass
-        else:
-            _behavior_sources(obj, seen, out, depth + 1)
-        return
-    # Immutable values hash by content. Mutable containers (list/set/dict)
-    # reached as NAMED module globals also hash by content when they are
-    # FULLY primitive AND their name declares them a constant: module-level
-    # data tables (functions/text.py STOPWORDS) are ALL_CAPS by repo
-    # convention, and skipping them let a table edit change query behavior
-    # without changing impl_hash (ADVICE r11 — the exact staleness class
-    # round 11 set out to close). The gate is the POSITIVE ALL_CAPS
-    # convention, not merely "no leading underscore" (ADVICE r12): a
-    # runtime-mutated stats/seen table under an innocent lowercase name
-    # would otherwise make impl_hash differ before vs after running a
-    # query — the instability class this walk must never reintroduce.
-    # Runtime caches are excluded three ways: underscore names (_HV_CACHE),
-    # non-ALL-CAPS names (any lowercase global), and non-primitive contents
-    # (_const_repr returns None for a (mtime, DataFrame) tuple). Inside a
-    # MIXED container, primitive leaves still never hash (see docstring).
-    if isinstance(obj, (bool, int, float, str, bytes, tuple, frozenset)):
-        rep = _const_repr(obj)
-        if rep is not None:
-            if not in_container:
-                out.append(f"{nm}={rep}")
-            return
-    leaf = nm.rsplit(".", 1)[-1].split("[", 1)[0]
-    if (
-        not in_container
-        and isinstance(obj, (dict, list, set))
-        and leaf == leaf.upper()
-        and not leaf.startswith("_")
-    ):
-        rep = _const_repr(obj)
-        if rep is not None:
-            out.append(f"{nm}={rep}")
-            return
-    # Mixed container (e.g. a name -> helper-fn dispatch dict): recurse so a
-    # container-reached package callable still enters the hash (primitive
-    # leaves are skipped — see docstring). Determinism: dicts iterate in
-    # insertion order (stable for module-level literals); sets are ordered
-    # by a stable sort key since hash order is seed-dependent.
-    if depth > 8 or id(obj) in seen:
-        return
-    if isinstance(obj, dict):
-        seen.add(id(obj))
-        for k, v in obj.items():
-            _walk_value(
-                f"{nm}[{_const_repr(k) or type(k).__name__}]",
-                v, seen, out, depth + 1, in_container=True,
-            )
-    elif isinstance(obj, (tuple, list)):
-        seen.add(id(obj))
-        for i, el in enumerate(obj):
-            _walk_value(f"{nm}[{i}]", el, seen, out, depth + 1, in_container=True)
-    elif isinstance(obj, (set, frozenset)):
-        seen.add(id(obj))
-        els = sorted(
-            obj,
-            key=lambda e: (
-                getattr(e, "__module__", "") or "",
-                getattr(e, "__qualname__", "") or "",
-                str(type(e)),
-            ),
-        )
-        for el in els:
-            _walk_value(f"{nm}{{}}", el, seen, out, depth + 1, in_container=True)
-
-
-def _behavior_sources(fn, seen: set[int], out: list[str], depth: int = 0) -> None:
-    """Collect fn's source plus the sources of every PACKAGE callable,
-    class, module, and primitive constant it references, transitively.
-
-    This is the round-10 fix for the round-9 stamp-staleness hole: the
-    old fingerprint hashed only the plan fn's own text, so rewriting a
-    helper module (functions/geo.py, round 9's Arrow vectorization)
-    changed behavior without changing any stamp and the driver never
-    re-checked the affected queries. Granularity is per-OBJECT for
-    functions/classes in the package (so editing one llmdata helper
-    resets only its callers, not all 100+ llmdata queries), including
-    through module references (``DD.exact_dup_groups`` hashes that
-    member's closure, not all of operators/dedup.py — round 11; the
-    whole-module fallback remains for unresolvable dynamic access).
-    Non-package
-    objects (pyspark, stdlib) are skipped. Constant-hashing policy (keep
-    in sync with ``_walk_value``): scalars/tuples/frozensets and bound
-    ``__defaults__``/``__kwdefaults__`` always hash by value (via the
-    seed-independent canonical form in ``_const_repr``); MUTABLE
-    containers (dict/list/set) hash by value only when reached as an
-    ALL_CAPS-named module global with fully-primitive contents
-    (data tables like STOPWORDS — ADVICE r11; the positive-convention
-    gate is ADVICE r12); lowercase- or underscore-named or
-    mixed-content containers are runtime state and are only WALKED for
-    package callables (dispatch tables, round-10 verdict blind spot),
-    never content-hashed. Deterministic: names sorted, cycles cut by
-    id."""
-    import inspect
-
-    if id(fn) in seen or depth > 8:
-        return
-    seen.add(id(fn))
-    try:
-        out.append(inspect.getsource(fn))
-    except (OSError, TypeError):
-        return
-    code = getattr(fn, "__code__", None)
-    if code is None:
-        return
-    # Default argument values bind at def time: a module constant used ONLY
-    # as a default (``threshold: float = MP_THRESHOLD``) never appears in any
-    # co_names, so hash the bound defaults themselves — tuning the constant
-    # then re-importing changes __defaults__ and resets the stamp.
-    defaults = getattr(fn, "__defaults__", None) or ()
-    kwdefaults = getattr(fn, "__kwdefaults__", None) or {}
-    for i, dv in enumerate(defaults):
-        rep = _const_repr(dv)
-        if rep is not None:
-            out.append(f"{getattr(fn, '__qualname__', '?')}.default[{i}]={rep}")
-    for kw in sorted(kwdefaults):
-        rep = _const_repr(kwdefaults[kw])
-        if rep is not None:
-            out.append(f"{getattr(fn, '__qualname__', '?')}.kwdefault[{kw}]={rep}")
-    names = set()
-    stack = [code]
-    while stack:  # nested lambdas/comprehensions reference globals too
-        c = stack.pop()
-        names.update(c.co_names)
-        for const in c.co_consts:
-            if hasattr(const, "co_names"):
-                stack.append(const)
-    # function-LOCAL imports bind no global: the imported object lives in
-    # a fast local, invisible to __globals__, so a body-local ``from
-    # pkg.mod import helper`` escaped the closure entirely (round 11:
-    # gr3's star_components import — the same staleness class as round
-    # 9's hole). The dotted module path sits in co_names (IMPORT_NAME);
-    # resolve it and hash the co_names-reachable members like any other
-    # module reference.
-    local_mods = {n for n in names if n.startswith(_PKG_PREFIX)}
-    g = getattr(fn, "__globals__", {})
-    cells = {
-        nm: cell.cell_contents
-        for nm, cell in zip(
-            code.co_freevars, getattr(fn, "__closure__", None) or [], strict=False
-        )
-    }
-    attr_names = frozenset(names)
-    for nm in sorted(names | set(cells)):
-        obj = cells.get(nm, g.get(nm))
-        if obj is None:
-            continue
-        _walk_value(nm, obj, seen, out, depth, attr_names)
-    for modpath in sorted(local_mods):
-        import importlib
-        import sys as _sys
-
-        mod = _sys.modules.get(modpath)
-        if mod is None:
-            try:
-                mod = importlib.import_module(modpath)
-            except ImportError:
-                continue
-        _walk_value(modpath, mod, seen, out, depth, attr_names)
-
-
-def impl_hash(spec: "QuerySpec") -> str:
-    """Fingerprint a query's behavior-bearing text: oracle SQL + the fn's
-    source CLOSURE over package helpers (see _behavior_sources).
-
-    Used by scripts/update_driver_green.py to stamp driver_green.json; a
-    mismatch at load time means the query (or a helper it calls) changed
-    since its last green driver row, so its priority resets to
-    never-checked and it re-enters the driver's ~50-row window.
-    """
-    import hashlib
-
-    out: list[str] = []
-    _behavior_sources(spec.fn, set(), out)
-    h = hashlib.md5((spec.oracle or "").encode())
-    for src in out:
-        h.update(src.encode())
-    return h.hexdigest()[:12]
-
-
-def _driver_green_rounds() -> dict[str, int]:
-    """Load query -> last-green-round history (empty dict if absent).
-
-    Entries are ``{"round": N, "impl_md5": h}``; a query whose current
-    ``impl_hash`` no longer matches the stamped hash is treated as
-    never-green (round 0) so behavior changes re-enter the driver window.
-    Bare-int entries (pre-round-5 format) are accepted without hash checks.
-    """
-    import json
-    from pathlib import Path
-
-    path = Path(__file__).resolve().parents[2] / "driver_green.json"
-    try:
-        raw = json.loads(path.read_text())
-    except (OSError, ValueError):
-        return {}
-    out: dict[str, int] = {}
-    for k, v in raw.items():
-        name = str(k)
-        if isinstance(v, dict):
-            rnd = int(v.get("round", 0))
-            stamped = v.get("impl_md5")
-            spec = _REGISTRY.get(name)
-            if stamped and spec is not None and impl_hash(spec) != stamped:
-                rnd = 0  # implementation changed since last green -> re-check
-            out[name] = rnd
-        else:
-            out[name] = int(v)
-    return out
-
 
 def register(
     name: str, oracle: str | None, survey_ref: str, doc: str = ""
@@ -416,7 +46,8 @@ def register(
 
 
 def all_queries() -> dict[str, QuerySpec]:
-    """Import every plan module (side effect: registration) and return all."""
+    """Import every plan module (side effect: registration) and return
+    every query in registration order."""
     from nyc_open_data_pipeline_spark.plans import (  # noqa: F401
         analytics,
         events,
@@ -426,9 +57,4 @@ def all_queries() -> dict[str, QuerySpec]:
         timeseries,
     )
 
-    green = _driver_green_rounds()
-    reg_pos = {name: i for i, name in enumerate(_REGISTRY)}
-    # No-green-ever first (registration order among themselves), then greens
-    # stalest-first; ties broken by registration order for a stable listing.
-    names = sorted(_REGISTRY, key=lambda n: (green.get(n, 0), reg_pos[n]))
-    return {name: _REGISTRY[name] for name in names}
+    return dict(_REGISTRY)

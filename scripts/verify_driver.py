@@ -7,7 +7,7 @@ schema (column names), and an order-insensitive value hash after sorting
 columns by name and rows by all values.
 
 Usage:
-    python scripts/verify_driver.py [--sf-dir /root/testdata/sf0.01] [--only name1,name2] [--first N]
+    python scripts/verify_driver.py [--sf-dir SF_DIR] [--only name1,name2]
 
 Exit code 0 iff every checked query matches (rows-only queries pass on
 successful execution).
@@ -71,7 +71,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--only", default=None, help="comma-separated query names")
-    ap.add_argument("--first", type=int, default=None, help="check only the first N (driver cap sim)")
     args = ap.parse_args()
 
     import __spark_entry__ as entry_mod
@@ -82,8 +81,6 @@ def main() -> int:
     if args.only:
         wanted = args.only.split(",")
         names = [n for n in names if n in wanted]
-    if args.first:
-        names = names[: args.first]
 
     # Bare session: deliberately NO engine confs — mirrors the driver.
     spark = (

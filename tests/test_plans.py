@@ -561,114 +561,23 @@ def test_bench_headline_names_resolve():
     assert bench.CORE58 <= set(bench.HEADLINE)
 
 
-def test_driver_green_names_resolve():
-    """driver_green.json drives the driver-check priority; a renamed query
-    leaving a stale entry would quietly demote its successor to the stale
-    slot. Every recorded name must still exist in the registry."""
-    import json
-    from pathlib import Path
+def test_all_queries_registration_order_and_unique_short_names():
+    """``all_queries()`` lists queries in registration order, and a call
+    after the first is a registry copy: no per-call work over the
+    queries' sources. The bench's ``query_secs`` and perfbench's specs key
+    queries by short name (the prefix before the first ``_``), so a shared
+    prefix would silently switch which query a short key names."""
+    import time
 
-    green = json.loads(
-        (Path(__file__).resolve().parents[1] / "driver_green.json").read_text()
-    )
-    missing = [n for n in green if n not in QUERIES]
-    assert not missing, f"driver_green names not in registry: {missing}"
+    from nyc_open_data_pipeline_spark.plans import registry
 
-
-def test_impl_hash_covers_transitive_helpers():
-    """The driver-green stamp must change when a HELPER a query calls
-    changes, not only when the query fn's own text changes — round 9's
-    geo vectorization rewrote functions/geo.py under unchanged stamps
-    and the driver never re-checked g1/g3/g4/g5 (round-9 verdict item 3).
-    Pin the closure: (a) a geo query's behavior-source closure contains
-    functions/geo source; (b) an llmdata query's contains the module
-    constant it tunes by repr, so constant tweaks reset stamps too;
-    (c) the closure is deterministic across calls (stable stamps)."""
-    from nyc_open_data_pipeline_spark.plans.registry import (
-        _behavior_sources,
-        impl_hash,
-    )
-
-    g1 = QUERIES["g1_geojson_to_wkt"]
-    out: list[str] = []
-    _behavior_sources(g1.fn, set(), out)
-    blob = "\n".join(out)
-    assert "def geojson_to_wkt" in blob or "functions.geo" in blob or (
-        "pandas_udf" in blob and "wkt" in blob.lower()
-    ), "g1 closure does not reach the geo helper module"
-
-    d19 = QUERIES["d19_multiprobe_neardup"]
-    out2: list[str] = []
-    _behavior_sources(d19.fn, set(), out2)
-    # the VALUE must enter the material, not merely the name in some
-    # signature text (ADVICE r10: the old disjunct was tautological)
-    assert any(s.startswith("MP_THRESHOLD=") for s in out2), (
-        "d19 closure misses the threshold constant's value"
-    )
-
-    assert impl_hash(g1) == impl_hash(g1)
-    assert impl_hash(g1) != impl_hash(d19)
-
-
-def test_impl_hash_canonical_containers_and_defaults():
-    """Three stamp-fingerprint hardening pins (round-10 ADVICE + verdict #4):
-    (a) set/frozenset/dict constants hash via a sorted canonical form, so
-    the material is independent of hash-seed iteration order; (b) a package
-    callable reached only through a container (dispatch dict) still enters
-    the closure, and swapping it changes the material; (c) bound argument
-    defaults are hashed, so a defaults-only constant counts."""
-    from nyc_open_data_pipeline_spark.plans.registry import (
-        _behavior_sources,
-        _const_repr,
-    )
-
-    # (a) canonical container form: equal containers -> equal repr, with
-    # elements sorted rather than in (seed-dependent) iteration order
-    assert _const_repr(frozenset({"b", "a", "c"})) == _const_repr(
-        frozenset(["c", "a", "b"])
-    )
-    assert _const_repr({"z": 1, "a": 2}) == _const_repr({"a": 2, "z": 1})
-    assert _const_repr({1, 2}) != _const_repr(frozenset({1, 2}))  # type-tagged
-    assert _const_repr((1, [2, {"k": frozenset({3})}])) is not None
-    assert _const_repr((1, object())) is None  # non-primitive -> walk, not repr
-
-    # (b) container-dispatched package callable
-    def helper_v1():
-        return 1
-
-    def helper_v2():
-        return 2
-
-    helper_v1.__module__ = "nyc_open_data_pipeline_spark._fake_test_mod"
-    helper_v2.__module__ = "nyc_open_data_pipeline_spark._fake_test_mod"
-    dispatch = {"k": helper_v1}
-
-    def caller():
-        return dispatch["k"]()
-
-    out1: list[str] = []
-    _behavior_sources(caller, set(), out1)
-    assert any("helper_v1" in s for s in out1), "dispatch-dict callee not hashed"
-    dispatch["k"] = helper_v2
-    out2: list[str] = []
-    _behavior_sources(caller, set(), out2)
-    assert "\n".join(out1) != "\n".join(out2), "swapping the callee must change material"
-
-    # (c) defaults of reachable package fns are part of the material
-    threshold_default = 0.125
-
-    def helper_with_default(x=threshold_default):
-        return x
-
-    helper_with_default.__module__ = "nyc_open_data_pipeline_spark._fake_test_mod"
-
-    def caller2():
-        return helper_with_default()
-
-    out3: list[str] = []
-    _behavior_sources(caller2, set(), out3)
-    assert any(".default[0]=0.125" in s for s in out3), (
-        "bound __defaults__ must enter the hash material"
+    t0 = time.process_time()
+    listed = all_queries()
+    assert time.process_time() - t0 < 0.5
+    assert list(listed) == list(registry._REGISTRY)
+    shorts = [name.split("_", 1)[0] for name in QUERIES]
+    assert len(set(shorts)) == len(shorts), sorted(
+        s for s in set(shorts) if shorts.count(s) > 1
     )
 
 
@@ -881,68 +790,6 @@ def test_d4_survivors_first_guard(spark, sf_dir):
     assert len(surv) <= len(raw)
 
 
-def test_impl_hash_reaches_function_local_imports_and_stays_per_member():
-    """Two round-11 fingerprint properties: (a) a body-local ``from
-    pkg.mod import helper`` (gr3's star_components pattern) must enter
-    the closure — local imports bind no global, and before round 11 they
-    escaped the hash entirely (the round-9 staleness class); (b) module
-    references hash only the MEMBERS the code names, not the whole file —
-    editing one function of operators/dedup.py must not reset every
-    query that imports the module."""
-    from nyc_open_data_pipeline_spark.operators import dedup as DD
-    from nyc_open_data_pipeline_spark.plans.registry import _behavior_sources
-
-    def local_importer():
-        from nyc_open_data_pipeline_spark.operators.dedup import (
-            star_components,
-        )
-
-        return star_components
-
-    out: list[str] = []
-    _behavior_sources(local_importer, set(), out)
-    blob = "\n".join(out)
-    assert "def star_components" in blob, "body-local import escaped the hash"
-
-    def module_attr_user():
-        return DD.exact_dup_groups
-
-    out2: list[str] = []
-    _behavior_sources(module_attr_user, set(), out2)
-    blob2 = "\n".join(out2)
-    assert "def exact_dup_groups" in blob2
-    assert "def star_components" not in blob2, (
-        "module reference hashed the whole file - per-member granularity lost"
-    )
-
-
-def test_impl_hash_ignores_runtime_mutable_state():
-    """impl_hash must be invariant to RUNNING queries: module-level mutable
-    containers (observability hooks, session caches) are runtime state,
-    not behavior material — hashing their contents re-ordered the driver
-    window mid-session (round-11 bug). Mutate the two known state globals
-    and assert no stamp moves."""
-    from nyc_open_data_pipeline_spark.operators import dedup as DD
-    from nyc_open_data_pipeline_spark.plans import llmdata
-    from nyc_open_data_pipeline_spark.plans.registry import impl_hash
-
-    targets = ["gr3_components_star", "d1_exact_dedup", "d4_lsh_jaccard_pairs"]
-    before = {n: impl_hash(QUERIES[n]) for n in targets}
-    key = ("__test_app__", "__dir__", "hv")
-    try:
-        DD._LAST_ATTACH_MODES.extend([True, False])
-        DD._LAST_ATTACH_PLANS.append("plan text")
-        llmdata._HV_CACHE[key] = (123456789, None)
-        after = {n: impl_hash(QUERIES[n]) for n in targets}
-    finally:
-        del DD._LAST_ATTACH_MODES[-2:]
-        del DD._LAST_ATTACH_PLANS[-1:]
-        llmdata._HV_CACHE.pop(key, None)
-    assert before == after, {
-        n: (before[n], after[n]) for n in targets if before[n] != after[n]
-    }
-
-
 def test_smp2_declares_smp4_cutover_at_production_k():
     """Round-12 verdict #7: smp2 is the exact-order k-center variant with
     an O(k) driver loop — a user must not scale it by accident, so both
@@ -953,53 +800,6 @@ def test_smp2_declares_smp4_cutover_at_production_k():
     doc = spec.fn.__doc__ or ""
     assert "smp4" in doc and "CUTOVER" in doc.upper(), (
         "smp2 docstring must carry the measured cutover note"
-    )
-
-
-def test_impl_hash_content_hashes_only_allcaps_containers():
-    """ADVICE r12: the content-hash gate for mutable module globals is the
-    POSITIVE ALL_CAPS constant convention, not merely "no leading
-    underscore" — a runtime-mutated table under a lowercase name must NOT
-    enter the material (its mutation would flip impl_hash mid-session),
-    while an ALL_CAPS data table (STOPWORDS class) must."""
-    from nyc_open_data_pipeline_spark.plans.registry import _walk_value
-
-    table_caps = {"a": 1, "b": 2}
-    out: list[str] = []
-    _walk_value("MOD.STOP_TABLE", table_caps, set(), out, 0)
-    assert any("STOP_TABLE=" in s for s in out), "ALL_CAPS table must hash by value"
-
-    runtime_stats = {"seen": 7}
-    out2: list[str] = []
-    _walk_value("MOD.seen_stats", runtime_stats, set(), out2, 0)
-    assert not any("seen_stats=" in s for s in out2), (
-        "lowercase mutable global is runtime state - must not content-hash"
-    )
-
-
-def test_impl_hash_module_members_not_masked_across_functions():
-    """Two functions in one closure referencing DIFFERENT members of the
-    same module must BOTH contribute their members to the hash — a
-    module-level seen-guard dropped the second function's members
-    (round-11 review finding)."""
-    from nyc_open_data_pipeline_spark.operators import dedup as DD
-    from nyc_open_data_pipeline_spark.plans.registry import _behavior_sources
-
-    def helper():
-        return DD.band_keys
-
-    helper.__module__ = "nyc_open_data_pipeline_spark._fake_test_mod"
-
-    def caller():
-        helper()
-        return DD.exact_dup_groups
-
-    out: list[str] = []
-    _behavior_sources(caller, set(), out)
-    blob = "\n".join(out)
-    assert "def exact_dup_groups" in blob
-    assert "def band_keys" in blob, (
-        "second function's module members were masked by the first's walk"
     )
 
 
@@ -1055,140 +855,6 @@ def test_q12_ship_window_pushes_and_one_exchange(spark, sf_dir):
     assert "PushedFilters: [IsNotNull(l_shipdate), GreaterThanOrEqual(l_shipdate" in plan
     assert plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin") <= 1
     assert plan.count("HashAggregate") >= 2
-
-
-def _mk_module(name: str, source: str):
-    """Materialize a throwaway in-package module from source text so
-    inspect.getsource works (required by the fingerprint walk)."""
-    import importlib.util
-    import sys
-    import tempfile
-
-    f = tempfile.NamedTemporaryFile(
-        "w", suffix=".py", prefix="fp_fixture_", delete=False
-    )
-    f.write(source)
-    f.close()
-    spec = importlib.util.spec_from_file_location(name, f.name)
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules[name] = mod
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_primitive_module_dict_global_enters_hash():
-    """ADVICE r12 (medium): a fully-primitive dict/list module global
-    reached as ``MOD.TABLE`` is a data table by convention (STOPWORDS) and
-    must hash by VALUE — editing it has to reset dependent stamps."""
-    from nyc_open_data_pipeline_spark.plans.registry import _behavior_sources
-
-    mod = _mk_module(
-        "nyc_open_data_pipeline_spark._fp_tbl",
-        "STOPWORDS = {'the': 1, 'a': 2}\nGRAMS = ['ab', 'cd']\n",
-    )
-
-    def q():
-        return mod.STOPWORDS, mod.GRAMS
-
-    out: list[str] = []
-    _behavior_sources(q, set(), out)
-    blob = "\n".join(out)
-    assert "STOPWORDS=dict{'a':2,'the':1}" in blob
-    assert "GRAMS=list['ab','cd']" in blob
-    # the edit actually changes the material
-    mod.STOPWORDS["the"] = 99
-    out2: list[str] = []
-    _behavior_sources(q, set(), out2)
-    assert "\n".join(out2) != blob
-
-
-def test_underscore_named_module_container_stays_out_of_hash():
-    """Runtime caches are underscore-named by repo convention; their
-    (primitive) contents must NOT enter the hash, or impl_hash differs
-    before vs after running a query (round-11 invariant, extended to the
-    round-12 container-hashing rule)."""
-    from nyc_open_data_pipeline_spark.plans.registry import _behavior_sources
-
-    mod = _mk_module(
-        "nyc_open_data_pipeline_spark._fp_cache",
-        "_SEEN = {'k': 1}\n",
-    )
-
-    def q():
-        return mod._SEEN
-
-    out: list[str] = []
-    _behavior_sources(q, set(), out)
-    blob = "\n".join(out)
-    assert "_SEEN=" not in blob
-    mod._SEEN["k"] = 2  # mutating the cache must not move the hash
-    out2: list[str] = []
-    _behavior_sources(q, set(), out2)
-    assert "\n".join(out2) == blob
-
-
-def test_dynamic_getattr_dispatch_falls_back_to_whole_module():
-    """ADVICE r12 (low): a member reached ONLY via computed getattr
-    strings resolves through no co_name, so the walk must fall back to
-    hashing the whole module source — incidental non-package attrs
-    (``F``-style re-exports) must not suppress the fallback."""
-    from nyc_open_data_pipeline_spark.plans.registry import _behavior_sources
-
-    mod = _mk_module(
-        "nyc_open_data_pipeline_spark._fp_dyn",
-        "import os as F\n\ndef secret_helper():\n    return 42\n",
-    )
-
-    def q(which: str):
-        # `F` (non-package) resolves on the module; the real dependency is
-        # reached dynamically and appears in no co_names
-        fn = getattr(mod, which + "_helper")
-        return fn(), mod.F
-    # make getattr dynamic from the walker's perspective is automatic:
-    # 'secret_helper' is never a co_name of q
-
-    out: list[str] = []
-    _behavior_sources(q, set(), out)
-    blob = "\n".join(out)
-    assert "def secret_helper" in blob, (
-        "whole-module fallback suppressed by an incidental non-package attr"
-    )
-
-
-def test_unimported_submodule_still_enters_hash():
-    """Round-12 fingerprint hole: a body-local `from pkg.sub import mod`
-    resolves through the PACKAGE module, whose submodule attr exists only
-    if something already imported it — getattr-only resolution made
-    impl_hash depend on the process's import state (a fresh driver
-    session silently dropped functions/multimodal from mm2's closure).
-    The walk must import un-imported submodules so the hash is
-    deterministic."""
-    import sys
-
-    import nyc_open_data_pipeline_spark.functions as fpkg
-    from nyc_open_data_pipeline_spark.plans.registry import _behavior_sources
-
-    def q():
-        from nyc_open_data_pipeline_spark.functions import multimodal as MM
-
-        return MM.decode_image_meta
-
-    modname = "nyc_open_data_pipeline_spark.functions.multimodal"
-    saved = sys.modules.pop(modname, None)
-    had_attr = hasattr(fpkg, "multimodal")
-    if had_attr:
-        delattr(fpkg, "multimodal")
-    try:
-        out: list[str] = []
-        _behavior_sources(q, set(), out)
-        blob = "\n".join(out)
-        assert "def decode_image_meta" in blob, (
-            "submodule dropped from the hash when not yet imported"
-        )
-    finally:
-        if saved is not None:
-            sys.modules[modname] = saved
-            setattr(fpkg, "multimodal", saved)
 
 
 def test_smp4_is_takeordered_fixed_passes(spark, sf_dir):
