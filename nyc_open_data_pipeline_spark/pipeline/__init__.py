@@ -2,6 +2,6 @@
 
 Mirrors the reference lifecycle (SURVEY.md §3.1) with lazy Spark plans:
 connectors produce DataFrames, transformer plugins compose Catalyst nodes,
-validation triggers small counting jobs, and the storage write is the one
-main action.
+validation counts are observed metrics of the one job that materializes the
+batch, and the storage write reads that materialized batch.
 """

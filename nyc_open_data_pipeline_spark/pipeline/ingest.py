@@ -1,13 +1,20 @@
 """Ingestion orchestrator: the reference's batch ETL lifecycle (SURVEY §3.1)
-as one lazy Spark pipeline per dataset.
+as one lazy Spark pipeline per dataset, evaluated once per batch.
 
 1 catalog resolution (config.load_registry / load_dataset_config)
 2 connector dispatch on source_type (ingest_data.py:65-72)
 3 transform via the dataset's plugin (parser.load_transformer)
-4 validate (ranges/uniqueness warn; missing columns raise)
-5 store: upsert when unique_keys configured, else append (:136-150)
-6 metadata upsert (K4)
-Dry-run short-circuits after validation with a preview (ingest_data.py:108-116).
+4 validate: missing required columns raise; the row count and range
+  violations are observed metrics of step 5's action (warn, never fail)
+5 stage: the validated batch is conformed, deduplicated on its unique keys
+  and materialized in one action; its row count gives the duplicate count and
+  the empty-fetch guard (ingest_data.py:97-99) before anything is written
+6 store: upsert when unique_keys configured, else append (:136-150), both
+  reading the staged batch
+7 metadata (K4): the dataset's row in the storage's metadata manifest, a
+  manifest edit with no Spark job
+Dry-run short-circuits after step 5 with a preview (ingest_data.py:108-116).
+Batch and stream ingest share steps 3-7 (``_store``).
 """
 
 from __future__ import annotations
@@ -20,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from nyc_open_data_pipeline_spark.config import DatasetConfig
 from nyc_open_data_pipeline_spark.pipeline import parser as P
-from nyc_open_data_pipeline_spark.pipeline.storage import ParquetStorage
+from nyc_open_data_pipeline_spark.pipeline.storage import ParquetStorage, staged
 
 log = logging.getLogger(__name__)
 
@@ -101,6 +108,37 @@ def fetch(spark: SparkSession, cfg: DatasetConfig, filters: dict | None = None,
     raise ValueError(f"unknown source_type {st!r}")
 
 
+def _store(
+    spark: SparkSession,
+    storage: ParquetStorage,
+    key: str,
+    transformer: P.BaseTransformer,
+    df: DataFrame,
+    dry_run: bool = False,
+) -> IngestResult:
+    """Transform, validate, stage and store one raw batch (steps 3-7)."""
+    schema = transformer.get_schema()
+    out = df.transform(transformer.transform)
+    observed, obs = P.validate(out, schema)
+    with staged(observed, schema) as batch:
+        report = P.report(obs, batch.rows)
+        if not report.record_count:  # V5 empty-fetch guard (ingest_data.py:97-99)
+            log.warning("%s: empty fetch, nothing to do", key)
+            return IngestResult(key, 0, None, "empty")
+        if dry_run:
+            out.show(10, truncate=False)
+            out.printSchema()
+            out.summary().show()
+            return IngestResult(key, report.record_count, None, "dry_run", report)
+        if schema.unique_keys:
+            stored = storage.upsert(spark, batch, schema)
+        else:
+            storage.create_or_append(batch.frame, schema)
+            stored = storage._count(spark, schema.table_name)
+    storage.update_metadata(spark, key, schema.table_name, stored)
+    return IngestResult(key, report.record_count, stored, "success", report)
+
+
 def ingest_dataset(
     spark: SparkSession,
     cfg: DatasetConfig,
@@ -112,29 +150,9 @@ def ingest_dataset(
 ) -> IngestResult:
     """Run the full lifecycle for one dataset. ``raw_df`` overrides the
     connector fetch (for pre-fetched frames / tests)."""
-    key = cfg.entry.key
     df = raw_df if raw_df is not None else fetch(spark, cfg, filters, force=force)
-    if df.isEmpty():  # V5 empty-fetch guard (ingest_data.py:97-99)
-        log.warning("%s: empty fetch, nothing to do", key)
-        return IngestResult(key, 0, None, "empty")
-
     transformer = P.load_transformer(cfg.entry.transformer)
-    out, report = P.parse(df, transformer)
-
-    if dry_run:
-        out.show(10, truncate=False)
-        out.printSchema()
-        out.summary().show()
-        return IngestResult(key, report.record_count, None, "dry_run", report)
-
-    schema = transformer.get_schema()
-    if schema.unique_keys:
-        stored = storage.upsert(spark, out, schema)
-    else:
-        storage.create_or_append(out, schema)
-        stored = storage._count(spark, schema.table_name)
-    storage.update_metadata(spark, key, schema.table_name, stored)
-    return IngestResult(key, report.record_count, stored, "success", report)
+    return _store(spark, storage, cfg.entry.key, transformer, df, dry_run)
 
 
 def stream_ingest(
@@ -170,19 +188,10 @@ def stream_ingest(
     key = cfg.entry.key
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sess = batch_df.sparkSession
-        out, report = P.parse(batch_df, transformer)
-        schema = transformer.get_schema()
-        if schema.unique_keys:
-            stored = storage.upsert(sess, out, schema)
-        else:
-            storage.create_or_append(out, schema)
-            stored = storage._count(sess, schema.table_name)
-        storage.update_metadata(sess, key, schema.table_name, stored)
-        log.info("%s batch %d: %d records, table at %d rows",
-                 key, batch_id, report.record_count, stored)
+        res = _store(batch_df.sparkSession, storage, key, transformer, batch_df)
+        if res.status == "success":
+            log.info("%s batch %d: %d records, table at %d rows",
+                     key, batch_id, res.record_count, res.stored_count)
 
     return (
         raw.writeStream.foreachBatch(process)

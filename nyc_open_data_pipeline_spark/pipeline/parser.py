@@ -3,7 +3,8 @@
 Mirrors reference src/ingestion/parser.py: load transformer by dotted path
 (:29-46), apply (:48-75), then validate — required columns raise, range and
 uniqueness violations WARN and continue (:77-115, the reference's
-warnings-not-failures philosophy).
+warnings-not-failures philosophy). The counts are observed metrics of the
+action that materializes the batch, not jobs of their own.
 """
 
 from __future__ import annotations
@@ -12,11 +13,12 @@ import importlib
 import logging
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from nyc_open_data_pipeline_spark.pipeline.base import BaseTransformer
 from nyc_open_data_pipeline_spark.pipeline.schema import TableSchema
+from nyc_open_data_pipeline_spark.pipeline.storage import staged
 
 log = logging.getLogger(__name__)
 
@@ -45,19 +47,15 @@ class ValidationReport:
         return not self.missing_columns
 
 
-def validate(df: DataFrame, schema: TableSchema) -> ValidationReport:
-    """One small Spark job computes every validation count at once
-    (single pass — at 100 TB you do NOT want one job per rule)."""
-    report = ValidationReport()
-
-    required = [c.name for c in schema.columns if c.required]
-    report.missing_columns = sorted(set(required) - set(df.columns))
-    if report.missing_columns:
-        # hard failure, mirrors reference parser.py:86-89 raise
-        return report
-
+def validate(df: DataFrame, schema: TableSchema) -> tuple[DataFrame, Observation]:
+    """Attach validation to ``df`` without running a job. Missing required
+    columns raise here: a schema check (reference parser.py:86-89). The row
+    count and per-column range-violation sums become observed metrics of
+    whichever job next runs the returned frame; ``report`` reads them."""
+    missing = sorted({c.name for c in schema.columns if c.required} - set(df.columns))
+    if missing:
+        raise ValueError(f"missing required columns: {missing}")
     aggs = [F.count(F.lit(1)).alias("__n")]
-    range_cols = []
     for c in schema.columns:
         if c.name not in df.columns or (c.min is None and c.max is None):
             continue
@@ -66,37 +64,32 @@ def validate(df: DataFrame, schema: TableSchema) -> ValidationReport:
             cond = cond | (F.col(c.name) < c.min)
         if c.max is not None:
             cond = cond | (F.col(c.name) > c.max)
-        aggs.append(F.sum(F.when(cond, 1).otherwise(0)).alias(f"__rng_{c.name}"))
-        range_cols.append(c.name)
+        aggs.append(F.sum(F.when(cond, 1).otherwise(0)).alias(c.name))
+    obs = Observation()
+    return df.observe(obs, *aggs), obs
 
-    row = df.agg(*aggs).collect()[0]
-    report.record_count = row["__n"]
-    for name in range_cols:
-        n = int(row[f"__rng_{name}"] or 0)
-        if n:
-            log.warning("range violation: %s has %d out-of-range values", name, n)
-            report.range_violations[name] = n
 
-    if schema.unique_keys and all(k in df.columns for k in schema.unique_keys):
-        dups = (
-            df.groupBy(*schema.unique_keys)
-            .count()
-            .filter(F.col("count") > 1)
-            .agg(F.coalesce(F.sum(F.col("count") - 1), F.lit(0)).alias("d"))
-            .collect()[0]["d"]
-        )
-        if dups:
-            log.warning("uniqueness: %d duplicate rows on %s", dups, schema.unique_keys)
-        report.duplicate_keys = int(dups)
-
-    return report
+def report(obs: Observation, rows_out: int) -> ValidationReport:
+    """The report once the observed job has run. ``rows_out`` counts the
+    batch after per-key dedup, so rows in minus rows out is the sum of
+    (count - 1) over key groups (null keys form one group in both)."""
+    counts = dict(obs.get)
+    n = counts.pop("__n")
+    out = ValidationReport(record_count=n, duplicate_keys=n - rows_out,
+                           range_violations={c: bad for c, bad in counts.items() if bad})
+    if out.range_violations:
+        log.warning("range violations (out-of-range values): %s", out.range_violations)
+    if out.duplicate_keys:
+        log.warning("uniqueness: %d duplicate rows on the unique keys", out.duplicate_keys)
+    return out
 
 
 def parse(df: DataFrame, transformer: BaseTransformer) -> tuple[DataFrame, ValidationReport]:
-    """Apply a transformer and validate its output (reference parser.py:48-115)."""
+    """Apply a transformer and validate its output eagerly (reference
+    parser.py:48-115): one staging action runs the observed counts. Ingest
+    stages the batch it stores instead, so its validation costs no job."""
     out = df.transform(transformer.transform)
     schema = transformer.get_schema()
-    report = validate(out, schema)
-    if report.missing_columns:
-        raise ValueError(f"missing required columns: {report.missing_columns}")
-    return out, report
+    observed, obs = validate(out, schema)
+    with staged(observed, schema) as batch:
+        return out, report(obs, batch.rows)

@@ -9,12 +9,16 @@ storage.py) on partitioned parquet:
 - K3 upsert/MERGE   (:230-297)  -> partition-pruned anti-join + partition
   repoint (``INSERT ... ON CONFLICT DO UPDATE`` semantics: incoming rows
   win); full rewrite only for unpartitioned tables
-- K4 metadata upsert (:51-71,299-334) -> tiny _dataset_metadata table
+- K4 metadata upsert (:51-71,299-334) -> one row per dataset, held inline
+  in the _dataset_metadata manifest (a manifest edit, no Spark job)
 - K5 parquet export  (:336-382) -> snappy parquet (native)
 
 At 100 TB the upsert rewrite is bounded by partition pruning: only
 partitions containing incoming keys are read and rewritten (pass
-``partition_by`` so the anti-join's scan prunes).
+``partition_by`` so the anti-join's scan prunes). An upsert evaluates its
+incoming batch once: ``staged`` conforms, dedups and materializes it, and
+the row count and touched partitions are observed metrics of that one
+action.
 
 Commit protocol (object-store-portable): every write lands in a fresh
 SEGMENT directory that is invisible until the single ``_current``
@@ -51,11 +55,12 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from nyc_open_data_pipeline_spark.pipeline.schema import TableSchema
+from nyc_open_data_pipeline_spark.session import retire_local_checkpoint
 
 
 class WriterFencedError(RuntimeError):
@@ -438,7 +443,8 @@ class ParquetStorage:
         inference. ``as_of=<generation>`` TIME-TRAVELS to a retained
         generation's snapshot — valid until vacuum retention prunes it;
         generations above the current one are refused (a crash orphan is
-        never-committed state)."""
+        never-committed state). A manifest holding its rows inline (the
+        metadata table) is read from those rows."""
         m = self._read_manifest(table)
         if not m:
             raise FileNotFoundError(f"table {table!r} has no committed manifest")
@@ -457,6 +463,10 @@ class ParquetStorage:
                         f"generation {as_of} of {table!r} is not retained "
                         "(vacuumed, or never existed) — see history()"
                     ) from None
+        if "rows" in m:  # a small table held inline in its manifest (K4)
+            return spark.createDataFrame(
+                m["rows"], StructType.fromJson(json.loads(m["schema"]))
+            )
         if not m.get("parts"):
             # legitimately committed but EMPTY (every partition deleted or
             # purged): readers get a typed empty frame from the schema the
@@ -517,18 +527,13 @@ class ParquetStorage:
         }
 
     @staticmethod
-    def _touched_partitions(frame: DataFrame, parts: list[str]):
-        """The partitions ``frame`` touches, collected to the driver (one
-        row per partition — tiny, like the reference's batch bookkeeping):
-        a predicate over the typed values that prunes a table scan to
-        those partitions, and the set of their Hive dir-name value tuples.
-        The dir text is Spark's own string cast, run in the session (and
-        time zone) that writes the partition dirs, so it matches where
-        Python's ``str`` does not (``1.0E20`` vs ``1e+20``, ``...00.123``
-        vs ``...00.123000``). None and '' fold to the default-partition
-        token, as Spark folds both."""
-        texts = [F.col(p).cast("string").alias(f"__text_{p}") for p in parts]
-        rows = frame.select(*parts, *texts).distinct().collect()
+    def _touched_partitions(rows: list, parts: list[str]):
+        """The partitions a batch touches, from its ``_partition_set`` rows
+        (one per partition — tiny, like the reference's batch bookkeeping):
+        a predicate over the typed values that prunes a
+        table scan to those partitions, and the set of their Hive dir-name
+        value tuples. None and '' fold to the default-partition token, as
+        Spark folds both."""
         pred = None
         for row in rows:
             clause = None
@@ -573,7 +578,9 @@ class ParquetStorage:
                 table, m, token, self._evolved_schema_json(m.get("schema"), out.schema)
             )
 
-    def upsert(self, spark: SparkSession, df: DataFrame, schema: TableSchema) -> int:
+    def upsert(
+        self, spark: SparkSession, df: DataFrame | StagedBatch, schema: TableSchema
+    ) -> int:
         """K3 MERGE: keep existing rows whose keys don't collide (anti-join),
         union the incoming batch (incoming wins — ``DO UPDATE SET ... =
         excluded.*``). Falls back to append when no unique_keys configured
@@ -589,6 +596,11 @@ class ParquetStorage:
         arise there. Unpartitioned tables fall back to the full anti-join +
         rewrite.
 
+        The batch is evaluated once: a frame is ``staged`` here, outside
+        the writer lock; a caller that needs the staging job's counts first
+        (the ingest path's empty guard and validation) passes the
+        ``StagedBatch`` itself.
+
         Idempotent: re-upserting the same batch is a no-op by construction.
         Concurrent-writer safe (round 12): the read-merge-publish runs under
         the per-table writer lock, so two simultaneous upserts serialize —
@@ -596,28 +608,28 @@ class ParquetStorage:
         publish; a writer that loses its lock to a stale-lock takeover is
         fenced at the commit point. Returns the resulting row count.
         """
+        if not isinstance(df, StagedBatch):
+            with staged(df, schema) as batch:
+                return self.upsert(spark, batch, schema)
         keys = schema.unique_keys
-        incoming = conform(df, schema)
-        with self._locked(schema.table_name) as token:
-            if not keys or not self.exists(schema.table_name):
-                if keys:
-                    incoming = dedup_first(incoming, keys)
+        incoming = df.frame
+        table = schema.table_name
+        with self._locked(table) as token:
+            if not keys or not self.exists(table):
                 self._full_rewrite(incoming, schema, token)
-                return self._count(spark, schema.table_name)
-
-            incoming = dedup_first(incoming, keys)
-            parts = [c for c in schema.partition_by if c in incoming.columns]
-            if parts:
-                n = self._upsert_pruned(spark, incoming, schema, keys, parts, token)
+            elif df.parts:
+                pred, touched_vals = self._touched_partitions(df.partition_rows, df.parts)
+                existing = self.read(spark, table)
+                pruned = existing.filter(pred) if pred is not None else existing.limit(0)
+                survivors = pruned.join(incoming.select(*keys), on=keys, how="left_anti")
+                merged = survivors.unionByName(incoming, allowMissingColumns=True)
+                self._replace_partitions(merged, schema, df.parts, touched_vals, token)
             else:
-                existing = self.read(spark, schema.table_name)
-                survivors = existing.join(
-                    incoming.select(*keys).distinct(), on=keys, how="left_anti"
-                )
+                existing = self.read(spark, table)
+                survivors = existing.join(incoming.select(*keys), on=keys, how="left_anti")
                 merged = survivors.unionByName(incoming, allowMissingColumns=True)
                 self._full_rewrite(merged, schema, token)
-                n = self._count(spark, schema.table_name)
-            return n
+            return self._count(spark, table)
 
     def _full_rewrite(self, df: DataFrame, schema: TableSchema, token: str) -> None:
         """Replace the whole table: one new segment owns every partition,
@@ -661,27 +673,6 @@ class ParquetStorage:
             table, m, token, self._evolved_schema_json(m.get("schema"), merged.schema)
         )
 
-    def _upsert_pruned(
-        self,
-        spark: SparkSession,
-        incoming: DataFrame,
-        schema: TableSchema,
-        keys: list[str],
-        parts: list[str],
-        token: str,
-    ) -> int:
-        """Partition-pruned MERGE: read only the partitions the incoming
-        batch touches (Catalyst prunes the scan to those directories), merge,
-        and replace exactly those partitions. Untouched partitions' files
-        are never read or rewritten."""
-        pred, touched_vals = self._touched_partitions(incoming, parts)
-        existing = self.read(spark, schema.table_name)
-        pruned = existing.filter(pred) if pred is not None else existing.limit(0)
-        survivors = pruned.join(incoming.select(*keys).distinct(), on=keys, how="left_anti")
-        merged = survivors.unionByName(incoming, allowMissingColumns=True)
-        self._replace_partitions(merged, schema, parts, touched_vals, token)
-        return self._count(spark, schema.table_name)
-
     def delete_keys(self, spark: SparkSession, keys_df: DataFrame, schema: TableSchema) -> int:
         """Targeted delete (right-to-erasure / correction retractions): remove
         every stored row whose unique key appears in ``keys_df`` — the inverse
@@ -703,7 +694,8 @@ class ParquetStorage:
         parts = [c for c in schema.partition_by if c in wanted.columns]
         with self._locked(schema.table_name) as token:
             if parts:
-                pred, touched_vals = self._touched_partitions(wanted, parts)
+                touched = wanted.agg(_partition_set(parts)).first()[0]
+                pred, touched_vals = self._touched_partitions(touched, parts)
                 existing = self.read(spark, schema.table_name)
                 pruned = existing.filter(pred) if pred is not None else existing.limit(0)
                 survivors = pruned.join(wanted.select(*keys), on=keys, how="left_anti")
@@ -953,6 +945,13 @@ class ParquetStorage:
     # ------------------------------------------------------------------
 
     META_TABLE = "_dataset_metadata"
+    META_SCHEMA = StructType([
+        StructField("dataset_id", StringType()),
+        StructField("table_name", StringType()),
+        StructField("last_ingestion", StringType()),
+        StructField("record_count", LongType()),
+        StructField("status", StringType()),
+    ])
 
     def update_metadata(
         self,
@@ -963,19 +962,69 @@ class ParquetStorage:
         status: str = "success",
         last_ingestion: str | None = None,
     ) -> None:
-        meta_schema = TableSchema(
-            table_name=self.META_TABLE,
-            unique_keys=["dataset_id"],
-        )
-        row = spark.createDataFrame(
-            [(dataset_id, table_name, last_ingestion, record_count, status)],
-            "dataset_id string, table_name string, last_ingestion string, "
-            "record_count long, status string",
-        )
-        self.upsert(spark, row, meta_schema)
+        """Replace ``dataset_id``'s row. The rows live inline in the table's
+        own manifest, so this is a locked manifest edit and publish with no
+        Spark job. Rows an earlier layout kept in a segment carry over."""
+        with self._locked(self.META_TABLE) as token:
+            m = self._read_manifest(self.META_TABLE) or {"gen": 0}
+            rows = m.get("rows", [])
+            if m.get("parts"):
+                old = self.read(spark, self.META_TABLE).select(*self.META_SCHEMA.names)
+                rows = [list(r) for r in old.collect()]
+            rows = [r for r in rows if r[0] != dataset_id]
+            rows.append([dataset_id, table_name, last_ingestion, record_count, status])
+            m = {"gen": m["gen"], "parts": {}, "rows": rows}
+            self._publish(self.META_TABLE, m, token, self.META_SCHEMA.json())
 
     def read_metadata(self, spark: SparkSession) -> DataFrame:
         return self.read(spark, self.META_TABLE)
+
+
+@dataclass
+class StagedBatch:
+    """An incoming batch after ``staged``: the materialized frame and what
+    its one job observed."""
+
+    frame: DataFrame
+    rows: int
+    parts: list[str]  # the schema's partition columns present in the frame
+    partition_rows: list  # its ``_partition_set`` rows; [] when unpartitioned
+
+
+@contextlib.contextmanager
+def staged(df: DataFrame, schema: TableSchema):
+    """Conform ``df`` to ``schema``, keep one row per unique key
+    (``dedup_first``) and materialize the result with an eager local
+    checkpoint: the batch's one evaluation, which every later use of it
+    (partition pruning, the anti-join, the segment write) reads instead of
+    re-running its lineage. The row count and the touched partitions are
+    observed metrics of that action, as are any observations already
+    attached to ``df``. The checkpoint's blocks are freed when the block
+    exits."""
+    out = conform(df, schema)
+    if schema.unique_keys:
+        out = dedup_first(out, schema.unique_keys)
+    parts = [c for c in schema.partition_by if c in out.columns]
+    obs = Observation()
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    if parts:
+        aggs.append(_partition_set(parts).alias("parts"))
+    frame = out.observe(obs, *aggs).localCheckpoint(eager=True)
+    try:
+        got = obs.get
+        yield StagedBatch(frame, got["rows"], parts, got.get("parts") or [])
+    finally:
+        retire_local_checkpoint(frame)
+
+
+def _partition_set(parts: list[str]):
+    """Aggregate of the distinct partition-value rows of a frame: the typed
+    values and Spark's own string cast of each. That cast, run in the
+    session (and time zone) that writes the partition dirs, is the dir
+    text, so it matches where Python's ``str`` does not (``1.0E20`` vs
+    ``1e+20``, ``...00.123`` vs ``...00.123000``)."""
+    texts = [F.col(p).cast("string").alias(f"__text_{p}") for p in parts]
+    return F.collect_set(F.struct(*parts, *texts))
 
 
 def dedup_first(df: DataFrame, keys: list[str]) -> DataFrame:

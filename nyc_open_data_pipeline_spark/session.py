@@ -17,7 +17,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# local[N] width: SPARK_GRAFT_CPUS when set, else the CPUs of this machine
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 # Confs the ENGINE'S SEMANTICS depend on (not just performance). Queries may
 # be handed a foreign SparkSession (the correctness driver constructs its

@@ -12,7 +12,7 @@ final state == batch latest-per-key over all input.
 
 Scale shape: this fixture sink rewrites the whole state per batch (fine
 for tests); production uses the partition-pruned MERGE
-(storage._upsert_pruned) so a micro-batch touches only the partitions its
+(the pruned path of ParquetStorage.upsert) so a micro-batch touches only the partitions its
 keys live in.
 """
 
