@@ -30,6 +30,12 @@ the flip leaves the previous commit intact (the new segment is an orphan
 for ``vacuum``). Every write path publishes via the fenced manifest flip,
 so the zombie window is one pointer swap wide for all of them.
 
+A stream sink passes its micro-batch id to ``create_or_append`` or
+``overwrite``: the manifest records it next to the generation, in the same
+flip as the batch's rows, and a write whose id is at or below the recorded
+one is a checkpoint replay and returns without writing (Delta's
+``txnVersion`` idempotent-write rule).
+
 The manifest maps each Hive partition relpath (Spark's on-disk dir names,
 percent-escaping included) to the ordered list of segments contributing
 rows to it, and stamps the table schema; appends add a segment to the
@@ -287,6 +293,15 @@ class ParquetStorage:
         m = self._read_manifest(table)
         return bool(m and m.get("parts"))
 
+    def committed_batch(self, table: str) -> int:
+        """The last stream micro-batch id published into the table; -1 when
+        no write carried one."""
+        return int((self._read_manifest(table) or {}).get("batch", -1))
+
+    @staticmethod
+    def _replayed(m: dict | None, batch_id: int | None) -> bool:
+        return batch_id is not None and batch_id <= int((m or {}).get("batch", -1))
+
     # ------------------------------------------------------------------
     # manifest: read / resolve / flip
     # ------------------------------------------------------------------
@@ -367,7 +382,9 @@ class ParquetStorage:
         a NEW generation whose manifest reuses the old one's
         partition->segment map (no data is copied or rewritten; the old
         segments are still on disk because vacuum retention kept their
-        manifest). Returns the new generation number."""
+        manifest). Everything else the old manifest held comes back with
+        it: inline metadata rows and the stream batch token. Returns the
+        new generation number."""
         with self._locked(table) as token:
             cur = self._read_manifest(table)
             if not cur:
@@ -384,7 +401,7 @@ class ParquetStorage:
                     f"generation {to_gen} of {table!r} is not retained "
                     "(vacuumed, or never existed) — see history()"
                 ) from None
-            m = {"gen": cur["gen"], "parts": old["parts"], "restored_from": to_gen}
+            m = {**old, "gen": cur["gen"], "restored_from": to_gen}
             self._publish(table, m, token, old.get("schema"))
             return m["gen"]
 
@@ -552,31 +569,63 @@ class ParquetStorage:
     # ------------------------------------------------------------------
 
     def _publish(
-        self, table: str, m: dict, token: str, schema_json: str | None
+        self,
+        table: str,
+        m: dict,
+        token: str,
+        schema_json: str | None,
+        batch_id: int | None = None,
     ) -> None:
-        """Bump the manifest's generation, stamp writer and schema, flip."""
+        """Bump the manifest's generation, stamp writer, schema and the
+        stream batch token when given, flip."""
         m["gen"] = int(m["gen"]) + 1
         m["writer"] = token
         m["schema"] = schema_json
+        if batch_id is not None:
+            m["batch"] = batch_id
         self._flip_manifest(table, m, token)
 
-    def create_or_append(self, df: DataFrame, schema: TableSchema) -> None:
+    def create_or_append(
+        self, df: DataFrame, schema: TableSchema, batch_id: int | None = None
+    ) -> bool:
         """K2: append (creates on first write). Casts to the declared schema
         first — the declared-schema contract of K1. Serialized per table by
         the writer lock (two appends never interleave their commits). The
         rows land in an invisible segment and publish via the fenced
         manifest flip, so a stale-lock takeover during the possibly-long
-        write job can never double-publish (ADVICE r12 #2)."""
+        write job can never double-publish (ADVICE r12 #2). A stream
+        micro-batch passes its ``batch_id``; returns False, writing nothing,
+        when the table already holds that batch."""
         out = conform(df, schema)
         table = schema.table_name
         with self._locked(table) as token:
-            seg, rps = self._write_segment(out, schema)
             m = self._read_manifest(table) or {"gen": 0, "parts": {}}
+            if self._replayed(m, batch_id):
+                return False
+            seg, rps = self._write_segment(out, schema)
             for rp in rps:
                 m["parts"].setdefault(rp, []).append(seg)
             self._publish(
-                table, m, token, self._evolved_schema_json(m.get("schema"), out.schema)
+                table,
+                m,
+                token,
+                self._evolved_schema_json(m.get("schema"), out.schema),
+                batch_id,
             )
+        return True
+
+    def overwrite(
+        self, df: DataFrame, schema: TableSchema, batch_id: int | None = None
+    ) -> bool:
+        """Replace the whole table with ``df`` in one flip: the commit for a
+        stream sink that publishes a whole new state per micro-batch.
+        ``batch_id`` as in ``create_or_append``."""
+        table = schema.table_name
+        with self._locked(table) as token:
+            if self._replayed(self._read_manifest(table), batch_id):
+                return False
+            self._full_rewrite(conform(df, schema), schema, token, batch_id)
+        return True
 
     def upsert(
         self, spark: SparkSession, df: DataFrame | StagedBatch, schema: TableSchema
@@ -631,15 +680,21 @@ class ParquetStorage:
                 self._full_rewrite(merged, schema, token)
             return self._count(spark, table)
 
-    def _full_rewrite(self, df: DataFrame, schema: TableSchema, token: str) -> None:
+    def _full_rewrite(
+        self,
+        df: DataFrame,
+        schema: TableSchema,
+        token: str,
+        batch_id: int | None = None,
+    ) -> None:
         """Replace the whole table: one new segment owns every partition,
-        and the frame's own schema is the table's."""
+        and the frame's own schema is the table's. The stream batch token
+        carries over unless ``batch_id`` advances it."""
         seg, rps = self._write_segment(df, schema)
-        m = {
-            "gen": self.generation(schema.table_name),
-            "parts": {rp: [seg] for rp in rps},
-        }
-        self._publish(schema.table_name, m, token, df.schema.json())
+        prev = self._read_manifest(schema.table_name) or {"gen": 0}
+        m = {k: prev[k] for k in ("gen", "batch") if k in prev}
+        m["parts"] = {rp: [seg] for rp in rps}
+        self._publish(schema.table_name, m, token, df.schema.json(), batch_id)
 
     def _replace_partitions(
         self,
@@ -871,15 +926,17 @@ class ParquetStorage:
     ) -> dict[str, int]:
         """Maintenance: every append adds one segment to each partition it
         touches, so a long-lived append-mostly table's manifest lists — and
-        its readers' scan branches — grow without bound (the storage twin
-        of the streaming state store's per-batch dir growth, bounded there
-        by compact_state). Fold every partition whose contributing-segment
+        its readers' scan branches — grow without bound (a stream sink adds
+        one segment per micro-batch; its ``compact_after`` drains call
+        this). Fold every partition whose contributing-segment
         list exceeds ``max_segments`` into one fresh segment and repoint,
         in a single manifest flip; untouched partitions keep their pointers
-        and their bytes. The superseded segments stay on disk (still safe
-        for in-flight readers of the old manifest) until ``vacuum``.
-        Returns {partition relpath: segments folded}; no-op below the
-        threshold."""
+        and their bytes. The fold is a rebalance on the partition columns,
+        so AQE sizes its files by bytes (one per small partition) instead
+        of keeping one per folded write. The superseded segments stay on
+        disk (still safe for in-flight readers of the old manifest) until
+        ``vacuum``. Returns {partition relpath: segments folded}; no-op
+        below the threshold."""
         with self._locked(schema.table_name) as token:
             m = self._read_manifest(schema.table_name)
             if not m:
@@ -892,7 +949,10 @@ class ParquetStorage:
             if not targets:
                 return {}
             merged = self._scan(spark, schema.table_name, targets, m.get("schema"))
-            new_seg, new_rps = self._write_segment(merged, schema)
+            parts = [c for c in schema.partition_by if c in merged.columns]
+            new_seg, new_rps = self._write_segment(
+                merged.hint("rebalance", *parts), schema
+            )
             present = set(new_rps)
             for rp in targets:
                 if rp in present:
@@ -978,6 +1038,13 @@ class ParquetStorage:
 
     def read_metadata(self, spark: SparkSession) -> DataFrame:
         return self.read(spark, self.META_TABLE)
+
+
+def table_at(path: str) -> tuple[ParquetStorage, str]:
+    """The table whose directory is ``path``: a storage rooted at its parent
+    dir, and its name."""
+    root, name = os.path.split(os.path.abspath(path))
+    return ParquetStorage(root), name
 
 
 @dataclass

@@ -564,12 +564,14 @@ def st7_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
+    from nyc_open_data_pipeline_spark.pipeline.storage import ParquetStorage
+    from nyc_open_data_pipeline_spark.streaming.dedup import _await_drained
     from nyc_open_data_pipeline_spark.streaming.replay import ordered_range_chunks
     from nyc_open_data_pipeline_spark.streaming.upsert import latest_upsert_sink
     from nyc_open_data_pipeline_spark.streaming.windows import cached_fixture
 
     root = tempfile.mkdtemp(prefix="st7_")
-    state_dir = os.path.join(root, "state")
+    storage = ParquetStorage(root)
     schema = (
         "user_id long, ts timestamp, event_id long, event_type string, value double"
     )
@@ -590,15 +592,15 @@ def st7_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         stream.writeStream.foreachBatch(
             latest_upsert_sink(
-                spark, state_dir, ["user_id"], ["ts", "event_id"], schema
+                spark, storage.path("state"), ["user_id"], ["ts", "event_id"]
             )
         )
         .option("checkpointLocation", os.path.join(root, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    return spark.read.schema(schema).parquet(state_dir)
+    _await_drained(q, "st7_stream_upsert")
+    return storage.read(spark, "state")
 
 
 @register(

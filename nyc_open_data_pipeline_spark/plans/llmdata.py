@@ -1604,20 +1604,19 @@ def st3_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed as 4 doc_id-ordered micro-batches (maxFilesPerTrigger=1);
     each batch collapses within-batch duplicates, anti-joins the accumulated
     corpus hash state, and appends survivors — the production flow for a
-    100 TB corpus that grows daily (state table = one narrow bucketed hash
-    column; see streaming/dedup.py module docstring)."""
-    import os
+    100 TB corpus that grows daily (the output's hash column is the state;
+    see streaming/dedup.py module docstring)."""
     import tempfile
 
+    from nyc_open_data_pipeline_spark.pipeline.storage import ParquetStorage
     from nyc_open_data_pipeline_spark.streaming.dedup import run_incremental_dedup
     from nyc_open_data_pipeline_spark.streaming.replay import ordered_range_chunks
     from nyc_open_data_pipeline_spark.streaming.windows import cached_fixture
 
-    root = tempfile.mkdtemp(prefix="st3_")
-    out_dir, state_dir = os.path.join(root, "out"), os.path.join(root, "state")
+    storage = ParquetStorage(tempfile.mkdtemp(prefix="st3_"))
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    # input chunks are read-only scaffolding -> session-cached (the out/state
-    # dirs stay per-invocation: each run is a fresh sink + state table)
+    # input chunks are read-only scaffolding -> session-cached (the output
+    # table stays per-invocation: each run is a fresh sink)
     stream_dir = cached_fixture(
         spark, sf_dir, "doc4range",
         lambda p: ordered_range_chunks(docs, "doc_id", p, n_chunks=4),
@@ -1627,12 +1626,8 @@ def st3_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(stream_dir)
     )
-    run_incremental_dedup(spark, stream, out_dir, state_dir)
-    return (
-        spark.read.schema("doc_id long, content_hash string")
-        .parquet(out_dir)
-        .select("doc_id", "content_hash")  # drop the batch partition col
-    )
+    run_incremental_dedup(spark, stream, storage.path("out"))
+    return storage.read(spark, "out").select("doc_id", "content_hash")
 
 
 # LSH band rows over the shared `sigs` CTE (one SELECT per band) — the
@@ -1757,9 +1752,9 @@ def st11_stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFra
     narrow columns — at 100 TB it is the bucketed band-key index of the
     corpus, NOT the corpus (same design as st3's hash table, SCALE.md
     streaming section)."""
-    import os
     import tempfile
 
+    from nyc_open_data_pipeline_spark.pipeline.storage import ParquetStorage
     from nyc_open_data_pipeline_spark.streaming.dedup import (
         run_incremental_neardup,
     )
@@ -1768,8 +1763,7 @@ def st11_stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFra
     )
     from nyc_open_data_pipeline_spark.streaming.windows import cached_fixture
 
-    root = tempfile.mkdtemp(prefix="st11_")
-    out_dir, state_dir = os.path.join(root, "out"), os.path.join(root, "state")
+    storage = ParquetStorage(tempfile.mkdtemp(prefix="st11_"))
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     # same replay fixture as st3 (read-only, session-cached)
     stream_dir = cached_fixture(
@@ -1781,12 +1775,10 @@ def st11_stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFra
         .option("maxFilesPerTrigger", 1)
         .parquet(stream_dir)
     )
-    run_incremental_neardup(spark, stream, out_dir, state_dir)
-    return (
-        spark.read.schema("doc_id long")
-        .parquet(out_dir)
-        .select("doc_id")  # drop the batch partition col
+    run_incremental_neardup(
+        spark, stream, storage.path("out"), storage.path("state")
     )
+    return storage.read(spark, "out").select("doc_id")
 
 
 # Shared redaction patterns (same regex dialect in Java and RE2)
@@ -8208,22 +8200,19 @@ def st12_stream_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches; each batch emits the maximal spans already seen in the
     corpus-so-far and appends its distinct gram hashes to the state
     table. Scale shape: state is ONE narrow long column (gram hash),
-    batch-partitioned and anti-joined per micro-batch — the st3/st11
-    state discipline; per-batch span assembly is d26's window. Sinks are
-    idempotent under crash-before-commit replay (batch-partitioned
-    out/state + marker-last)."""
-    import os
+    anti-joined per micro-batch — the st3/st11 state discipline; per-batch
+    span assembly is d26's window. Sinks are idempotent under replay: each
+    table's manifest flip records the batch id with its rows."""
     import tempfile
 
+    from nyc_open_data_pipeline_spark.pipeline.storage import ParquetStorage
     from nyc_open_data_pipeline_spark.streaming.dedup import (
-        SPAN_SCHEMA,
         run_incremental_substring,
     )
     from nyc_open_data_pipeline_spark.streaming.replay import ordered_range_chunks
     from nyc_open_data_pipeline_spark.streaming.windows import cached_fixture
 
-    root = tempfile.mkdtemp(prefix="st12_")
-    out_dir, state_dir = os.path.join(root, "out"), os.path.join(root, "state")
+    storage = ParquetStorage(tempfile.mkdtemp(prefix="st12_"))
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     stream_dir = cached_fixture(
         spark, sf_dir, "doc4range",
@@ -8234,11 +8223,11 @@ def st12_stream_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(stream_dir)
     )
-    run_incremental_substring(spark, stream, out_dir, state_dir)
-    return (
-        spark.read.schema(SPAN_SCHEMA)
-        .parquet(out_dir)
-        .select("doc_id", "start_pos", "end_pos", "span_len")
+    run_incremental_substring(
+        spark, stream, storage.path("out"), storage.path("state")
+    )
+    return storage.read(spark, "out").select(
+        "doc_id", "start_pos", "end_pos", "span_len"
     )
 
 

@@ -1,21 +1,28 @@
-"""Streaming incremental deduplication (foreachBatch + hash-state store).
+"""Streaming incremental deduplication (foreachBatch sinks on ParquetStorage).
 
 The batch flow is ``plans/llmdata.d8_incremental_dedup`` (new batch
 left_anti-joined against the corpus's content-hash set); this module runs
-the same anti-join per micro-batch inside ``foreachBatch``, appending
-survivors to the output table and their hashes to the state table. That is
-the production shape for continuous corpus ingestion at 100 TB:
+the same anti-join per micro-batch inside ``foreachBatch``. That is the
+production shape for continuous corpus ingestion at 100 TB:
 
-- the state table holds ONE narrow column (content_hash) — one parquet
-  partition per batch, merged between batches by ``compact_state`` (below)
-  into a bounded number of key-hash-clustered files, so listing cost and
-  file count stay O(target size), not O(batches processed);
+- every sink table is a ``ParquetStorage`` table, named by its directory
+  (root = the parent dir, name = the last component). Each micro-batch appends
+  one segment whose rows carry a ``batch`` column, and publishes it in one
+  manifest flip that also records the batch id. A checkpoint replay of a
+  batch at or below the recorded id is a no-op; a crash before the flip
+  leaves an invisible segment for ``vacuum``. The ids are the checkpoint's,
+  so a stream restarted from a fresh checkpoint needs fresh tables: its
+  ids restart at 0 and would read as replays;
+- the exact-hash sink keeps ONE table: the seen-set is its output's
+  ``content_hash`` column. The near-dup and substring sinks keep a narrow
+  key table next to their output and publish it first, so the output's
+  batch id marks the batch done. Every seen-set read keeps ``batch < id``,
+  so a replay after a crash between the two flips recomputes exactly;
 - within-batch duplicates collapse first (groupBy hash, keep min id) so the
   anti-join's left side is already distinct;
-- ``foreachBatch`` gives exactly-once-per-batch semantics with the stream's
-  checkpoint: each batch overwrites its own ``batch=<id>`` partition of the
-  output and state tables, so a checkpoint-replayed batch replaces partial
-  work instead of appending a second copy, whatever the crash point.
+- ``compact_after`` folds the per-batch segments of the table each batch
+  scans into one (``ParquetStorage.compact_segments``) and vacuums, so the
+  seen-set scan stays bounded by the batches since the last drain.
 
 No counterpart in the reference (batch CLI only — SURVEY §2.13); this
 extends d8 the way st1/st2 extend e1/a-family.
@@ -24,12 +31,25 @@ extends d8 the way st1/st2 extend e1/a-family.
 from __future__ import annotations
 
 import os
+import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from nyc_open_data_pipeline_spark.operators.dedup import normalized_text
+from nyc_open_data_pipeline_spark.operators.dedup import (
+    band_keys,
+    maximal_spans,
+    normalized_text,
+    token_gram_rows,
+)
+from nyc_open_data_pipeline_spark.pipeline.schema import TableSchema
+from nyc_open_data_pipeline_spark.pipeline.storage import ParquetStorage, table_at
 from nyc_open_data_pipeline_spark.session import retire_local_checkpoint
+from nyc_open_data_pipeline_spark.streaming.windows import (
+    begin_stream_pass,
+    record_batch_metrics,
+    record_frame_plan,
+)
 
 _DRAIN_TIMEOUT_S = 1800  # hard ceiling; measured drains stop well short (st11 sf1: 161 s)
 
@@ -49,9 +69,6 @@ def _await_drained(q, label: str) -> None:
     )
 
 
-HASH_SCHEMA = "content_hash string"
-
-
 def hashed_docs(df: DataFrame) -> DataFrame:
     """(doc_id, content_hash) with the engine-wide normalization (d1/d8)."""
     return df.select(
@@ -59,362 +76,84 @@ def hashed_docs(df: DataFrame) -> DataFrame:
     )
 
 
-def _has_batches(d: str) -> bool:
-    """True iff at least one committed-or-partial batch partition exists.
-
-    A state dir holding flat part-*.parquet files is the PRE-batch-layout
-    format (before the idempotent ``batch=<id>`` partitions): silently
-    treating it as empty would drop the entire seen-hash state on resume
-    and re-admit every previously-deduplicated document (round-7 review),
-    so it raises instead — rebuild the state or resume under the old code.
-    """
-    try:
-        entries = os.listdir(d)
-    except OSError:
-        return False
-    if any(e.startswith("batch=") for e in entries):
-        return True
-    if any(e.endswith(".parquet") for e in entries):
-        raise ValueError(
-            f"state dir {d!r} holds a legacy flat-file state layout; the "
-            "batch-partitioned sink cannot resume from it without silently "
-            "dropping the seen-key state — migrate it into a batch=0 "
-            "subdirectory or start a fresh state dir"
-        )
-    return False
+def _seen(
+    spark: SparkSession, storage: ParquetStorage, table: str, batch_id: int, cols
+) -> DataFrame | None:
+    """``cols`` of the rows earlier batches published into ``table``; None
+    before its first commit. ``batch < batch_id`` keeps out rows that this
+    batch's own crashed attempt already published."""
+    if not storage.generation(table):
+        return None
+    return storage.read(spark, table).filter(F.col("batch") < batch_id).select(*cols)
 
 
-class StateCompactionStats:
-    """Result of one compact_state run (plain attrs; no spark types)."""
-
-    def __init__(self, batches_merged: int, files_before: int, files_after: int):
-        self.batches_merged = batches_merged
-        self.files_before = files_before
-        self.files_after = files_after
-
-    def __repr__(self) -> str:  # pragma: no cover - debugging aid
-        return (
-            f"StateCompactionStats(batches_merged={self.batches_merged}, "
-            f"files_before={self.files_before}, files_after={self.files_after})"
-        )
-
-
-_COMPACT_TARGET_BYTES = 128 * 1024 * 1024
-
-
-def _footer_rows(d: str) -> int:
-    """Row count of a just-written parquet partition dir from FOOTER
-    metadata — driver-side, exact, no Spark job (the storage layer's
-    post-commit counting discipline applied to the sinks' per-batch
-    metrics). The sinks previously localCheckpoint'd their output frames
-    just so the metrics ``count()`` after the write would not re-execute
-    the batch plan; counting the written footers removes both the extra
-    materialization job per frame per micro-batch and the checkpoint
-    block traffic (optimization round 13, guide §1.2: fewer jobs)."""
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.ParquetFile(f).metadata.num_rows for f in _part_files(d)
+def _publish(
+    storage: ParquetStorage, df: DataFrame, table: str, batch_id: int
+) -> int | None:
+    """Append ``df``, tagged with its ``batch``, to ``table`` under the
+    batch token. Returns the rows written, observed on the write job itself
+    (no count job); None when the table already holds the batch."""
+    obs = Observation()
+    tagged = df.withColumn("batch", F.lit(batch_id).cast("long")).observe(
+        obs, F.count(F.lit(1)).alias("n")
     )
+    if storage.create_or_append(tagged, TableSchema(table), batch_id=batch_id):
+        return obs.get["n"]
+    return None
 
 
-def _batch_ids(state_dir: str) -> list[int]:
-    out = []
-    try:
-        entries = os.listdir(state_dir)
-    except OSError:
-        return out
-    for e in entries:
-        if e.startswith("batch="):
-            try:
-                out.append(int(e.split("=", 1)[1]))
-            except ValueError:
-                pass
-    return sorted(out)
-
-
-def _part_files(d: str) -> list[str]:
-    try:
-        return [
-            os.path.join(d, f)
-            for f in os.listdir(d)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        ]
-    except OSError:
-        return []
-
-
-def _assert_replay_target_safe(state_dir: str, batch_id: int, last: int) -> None:
-    """Guard the one data-loss hole compaction opens (ADVICE r11): after
-    ``compact_state`` merges all history into ``batch=<dest_id>``, that
-    partition is the WHOLE seen-set, and a replay that slips past a
-    lost/corrupted/stale ``_last_batch`` marker would mode('overwrite')
-    it down to one batch's keys — silently re-admitting every
-    previously-seen document. Two independent tripwires, both loud:
-
-    - marker unreadable (``last < 0``) while committed batch dirs exist:
-      the skip-replayed-batches check is blind, refuse to process
-      anything until the operator restores or removes the state dir;
-    - ANY compaction-destination partition (holds ``compact-*`` files)
-      has an id ABOVE the marker (stale marker, e.g. restored from a
-      pre-compaction backup): refuse. Checking only "batch_id == the
-      destination" was not enough (ADVICE r12): with marker last=3 and a
-      compaction destination at batch=10, replayed batches 4..9 each
-      pass that narrow check, read state with ``filter(batch <
-      batch_id)`` — which EXCLUDES the merged seen-set at batch=10 —
-      and mode('overwrite') their output partitions with
-      duplicate-admitting results before batch 10 ever trips it. A
-      consistent store always has every compaction destination <= the
-      marker (compact_state only merges ids <= the marker it read), so
-      destination-above-marker is unambiguously a stale/restored marker
-      and EVERY batch must refuse, not just the destination's replay.
-
-    UNCOMPACTED stores are unaffected — including the marker-less
-    first-commit crash (batch 0's partitions landed, the marker was never
-    yet written): there a replay overwriting its OWN per-batch partition
-    remains the exactly-once mechanism, and refusing it would brick a
-    previously self-healing store (round-12 review). The tripwires arm
-    only once compact-* files exist, i.e. once the marker became
-    correctness-bearing. Cost: one listdir pass over the state dir per
-    armed batch."""
-
-    def _is_compact_dest(i: int) -> bool:
-        return any(
-            os.path.basename(f).startswith("compact-")
-            for f in _part_files(os.path.join(state_dir, f"batch={i}"))
-        )
-
-    compact_dests = [i for i in _batch_ids(state_dir) if _is_compact_dest(i)]
-    if not compact_dests:
-        return
-    if last < 0:
-        raise RuntimeError(
-            f"state store {state_dir!r} holds COMPACTED partitions but its "
-            "_last_batch marker is missing/unreadable; processing would let a "
-            "replay overwrite the merged seen-set. Restore the marker (echo "
-            "the highest committed batch id into _last_batch) or clear the "
-            "state dir."
-        )
-    if max(compact_dests) > last:
-        raise RuntimeError(
-            f"batch {batch_id} would process against a state store whose "
-            f"compaction destination batch={max(compact_dests)} exceeds the "
-            f"_last_batch marker ({last}) under {state_dir!r} — the marker is "
-            "stale relative to the store (e.g. restored from a "
-            "pre-compaction backup), so replays below the destination would "
-            "anti-join against a seen-set that excludes the merged state and "
-            "re-admit duplicates. Restore a marker >= the compaction "
-            "destination id."
-        )
-
-
-def compact_state(
-    spark: SparkSession,
-    state_dir: str,
-    target_bytes: int = _COMPACT_TARGET_BYTES,
-    min_batches: int = 4,
-) -> StateCompactionStats:
-    """Merge the committed ``batch=<id>`` state partitions into ONE
-    partition of ~target-sized, key-hash-clustered files.
-
-    Why: the incremental sinks append one partition dir per micro-batch
-    forever; on a continuous feed the per-batch ``filter(batch < id)``
-    anti-join becomes listing- and small-file-bound after thousands of
-    batches (round-10 verdict #1). Compaction bounds both: file count
-    drops to ceil(bytes/target) and the dir count to one per
-    yet-uncompacted batch. Works for all three sinks (hash / band-key /
-    gram state) — the key columns are whatever the partitions hold.
-
-    Crash- and replay-safety (the protocol never makes committed state
-    invisible, so a crash at ANY point leaves a correct store):
-
-    1. only partitions with id <= the ``_last_batch`` marker are touched.
-       The marker is written AFTER a batch's writes, so a checkpoint
-       replay can only re-process ids STRICTLY ABOVE it — it can
-       overwrite its own ``batch=<id>`` partition but never the
-       compaction destination (``batch=<max merged id>`` <= marker);
-    2. the merged data is first written to a ``_compact_<token>`` temp
-       dir (underscore prefix: invisible to Spark's file listing), then
-       its files are MOVED into the destination partition one atomic
-       rename at a time, and only after ALL moves land are the source
-       partitions and the destination's superseded files deleted. A
-       crash mid-move or mid-delete leaves duplicate keys visible —
-       harmless for the sinks' semi/anti-join semantics (and for the
-       new-key anti-joins that bound state growth) — and the next
-       compact_state run, which starts with a DISTINCT over everything
-       below the marker, removes the duplicates;
-    3. stale ``_compact_*`` temp dirs from a crashed run are deleted at
-       entry: any of their files that were already moved live in the
-       destination, and the rest are still covered by the not-yet-deleted
-       source partitions.
-
-    Call it between micro-batches (e.g. between availableNow drains) —
-    it must not race a batch that is concurrently listing the state dir.
-    A run below ``min_batches`` committed partitions is a no-op, so a
-    nightly/periodic call is cheap at steady state."""
-    marker = os.path.join(state_dir, "_last_batch")
-    try:
-        with open(marker) as f:
-            last = int(f.read().strip())
-    except (OSError, ValueError):
-        return StateCompactionStats(0, 0, 0)
-
-    import shutil
-    import uuid
-
-    # roll forward/clean any crashed prior run's temp dirs (see docstring #3)
-    for e in os.listdir(state_dir):
-        if e.startswith("_compact_"):
-            shutil.rmtree(os.path.join(state_dir, e), ignore_errors=True)
-
-    ids = [i for i in _batch_ids(state_dir) if i <= last]
-    files_before = sum(len(_part_files(os.path.join(state_dir, f"batch={i}"))) for i in ids)
-    if len(ids) < min_batches or files_before == 0:
-        # files_before == 0: every committed batch wrote zero state rows
-        # (all-duplicate feed) — nothing to merge, and schema inference
-        # over part-file-less dirs would fail
-        return StateCompactionStats(0, files_before, files_before)
-    dest_id = max(ids)
-    dest = os.path.join(state_dir, f"batch={dest_id}")
-
-    src_bytes = sum(
-        os.path.getsize(f)
-        for i in ids
-        for f in _part_files(os.path.join(state_dir, f"batch={i}"))
+def _drain(
+    stream: DataFrame, sink, label: str, out_dir: str, compact_dir: str | None
+) -> None:
+    """Drain all currently-available input through ``sink``, checkpointing
+    in ``out_dir``. Then, at that safe point (no batch in flight), fold the
+    per-batch segments of the table at ``compact_dir`` into one and sweep
+    the superseded ones."""
+    q = (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
+        .trigger(availableNow=True)
+        .start()
     )
-    want = max(1, -(-src_bytes // target_bytes))  # ceil
-
-    # read ONLY the committed partition dirs: a crash may have left a torn,
-    # uncommitted batch=<last+1> partition whose footers must not be touched
-    # (schema inference over the root could read them before pruning)
-    merged = spark.read.parquet(
-        *[os.path.join(state_dir, f"batch={i}") for i in ids]
-    )
-    keys = merged.columns
-    token = uuid.uuid4().hex[:8]
-    tmp = os.path.join(state_dir, f"_compact_{token}")
-    # distinct: idempotent over a crash-leftover duplicate window; the
-    # repartition hash-clusters each output file on the key columns
-    merged.distinct().repartition(want, *keys).write.mode("overwrite").parquet(tmp)
-
-    old_dest_files = set(_part_files(dest))
-    os.makedirs(dest, exist_ok=True)
-    for i, f in enumerate(_part_files(tmp)):
-        os.rename(f, os.path.join(dest, f"compact-{token}-{i:05d}.parquet"))
-    # all merged files are in place -> originals are now redundant
-    for i in ids:
-        if i != dest_id:
-            shutil.rmtree(os.path.join(state_dir, f"batch={i}"), ignore_errors=True)
-    for f in old_dest_files:
-        try:
-            os.remove(f)
-        except OSError:
-            pass
-    shutil.rmtree(tmp, ignore_errors=True)
-    files_after = len(_part_files(dest))
-    return StateCompactionStats(len(ids), files_before, files_after)
+    _await_drained(q, label)
+    if compact_dir:
+        storage, table = table_at(compact_dir)
+        storage.compact_segments(stream.sparkSession, TableSchema(table))
+        storage.vacuum(table)
 
 
-def incremental_dedup_sink(spark: SparkSession, out_dir: str, state_dir: str):
+def incremental_dedup_sink(spark: SparkSession, out_dir: str):
     """foreachBatch function: per micro-batch, collapse within-batch dupes
-    (keep the smallest doc_id per hash), drop hashes already in the corpus
-    state, then write survivors + their hashes.
+    (keep the smallest doc_id per hash), drop hashes already in the output
+    table at ``out_dir``, then append the survivors ``(doc_id,
+    content_hash, batch)``.
 
-    Exactly-once under replay: the stream's checkpoint re-delivers the last
-    uncommitted batch after a crash, so each batch writes to its OWN
-    ``batch=<id>`` partition directory with mode("overwrite") — a replayed
-    batch replaces any partial output instead of appending a duplicate copy
-    (the round-6 ADVICE hazard: a crash between the output write and the
-    commit marker left append-mode output doubled on replay). The
-    ``_last_batch`` marker (tmp+rename AFTER both writes) is the cheap
-    skip for already-committed replays — and once ``compact_state`` has
-    folded history into one partition it becomes CORRECTNESS-BEARING:
-    a replay slipping past a lost/stale marker would overwrite the whole
-    merged seen-set, so ``_assert_replay_target_safe`` refuses to
-    process when the marker is unreadable while state partitions exist,
-    or when the target partition holds compact-* files (ADVICE r11).
-    The state read filters ``batch < batch_id`` (partition-
-    pruned), so a crash that left the CURRENT batch's own state partition
-    partially written cannot feed those keys back into the replay's
-    anti-join and silently drop its own survivors — the replay recomputes
-    from exactly the pre-batch state and overwrites both partitions."""
-    from nyc_open_data_pipeline_spark.streaming.windows import begin_stream_pass
-
+    Exactly-once under replay: the batch's rows and its id publish in one
+    manifest flip, so a replay either finds the id recorded (no-op) or
+    finds nothing of the batch visible and recomputes it from the same
+    pre-batch seen-set."""
     _pass = begin_stream_pass()  # one token per sink construction = per pass
-    os.makedirs(state_dir, exist_ok=True)
-    marker = os.path.join(state_dir, "_last_batch")
-
-    def last_committed() -> int:
-        try:
-            with open(marker) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return -1
+    storage, table = table_at(out_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        last = last_committed()
-        if batch_id <= last:
-            return  # replay of an already-applied batch
-        _assert_replay_target_safe(state_dir, batch_id, last)
-        import time as _time
-
-        _t0 = _time.perf_counter()
-        sess = batch_df.sparkSession
+        if batch_id <= storage.committed_batch(table):
+            return  # replay of an already-published batch
+        t0 = time.perf_counter()
         batch = (
             hashed_docs(batch_df)
             .groupBy("content_hash")
             .agg(F.min("doc_id").alias("doc_id"))
         )
-        if _has_batches(state_dir):
-            seen = (
-                sess.read.schema(HASH_SCHEMA)
-                .parquet(state_dir)
-                .filter(F.col("batch") < batch_id)
-                .select("content_hash")
-            )
+        seen = _seen(spark, storage, table, batch_id, ["content_hash"])
+        if seen is not None:
             batch = batch.join(seen, "content_hash", "left_anti")
-        from nyc_open_data_pipeline_spark.streaming.windows import record_stream_plan
-
-        try:
-            record_stream_plan(
-                f"incremental_dedup#batch{batch_id}",
-                batch._jdf.queryExecution().executedPlan().toString(),
-            )
-        except Exception:
-            pass
-        # The anti-join plan executes ONCE into the output partition; the
-        # state partition (hashes only) derives from the just-written file
-        # set — a driver-local parquet read orders of magnitude cheaper
-        # than the localCheckpoint materialization job this replaces, and
-        # the metrics count comes from the written footers (round-13
-        # optimization: 3 jobs + block traffic -> 2 jobs per micro-batch).
-        out_part = os.path.join(out_dir, f"batch={batch_id}")
-        batch.select("doc_id", "content_hash").write.mode("overwrite").parquet(
-            out_part
-        )
-        # read back with HASH_SCHEMA only: parquet reads by name, so the
-        # unread doc_id column's type never matters (ADVICE r13 — the
-        # previous hardcoded 'doc_id long' was only safe because the
-        # select pruned it before the scan materialized it)
-        sess.read.schema(HASH_SCHEMA).parquet(out_part).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(state_dir, f"batch={batch_id}"))
-        tmp = f"{marker}.tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, marker)
-        from nyc_open_data_pipeline_spark.streaming.windows import (
-            record_batch_metrics,
-        )
-
-        # clock stops before the (driver-side, footer-read) count so its
-        # cost never inflates the reported batch wall time (ADVICE r7)
-        _sec = round(_time.perf_counter() - _t0, 3)
+        record_frame_plan(f"incremental_dedup#batch{batch_id}", batch)
+        n_out = _publish(storage, batch.select("doc_id", "content_hash"), table, batch_id)
         record_batch_metrics(
             sink="incremental_dedup",
             batch_id=batch_id,
-            n_out=_footer_rows(out_part),
-            sec=_sec,
+            n_out=n_out,
+            sec=round(time.perf_counter() - t0, 3),
             pass_token=_pass,
         )
 
@@ -422,28 +161,16 @@ def incremental_dedup_sink(spark: SparkSession, out_dir: str, state_dir: str):
 
 
 def run_incremental_dedup(
-    spark: SparkSession,
-    stream: DataFrame,
-    out_dir: str,
-    state_dir: str,
-    compact_after: bool = False,
+    spark: SparkSession, stream: DataFrame, out_dir: str, compact_after: bool = False
 ) -> None:
     """Drain all currently-available input through the dedup sink."""
-    q = (
-        stream.writeStream.foreachBatch(incremental_dedup_sink(spark, out_dir, state_dir))
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream,
+        incremental_dedup_sink(spark, out_dir),
+        "incremental_dedup",
+        out_dir,
+        out_dir if compact_after else None,
     )
-    _await_drained(q, "incremental_dedup")
-    if compact_after:
-        # safe point: the availableNow drain is complete, no batch in flight
-        compact_state(spark, state_dir)
-
-
-
-
-BAND_SCHEMA = "band int, band_key string"
 
 
 def incremental_neardup_sink(spark: SparkSession, out_dir: str, state_dir: str):
@@ -466,33 +193,16 @@ def incremental_neardup_sink(spark: SparkSession, out_dir: str, state_dir: str):
     keys and are excluded (they are not near-dup candidates of anything;
     the line-level d15 path owns short text).
 
-    Idempotence under checkpoint replay: same per-batch ``batch=<id>``
-    overwrite partitions + pre-batch state filter as the exact-hash sink
-    (see ``incremental_dedup_sink``)."""
-    from nyc_open_data_pipeline_spark.streaming.windows import begin_stream_pass
-
+    Idempotence under checkpoint replay: the state table publishes first
+    and the output last (see the module docstring)."""
     _pass = begin_stream_pass()
-    os.makedirs(state_dir, exist_ok=True)
-    marker = os.path.join(state_dir, "_last_batch")
-
-    def last_committed() -> int:
-        try:
-            with open(marker) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return -1
+    out_st, out = table_at(out_dir)
+    state_st, state = table_at(state_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        last = last_committed()
-        if batch_id <= last:
-            return
-        _assert_replay_target_safe(state_dir, batch_id, last)
-        import time as _time
-
-        _t0 = _time.perf_counter()
-        sess = batch_df.sparkSession
-        from nyc_open_data_pipeline_spark.operators.dedup import band_keys
-
+        if batch_id <= out_st.committed_batch(out):
+            return  # replay of an already-published batch
+        t0 = time.perf_counter()
         # pin the band keys ONCE per batch: bk feeds five consumers
         # (firsts, the within-batch hit join, the state semi-join, the
         # survivor anti-join, new_keys), and without materialization each
@@ -508,83 +218,36 @@ def incremental_neardup_sink(spark: SparkSession, out_dir: str, state_dir: str):
         firsts = bk.groupBy("band", "band_key").agg(
             F.min("doc_id").alias("first_id")
         )
-        hit_within = (
+        dropped = (
             bk.join(firsts, ["band", "band_key"])
             .filter(F.col("first_id") < F.col("doc_id"))
             .select("doc_id")
         )
-        if _has_batches(state_dir):
-            seen = (
-                sess.read.schema(BAND_SCHEMA)
-                .parquet(state_dir)
-                .filter(F.col("batch") < batch_id)
-                .select("band", "band_key")
+        # store each unique (band, band_key) once: keys already in prior
+        # state add nothing to the semi-join semantics but would grow state
+        # with total occurrences (same ADVICE-r8 hazard as the substring sink)
+        new_keys = bk.select("band", "band_key").distinct()
+        seen = _seen(spark, state_st, state, batch_id, ["band", "band_key"])
+        if seen is not None:
+            dropped = dropped.unionByName(
+                bk.join(seen, ["band", "band_key"], "left_semi").select("doc_id")
             )
-            hit_state = bk.join(seen, ["band", "band_key"], "left_semi").select(
-                "doc_id"
-            )
-            dropped = hit_within.unionByName(hit_state)
-        else:
-            dropped = hit_within
+            new_keys = new_keys.join(seen, ["band", "band_key"], "left_anti")
         survivors = (
             bk.select("doc_id")
             .distinct()
             .join(dropped, "doc_id", "left_anti")
         )
-        from nyc_open_data_pipeline_spark.streaming.windows import record_stream_plan
-
-        try:
-            record_stream_plan(
-                f"incremental_neardup#batch{batch_id}",
-                survivors._jdf.queryExecution().executedPlan().toString(),
-            )
-        except Exception:
-            pass
-        new_keys = bk.select("band", "band_key").distinct()
-        if _has_batches(state_dir):
-            # store each unique (band, band_key) once: keys already in
-            # prior state add nothing to the semi-join semantics but grow
-            # state with total occurrences (same ADVICE-r8 hazard as the
-            # substring sink); replay-safe for the same pre-batch-filter
-            # reason
-            new_keys = new_keys.join(seen, ["band", "band_key"], "left_anti")
-        # survivors and new_keys each have exactly ONE consumer (their
-        # write) now that the metrics counts come from the written parquet
-        # footers — write the live plans directly instead of paying a
-        # localCheckpoint materialization job per frame per micro-batch
-        # (round-13 optimization; bk stays pinned through both writes, its
-        # five consumers are why IT is checkpointed)
-        out_part = os.path.join(out_dir, f"batch={batch_id}")
-        state_part = os.path.join(state_dir, f"batch={batch_id}")
-        survivors.write.mode("overwrite").parquet(out_part)
-        # CORRECTNESS DEPENDENCY (ADVICE r13): new_keys is a LIVE plan
-        # whose `seen` scan reads state_dir while this write overwrites
-        # state_dir/batch=<batch_id>. That is safe ONLY because the scan
-        # carries `filter(batch < batch_id)`, which partition-prunes the
-        # very partition being rewritten out of the read. A refactor that
-        # drops or weakens that filter must re-insulate the read (e.g.
-        # checkpoint new_keys) before this write.
-        new_keys.write.mode("overwrite").parquet(state_part)
-        from nyc_open_data_pipeline_spark.session import retire_local_checkpoint
-
+        record_frame_plan(f"incremental_neardup#batch{batch_id}", survivors)
+        n_new_keys = _publish(state_st, new_keys, state, batch_id)
+        n_out = _publish(out_st, survivors, out, batch_id)
         retire_local_checkpoint(bk)
-        tmp = f"{marker}.tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, marker)
-        from nyc_open_data_pipeline_spark.streaming.windows import (
-            record_batch_metrics,
-        )
-
-        # clock stops before the (driver-side, footer-read) counts so their
-        # cost never inflates the reported batch wall time (ADVICE r7)
-        _sec = round(_time.perf_counter() - _t0, 3)
         record_batch_metrics(
             sink="incremental_neardup",
             batch_id=batch_id,
-            n_out=_footer_rows(out_part),
-            n_new_keys=_footer_rows(state_part),
-            sec=_sec,
+            n_out=n_out,
+            n_new_keys=n_new_keys,
+            sec=round(time.perf_counter() - t0, 3),
             pass_token=_pass,
         )
 
@@ -599,18 +262,13 @@ def run_incremental_neardup(
     compact_after: bool = False,
 ) -> None:
     """Drain all currently-available input through the near-dup sink."""
-    q = (
-        stream.writeStream.foreachBatch(
-            incremental_neardup_sink(spark, out_dir, state_dir)
-        )
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream,
+        incremental_neardup_sink(spark, out_dir, state_dir),
+        "incremental_neardup",
+        out_dir,
+        state_dir if compact_after else None,
     )
-    _await_drained(q, "incremental_neardup")
-    if compact_after:
-        # safe point: the availableNow drain is complete, no batch in flight
-        compact_state(spark, state_dir)
 
 
 def deduped_events(stream: DataFrame, delay: str = "3650 days") -> DataFrame:
@@ -626,8 +284,6 @@ def deduped_events(stream: DataFrame, delay: str = "3650 days") -> DataFrame:
     return stream.withWatermark("ts", delay).dropDuplicatesWithinWatermark(["event_id"])
 
 
-GRAM_SCHEMA = "g long"
-SPAN_SCHEMA = "doc_id long, start_pos long, end_pos long, span_len long"
 _SUBSTR_N = 10
 
 
@@ -636,44 +292,23 @@ def incremental_substring_sink(spark: SparkSession, out_dir: str, state_dir: str
     streaming twin, keep-first orientation): per micro-batch, every
     document's >= N-token windows are checked against (a) the accumulated
     gram-hash state from PRIOR batches and (b) lower-doc_id documents in
-    the SAME batch; maximal duplicated spans are appended to ``out_dir``
-    and the batch's distinct NEW gram hashes (anti-joined against prior
-    state, so state holds each unique gram once) to ``state_dir``. Because the
+    the SAME batch; maximal duplicated spans are appended to the table at
+    ``out_dir`` and the batch's distinct NEW gram hashes (anti-joined
+    against prior state, so state holds each unique gram once) to the one
+    at ``state_dir``. Because the
     replayed micro-batches are doc_id-ordered ranges, "prior state or
     lower id in batch" equals "any lower doc_id globally", so the
     streamed spans equal the batch keep-first answer exactly (st3's
-    equivalence argument). Same idempotence discipline as the other
-    incremental sinks: batch-partitioned out/state dirs + a marker
-    committed LAST, so a crash-before-commit replay overwrites its own
-    partial partitions and never feeds its own output back into the
-    anti-state."""
-    from nyc_open_data_pipeline_spark.streaming.windows import begin_stream_pass
-
+    equivalence argument). Same idempotence discipline as the near-dup
+    sink: state published first, output last, seen-set read ``batch < id``."""
     _pass = begin_stream_pass()
-    os.makedirs(state_dir, exist_ok=True)
-    marker = os.path.join(state_dir, "_last_batch")
-
-    def last_committed() -> int:
-        try:
-            with open(marker) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return -1
+    out_st, out = table_at(out_dir)
+    state_st, state = table_at(state_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        last = last_committed()
-        if batch_id <= last:
-            return  # replay of an already-applied batch
-        _assert_replay_target_safe(state_dir, batch_id, last)
-        import time as _time
-
-        from nyc_open_data_pipeline_spark.operators.dedup import (
-            maximal_spans,
-            token_gram_rows,
-        )
-
-        _t0 = _time.perf_counter()
-        sess = batch_df.sparkSession
+        if batch_id <= out_st.committed_batch(out):
+            return  # replay of an already-published batch
+        t0 = time.perf_counter()
         grams = token_gram_rows(batch_df, n=_SUBSTR_N).localCheckpoint(
             eager=True
         )
@@ -694,13 +329,8 @@ def incremental_substring_sink(spark: SparkSession, out_dir: str, state_dir: str
             .select("doc_id", "p")
         )
         new_grams = grams.select("g").distinct()
-        if _has_batches(state_dir):
-            seen = (
-                sess.read.schema(GRAM_SCHEMA)
-                .parquet(state_dir)
-                .filter(F.col("batch") < batch_id)
-                .select("g")
-            )
+        seen = _seen(spark, state_st, state, batch_id, ["g"])
+        if seen is not None:
             hits = hits.unionByName(
                 grams.join(seen, "g", "semi").select("doc_id", "p")
             ).distinct()
@@ -708,45 +338,20 @@ def incremental_substring_sink(spark: SparkSession, out_dir: str, state_dir: str
             # with total gram occurrences instead of unique grams, and the
             # per-batch seen-scan compounds on duplicate-heavy streams
             # (ADVICE r8; mirrors incremental_dedup_sink writing survivors
-            # only). Replay-safe: the read above filters batch < batch_id,
-            # so a replayed batch recomputes the same anti-join result.
+            # only)
             new_grams = new_grams.join(seen, "g", "anti")
-        from nyc_open_data_pipeline_spark.streaming.windows import (
-            record_batch_metrics,
-            record_stream_plan,
-        )
-
         spans = maximal_spans(hits, _SUBSTR_N)
-        try:
-            record_stream_plan(
-                f"incremental_substring#batch{batch_id}",
-                spans._jdf.queryExecution().executedPlan().toString(),
-            )
-        except Exception:
-            pass
-        # spans' only consumer is its write now that the metrics count
-        # comes from the written footers — write the live plan directly
-        # (round-13 optimization: one materialization job less per batch;
-        # grams stays checkpointed for its two consumers)
-        out_part = os.path.join(out_dir, f"batch={batch_id}")
-        spans.write.mode("overwrite").parquet(out_part)
-        new_grams.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"batch={batch_id}")
-        )
-        tmp = f"{marker}.tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, marker)
-        # clock stops before the (driver-side, footer-read) count
-        _sec = round(_time.perf_counter() - _t0, 3)
+        record_frame_plan(f"incremental_substring#batch{batch_id}", spans)
+        _publish(state_st, new_grams, state, batch_id)
+        n_out = _publish(out_st, spans, out, batch_id)
         record_batch_metrics(
             sink="incremental_substring",
             batch_id=batch_id,
-            n_out=_footer_rows(out_part),
-            sec=_sec,
+            n_out=n_out,
+            sec=round(time.perf_counter() - t0, 3),
             pass_token=_pass,
         )
-        retire_local_checkpoint(grams)  # see incremental_dedup_sink note
+        retire_local_checkpoint(grams)
 
     return process
 
@@ -759,15 +364,10 @@ def run_incremental_substring(
     compact_after: bool = False,
 ) -> None:
     """Drain all currently-available input through the substring-dedup sink."""
-    q = (
-        stream.writeStream.foreachBatch(
-            incremental_substring_sink(spark, out_dir, state_dir)
-        )
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream,
+        incremental_substring_sink(spark, out_dir, state_dir),
+        "incremental_substring",
+        out_dir,
+        state_dir if compact_after else None,
     )
-    _await_drained(q, "incremental_substring")
-    if compact_after:
-        # safe point: the availableNow drain is complete, no batch in flight
-        compact_state(spark, state_dir)

@@ -10,54 +10,45 @@ the two properties checkpoint-recovery semantics (each batch may run
 twice) actually require — and gives the query an exact batch oracle:
 final state == batch latest-per-key over all input.
 
-Scale shape: this fixture sink rewrites the whole state per batch (fine
-for tests); production uses the partition-pruned MERGE
-(the pruned path of ParquetStorage.upsert) so a micro-batch touches only the partitions its
-keys live in.
+Commit: the state is a ``ParquetStorage`` table. Each micro-batch merges
+the batch into the published state and publishes the result as a full
+rewrite whose manifest flip also records the batch id, then vacuums the
+superseded copy. A crash anywhere before the flip leaves the previous
+state published, so the replay merges into it again. The merge rewrites
+the whole state per batch; a keyed production table takes the
+partition-pruned path of ``ParquetStorage.upsert`` instead, so a
+micro-batch touches only the partitions its keys live in.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 from pyspark.sql import SparkSession
+
+from nyc_open_data_pipeline_spark.pipeline.schema import TableSchema
+from nyc_open_data_pipeline_spark.pipeline.storage import table_at
 
 
 def latest_upsert_sink(
-    spark: SparkSession,
-    state_dir: str,
-    keys: list[str],
-    order_cols: list[str],
-    schema_ddl: str,
+    spark: SparkSession, state_dir: str, keys: list[str], order_cols: list[str]
 ):
-    """foreachBatch function maintaining parquet state at ``state_dir``."""
+    """foreachBatch function maintaining the latest row per key in the table
+    at ``state_dir``."""
     from nyc_open_data_pipeline_spark.operators.dedup import dedup_keep_last
+    from nyc_open_data_pipeline_spark.streaming.windows import record_frame_plan
 
-    def sink(batch_df, _batch_id: int) -> None:
-        batch = dedup_keep_last(batch_df, keys, order_cols)
-        if os.path.exists(state_dir):
-            cur = spark.read.schema(schema_ddl).parquet(state_dir)
+    storage, table = table_at(state_dir)
+    schema = TableSchema(table)
+
+    def sink(batch_df, batch_id: int) -> None:
+        if batch_id <= storage.committed_batch(table):
+            return  # replay of an already-published batch
+        merged = dedup_keep_last(batch_df, keys, order_cols)
+        if storage.generation(table):
             merged = dedup_keep_last(
-                cur.unionByName(batch), keys, order_cols
+                storage.read(spark, table).unionByName(merged), keys, order_cols
             )
-        else:
-            merged = batch
-        from nyc_open_data_pipeline_spark.streaming.windows import record_stream_plan
-
-        try:
-            record_stream_plan(
-                f"latest_upsert#batch{_batch_id}",
-                merged._jdf.queryExecution().executedPlan().toString(),
-            )
-        except Exception:
-            pass
-        # stage-and-swap: Spark can't overwrite a path in its own read plan
-        stage = f"{state_dir}__stage_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(stage)
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.replace(stage, state_dir)
+        record_frame_plan(f"latest_upsert#batch{batch_id}", merged)
+        storage.overwrite(merged, schema, batch_id=batch_id)
+        storage.vacuum(table)
 
     return sink

@@ -104,6 +104,15 @@ def record_stream_plan(name: str, plan: str) -> None:
         del EXECUTED_STREAM_PLANS[: len(EXECUTED_STREAM_PLANS) - _STREAM_PLAN_CAP]
 
 
+def record_frame_plan(name: str, df: DataFrame) -> None:
+    """Record a foreachBatch frame's executed plan; best effort, a capture
+    failure never fails the batch (the gate then reports the missing plan)."""
+    try:
+        record_stream_plan(name, df._jdf.queryExecution().executedPlan().toString())
+    except Exception:
+        pass
+
+
 def drain_stream_plans() -> list[tuple[str, str]]:
     """Return and clear the recorded plans (hygiene-gate consumption API —
     index-slicing the shared list breaks once the cap evicts entries)."""

@@ -2,7 +2,7 @@
 
 Round-7 VERDICT #5: st11 costs ~21 s at sf0.1 for a 4-batch replay while
 its batch twin d22 costs ~1 s — the gap is per-micro-batch fixed cost
-(plan setup, state-dir listing, checkpoint commit), not data. This probe
+(plan setup, manifest reads and flips, checkpoint commit), not data. This probe
 makes that claim a measurement: replay the SAME corpus through
 ``incremental_neardup_sink`` (and optionally the exact-hash sink) split
 into n micro-batches for several n, then least-squares fit
@@ -52,9 +52,12 @@ def main() -> None:
         for c in (sys.argv[2] if len(sys.argv) > 2 else "2,4,10,20").split(",")
     ]
     sink = sys.argv[3] if len(sys.argv) > 3 else "neardup"
-    run = {"neardup": run_incremental_neardup, "dedup": run_incremental_dedup}[
-        sink
-    ]
+    def run(stream, root: str) -> None:
+        out, state = os.path.join(root, "out"), os.path.join(root, "state")
+        if sink == "dedup":
+            run_incremental_dedup(spark, stream, out)
+        else:
+            run_incremental_neardup(spark, stream, out, state)
 
     spark = get_spark("stream_batch_probe")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -63,15 +66,14 @@ def main() -> None:
     for n in [None] + chunk_counts:  # None = untimed warm-up pass
         if n is None:
             # first-ever foreachBatch drain pays one-time session costs
-            # (Python worker pool, Arrow init, state-dir code paths) that
+            # (Python worker pool, Arrow init, storage code paths) that
             # would otherwise land entirely on the first timed point
             root = tempfile.mkdtemp(prefix=f"stprobe_{sink}_warm_")
             feed = os.path.join(root, "feed")
             ordered_range_chunks(docs, "doc_id", feed, n_chunks=2)
-            run(spark, spark.readStream.schema(
+            run(spark.readStream.schema(
                 "doc_id long, text string"
-            ).option("maxFilesPerTrigger", 1).parquet(feed),
-                os.path.join(root, "out"), os.path.join(root, "state"))
+            ).option("maxFilesPerTrigger", 1).parquet(feed), root)
             drain_batch_metrics()
             shutil.rmtree(root, ignore_errors=True)
             continue
@@ -80,10 +82,9 @@ def main() -> None:
         ordered_range_chunks(docs, "doc_id", feed, n_chunks=n)
         drain_batch_metrics()  # discard any prior sinks' records
         t0 = time.perf_counter()
-        run(spark, docs.sparkSession.readStream.schema(
+        run(docs.sparkSession.readStream.schema(
             "doc_id long, text string"
-        ).option("maxFilesPerTrigger", 1).parquet(feed),
-            os.path.join(root, "out"), os.path.join(root, "state"))
+        ).option("maxFilesPerTrigger", 1).parquet(feed), root)
         wall = round(time.perf_counter() - t0, 2)
         bm = drain_batch_metrics()
         runs.append(

@@ -6,15 +6,19 @@ checkpoint retirement are each unit-tested, but no measurement ran the
 COMPOSED loop past 4 micro-batches. This probe replays the documents
 corpus through an incremental sink as ``n_batches`` doc_id-ordered
 micro-batches delivered in WAVES (each wave = one availableNow drain that
-resumes the same checkpoint), running ``compact_state`` between drains —
-the documented periodic-compaction pattern — and records after every
-wave:
+resumes the same checkpoint) with ``compact_after=True``, which folds the
+seen-set table's per-batch segments into one (``compact_segments``) and
+vacuums between drains — the documented periodic-compaction pattern — and
+records after every wave:
 
 - per-batch wall seconds (must stay FLAT: per-batch cost is fixed +
   bounded state-scan, not O(batches processed));
-- state batch-dir count and parquet-file count (must stay BOUNDED by
-  the wave size + 1 compaction destination, not grow with history);
-- state bytes (grows only with unique keys, not with batch count).
+- the seen-set table's live segment and parquet-file counts (must stay
+  BOUNDED by the wave size + 1 folded segment, not grow with history);
+- its bytes (grow only with unique keys, not with batch count).
+
+The seen-set table is the output table for ``dedup`` and the state table
+for ``neardup`` and ``substring``.
 
 Usage:
     PYTHONPATH=. python scripts/bench_stream_longhorizon.py \
@@ -33,18 +37,19 @@ import tempfile
 import time
 
 
-def _state_stats(state_dir: str) -> dict:
-    n_dirs = n_files = n_bytes = 0
-    for e in os.listdir(state_dir):
-        d = os.path.join(state_dir, e)
-        if not (e.startswith("batch=") and os.path.isdir(d)):
-            continue
-        n_dirs += 1
-        for f in os.listdir(d):
-            if f.endswith(".parquet"):
-                n_files += 1
-                n_bytes += os.path.getsize(os.path.join(d, f))
-    return {"batch_dirs": n_dirs, "files": n_files, "bytes": n_bytes}
+def _state_stats(table_dir: str) -> dict:
+    from nyc_open_data_pipeline_spark.pipeline.storage import table_at
+
+    storage, table = table_at(table_dir)
+    files = storage._live_data_files(table)
+    segments = {
+        seg for segs in storage._read_manifest(table)["parts"].values() for seg in segs
+    }
+    return {
+        "segments": len(segments),
+        "files": len(files),
+        "bytes": sum(os.path.getsize(f) for f in files),
+    }
 
 
 def main() -> None:
@@ -92,19 +97,21 @@ def main() -> None:
         # one availableNow drain resuming the same checkpoint, then the
         # between-drain compaction (compact_after=True is exactly the
         # production periodic-compaction hook)
-        run(
-            spark,
+        stream = (
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1)
-            .parquet(feed),
-            out,
-            state,
-            compact_after=True,
+            .parquet(feed)
         )
+        if sink == "dedup":
+            run(spark, stream, out, compact_after=True)
+        else:
+            run(spark, stream, out, state, compact_after=True)
         bm = drain_batch_metrics()
         batch_secs.extend(m["sec"] for m in bm)
         survivors += sum(m.get("n_out", 0) for m in bm)
-        waves.append({"after_batch": w + wave, **_state_stats(state)})
+        waves.append(
+            {"after_batch": w + wave, **_state_stats(out if sink == "dedup" else state)}
+        )
     wall = round(time.perf_counter() - t0, 2)
 
     half = len(batch_secs) // 2

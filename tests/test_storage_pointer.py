@@ -1036,6 +1036,18 @@ def test_pointer_time_travel_and_rollback(spark, tmp_path):
     storage.upsert(spark, spark.createDataFrame([(3, "c")], ["k", "v"]), schema)
     assert snap() == {(1, "a"), (3, "c")}
 
+    # rows held inline in the manifest (the metadata table) roll back too
+    storage.update_metadata(spark, "a", "t", 1)
+    storage.update_metadata(spark, "b", "t", 2)
+    meta = storage.META_TABLE
+    ids = lambda as_of=None: sorted(  # noqa: E731
+        r["dataset_id"] for r in storage.read(spark, meta, as_of=as_of).collect()
+    )
+    gen = storage.generation(meta)
+    assert ids(gen - 1) == ["a"]
+    storage.rollback(meta, gen - 1)
+    assert ids() == ["a"]
+
 
 def test_pointer_vacuum_retention_bounds_time_travel(spark, tmp_path):
     """vacuum(retain_generations=K) keeps the last K prior generations

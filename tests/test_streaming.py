@@ -16,6 +16,44 @@ from nyc_open_data_pipeline_spark.streaming.windows import (
 )
 
 
+def _read(spark, table_dir):
+    """The committed rows of the sink table at ``table_dir``."""
+    from nyc_open_data_pipeline_spark.pipeline.storage import table_at
+
+    storage, table = table_at(table_dir)
+    return storage.read(spark, table)
+
+
+def _ids(spark, table_dir):
+    return [r["doc_id"] for r in _read(spark, table_dir).collect()]
+
+
+def _segments(table_dir):
+    """The segments the table's current manifest lists (unpartitioned)."""
+    from nyc_open_data_pipeline_spark.pipeline.storage import table_at
+
+    storage, table = table_at(table_dir)
+    return storage._read_manifest(table)["parts"].get("", [])
+
+
+def _crash_next_flip(monkeypatch, table_dir):
+    """Make the next ``_current`` flip of the table at ``table_dir`` raise
+    once: a crash at the commit point, after the segment is written."""
+    import os
+
+    real = os.replace
+    target = os.path.join(table_dir, "_current")
+    armed = [True]
+
+    def replace(src, dst):
+        if armed[0] and os.fspath(dst) == target:
+            armed[0] = False
+            raise OSError("injected crash at the manifest flip")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+
+
 @pytest.fixture(scope="module")
 def stream_dir(spark, tmp_path_factory, sf_dir):
     """Re-materialize events as micros-timestamp parquet (the raw testdata
@@ -103,15 +141,13 @@ def test_incremental_dedup_stream_state(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
     )
-    out, state = str(tmp_path / "out"), str(tmp_path / "state")
-    run_incremental_dedup(spark, stream, out, state)
-    got = {
-        r["doc_id"] for r in spark.read.parquet(out).collect()
-    }
+    out = str(tmp_path / "out")
+    run_incremental_dedup(spark, stream, out)
+    got = set(_ids(spark, out))
     # alpha -> 1 (2 collapsed within batch), beta -> 3 (10 dropped by state),
     # gamma -> 11 (12 collapsed within batch)
     assert got == {1, 3, 11}
-    assert os.path.isdir(state)
+    assert os.path.isfile(os.path.join(out, "_current"))
 
 
 def test_watermark_drops_late_rows(spark, sf_dir):
@@ -244,25 +280,27 @@ def test_event_time_ttl_evicts_idle_state(spark, tmp_path):
 
 
 def test_incremental_dedup_sink_batch_replay_is_noop(spark, tmp_path):
-    """Checkpoint recovery re-delivers the last uncommitted batch; the sink's
-    batch-id marker must make an already-applied replay a no-op (parquet
-    append is not transactional — without the marker the replay would
-    double-append survivors)."""
+    """Checkpoint recovery re-delivers the last uncommitted batch; the batch
+    id the manifest recorded must make an already-applied replay a no-op
+    (without it the replay would double-append survivors)."""
+    import os
+
     from nyc_open_data_pipeline_spark.streaming.dedup import incremental_dedup_sink
 
-    out, state = str(tmp_path / "out"), str(tmp_path / "state")
-    sink = incremental_dedup_sink(spark, out, state)
+    out = str(tmp_path / "out")
+    sink = incremental_dedup_sink(spark, out)
     b0 = spark.createDataFrame([(1, "alpha"), (2, "beta")], "doc_id long, text string")
     sink(b0, 0)
-    assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {1, 2}
+    assert set(_ids(spark, out)) == {1, 2}
+    listing = sorted(os.listdir(out))
     # crash-after-commit replay: same batch id delivered again
     sink(b0, 0)
-    rows = spark.read.parquet(out).collect()
-    assert len(rows) == 2  # no double-append
+    assert len(_ids(spark, out)) == 2  # no double-append
+    assert sorted(os.listdir(out)) == listing  # nothing written or published
     # a NEW batch id with overlapping content still dedups via state
     b1 = spark.createDataFrame([(5, "alpha"), (6, "delta")], "doc_id long, text string")
     sink(b1, 1)
-    assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {1, 2, 6}
+    assert set(_ids(spark, out)) == {1, 2, 6}
 
 
 def test_cached_fixture_builds_once_per_session(spark, sf_dir):
@@ -505,14 +543,14 @@ def test_incremental_neardup_stream_state(spark, tmp_path):
     )
     out, state = str(tmp_path / "out"), str(tmp_path / "state")
     run_incremental_neardup(spark, stream, out, state)
-    got = {r["doc_id"] for r in spark.read.parquet(out).collect()}
+    got = set(_ids(spark, out))
     # a -> 1 (2 within-batch, 10 by state), b -> 3, c -> 11 (12 within-batch);
     # 4 is too short to shingle -> no band keys -> out of scope
     assert got == {1, 3, 11}
 
 
 def test_incremental_neardup_sink_batch_replay_is_noop(spark, tmp_path):
-    """Marker protocol parity with the exact-hash sink: an already-applied
+    """Batch-token parity with the exact-hash sink: an already-applied
     batch id replays as a no-op; a new batch id still filters via state."""
     from nyc_open_data_pipeline_spark.streaming.dedup import incremental_neardup_sink
 
@@ -522,15 +560,15 @@ def test_incremental_neardup_sink_batch_replay_is_noop(spark, tmp_path):
     sink = incremental_neardup_sink(spark, out, state)
     b0 = spark.createDataFrame([(1, a), (2, b)], "doc_id long, text string")
     sink(b0, 0)
-    assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {1, 2}
+    assert set(_ids(spark, out)) == {1, 2}
     sink(b0, 0)  # crash-after-commit replay
-    assert len(spark.read.parquet(out).collect()) == 2
+    assert len(_ids(spark, out)) == 2
     b1 = spark.createDataFrame(
         [(5, a), (6, "a third unrelated passage about spark shuffles here")],
         "doc_id long, text string",
     )
     sink(b1, 1)
-    assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {1, 2, 6}
+    assert set(_ids(spark, out)) == {1, 2, 6}
 
 
 def test_stream_incremental_neardup_equals_batch_greedy(spark, sf_dir):
@@ -567,18 +605,15 @@ def test_stream_incremental_neardup_equals_batch_greedy(spark, sf_dir):
     assert got == exp and len(got) > 0
 
 
-def test_incremental_dedup_sink_crash_before_marker_replay(spark, tmp_path):
-    """The round-7 idempotence upgrade: a crash AFTER the output/state
-    writes but BEFORE the marker commit replays the batch with the marker
-    un-advanced — per-batch overwrite partitions must replace, not
-    double-append, and the pre-batch state filter must not let the batch's
-    own landed state keys anti-join away its own survivors."""
-    import os
-
+def test_incremental_dedup_sink_crash_before_marker_replay(spark, tmp_path, monkeypatch):
+    """A crash AFTER the batch's segment write but IN the manifest flip
+    replays the batch with the recorded id un-advanced: the crashed
+    segment must stay invisible (no double rows) and the replay must
+    anti-join against exactly the pre-batch seen-set."""
     from nyc_open_data_pipeline_spark.streaming.dedup import incremental_dedup_sink
 
-    out, state = str(tmp_path / "out"), str(tmp_path / "state")
-    sink = incremental_dedup_sink(spark, out, state)
+    out = str(tmp_path / "out")
+    sink = incremental_dedup_sink(spark, out)
     b0 = spark.createDataFrame(
         [(1, "alpha"), (2, "beta")], "doc_id long, text string"
     )
@@ -586,19 +621,21 @@ def test_incremental_dedup_sink_crash_before_marker_replay(spark, tmp_path):
     b1 = spark.createDataFrame(
         [(5, "alpha"), (6, "delta")], "doc_id long, text string"
     )
-    sink(b1, 1)
-    # simulate crash-before-marker on batch 1: writes landed, marker did not
-    with open(os.path.join(state, "_last_batch"), "w") as f:
-        f.write("0")  # marker un-advanced (a real crash never DELETES it)
-    sink(b1, 1)
-    assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {1, 2, 6}
-    assert len(spark.read.parquet(out).collect()) == 3  # no double-append
+    _crash_next_flip(monkeypatch, out)
+    with pytest.raises(OSError, match="injected"):
+        sink(b1, 1)
+    assert set(_ids(spark, out)) == {1, 2}  # the crashed batch is invisible
+    sink(b1, 1)  # checkpoint replay
+    assert set(_ids(spark, out)) == {1, 2, 6}
+    assert len(_ids(spark, out)) == 3  # no double-append
 
 
-def test_incremental_neardup_sink_crash_before_marker_replay(spark, tmp_path):
-    """Same crash-before-marker replay for the band-key sink."""
-    import os
-
+def test_incremental_neardup_sink_crash_before_marker_replay(spark, tmp_path, monkeypatch):
+    """Crash BETWEEN the state flip and the output flip of the band-key
+    sink: the replay must skip the already-published state write, and its
+    ``batch < id`` seen-set read must keep the batch's own published keys
+    from dropping its own survivors."""
+    from nyc_open_data_pipeline_spark.pipeline.storage import table_at
     from nyc_open_data_pipeline_spark.streaming.dedup import incremental_neardup_sink
 
     a = "the quick brown fox jumps over the lazy dog again and again"
@@ -608,22 +645,24 @@ def test_incremental_neardup_sink_crash_before_marker_replay(spark, tmp_path):
     sink = incremental_neardup_sink(spark, out, state)
     sink(spark.createDataFrame([(1, a), (2, b)], "doc_id long, text string"), 0)
     b1 = spark.createDataFrame([(5, a), (6, c)], "doc_id long, text string")
-    sink(b1, 1)
-    with open(os.path.join(state, "_last_batch"), "w") as f:
-        f.write("0")  # marker un-advanced (a real crash never DELETES it)
-    sink(b1, 1)
-    assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {1, 2, 6}
-    assert len(spark.read.parquet(out).collect()) == 3
+    _crash_next_flip(monkeypatch, out)
+    with pytest.raises(OSError, match="injected"):
+        sink(b1, 1)
+    st, name = table_at(state)
+    assert st.committed_batch(name) == 1  # state landed, output did not
+    n_keys = _read(spark, state).count()
+    sink(b1, 1)  # checkpoint replay
+    assert set(_ids(spark, out)) == {1, 2, 6}
+    assert len(_ids(spark, out)) == 3
+    assert _read(spark, state).count() == n_keys  # state written once
 
 
-def test_incremental_substring_sink_crash_before_marker_replay(spark, tmp_path):
-    """Crash-before-marker replay for the gram-state substring sink: the
-    replayed batch must overwrite its own span/state partitions (no
-    double-append) and the pre-batch state filter must keep the batch's
-    own landed gram keys out of its replayed seen-set (which would
-    otherwise mark EVERY window of the batch as duplicated)."""
-    import os
-
+def test_incremental_substring_sink_crash_before_marker_replay(spark, tmp_path, monkeypatch):
+    """Crash between the state flip and the output flip of the gram-state
+    substring sink: the replay must not double-append spans, and the
+    ``batch < id`` seen-set read must keep the batch's own published gram
+    keys out of its replayed seen-set (which would otherwise mark EVERY
+    window of the batch as duplicated)."""
     from nyc_open_data_pipeline_spark.streaming.dedup import (
         incremental_substring_sink,
     )
@@ -637,11 +676,11 @@ def test_incremental_substring_sink_crash_before_marker_replay(spark, tmp_path):
     b1 = spark.createDataFrame(
         [(5, base), (6, other)], "doc_id long, text string"
     )
-    sink(b1, 1)
-    with open(os.path.join(state, "_last_batch"), "w") as f:
-        f.write("0")  # marker un-advanced (a real crash never DELETES it)
-    sink(b1, 1)  # replay after crash-before-marker
-    rows = spark.read.parquet(out).collect()
+    _crash_next_flip(monkeypatch, out)
+    with pytest.raises(OSError, match="injected"):
+        sink(b1, 1)
+    sink(b1, 1)  # replay after the crash between the two flips
+    rows = _read(spark, out).collect()
     # doc 5 repeats doc 1's text -> one maximal span covering tokens 1..12;
     # docs 1 and 6 are first occurrences -> no spans
     assert [(r["doc_id"], r["start_pos"], r["end_pos"], r["span_len"]) for r in rows] == [
@@ -665,7 +704,7 @@ def test_incremental_substring_within_batch_keep_first(spark, tmp_path):
         ),
         0,
     )
-    rows = spark.read.parquet(out).collect()
+    rows = _read(spark, out).collect()
     assert [(r["doc_id"], r["start_pos"], r["end_pos"], r["span_len"]) for r in rows] == [
         (9, 1, 10, 10)
     ]
@@ -704,35 +743,20 @@ def test_incremental_substring_keep_first_join_is_shuffled(spark, tmp_path):
     )
 
 
-def _state_parquet_files(state_dir):
-    """All visible parquet files under batch=* partitions of a state dir."""
-    import os
+def _compact(spark, table_dir, max_segments=1):
+    from nyc_open_data_pipeline_spark.pipeline.schema import TableSchema
+    from nyc_open_data_pipeline_spark.pipeline.storage import table_at
 
-    out = []
-    for e in sorted(os.listdir(state_dir)):
-        d = os.path.join(state_dir, e)
-        if e.startswith("batch=") and os.path.isdir(d):
-            out += [
-                os.path.join(d, f)
-                for f in os.listdir(d)
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            ]
-    return out
+    storage, table = table_at(table_dir)
+    return storage.compact_segments(spark, TableSchema(table), max_segments)
 
 
 def test_compact_state_preserves_survivors_and_bounds_files(spark, tmp_path):
-    """Round-10 verdict #1: the state-store maintenance the module docstring
-    promised. Drive 10 micro-batches through the exact-hash sink twice —
-    once untouched, once with compact_state interleaved mid-stream — and
-    prove (a) identical survivors, (b) the compacted store's batch-dir and
-    file counts are bounded by (uncompacted batches + 1), not by total
-    batches processed."""
-    import os
-
-    from nyc_open_data_pipeline_spark.streaming.dedup import (
-        compact_state,
-        incremental_dedup_sink,
-    )
+    """Drive 10 micro-batches through the exact-hash sink twice — once
+    untouched, once with compaction interleaved mid-stream — and prove
+    (a) identical survivors, (b) the compacted table's segment count is
+    bounded by (uncompacted batches + 1), not by total batches processed."""
+    from nyc_open_data_pipeline_spark.streaming.dedup import incremental_dedup_sink
 
     # 10 batches; text j of batch i duplicates batch i-2's text j for even j
     def batch(i):
@@ -742,47 +766,40 @@ def test_compact_state_preserves_survivors_and_bounds_files(spark, tmp_path):
             rows.append((i * 100 + j, txt))
         return spark.createDataFrame(rows, "doc_id long, text string")
 
-    out_a, state_a = str(tmp_path / "out_a"), str(tmp_path / "state_a")
-    sink_a = incremental_dedup_sink(spark, out_a, state_a)
+    out_a = str(tmp_path / "out_a")
+    sink_a = incremental_dedup_sink(spark, out_a)
     for i in range(10):
         sink_a(batch(i), i)
 
-    out_b, state_b = str(tmp_path / "out_b"), str(tmp_path / "state_b")
-    sink_b = incremental_dedup_sink(spark, out_b, state_b)
+    out_b = str(tmp_path / "out_b")
+    sink_b = incremental_dedup_sink(spark, out_b)
     for i in range(10):
         sink_b(batch(i), i)
         if i in (4, 7):  # compact mid-stream, between batches
-            stats = compact_state(spark, state_b, min_batches=2)
-            assert stats.batches_merged == {4: 5, 7: 4}[i]
-            assert stats.files_after <= stats.files_before
+            assert _compact(spark, out_b) == {"": {4: 5, 7: 4}[i]}
 
-    surv = lambda p: {r["doc_id"] for r in spark.read.parquet(p).collect()}  # noqa: E731
-    assert surv(out_b) == surv(out_a) and len(surv(out_a)) > 0
-    state_keys = lambda p: {  # noqa: E731
-        r["content_hash"] for r in spark.read.parquet(p).collect()
+    assert set(_ids(spark, out_b)) == set(_ids(spark, out_a))
+    assert len(_ids(spark, out_b)) == len(_ids(spark, out_a)) > 0
+    hashes = lambda p: {  # noqa: E731
+        r["content_hash"] for r in _read(spark, p).collect()
     }
-    assert state_keys(state_b) == state_keys(state_a)
-    # bounded: batches 0..7 merged into one partition, 8..9 still their own
-    dirs_b = [e for e in os.listdir(state_b) if e.startswith("batch=")]
-    assert len(dirs_b) == 3
-    assert len(_state_parquet_files(state_b)) < len(_state_parquet_files(state_a))
+    assert hashes(out_b) == hashes(out_a)
+    # bounded: batches 0..7 folded into one segment, 8..9 still their own
+    assert len(_segments(out_b)) == 3
+    assert len(_segments(out_a)) == 10
 
 
-def test_compact_state_then_crash_replay_overwrites_own_partition(spark, tmp_path):
+def test_compact_state_then_crash_replay_overwrites_own_partition(spark, tmp_path, monkeypatch):
     """A checkpoint replay AFTER compaction must behave exactly as before:
-    the replayed batch overwrites only its OWN partition (id > marker at
-    write time > every compacted id) and anti-joins against exactly the
-    pre-batch state, so survivors match the never-crashed run and nothing
-    double-appends into the compaction destination."""
+    the replayed batch publishes only its OWN segment and anti-joins
+    against exactly the pre-batch state, so survivors match the
+    never-crashed run and the compacted segment is untouched."""
     import os
 
-    from nyc_open_data_pipeline_spark.streaming.dedup import (
-        compact_state,
-        incremental_dedup_sink,
-    )
+    from nyc_open_data_pipeline_spark.streaming.dedup import incremental_dedup_sink
 
-    out, state = str(tmp_path / "out"), str(tmp_path / "state")
-    sink = incremental_dedup_sink(spark, out, state)
+    out = str(tmp_path / "out")
+    sink = incremental_dedup_sink(spark, out)
     texts = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta"]
     for i in range(8):
         sink(
@@ -792,113 +809,92 @@ def test_compact_state_then_crash_replay_overwrites_own_partition(spark, tmp_pat
             ),
             i,
         )
-    stats = compact_state(spark, state, min_batches=2)
-    assert stats.batches_merged == 8
-    dest = os.path.join(state, "batch=7")
-    dest_files_before = sorted(os.listdir(dest))
+    assert _compact(spark, out) == {"": 8}
+    [merged] = _segments(out)
+    merged_files = sorted(os.listdir(os.path.join(out, merged)))
 
     # batch 8: one dup of batch 7's text, one new text
     b8 = spark.createDataFrame(
         [(80, texts[7]), (81, "iota")], "doc_id long, text string"
     )
-    sink(b8, 8)
-    with open(os.path.join(state, "_last_batch"), "w") as f:
-        f.write("7")  # crash-before-marker: marker un-advanced, not deleted
+    _crash_next_flip(monkeypatch, out)
+    with pytest.raises(OSError, match="injected"):
+        sink(b8, 8)
     sink(b8, 8)  # replay
 
-    assert sorted(os.listdir(dest)) == dest_files_before  # destination untouched
-    got = {r["doc_id"] for r in spark.read.parquet(out).collect()}
+    assert _segments(out)[0] == merged  # compacted segment still listed
+    assert sorted(os.listdir(os.path.join(out, merged))) == merged_files
+    got = set(_ids(spark, out))
     # per batch i: doc i*10 survives (new text), i*10+1 is a dup of batch
     # i-1's text except batch 0 where both rows are 'alpha' (within-batch
     # collapse keeps doc 0); batch 8: 80 dups theta, 81 survives
     assert got == {i * 10 for i in range(8)} | {81}
-    assert len(spark.read.parquet(out).collect()) == len(got)  # no double rows
+    assert len(_ids(spark, out)) == len(got)  # no double rows
 
 
-def test_compact_state_crash_mid_swap_is_harmless_and_self_heals(spark, tmp_path):
-    """Duplicate-window tolerance: simulate a compaction that crashed after
-    moving SOME merged files but before deleting the originals (duplicate
-    keys visible) plus a stale _compact_* temp dir. The sinks must still
-    produce correct survivors, and the next compact_state run must clean
-    the store back to distinct keys and drop the stale temp dir."""
+def test_compact_state_crash_mid_swap_is_harmless_and_self_heals(spark, tmp_path, monkeypatch):
+    """A compaction that crashes in its manifest flip leaves the published
+    state unchanged (its merged segment is an invisible orphan). The sink
+    must still produce correct survivors, the next compaction must land,
+    and vacuum must sweep the orphan."""
     import os
-    import shutil
 
-    from nyc_open_data_pipeline_spark.streaming.dedup import (
-        compact_state,
-        incremental_dedup_sink,
-    )
+    from nyc_open_data_pipeline_spark.pipeline.storage import table_at
+    from nyc_open_data_pipeline_spark.streaming.dedup import incremental_dedup_sink
 
-    out, state = str(tmp_path / "out"), str(tmp_path / "state")
-    sink = incremental_dedup_sink(spark, out, state)
+    out = str(tmp_path / "out")
+    sink = incremental_dedup_sink(spark, out)
     for i, t in enumerate(["one", "two", "three", "four"]):
         sink(
             spark.createDataFrame([(i, t)], "doc_id long, text string"), i
         )
-    # fake a crashed swap: batch=3 gets a DUPLICATE copy of batch=0's file,
-    # and a stale temp dir is left behind
-    src = next(
-        f
-        for f in os.listdir(os.path.join(state, "batch=0"))
-        if f.endswith(".parquet")
-    )
-    shutil.copy(
-        os.path.join(state, "batch=0", src),
-        os.path.join(state, "batch=3", "compact-dead-00000.parquet"),
-    )
-    os.makedirs(os.path.join(state, "_compact_dead"), exist_ok=True)
-    with open(os.path.join(state, "_compact_dead", "garbage.txt"), "w") as f:
-        f.write("leftover")
+    before = _segments(out)
+    _crash_next_flip(monkeypatch, out)
+    with pytest.raises(OSError, match="injected"):
+        _compact(spark, out)
+    assert _segments(out) == before  # state unchanged
+    on_disk = lambda: {e for e in os.listdir(out) if e.startswith("seg_")}  # noqa: E731
+    orphans = on_disk() - set(before)
+    assert len(orphans) == 1
 
-    # a batch against the duplicated store still dedups correctly
+    # a batch against the store still dedups correctly
     sink(
         spark.createDataFrame(
             [(40, "one"), (41, "five")], "doc_id long, text string"
         ),
         4,
     )
-    assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {
-        0, 1, 2, 3, 41,
-    }
+    assert set(_ids(spark, out)) == {0, 1, 2, 3, 41}
 
-    stats = compact_state(spark, state, min_batches=2)
-    assert stats.batches_merged == 5
-    assert not os.path.isdir(os.path.join(state, "_compact_dead"))
-    rows = spark.read.parquet(state).select("content_hash").collect()
-    hashes = [r["content_hash"] for r in rows]
-    assert len(hashes) == len(set(hashes)) == 5  # distinct again
+    assert _compact(spark, out) == {"": 5}
+    storage, table = table_at(out)
+    storage.vacuum(table)
+    assert on_disk() == set(_segments(out))  # the orphan was swept
+    hashes = [r["content_hash"] for r in _read(spark, out).collect()]
+    assert len(hashes) == len(set(hashes)) == 5
 
 
 def test_compact_state_below_min_batches_is_noop(spark, tmp_path):
     import os
 
-    from nyc_open_data_pipeline_spark.streaming.dedup import (
-        compact_state,
-        incremental_dedup_sink,
-    )
+    from nyc_open_data_pipeline_spark.streaming.dedup import incremental_dedup_sink
 
-    out, state = str(tmp_path / "out"), str(tmp_path / "state")
-    sink = incremental_dedup_sink(spark, out, state)
+    out = str(tmp_path / "out")
+    sink = incremental_dedup_sink(spark, out)
     sink(spark.createDataFrame([(1, "a")], "doc_id long, text string"), 0)
     sink(spark.createDataFrame([(2, "b")], "doc_id long, text string"), 1)
-    listing = sorted(os.listdir(state))
-    stats = compact_state(spark, state, min_batches=4)
-    assert stats.batches_merged == 0
-    assert sorted(os.listdir(state)) == listing  # untouched
-    # and on a dir with no marker at all
-    empty = str(tmp_path / "nostate")
-    os.makedirs(empty)
-    assert compact_state(spark, empty).batches_merged == 0
+    listing = sorted(os.listdir(out))
+    assert _compact(spark, out, max_segments=4) == {}
+    assert sorted(os.listdir(out)) == listing  # untouched
+    # and on a table with no manifest at all
+    assert _compact(spark, str(tmp_path / "nostate")) == {}
 
 
 def test_compact_state_band_key_store(spark, tmp_path):
-    """compact_state is schema-generic: the two-column band-key store of
-    the near-dup sink compacts with identical semantics (state keys equal
+    """Compaction is schema-generic: the two-column band-key table of the
+    near-dup sink compacts with identical semantics (state keys equal
     before/after, later batches still anti-join against them)."""
-    from nyc_open_data_pipeline_spark.streaming.dedup import (
-        compact_state,
-        incremental_neardup_sink,
-    )
+    from nyc_open_data_pipeline_spark.streaming.dedup import incremental_neardup_sink
 
     a = "the quick brown fox jumps over the lazy dog again and again"
     b = "completely different words appear in this other document body text"
@@ -910,17 +906,12 @@ def test_compact_state_band_key_store(spark, tmp_path):
         sink(
             spark.createDataFrame([(i, t)], "doc_id long, text string"), i
         )
-    before = {
-        (r["band"], r["band_key"])
-        for r in spark.read.parquet(state).select("band", "band_key").collect()
-    }
-    stats = compact_state(spark, state, min_batches=2)
-    assert stats.batches_merged == 4
-    after = {
-        (r["band"], r["band_key"])
-        for r in spark.read.parquet(state).select("band", "band_key").collect()
-    }
-    assert after == before
+    keys = lambda: [  # noqa: E731
+        (r["band"], r["band_key"]) for r in _read(spark, state).collect()
+    ]
+    before = keys()
+    assert _compact(spark, state) == {"": 4}
+    assert sorted(keys()) == sorted(before) and len(_segments(state)) == 1
     # a near-copy of doc 0 arriving after compaction is still dropped
     sink(
         spark.createDataFrame(
@@ -929,13 +920,14 @@ def test_compact_state_band_key_store(spark, tmp_path):
         ),
         4,
     )
-    got = {r["doc_id"] for r in spark.read.parquet(out).collect()}
+    got = set(_ids(spark, out))
     assert 100 not in got and 101 in got
 
 
 def test_run_incremental_dedup_compact_after(spark, tmp_path):
-    """compact_after=True on the drain wrapper compacts the state store at
-    the safe point (drain complete) without changing survivors."""
+    """compact_after=True on the drain wrapper compacts the table at the
+    safe point (drain complete) without changing survivors, and vacuums
+    the per-batch segments it folded."""
     import os
 
     from nyc_open_data_pipeline_spark.streaming.dedup import run_incremental_dedup
@@ -955,121 +947,106 @@ def test_run_incremental_dedup_compact_after(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
     )
-    out, state = str(tmp_path / "out"), str(tmp_path / "state")
-    run_incremental_dedup(spark, stream, out, state, compact_after=True)
-    got = {r["doc_id"] for r in spark.read.parquet(out).collect()}
+    out = str(tmp_path / "out")
+    run_incremental_dedup(spark, stream, out, compact_after=True)
+    got = set(_ids(spark, out))
     assert got == {0, 10, 20, 30, 40}  # i*10 new, i*10+1 dups batch i-1 (0,1 collapse)
-    dirs = [e for e in os.listdir(state) if e.startswith("batch=")]
-    assert dirs == ["batch=4"]  # all five partitions merged into the marker id
+    segs = _segments(out)
+    assert len(segs) == 1  # all five batch segments folded into one
+    assert {e for e in os.listdir(out) if e.startswith("seg_")} == set(segs)
 
 
 def test_compact_state_all_empty_batches_is_noop(spark, tmp_path):
-    """An all-duplicate feed commits batches whose state partitions hold
-    zero rows (no part files under AQE empty-relation writes); compaction
-    must no-op instead of failing schema inference over empty dirs."""
-    import os
+    """A feed whose batches all publish zero rows (no doc is long enough
+    to shingle) leaves typed, empty tables; compacting them must not fail,
+    folds to at most one segment, and is then a no-op."""
+    from nyc_open_data_pipeline_spark.streaming.dedup import incremental_neardup_sink
 
-    from nyc_open_data_pipeline_spark.streaming.dedup import compact_state
-
-    state = str(tmp_path / "state")
+    out, state = str(tmp_path / "out"), str(tmp_path / "state")
+    sink = incremental_neardup_sink(spark, out, state)
     for i in range(5):
-        d = os.path.join(state, f"batch={i}")
-        os.makedirs(d)
-        open(os.path.join(d, "_SUCCESS"), "w").close()
-    with open(os.path.join(state, "_last_batch"), "w") as f:
-        f.write("4")
-    stats = compact_state(spark, state, min_batches=2)
-    assert stats.batches_merged == 0 and stats.files_before == 0
+        sink(spark.createDataFrame([(i, "hi")], "doc_id long, text string"), i)
+    _compact(spark, state)
+    assert len(_segments(state)) <= 1
+    assert _compact(spark, state) == {}
+    assert _read(spark, state).count() == 0
+    assert set(_read(spark, state).columns) == {"band", "band_key", "batch"}
+    assert _ids(spark, out) == []
 
 
 def test_replay_guard_refuses_lost_marker_and_stale_marker(spark, tmp_path):
-    """ADVICE r12: once compact_state has folded history into one
-    partition, the _last_batch marker is correctness-bearing. A sink
-    must fail LOUDLY (not silently re-admit every seen document) when
-    (a) the marker is lost while state partitions exist, or (b) a stale
-    marker would let a replay overwrite a compaction destination."""
+    """The batch id lives in the table's manifest, so it cannot be lost or
+    go stale apart from the data: (a) an unreadable ``_current`` makes the
+    sink refuse loudly instead of treating the table as empty, and (b) a
+    rollback to a pre-compaction generation brings back the batch id that
+    generation held, so replays re-apply each later batch exactly once."""
     import os
 
-    import pytest
-
-    from nyc_open_data_pipeline_spark.streaming.dedup import (
-        compact_state,
-        incremental_dedup_sink,
-    )
-
-    out, state = str(tmp_path / "out"), str(tmp_path / "state")
-    sink = incremental_dedup_sink(spark, out, state)
-    for i in range(4):
-        sink(
-            spark.createDataFrame([(i, f"text {i}")], "doc_id long, text string"),
-            i,
-        )
-    stats = compact_state(spark, state, min_batches=2)
-    assert stats.batches_merged == 4
-
-    # (a) lost marker: processing any new batch must refuse
-    os.rename(os.path.join(state, "_last_batch"), os.path.join(state, "_mv"))
-    b4 = spark.createDataFrame([(40, "text 40")], "doc_id long, text string")
-    with pytest.raises(RuntimeError, match="marker is missing"):
-        sink(b4, 4)
-    os.rename(os.path.join(state, "_mv"), os.path.join(state, "_last_batch"))
-
-    # (b) stale marker (pre-compaction backup): batch=3 is the compaction
-    # destination; a marker of 2 would admit a "replay" of batch 3 that
-    # overwrites the whole merged seen-set
-    with open(os.path.join(state, "_last_batch"), "w") as f:
-        f.write("2")
-    b3 = spark.createDataFrame([(30, "text 3")], "doc_id long, text string")
-    with pytest.raises(RuntimeError, match="compaction destination"):
-        sink(b3, 3)
-
-    # (c) stale marker, INTERMEDIATE replay (ADVICE r13): marker=1 with
-    # destination batch=3 means replayed batches 2..2 sit strictly between
-    # marker and destination — each would read state with batch < batch_id
-    # (excluding the merged seen-set at batch=3) and overwrite its output
-    # with duplicate-admitting results long before batch 3 trips the
-    # narrow ==destination check. EVERY batch must refuse while any
-    # destination exceeds the marker.
-    with open(os.path.join(state, "_last_batch"), "w") as f:
-        f.write("1")
-    b2 = spark.createDataFrame([(20, "text 2")], "doc_id long, text string")
-    with pytest.raises(RuntimeError, match="exceeds the\n?.*marker|marker"):
-        sink(b2, 2)
-
-    # restored marker: the sink resumes normally
-    with open(os.path.join(state, "_last_batch"), "w") as f:
-        f.write("3")
-    sink(b4, 4)
-    got = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    assert got == {0, 1, 2, 3, 40}
-
-
-def test_first_batch_crash_with_no_marker_still_replays(spark, tmp_path):
-    """Round-12 review: a crash during the very FIRST batch leaves state
-    partitions but no _last_batch marker at all — the replay guard must
-    not trip on this self-healing pre-compaction case (the tripwires arm
-    only once compact-* files exist)."""
-    import os
-
+    from nyc_open_data_pipeline_spark.pipeline.storage import table_at
     from nyc_open_data_pipeline_spark.streaming.dedup import incremental_dedup_sink
 
-    out, state = str(tmp_path / "out"), str(tmp_path / "state")
-    sink = incremental_dedup_sink(spark, out, state)
+    out = str(tmp_path / "out")
+    sink = incremental_dedup_sink(spark, out)
+    batches = [
+        spark.createDataFrame([(i, f"text {i}")], "doc_id long, text string")
+        for i in range(4)
+    ]
+    for i, b in enumerate(batches):
+        sink(b, i)
+    storage, table = table_at(out)
+    after_batch_1 = storage.generation(table) - 2
+    assert _compact(spark, out) == {"": 4}
+
+    # (a) unreadable manifest: processing any new batch must refuse
+    cur = os.path.join(out, "_current")
+    with open(cur) as f:
+        saved = f.read()
+    with open(cur, "w") as f:
+        f.write("{torn")
+    b4 = spark.createDataFrame([(40, "text 40")], "doc_id long, text string")
+    with pytest.raises(RuntimeError, match="unreadable"):
+        sink(b4, 4)
+    with open(cur, "w") as f:
+        f.write(saved)
+
+    # (b) rollback to the generation that held batches 0..1 (before the
+    # compaction): the batch id comes back with the data
+    storage.rollback(table, after_batch_1)
+    assert storage.committed_batch(table) == 1
+    assert set(_ids(spark, out)) == {0, 1}
+    for i, b in enumerate(batches):
+        sink(b, i)  # 0 and 1 are no-ops; 2 and 3 re-apply once
+    sink(b4, 4)
+    assert sorted(_ids(spark, out)) == [0, 1, 2, 3, 40]
+
+
+def test_first_batch_crash_with_no_marker_still_replays(spark, tmp_path, monkeypatch):
+    """A crash in the very FIRST batch's manifest flip leaves a segment and
+    a history file but no ``_current``: the table is still uncommitted,
+    and the replay must publish the batch once."""
+    from nyc_open_data_pipeline_spark.pipeline.storage import table_at
+    from nyc_open_data_pipeline_spark.streaming.dedup import incremental_dedup_sink
+
+    out = str(tmp_path / "out")
+    sink = incremental_dedup_sink(spark, out)
     b0 = spark.createDataFrame([(1, "alpha"), (2, "beta")], "doc_id long, text string")
-    sink(b0, 0)
-    os.remove(os.path.join(state, "_last_batch"))  # crash before FIRST commit
-    sink(b0, 0)  # replay must overwrite its own partitions, not raise
-    got = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    assert got == {1, 2}
-    assert len(spark.read.parquet(out).collect()) == 2  # no double rows
+    _crash_next_flip(monkeypatch, out)
+    with pytest.raises(OSError, match="injected"):
+        sink(b0, 0)
+    storage, table = table_at(out)
+    assert storage.generation(table) == 0
+    sink(b0, 0)  # replay must publish, not raise
+    assert set(_ids(spark, out)) == {1, 2}
+    assert len(_ids(spark, out)) == 2  # no double rows
 
 
 def test_sink_metrics_counts_match_written_rows(spark, tmp_path):
-    """Round-13 sink internals change: per-batch metrics counts now come
-    from the written parquet FOOTERS (no count job, no output checkpoint)
-    — pin that the reported n_out/n_new_keys equal the rows actually
-    written per batch partition, for both the exact-hash and the
-    near-dup sinks."""
+    """Per-batch metrics counts are observed on the write job itself (no
+    count job, no output checkpoint) — pin that the reported
+    n_out/n_new_keys equal the rows each batch actually published, for
+    both the exact-hash and the near-dup sinks."""
+    from pyspark.sql import functions as F
+
     from nyc_open_data_pipeline_spark.streaming.dedup import (
         run_incremental_dedup,
         run_incremental_neardup,
@@ -1089,10 +1066,7 @@ def test_sink_metrics_counts_match_written_rows(spark, tmp_path):
     d = str(tmp_path / "in")
     write_stream_chunks([b0, b1], d)
     drain_batch_metrics()
-    for runner, out_tag in (
-        (run_incremental_dedup, "dedup"),
-        (run_incremental_neardup, "neardup"),
-    ):
+    for out_tag in ("dedup", "neardup"):
         stream = (
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1)
@@ -1100,14 +1074,69 @@ def test_sink_metrics_counts_match_written_rows(spark, tmp_path):
         )
         out = str(tmp_path / f"out_{out_tag}")
         state = str(tmp_path / f"state_{out_tag}")
-        runner(spark, stream, out, state)
+        if out_tag == "dedup":
+            run_incremental_dedup(spark, stream, out)
+        else:
+            run_incremental_neardup(spark, stream, out, state)
         by_batch = {}
         for m in drain_batch_metrics():
             by_batch[m["batch_id"]] = m
         assert set(by_batch) == {0, 1}
         for bid, m in by_batch.items():
-            written = spark.read.parquet(f"{out}/batch={bid}").count()
+            written = _read(spark, out).filter(F.col("batch") == bid).count()
             assert m["n_out"] == written, (out_tag, bid, m, written)
             if "n_new_keys" in m:
-                keys = spark.read.parquet(f"{state}/batch={bid}").count()
+                keys = _read(spark, state).filter(F.col("batch") == bid).count()
                 assert m["n_new_keys"] == keys, (out_tag, bid, m, keys)
+
+
+def test_latest_upsert_sink_crash_in_publish_keeps_prior_state(spark, tmp_path, monkeypatch):
+    """The crash window of the st7 sink: batch 0 holds a key batch 1
+    lacks, and batch 1's state publish fails once mid-commit. The replay
+    of batch 1 must merge into batch 0's still-published state, so the
+    final state equals the batch latest-per-key answer over all input."""
+    import os
+    from datetime import datetime
+
+    from nyc_open_data_pipeline_spark.streaming.upsert import latest_upsert_sink
+
+    sch = "user_id long, ts timestamp, event_id long"
+    rows = [
+        [(1, 1, 10), (2, 1, 11)],  # user 2 appears only in batch 0
+        [(1, 3, 12), (3, 2, 13)],
+        [(1, 2, 14), (3, 4, 15)],  # user 1's row here is older than batch 1's
+    ]
+    batches = [
+        spark.createDataFrame(
+            [(u, datetime(2024, 1, 1, h), e) for u, h, e in b], sch
+        )
+        for b in rows
+    ]
+    state = str(tmp_path / "state")
+    sink = latest_upsert_sink(spark, state, ["user_id"], ["ts", "event_id"])
+    sink(batches[0], 0)
+
+    real = os.replace
+    fired = []
+
+    def replace_once(src, dst):
+        if not fired:
+            fired.append(dst)
+            raise OSError("injected crash in the state publish")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace_once)
+    with pytest.raises(OSError, match="injected"):
+        sink(batches[1], 1)
+    monkeypatch.setattr(os, "replace", real)
+    sink(batches[1], 1)  # checkpoint replay
+    sink(batches[2], 2)
+
+    latest = {}
+    for u, h, e in (r for b in rows for r in b):
+        latest[u] = max(latest.get(u, (h, e)), (h, e))
+    want = {(u, datetime(2024, 1, 1, h), e) for u, (h, e) in latest.items()}
+    got = {
+        (r["user_id"], r["ts"], r["event_id"]) for r in _read(spark, state).collect()
+    }
+    assert got == want
