@@ -547,8 +547,6 @@ def main() -> None:
     short_ratios: dict[str, float] = {}
     for k, v in ok.items():
         sk = k.split("_", 1)[0]
-        if sk in short_secs:
-            sk = k  # prefix collision: fall back to the full name
         short_secs[sk] = round(v, 2)
         if y:
             short_ratios[sk] = round(v / y, 2)

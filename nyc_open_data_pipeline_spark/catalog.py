@@ -19,6 +19,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nyc_open_data_pipeline_spark.cache import SESSION_CACHE
+
 # The driver's synthetic corpus (TESTDATA.md) + any engine-produced tables.
 TESTDATA_TABLES = (
     "region",
@@ -83,74 +85,39 @@ _EXPRESSION_HEAVY = {"documents", "embeddings"}
 # columns), clamped to [defaultParallelism, 4096]; AQE then coalesces every
 # small stage back down (advisory 64 MB), so small fixtures keep their
 # current plans while large inputs get spill-free widths with NO knob.
-# Applied as a session high-water mark (never shrinks) so scale switches
-# within one session don't flap; SPARK_GRAFT_SHUFFLE_PARTITIONS remains as
-# an explicit operator override.
+# Within a session the width only grows, so scale switches don't flap. This
+# function is the conf's only writer, so the value the conf holds is the
+# session's high-water mark. SPARK_GRAFT_SHUFFLE_PARTITIONS remains as an
+# explicit operator override.
 _AUTOSIZE_TARGET_DISK_BYTES = 32 * 1024 * 1024
 _AUTOSIZE_MAX = 4096
-# per-dir SINGLE entry (mtime_ns, bytes), overwritten on fingerprint
-# mismatch — a keyed-by-(dir, mtime) dict would leak one entry per corpus
-# regeneration for the session lifetime (ADVICE r7)
-_DIR_BYTES_CACHE: dict[str, tuple[int, int]] = {}
-_AUTOSIZE_HIGH_WATER: dict[str, int] = {}
-
-
-def _dir_mtime_ns(sf_dir: str) -> int:
-    """Newest mtime anywhere under ``sf_dir`` (two levels deep) — the
-    corpus-staleness fingerprint. The MAX of the dir mtime and every entry
-    mtime is used because an O_TRUNC rewrite of an existing file or a
-    rewrite inside a per-table subdirectory does NOT bump the parent dir's
-    mtime (round-7 review), but it does bump the file's own. One cheap
-    os.scandir pass, orders cheaper than the byte walks it guards."""
-    mtime = -1
-    try:
-        mtime = os.stat(sf_dir).st_mtime_ns
-        with os.scandir(sf_dir) as it:
-            for e in it:
-                try:
-                    mtime = max(mtime, e.stat().st_mtime_ns)
-                    if e.is_dir():
-                        with os.scandir(e.path) as it2:
-                            for e2 in it2:
-                                mtime = max(mtime, e2.stat().st_mtime_ns)
-                except OSError:
-                    pass
-    except OSError:
-        pass
-    return mtime
+_INITIAL_PARTITIONS = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 
 
 def _dir_input_bytes(sf_dir: str) -> int:
-    mt = _dir_mtime_ns(sf_dir)
-    hit = _DIR_BYTES_CACHE.get(sf_dir)
-    if hit is not None and hit[0] == mt:
-        return hit[1]
-    b = 0
-    for root, _dirs, files in os.walk(sf_dir):
-        for f in files:
-            try:
-                b += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    _DIR_BYTES_CACHE[sf_dir] = (mt, b)
-    return b
+    def walk() -> int:
+        b = 0
+        for root, _dirs, files in os.walk(sf_dir):
+            for f in files:
+                try:
+                    b += os.path.getsize(os.path.join(root, f))
+                except OSError:
+                    pass
+        return b
+
+    return SESSION_CACHE.get(("_dir_input_bytes", sf_dir), walk, sf_dir=sf_dir)
 
 
 def autosize_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     """Size AQE's initial shuffle-partition count from the input scale.
     Returns the target in effect (for tests/telemetry)."""
-    appid = spark.sparkContext.applicationId
     manual = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     if manual:
         # explicit operator override: it must actually take effect, even
         # after the autosizer raised the high-water in this session — pin
         # initialPartitionNum to the override and report it as the target
         t = int(manual)
-        _AUTOSIZE_HIGH_WATER[appid] = t
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(t),
-        )
+        spark.conf.set(_INITIAL_PARTITIONS, str(t))
         return t
     par = spark.sparkContext.defaultParallelism
     target = max(
@@ -160,13 +127,11 @@ def autosize_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
             -(-_dir_input_bytes(sf_dir) // _AUTOSIZE_TARGET_DISK_BYTES),
         ),
     )
-    if target > _AUTOSIZE_HIGH_WATER.get(appid, 0):
-        _AUTOSIZE_HIGH_WATER[appid] = target
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(target),
-        )
-    return _AUTOSIZE_HIGH_WATER[appid]
+    high_water = int(spark.conf.get(_INITIAL_PARTITIONS, None) or 0)
+    if target > high_water:
+        spark.conf.set(_INITIAL_PARTITIONS, str(target))
+        return target
+    return high_water
 
 
 def _dir_slug(sf_dir: str) -> str:
@@ -177,35 +142,22 @@ def _dir_slug(sf_dir: str) -> str:
 # Marker property recording that a bucketed copy was written from load_table
 # output (timestamp normalization applied). Checked before serving.
 NORMALIZED_PROP = "spark_graft.normalized"
-_BUCKETED_VERIFIED: dict[tuple[str, str], bool] = {}
+
+
+def _bucketed_key(spark: SparkSession, table: str) -> tuple:
+    """Session-cache key of a bucketed table's serving verdict; a rewrite
+    of the table (operators/bucketing.write_bucketed) invalidates it."""
+    return ("_bucketed_is_normalized", spark.sparkContext.applicationId, table)
 
 
 def _bucketed_is_normalized(spark: SparkSession, table: str) -> bool:
-    key = (spark.sparkContext.applicationId, table)
-    ok = _BUCKETED_VERIFIED.get(key)
-    if ok is None:
+    def probe() -> bool:
         rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-        ok = any(
+        return any(
             r["key"] == NORMALIZED_PROP and r["value"] == "true" for r in rows
         )
-        _BUCKETED_VERIFIED[key] = ok
-    return ok
 
-
-# Schema-probe cache: (applicationId, sf_dir, name) -> (corpus mtime,
-# Spark read schema, nanos-timestamp column list). The expensive parts of
-# load_table are per-call driver work — spark.read.parquet's footer schema
-# inference and the pyarrow nanos-column probe — measured 94-152 ms per
-# call (round-13 optimization), paid by every query invocation per table;
-# the full 211-query two-pass bench rebuilds tables 600+ times. Caching
-# the probed SCHEMA (not the DataFrame: a shared DataFrame instance makes
-# two-role self-joins ambiguous — q8's nation-x-nation join failed
-# analysis under a frame cache) lets every call build a fresh relation
-# with spark.read.schema(...), skipping the inference. Same (appid,
-# mtime)-fingerprint staleness discipline as _HV_CACHE / the autosizer /
-# stream fixtures. Bucketed-layout mode bypasses the cache (its table
-# choice depends on session-catalog state, not just the dir).
-_SCHEMA_CACHE: dict = {}
+    return SESSION_CACHE.get(_bucketed_key(spark, table), probe)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -217,8 +169,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _probe_schema(spark: SparkSession, sf_dir: str, name: str, path: str):
-    """(read schema, nanos col list) for a table path, cached by corpus
-    mtime — see _SCHEMA_CACHE.
+    """(read schema, nanos col list, row-group count) for a table path,
+    session-cached per corpus fingerprint. The expensive parts of
+    load_table are per-call driver work — spark.read.parquet's footer
+    schema inference and the pyarrow nanos-column probe — measured 94-152
+    ms per call (round-13 optimization), paid by every query invocation
+    per table; the full 211-query two-pass bench rebuilds tables 600+
+    times. Caching the probed SCHEMA (not the DataFrame: a shared DataFrame
+    instance makes two-role self-joins ambiguous — q8's nation-x-nation
+    join failed analysis under a frame cache) lets every call build a fresh
+    relation with spark.read.schema(...), skipping the inference.
+    Bucketed-layout mode bypasses the probe (its table choice depends on
+    session-catalog state, not just the dir).
 
     Cache-key scope note (ADVICE r13): the probed schema depends on
     session-level confs (nanosAsLong, TIMESTAMP_NTZ inference), which are
@@ -227,22 +189,21 @@ def _probe_schema(spark: SparkSession, sf_dir: str, name: str, path: str):
     session, so any session in the application probes under identical
     settings. A caller bypassing load_table with divergent confs would
     need the conf values folded into this key."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    mt = _dir_mtime_ns(sf_dir)
-    hit = _SCHEMA_CACHE.get(key)
-    if hit is not None and hit[0] == mt:
-        return hit[1], hit[2], hit[3]
-    schema = spark.read.parquet(path).schema
-    nanos = _nanos_timestamp_cols(path)
-    # single-file row-group count for the _EXPRESSION_HEAVY fan-out probe
-    # (footer read, cached for the same reason as the schema)
-    groups = None
-    if os.path.isfile(path):
-        import pyarrow.parquet as pq
 
-        groups = pq.ParquetFile(path).metadata.num_row_groups
-    _SCHEMA_CACHE[key] = (mt, schema, nanos, groups)
-    return schema, nanos, groups
+    def probe():
+        schema = spark.read.parquet(path).schema
+        nanos = _nanos_timestamp_cols(path)
+        # single-file row-group count for the _EXPRESSION_HEAVY fan-out
+        # probe (footer read, cached for the same reason as the schema)
+        groups = None
+        if os.path.isfile(path):
+            import pyarrow.parquet as pq
+
+            groups = pq.ParquetFile(path).metadata.num_row_groups
+        return schema, nanos, groups
+
+    key = ("_probe_schema", spark.sparkContext.applicationId, sf_dir, name)
+    return SESSION_CACHE.get(key, probe, sf_dir=sf_dir)
 
 
 def _build_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

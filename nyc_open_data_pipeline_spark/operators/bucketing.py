@@ -18,6 +18,9 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from nyc_open_data_pipeline_spark.cache import SESSION_CACHE
+from nyc_open_data_pipeline_spark.catalog import NORMALIZED_PROP, _bucketed_key
+
 # Entry names a managed Spark parquet write leaves behind — anything else in
 # the directory means it is NOT ours to delete.
 _MANAGED_ENTRY = ("part-", "_SUCCESS", "_committed_", "_started_", "_temporary")
@@ -101,8 +104,6 @@ def write_bucketed(
         shutil.rmtree(orphan)
         writer.saveAsTable(table)
     if normalized:
-        from nyc_open_data_pipeline_spark.catalog import NORMALIZED_PROP
-
         df.sparkSession.sql(
             f"ALTER TABLE {table} SET TBLPROPERTIES ('{NORMALIZED_PROP}'='true')"
         )
@@ -110,11 +111,7 @@ def write_bucketed(
     # serving verdict so load_table re-reads the table properties (a stale
     # True would serve an unnormalized overwrite; a stale False would
     # permanently bypass a now-valid copy)
-    from nyc_open_data_pipeline_spark import catalog as _cat
-
-    _cat._BUCKETED_VERIFIED.pop(
-        (sess.sparkContext.applicationId, table), None
-    )
+    SESSION_CACHE.invalidate(_bucketed_key(sess, table))
 
 
 def plan_string(df: DataFrame) -> str:

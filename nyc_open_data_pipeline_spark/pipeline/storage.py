@@ -61,6 +61,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -411,7 +412,7 @@ class ParquetStorage:
         """Write ``df`` into a fresh segment dir under the table root.
         Invisible until a manifest references it. Returns (segment name,
         Hive partition relpaths present in the segment) — [""] for an
-        unpartitioned segment that holds data files."""
+        unpartitioned segment that holds rows."""
         seg = f"seg_{uuid.uuid4().hex[:12]}"
         segdir = os.path.join(self.path(schema.table_name), seg)
         parts = [c for c in schema.partition_by if c in df.columns]
@@ -424,12 +425,14 @@ class ParquetStorage:
     @staticmethod
     def _segment_relpaths(segdir: str, n_levels: int) -> list[str]:
         if n_levels == 0:
-            has_data = any(
-                f.endswith(".parquet")
+            # Spark writes one zero-row part file for an empty frame; a
+            # segment of those must not cost every later read a scan
+            has_rows = any(
+                pq.ParquetFile(os.path.join(segdir, f)).metadata.num_rows
                 for f in os.listdir(segdir)
-                if not f.startswith(("_", "."))
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
             )
-            return [""] if has_data else []
+            return [""] if has_rows else []
         out: list[str] = []
 
         def walk(d: str, depth: int, rel: str) -> None:
@@ -991,8 +994,6 @@ class ParquetStorage:
         if not self.exists(table):
             return 0
         try:
-            import pyarrow.parquet as pq
-
             return sum(
                 pq.ParquetFile(f).metadata.num_rows
                 for f in self._live_data_files(table)

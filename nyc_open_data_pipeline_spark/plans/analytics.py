@@ -457,13 +457,13 @@ _FP_PROP = "spark_graft.src_mtime_ns"
 def _served_edge_table(spark, sf_dir, short, key, build):
     """One-time bucketed materialization of a corpus-derived edge frame,
     served from the session catalog on repeat calls. Staleness-guarded: the
-    corpus mtime fingerprint (catalog._dir_mtime_ns) is stamped as a table
+    corpus mtime fingerprint (cache._dir_mtime_ns) is stamped as a table
     property at write time and checked at serve time, so a dataset
     regenerated in place rebuilds the table instead of silently serving
     results over old data (round-7 review). ``build`` is a thunk returning
     the edge DataFrame; it only runs when a (re)write is needed."""
+    from nyc_open_data_pipeline_spark.cache import _dir_mtime_ns
     from nyc_open_data_pipeline_spark.catalog import (
-        _dir_mtime_ns,
         _dir_slug,
         autosize_shuffle_partitions,
     )

@@ -6,6 +6,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nyc_open_data_pipeline_spark.cache import SESSION_CACHE
 from nyc_open_data_pipeline_spark.catalog import load_table
 
 
@@ -42,26 +43,14 @@ def sql_davg(expr: str, alias: str, prec: int = 28, scale: int = 4) -> str:
     )
 
 
-# ---------------------------------------------------------------------------
 # Cache-build accounting (round-14, VERDICT r13 what's-wrong #2): the bench
 # warms at sf0.001 then takes min-of-2 passes at sf0.1, so the cost of
 # building session-scoped shared intermediates (_hv_get frames, stream-input
 # fixtures) is paid in pass 1 and invisible in the min — honest amortization
-# requires REPORTING it. Builders call record_cache_build; bench.py drains
-# after the warm-up (discarding sf0.001 builds) and again at the end, and
-# emits one {"metric": "cache_build_sec", ...} line.
-# ---------------------------------------------------------------------------
-CACHE_BUILD_SECS: dict[str, float] = {}
-
-
-def record_cache_build(label: str, sec: float) -> None:
-    CACHE_BUILD_SECS[label] = round(CACHE_BUILD_SECS.get(label, 0.0) + sec, 3)
-
-
-def drain_cache_build_secs() -> dict[str, float]:
-    out = dict(CACHE_BUILD_SECS)
-    CACHE_BUILD_SECS.clear()
-    return out
+# requires REPORTING it. The session cache records each labelled build;
+# bench.py drains after the warm-up (discarding sf0.001 builds) and again at
+# the end, and emits one {"metric": "cache_build_sec", ...} line.
+drain_cache_build_secs = SESSION_CACHE.drain_build_secs
 
 
 def sql_floordiv(expr: str, w: int) -> str:

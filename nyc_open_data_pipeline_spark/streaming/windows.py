@@ -9,11 +9,10 @@ results for on-time data.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nyc_open_data_pipeline_spark.cache import SESSION_CACHE
 from nyc_open_data_pipeline_spark.plans.common import dec
 
 
@@ -220,57 +219,30 @@ def run_to_memory(
 # sf_dir, shape) and reuse across invocations. Without this every run of an
 # st* query re-materialized the events table to a fresh temp dir — at bench
 # time that charged a 600k-row parquet write to a query whose actual work is
-# the stateful stream. Same keying discipline as plans/llmdata._HV_CACHE.
-# The cache is lock-guarded (bench/test harnesses are single-threaded today,
-# but nothing in the API promises that) and its temp dirs are removed at
-# interpreter exit so long multi-sf sessions don't accumulate parquet copies.
-_FIXTURE_CACHE: dict = {}
-# Eager: a lazily-created lock would itself need a lock (two threads can both
-# see None and build separate Lock objects); Lock() has no import side effects.
-_FIXTURE_LOCK = threading.Lock()
-
-
-def _cleanup_fixtures() -> None:
-    import shutil
-
-    for _mt, d in _FIXTURE_CACHE.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _FIXTURE_CACHE.clear()
+# the stateful stream. The session cache removes a superseded or leftover
+# temp dir (at interpreter exit too), so long multi-sf sessions don't
+# accumulate parquet copies.
 
 
 def cached_fixture(spark, sf_dir: str, tag: str, build) -> str:
     """Return a directory containing the stream input for (sf_dir, tag),
-    building it with ``build(dir)`` on first use in this session. Entries
-    carry the corpus mtime fingerprint: an in-session corpus regeneration
-    rebuilds the fixture instead of serving stale replay chunks while the
-    oracle reads the new parquet (the same staleness class every other
-    session cache guards — catalog autosizer, _hv_get, edge tables)."""
-    import atexit
+    building it with ``build(dir)`` on first use in this session. An
+    in-session corpus regeneration rebuilds the fixture instead of serving
+    stale replay chunks while the oracle reads the new parquet
+    (cache.SessionCache). Fixture builds run real write jobs, so their
+    seconds land on the bench's cache_build_sec line."""
     import shutil
     import tempfile
 
-    from nyc_open_data_pipeline_spark.catalog import _dir_mtime_ns
-
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    mt = _dir_mtime_ns(sf_dir)
-    with _FIXTURE_LOCK:
-        hit = _FIXTURE_CACHE.get(key)
-        if hit is not None and hit[0] == mt:
-            return hit[1]
-        if hit is not None:
-            shutil.rmtree(hit[1], ignore_errors=True)
-        if not _FIXTURE_CACHE:
-            atexit.register(_cleanup_fixtures)
+    def make() -> str:
         d = tempfile.mkdtemp(prefix=f"{tag}_")
-        # fixture builds run real write jobs: record their seconds so the
-        # bench's cache_build_sec line accounts for the amortized cost
-        # (same discipline as plans/llmdata._hv_get)
-        import time as _time
-
-        from nyc_open_data_pipeline_spark.plans.common import record_cache_build
-
-        t0 = _time.perf_counter()
         build(d)
-        record_cache_build(f"fixture:{tag}", _time.perf_counter() - t0)
-        _FIXTURE_CACHE[key] = (mt, d)
-    return d
+        return d
+
+    return SESSION_CACHE.get(
+        ("cached_fixture", spark.sparkContext.applicationId, sf_dir, tag),
+        make,
+        sf_dir=sf_dir,
+        release=lambda d: shutil.rmtree(d, ignore_errors=True),
+        label=f"fixture:{tag}",
+    )

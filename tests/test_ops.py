@@ -1791,6 +1791,7 @@ def test_bucketed_copy_served_only_when_normalized(spark, sf_dir, monkeypatch):
     e.g. written from a raw spark.read.parquet — would silently skip the
     timestamp normalization load_table applies to the parquet path)."""
     from nyc_open_data_pipeline_spark import catalog
+    from nyc_open_data_pipeline_spark.cache import SESSION_CACHE
     from nyc_open_data_pipeline_spark.operators.bucketing import write_bucketed
 
     bt = f"sg_bucketed_{catalog._dir_slug(sf_dir)}_orders"
@@ -1807,7 +1808,7 @@ def test_bucketed_copy_served_only_when_normalized(spark, sf_dir, monkeypatch):
         write_bucketed(decoy, bt, "o_orderkey", buckets=2, normalized=True)
         assert catalog.load_table(spark, sf_dir, "orders").count() == 5
     finally:
-        catalog._BUCKETED_VERIFIED.clear()
+        SESSION_CACHE.invalidate(catalog._bucketed_key(spark, bt))
         spark.sql(f"DROP TABLE IF EXISTS {bt}")
 
 

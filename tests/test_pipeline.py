@@ -297,10 +297,11 @@ def test_autosize_shuffle_partitions(spark, tmp_path):
 
     from nyc_open_data_pipeline_spark import catalog as C
 
+    from nyc_open_data_pipeline_spark.cache import SESSION_CACHE
+
     assert not os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    appid = spark.sparkContext.applicationId
     par = spark.sparkContext.defaultParallelism
-    C._AUTOSIZE_HIGH_WATER.pop(appid, None)
+    spark.conf.unset(C._INITIAL_PARTITIONS)
 
     small = tmp_path / "small"
     small.mkdir()
@@ -329,7 +330,7 @@ def test_autosize_shuffle_partitions(spark, tmp_path):
     # and reported 0/stale as the target in effect)
     os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"] = "256"
     try:
-        C._DIR_BYTES_CACHE.pop(str(big), None)
+        SESSION_CACHE.invalidate(("_dir_input_bytes", str(big)))
         assert C.autosize_shuffle_partitions(spark, str(big)) == 256
         assert (
             spark.conf.get(
@@ -339,9 +340,8 @@ def test_autosize_shuffle_partitions(spark, tmp_path):
         )
     finally:
         del os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"]
-        C._AUTOSIZE_HIGH_WATER.pop(appid, None)
-    # restore for the rest of the suite (sf0.001 fixtures -> core count)
-    C._AUTOSIZE_HIGH_WATER.pop(appid, None)
+        # restore for the rest of the suite (sf0.001 fixtures -> core count)
+        spark.conf.unset(C._INITIAL_PARTITIONS)
 
 
 def test_storage_concurrent_upserts_serialize(spark, tmp_path):

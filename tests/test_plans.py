@@ -899,11 +899,9 @@ def test_cache_build_accounting(spark, sf_dir):
     otherwise amortize into invisibility. Pin the accounting contract:
     a cold _hv_get build records seconds under its label, a warm hit
     records nothing, and drain empties the accumulator."""
+    from nyc_open_data_pipeline_spark.cache import SESSION_CACHE
     from nyc_open_data_pipeline_spark.plans import llmdata as L
-    from nyc_open_data_pipeline_spark.plans.common import (
-        drain_cache_build_secs,
-        record_cache_build,
-    )
+    from nyc_open_data_pipeline_spark.plans.common import drain_cache_build_secs
 
     drain_cache_build_secs()  # isolate from any prior builds in the session
     key_label = "ut_cache_build"
@@ -923,8 +921,156 @@ def test_cache_build_accounting(spark, sf_dir):
     assert calls == [1]
     assert drain_cache_build_secs() == {}
     # drain is destructive; manual records accumulate per label
-    record_cache_build("ut_x", 0.5)
-    record_cache_build("ut_x", 0.25)
+    SESSION_CACHE.record_build("ut_x", 0.5)
+    SESSION_CACHE.record_build("ut_x", 0.25)
     assert drain_cache_build_secs() == {"ut_x": 0.75}
     df.unpersist()
-    del L._HV_CACHE[(spark.sparkContext.applicationId, sf_dir, key_label)]
+    SESSION_CACHE.invalidate(
+        ("_hv_get", spark.sparkContext.applicationId, sf_dir, key_label)
+    )
+
+
+def test_hv_get_concurrent_getters_build_once(spark, sf_dir):
+    """Two threads asking for one key while its build runs must share one
+    build and get the same object; without the cache lock both built, and
+    the first built value was overwritten without being released."""
+    import threading
+    import time
+
+    from nyc_open_data_pipeline_spark.cache import SESSION_CACHE
+    from nyc_open_data_pipeline_spark.plans import llmdata as L
+
+    label = "ut_concurrent_build"
+    calls = []
+
+    def build():
+        calls.append(1)
+        time.sleep(0.3)
+        return object()
+
+    got = []
+    threads = [
+        threading.Thread(target=lambda: got.append(L._hv_get(spark, sf_dir, label, build)))
+        for _ in range(2)
+    ]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=10)
+    assert not any(th.is_alive() for th in threads)
+    assert calls == [1]
+    assert len(got) == 2 and got[0] is got[1]
+    SESSION_CACHE.invalidate(
+        ("_hv_get", spark.sparkContext.applicationId, sf_dir, label)
+    )
+
+
+def test_hv_get_concurrent_builds_record_each_label(spark, sf_dir):
+    """Build-time accounting is per thread: a build on one thread that ends
+    while another thread's build is running is still recorded (a
+    process-wide nesting depth counted it as nested and lost it)."""
+    import threading
+    import time
+
+    from nyc_open_data_pipeline_spark.cache import SESSION_CACHE
+    from nyc_open_data_pipeline_spark.plans import llmdata as L
+    from nyc_open_data_pipeline_spark.plans.common import drain_cache_build_secs
+
+    drain_cache_build_secs()
+
+    def getter(label, secs):
+        def build():
+            time.sleep(secs)
+            return label
+
+        return lambda: L._hv_get(spark, sf_dir, label, build)
+
+    a = threading.Thread(target=getter("ut_thread_a", 0.3))
+    b = threading.Thread(target=getter("ut_thread_b", 0.1))
+    a.start()
+    time.sleep(0.05)  # B starts while A's build is running
+    b.start()
+    for th in (a, b):
+        th.join(timeout=10)
+    assert not a.is_alive() and not b.is_alive()
+    rec = drain_cache_build_secs()
+    assert rec["ut_thread_a"] >= 0.3
+    assert rec["ut_thread_b"] >= 0.1
+    for label in ("ut_thread_a", "ut_thread_b"):
+        SESSION_CACHE.invalidate(
+            ("_hv_get", spark.sparkContext.applicationId, sf_dir, label)
+        )
+
+
+def test_session_cache_stale_entry_released_once(tmp_path):
+    """Touching a file under sf_dir changes the corpus fingerprint: the next
+    get rebuilds and runs the stale entry's release exactly once."""
+    import os
+    import time
+
+    from nyc_open_data_pipeline_spark.cache import SessionCache
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    f = sf / "t.parquet"
+    f.write_bytes(b"x")
+    cache = SessionCache()
+    built, released = [], []
+
+    def build():
+        built.append(object())
+        return built[-1]
+
+    v1 = cache.get("k", build, sf_dir=str(sf), release=released.append)
+    assert cache.get("k", build, sf_dir=str(sf), release=released.append) is v1
+    assert released == []
+    later = time.time() + 5  # past the filesystem's mtime resolution
+    os.utime(f, (later, later))
+    v2 = cache.get("k", build, sf_dir=str(sf), release=released.append)
+    assert v2 is not v1 and len(built) == 2
+    assert released == [v1]
+    assert cache.get("k", build, sf_dir=str(sf), release=released.append) is v2
+    assert released == [v1]
+    cache.clear()
+    assert released == [v1, v2]
+
+
+def test_session_cache_threads_stress():
+    """More threads than cores hammer a few keys under a short switch
+    interval: each key builds once, and no recorded build second is lost."""
+    import sys
+    import threading
+    import time
+
+    from nyc_open_data_pipeline_spark.cache import SessionCache
+
+    cache = SessionCache()
+    built = []
+
+    def build(k):
+        built.append(k)
+        time.sleep(0.01)  # let other threads reach the same key mid-build
+        return k
+
+    def worker():
+        for i in range(200):
+            k = i % 5
+            assert cache.get(k, lambda: build(k), label=f"k{k}") == k
+        for _ in range(2000):
+            cache.record_build("manual", 1.0)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert sorted(built) == [0, 1, 2, 3, 4]
+    secs = cache.drain_build_secs()
+    assert secs["manual"] == 16 * 2000
+    assert set(secs) == {"manual", "k0", "k1", "k2", "k3", "k4"}

@@ -303,6 +303,33 @@ def test_incremental_dedup_sink_batch_replay_is_noop(spark, tmp_path):
     assert set(_ids(spark, out)) == {1, 2, 6}
 
 
+def test_incremental_dedup_empty_batches_leave_no_segment(spark, tmp_path):
+    """A batch whose rows are all seen publishes its batch id but no
+    segment: Spark writes a zero-row part file for an empty frame, and a
+    manifest that referenced it cost every later seen-set read one more
+    scan. ``vacuum`` then sweeps the unreferenced segment dirs."""
+    import os
+
+    from nyc_open_data_pipeline_spark.pipeline.storage import table_at
+    from nyc_open_data_pipeline_spark.streaming.dedup import incremental_dedup_sink
+
+    out = str(tmp_path / "out")
+    sink = incremental_dedup_sink(spark, out)
+    for b in range(4):
+        sink(spark.createDataFrame([(b, "same text")], "doc_id long, text string"), b)
+    assert _ids(spark, out) == [0]
+    assert len(_segments(out)) == 1
+    storage, table = table_at(out)
+    assert storage.committed_batch(table) == 3
+
+    def seg_dirs():
+        return {e for e in os.listdir(out) if e.startswith("seg_")}
+
+    assert len(seg_dirs()) == 4
+    storage.vacuum(table)
+    assert seg_dirs() == set(_segments(out))
+
+
 def test_cached_fixture_builds_once_per_session(spark, sf_dir):
     """The stream-input 'topic' is scaffolding: the same (sf_dir, tag) must
     reuse one directory, and distinct tags must not collide."""
