@@ -1,11 +1,13 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints the main JSON line:
+Prints three JSON lines: the main line
   {"metric": "...", "value": <total_sec>, "unit": "sec",
-   "queries": {"q1_pricing_summary": sec, ...}, "sf": <sf>}
-followed by one compact {"metric": "bench_summary", ...} line (subtotals only,
-no per-query dict) that survives the driver's tail-of-stdout capture intact.
+   "queries": {"q1_pricing_summary": sec, ...}, "sf": <sf>, ...},
+a {"metric": "cache_build_sec", ...} line, and last a compact
+{"metric": "bench_summary", ...} line — subtotals plus every query's seconds
+under its short key ("query_secs": {"q1": sec, ...}) — sized to survive the
+driver's tail-of-stdout capture intact (see ``bench_lines``).
 
 Each query is executed to completion (count() action) after a warm-up pass of
 the session; per-query wall time includes plan + execution, not session start.
@@ -341,6 +343,83 @@ def main() -> None:
             dt = time.perf_counter() - t0
             prev = timings.get(name)
             timings[name] = dt if prev is None else min(prev, dt)
+
+    # Streaming rate metrics (round-7 VERDICT #8): the foreachBatch sinks
+    # record per-micro-batch (rows out, new state keys, wall sec); attach
+    # the records from the LAST timed pass so st3/st11's per-batch cost
+    # structure ships with the bench artifact instead of being inferred
+    # from totals. Drained (not cleared mid-run) so warm-up batches from
+    # earlier passes don't pile up: keep only the final pass's batches per
+    # sink (batch ids restart at 0 each run).
+    from nyc_open_data_pipeline_spark.streaming.windows import drain_batch_metrics
+
+    raw_bm = drain_batch_metrics()
+    stream_batches: dict[str, list] = {}
+    _last_tok: dict[str, int] = {}
+    for m in raw_bm:
+        rec = dict(m)
+        sink = rec.pop("sink", "?")
+        # group on the explicit per-sink-construction pass token (ADVICE
+        # r8): inferring pass boundaries from batch-id monotonicity merged
+        # a checkpoint-resumed pass (ids keep increasing) into the prior
+        # pass. Records land in emission order, so "token changed" ==
+        # "new pass"; keep only the LAST pass per sink.
+        tok = rec.pop("pass_token", -1)
+        if sink not in stream_batches or tok != _last_tok.get(sink):
+            stream_batches[sink] = []
+        _last_tok[sink] = tok
+        stream_batches[sink].append(rec)
+
+    # Session-cache build accounting (round-14, VERDICT r13 #2): the shared
+    # intermediates (_hv_get frames, stream fixtures) are built in pass 1 and
+    # warm in pass 2, so min-of-N reports the warm number — this line makes
+    # the amortized build cost visible instead of landing nowhere. It is NOT
+    # part of `value` (the cross-round total keeps its 13-round meaning);
+    # builds run inside pass-1 query timings exactly as before.
+    cache_builds = drain_cache_build_secs()
+    out, summary = bench_lines(
+        timings,
+        errors,
+        float(sf),
+        full="--full" in sys.argv[1:],
+        prev=_latest_prev_bench_summary(),
+        stream_batches=stream_batches,
+        cache_builds=cache_builds,
+    )
+    print(json.dumps(out))
+    print(json.dumps(
+        {
+            "metric": "cache_build_sec",
+            "value": out["cache_build_sec"],
+            "unit": "sec",
+            "builds": out["cache_builds"],
+            "sf": float(sf),
+        },
+        separators=(",", ":"),
+    ))
+    print(json.dumps(summary, separators=(",", ":")))
+    spark.stop()
+
+
+def bench_lines(
+    timings: dict[str, float | None],
+    errors: dict[str, str],
+    sf: float,
+    full: bool = False,
+    prev: tuple[str | None, dict | None] = (None, None),
+    stream_batches: dict[str, list] | None = None,
+    cache_builds: dict[str, float] | None = None,
+) -> tuple[dict, dict]:
+    """(main line, final ``bench_summary`` line) from per-query seconds
+    (None = failed). ``prev`` is the prior round's (artifact name, summary)
+    for the yardstick ratio deltas.
+
+    The final line is what survives the driver's tail-of-stdout capture
+    (~4.6 KB kept; in round 3 the subtotals printed before the big
+    per-query dict were truncated away), so it carries the subtotals and
+    every query's seconds under its SHORT key (the unique prefix before
+    the first ``_``, e.g. "d26") and nothing larger. Per-query ratios are
+    not repeated there: ratio = query_secs[k] / yardstick.sec."""
     timings = {k: (round(v, 3) if v is not None else None) for k, v in timings.items()}
     ok = {k: v for k, v in timings.items() if v is not None}
     total = sum(ok.values())
@@ -390,13 +469,13 @@ def main() -> None:
             # forensics (r11's core30 "+5%" was a 1.4x-slower host)
             "family_ratios": {k: round(v / y, 3) for k, v in families.items()},
         }
-        prev_name, prev = _latest_prev_bench_summary()
-        prev_y = ((prev or {}).get("yardstick") or {}).get("sec")
-        prev_fam = (prev or {}).get("families") or {}
-        prev_cnt = (prev or {}).get("family_counts") or {}
+        prev_name, prev_summary = prev
+        prev_y = ((prev_summary or {}).get("yardstick") or {}).get("sec")
+        prev_fam = (prev_summary or {}).get("families") or {}
+        prev_cnt = (prev_summary or {}).get("family_counts") or {}
         # ratio deltas only against a same-sf artifact: family subtotals
         # scale non-uniformly with sf, so a cross-sf "delta" is noise
-        if prev_y and (prev or {}).get("sf") == float(sf):
+        if prev_y and (prev_summary or {}).get("sf") == sf:
             deltas: dict[str, float] = {}
             flags: list[str] = []
             for k, v in families.items():
@@ -431,36 +510,9 @@ def main() -> None:
             # regression gate reads THIS, not raw seconds
             yardstick["ratio_flags"] = sorted(flags)
 
-    # Streaming rate metrics (round-7 VERDICT #8): the foreachBatch sinks
-    # record per-micro-batch (rows out, new state keys, wall sec); attach
-    # the records from the LAST timed pass so st3/st11's per-batch cost
-    # structure ships with the bench artifact instead of being inferred
-    # from totals. Drained (not cleared mid-run) so warm-up batches from
-    # earlier passes don't pile up: keep only the final pass's batches per
-    # sink (batch ids restart at 0 each run).
-    from nyc_open_data_pipeline_spark.streaming.windows import drain_batch_metrics
-
-    raw_bm = drain_batch_metrics()
-    stream_batches: dict[str, list] = {}
-    _last_tok: dict[str, int] = {}
-    for m in raw_bm:
-        rec = dict(m)
-        sink = rec.pop("sink", "?")
-        # group on the explicit per-sink-construction pass token (ADVICE
-        # r8): inferring pass boundaries from batch-id monotonicity merged
-        # a checkpoint-resumed pass (ids keep increasing) into the prior
-        # pass. Records land in emission order, so "token changed" ==
-        # "new pass"; keep only the LAST pass per sink.
-        tok = rec.pop("pass_token", -1)
-        if sink not in stream_batches or tok != _last_tok.get(sink):
-            stream_batches[sink] = []
-        _last_tok[sink] = tok
-        stream_batches[sink].append(rec)
-
-    out = {
-        "metric": f"total wall-clock of {len(ok)} "
-                  + ("registered" if "--full" in sys.argv[1:] else "headline")
-                  + " queries",
+    cache_builds = cache_builds or {}
+    cache_build_total = round(sum(cache_builds.values()), 3)
+    subtotals = {
         "value": round(total, 3),
         "unit": "sec",
         "core30_sec": round(core30, 3),
@@ -469,103 +521,40 @@ def main() -> None:
         "stream_total_sec": round(stream_total, 3),
         "families": families,
         "family_counts": family_counts,
+    }
+    out = {
+        "metric": f"total wall-clock of {len(ok)} "
+        + ("registered" if full else "headline")
+        + " queries",
+        **subtotals,
         "queries": timings,
-        "sf": float(sf),
+        "sf": sf,
     }
     if y:
         # per_query_ratio = sec / yardstick_sec (round-11 verdict #5): the
         # box-calibrated per-query number future rounds diff directly.
-        # Main line only — the compact summary stays small for tail capture.
-        out["query_ratios"] = {
-            k: round(v / y, 3) for k, v in ok.items()
-        }
+        out["query_ratios"] = {k: round(v / y, 3) for k, v in ok.items()}
     if yardstick:
         out["yardstick"] = yardstick
     if stream_batches:
         out["stream_batches"] = stream_batches
     if errors:
         out["errors"] = errors
-
-    # Session-cache build accounting (round-14, VERDICT r13 #2): the shared
-    # intermediates (_hv_get frames, stream fixtures) are built in pass 1 and
-    # warm in pass 2, so min-of-N reports the warm number — this line makes
-    # the amortized build cost visible instead of landing nowhere. It is NOT
-    # part of `value` (the cross-round total keeps its 13-round meaning);
-    # builds run inside pass-1 query timings exactly as before.
-    cache_builds = drain_cache_build_secs()
-    cache_build_total = round(sum(cache_builds.values()), 3)
     out["cache_build_sec"] = cache_build_total
     out["cache_builds"] = {k: round(v, 3) for k, v in sorted(cache_builds.items())}
-    print(json.dumps(out))
-    print(json.dumps(
-        {
-            "metric": "cache_build_sec",
-            "value": cache_build_total,
-            "unit": "sec",
-            "builds": out["cache_builds"],
-            "sf": float(sf),
-        },
-        separators=(",", ":"),
-    ))
-    # Second, compact line with NO per-query dict: the driver keeps only the
-    # tail of stdout, and in round 3 the headline subtotals (printed before the
-    # 90+-entry queries dict) were truncated away. This trailing line is small
-    # enough to always survive tail capture.
+
     summary = {
         "metric": "bench_summary",
-        "value": round(total, 3),
-        "unit": "sec",
-        "core30_sec": round(core30, 3),
-        "core58_sec": round(core58, 3),
-        "batch_total_sec": batch_total,
-        "stream_total_sec": round(stream_total, 3),
-        "families": families,
-        "family_counts": family_counts,
+        **subtotals,
         "n_queries": len(ok),
         "n_errors": len(errors),
-        "sf": float(sf),
+        "sf": sf,
+        "cache_build_sec": cache_build_total,
     }
-    summary["cache_build_sec"] = cache_build_total
-    # Per-query SECONDS must survive the driver's tail-of-stdout capture
-    # (round-13 verdict #1: they lived only on the big main line, got
-    # truncated, and PERF's per-query join came up empty two rounds
-    # running). SHORT keys (the unique family+number prefix, e.g. "d26").
-    #
-    # Line-size resilience: the capture keeps only the TAIL of stdout and
-    # the exact retention is outside this repo's control (~4.6 KB was
-    # observed in round 3; round 13's 3.2 KB summary line parsed fully).
-    # Folding seconds AND ratios into one summary line would push it to
-    # ~5 KB for a headline run — if retention is tight, the ENTIRE line
-    # (families, deltas, flags, ratios) dies unparsed, strictly worse
-    # than r13. So: the seconds ride their own compact line printed just
-    # BEFORE the final summary, and the final bench_summary line stays at
-    # its r13-proven size. Any retention >= the two lines' sum keeps
-    # both; a tight window still keeps the full summary incl. the
-    # query_ratios the cross-round per-query join uses (seconds are then
-    # recoverable as ratio x yardstick_sec).
-    short_secs: dict[str, float] = {}
-    short_ratios: dict[str, float] = {}
-    for k, v in ok.items():
-        sk = k.split("_", 1)[0]
-        short_secs[sk] = round(v, 2)
-        if y:
-            short_ratios[sk] = round(v / y, 2)
-    print(json.dumps(
-        {
-            "metric": "bench_perf",
-            "unit": "sec",
-            "sf": float(sf),
-            "yardstick_sec": y,
-            "query_secs": short_secs,
-        },
-        separators=(",", ":"),
-    ))
     if yardstick:
         summary["yardstick"] = yardstick
-        # Box-calibrated ratios, same short keys (round-12 verdict #3).
-        summary["query_ratios"] = short_ratios
-    print(json.dumps(summary, separators=(",", ":")))
-    spark.stop()
+    summary["query_secs"] = {k.split("_", 1)[0]: round(v, 2) for k, v in ok.items()}
+    return out, summary
 
 
 if __name__ == "__main__":

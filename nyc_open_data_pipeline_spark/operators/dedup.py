@@ -107,17 +107,6 @@ def _perm_params(num_hashes: int) -> list[tuple[int, int]]:
     return params
 
 
-def shingle_sets(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", shingle_n: int = 3
-) -> DataFrame:
-    """(id, sh: array<string>) shingle sets — the shared input of MinHash,
-    LSH banding and exact Jaccard. Persist this when several downstream
-    branches reuse it (Spark recomputes lazy branches otherwise)."""
-    return df.select(
-        F.col(id_col).alias("id"), shingles(F.col(text_col), shingle_n).alias("sh")
-    )
-
-
 def shingle_hash_sets(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", shingle_n: int = 3
 ) -> DataFrame:
@@ -140,7 +129,6 @@ def minhash_signatures(
     id_col: str = "doc_id",
     num_hashes: int = 16,
     shingle_n: int = 3,
-    precomputed_shingles: DataFrame | None = None,
     precomputed_hashes: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash signature per document: (id, sig: array<bigint>[num_hashes]).
@@ -148,19 +136,15 @@ def minhash_signatures(
     Shingle -> portable 64-bit hash -> per-permutation min, all as JVM
     expressions over the shingle array (F.transform + F.array_min) — no
     Python in the hot path, no explode/shuffle: signatures are computed
-    in a single narrow stage.
+    in a single narrow stage. ``precomputed_hashes`` is a persisted
+    ``shingle_hash_sets`` frame shared with other consumers.
     """
-    if precomputed_hashes is not None:
-        hashed = precomputed_hashes.select("id", "hv")
-    else:
-        base = (
-            precomputed_shingles
-            if precomputed_shingles is not None
-            else shingle_sets(df, text_col, id_col, shingle_n)
-        )
-        hashed = base.select(
-            "id", F.transform(F.col("sh"), lambda s: _hash64(s)).alias("hv")
-        )
+    hashed = (
+        precomputed_hashes
+        if precomputed_hashes is not None
+        else shingle_hash_sets(df, text_col, id_col, shingle_n)
+    ).select("id", "hv")
+
     def _perm_fn(a: int, b: int):
         # closure (NOT lambda default-args: extra params change the lambda's
         # arity and break pyspark's higher-order-function binding)
@@ -180,7 +164,6 @@ def band_keys(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    precomputed_shingles: DataFrame | None = None,
     precomputed_hashes: DataFrame | None = None,
 ) -> DataFrame:
     """(id, band, band_key) rows — ``bands`` rows per document, band_key =
@@ -193,8 +176,7 @@ def band_keys(
     filter those out (the streaming sink does)."""
     rows = num_hashes // bands
     sig = minhash_signatures(
-        df, text_col, id_col, num_hashes, shingle_n, precomputed_shingles,
-        precomputed_hashes,
+        df, text_col, id_col, num_hashes, shingle_n, precomputed_hashes
     )
     return sig.select(
         "id",
@@ -221,7 +203,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    precomputed_shingles: DataFrame | None = None,
     precomputed_hashes: DataFrame | None = None,
     bucket_cap: int | None = 1000,
     observation=None,
@@ -245,36 +226,22 @@ def minhash_lsh_pairs(
     Returns (id_a, id_b) with id_a < id_b, distinct.
     """
     banded = band_keys(
-        df, text_col, id_col, num_hashes, bands, shingle_n,
-        precomputed_shingles, precomputed_hashes,
+        df, text_col, id_col, num_hashes, bands, shingle_n, precomputed_hashes
     )
     if bucket_cap is not None:
-        # row_number (not a full sort of the corpus): one task per bucket,
-        # O(B log B) for the oversized bucket instead of O(B^2) join output
-        w = Window.partitionBy("band", "band_key").orderBy("id")
-        ranked = banded.withColumn("__rn", F.row_number().over(w))
-        over = (F.col("__rn") > bucket_cap).cast("long")
-        if observation is not None:
-            # metrics-reading mode: keep the CollectMetrics node inside an
-            # ordinary action's subtree (a checkpoint materialization would
-            # not fire the observation listener), at the cost of both join
-            # sides recomputing the banding pipeline
-            ranked = ranked.observe(
-                observation, F.sum(over).alias("lsh_rows_over_cap")
-            )
-            banded = ranked.filter(F.col("__rn") <= bucket_cap).drop("__rn")
-        else:
-            ranked = ranked.observe(
-                "lsh_bucket_cap", F.sum(over).alias("lsh_rows_over_cap")
-            )
+        banded = cap_buckets(
+            banded, bucket_cap, ("band", "band_key"), "id",
+            observe=(observation or "lsh_bucket_cap", "lsh_rows_over_cap"),
+        )
+        if observation is None:
             # truncate lineage before the self-join: otherwise BOTH join
             # sides re-execute the shingle->minhash->band->window pipeline
-            # (lazy local checkpoint materializes once on first use)
-            banded = (
-                ranked.filter(F.col("__rn") <= bucket_cap)
-                .drop("__rn")
-                .localCheckpoint(eager=False)
-            )
+            # (lazy local checkpoint materializes once on first use). A
+            # metrics-reading caller keeps the CollectMetrics node inside
+            # an ordinary action's subtree instead (a checkpoint
+            # materialization would not fire the observation listener), at
+            # the cost of both join sides recomputing the banding pipeline.
+            banded = banded.localCheckpoint(eager=False)
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -366,18 +333,10 @@ def embedding_neardup_pairs(
         VEC.norm(F.col(vec_col)).alias("nrm"),
         VEC.hyperplane_bucket(F.col(vec_col), planes).alias("bucket"),
     )
-    wcap = Window.partitionBy("bucket").orderBy("vec_id")
-    over = F.sum((F.col("__rn") > bucket_cap).cast("long")).alias(
-        "emb_rows_over_cap"
+    b = cap_buckets(
+        b, bucket_cap, ("bucket",),
+        observe=(observation or "emb_bucket_cap", "emb_rows_over_cap"),
     )
-    b = b.withColumn("__rn", F.row_number().over(wcap))
-    if observation is not None:
-        # metrics-reading mode (tests/audits): Observation requires the
-        # CollectMetrics node inside an ordinary action's subtree — a
-        # checkpoint materialization would not fire the listener
-        b = b.observe(observation, over).filter(F.col("__rn") <= bucket_cap).drop("__rn")
-    else:
-        b = b.observe("emb_bucket_cap", over).filter(F.col("__rn") <= bucket_cap).drop("__rn")
     # One representative per distinct vector per bucket (identical vectors
     # always share a bucket — the bucket is a function of v). collect_list
     # order is nondeterministic, but every downstream consumer expands the
@@ -458,16 +417,31 @@ def probe_masks(nbits: int, radius: int) -> list[int]:
     return masks
 
 
-def cap_buckets(b: DataFrame, bucket_cap: int) -> DataFrame:
-    """Per-(set, bucket) occupancy cap, lowest ids kept — the shared
-    overflow policy of every sign-LSH bucketing (mirrored by the oracles'
-    QUALIFY row_number)."""
-    wcap = Window.partitionBy("r", "bucket").orderBy("vec_id")
-    return (
-        b.withColumn("__rn", F.row_number().over(wcap))
-        .filter(F.col("__rn") <= bucket_cap)
-        .drop("__rn")
-    )
+def cap_buckets(
+    b: DataFrame,
+    bucket_cap: int,
+    buckets: tuple[str, ...] = ("r", "bucket"),
+    id_col: str = "vec_id",
+    observe: tuple | None = None,
+) -> DataFrame:
+    """Bucket occupancy cap, the ``bucket_cap`` lowest ``id_col`` values of
+    each ``buckets`` key kept — the shared overflow policy of every LSH
+    bucketing (MinHash bands, sign-LSH sets, SimHash blocks), mirrored by
+    the oracles' QUALIFY row_number. row_number, not a full sort of the
+    corpus: one task per bucket, O(B log B) for an oversized bucket
+    instead of O(B^2) join output.
+
+    ``observe``: (Observation or metric-group name, metric name) — counts
+    the dropped rows as an observed metric, so a binding cap is never
+    silent."""
+    w = Window.partitionBy(*buckets).orderBy(id_col)
+    ranked = b.withColumn("__rn", F.row_number().over(w))
+    if observe is not None:
+        obs, metric = observe
+        ranked = ranked.observe(
+            obs, F.sum((F.col("__rn") > bucket_cap).cast("long")).alias(metric)
+        )
+    return ranked.filter(F.col("__rn") <= bucket_cap).drop("__rn")
 
 
 
@@ -556,40 +530,6 @@ def multiprobe_candidate_pairs(
             F.col("l.vec_id").alias("id_a"), F.col("r2.vec_id").alias("id_b")
         )
         .distinct()
-    )
-
-
-def jaccard_pairs(
-    df: DataFrame,
-    candidate_pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    precomputed_shingles: DataFrame | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard for candidate pairs: join shingle sets back and
-    compute |A∩B| / |A∪B| with array intrinsics. Broadcast-friendly when the
-    candidate set is small; otherwise two shuffles on id."""
-    sh = (
-        precomputed_shingles
-        if precomputed_shingles is not None
-        else shingle_sets(df, text_col, id_col, shingle_n)
-    )
-    a = sh.alias("a")
-    b = sh.alias("b")
-    joined = (
-        candidate_pairs.join(a, candidate_pairs.id_a == F.col("a.id"))
-        .join(b, candidate_pairs.id_b == F.col("b.id"))
-        .select("id_a", "id_b", F.col("a.sh").alias("sh_a"), F.col("b.sh").alias("sh_b"))
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return joined.select(
-        "id_a",
-        "id_b",
-        F.when(union > 0, inter.cast("double") / union.cast("double"))
-        .otherwise(F.lit(0.0))
-        .alias("jaccard"),
     )
 
 

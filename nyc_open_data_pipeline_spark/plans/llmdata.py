@@ -43,6 +43,13 @@ def sql_hash64(s: str) -> str:
     return f"CAST(concat('0x', substr(md5({s}),1,15)) AS BIGINT)"
 
 
+# d9's deterministic 80/10/10 split of a doc_id (_split_col in SQL).
+_SQL_SPLIT = (
+    f"CASE WHEN {sql_hash64('CAST(doc_id AS VARCHAR)')} % 100 < 80 THEN 'train' "
+    f"WHEN {sql_hash64('CAST(doc_id AS VARCHAR)')} % 100 < 90 THEN 'val' "
+    f"ELSE 'test' END"
+)
+
 P = DD.MINHASH_P
 PERMS = DD._perm_params(16)
 NBANDS, NROWS = 4, 4
@@ -145,16 +152,23 @@ def _shared_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly and d7 filters it to >= 0.5 edges; sharing it means the
     expensive band-bucket self-join runs once for the whole dedup family
     (same cache policy as _shared_hv)."""
-    def build() -> DataFrame:
-        docs = t(spark, sf_dir, "documents")
-        hv = _shared_hv(spark, sf_dir)
-        cand = DD.minhash_lsh_pairs(
-            docs, num_hashes=16, bands=NBANDS, precomputed_hashes=hv,
-            bucket_cap=LSH_BUCKET_CAP,
-        )
-        return DD.jaccard_pairs_hashed(hv, cand).persist()
+    return _hv_get(
+        spark, sf_dir, "scored_pairs",
+        lambda: _lsh_scored_pairs(
+            t(spark, sf_dir, "documents"), _shared_hv(spark, sf_dir)
+        ).persist(),
+    )
 
-    return _hv_get(spark, sf_dir, "scored_pairs", build)
+
+def _lsh_scored_pairs(docs: DataFrame, hv: DataFrame) -> DataFrame:
+    """(id_a, id_b, jaccard): 4-band MinHash-LSH candidates of ``docs``
+    (bucket-capped) verified by exact Jaccard over their hashed shingle
+    sets ``hv``."""
+    cand = DD.minhash_lsh_pairs(
+        docs, num_hashes=16, bands=NBANDS, precomputed_hashes=hv,
+        bucket_cap=LSH_BUCKET_CAP,
+    )
+    return DD.jaccard_pairs_hashed(hv, cand)
 
 
 # ---------------------------------------------------------------------------
@@ -212,6 +226,18 @@ def _sql_shingles(tk: str = SQL_TOKENS, n: int = 3) -> str:
     )
 
 
+def _sql_shingle_hashes(src: str = "documents") -> str:
+    """CTE text ``toks -> sh -> hvl(doc_id, hv)``: each doc's distinct
+    hashed 3-gram shingles (operators/dedup.shingle_hash_sets) over
+    ``src`` (any relation with doc_id + text columns)."""
+    return f"""toks AS (SELECT doc_id, {SQL_TOKENS} AS tk FROM {src}),
+    sh AS (SELECT doc_id, {_sql_shingles('tk')} AS sh FROM toks),
+    hvl AS (
+      SELECT doc_id, list_distinct(list_transform(sh, s -> {sql_hash64('s')})) AS hv
+      FROM sh
+    )"""
+
+
 def _sql_minhash_sigs(src: str = "documents") -> str:
     """CTE text computing per-doc MinHash signature columns mh_0..mh_15
     over ``src`` (any relation with doc_id + text columns)."""
@@ -219,18 +245,65 @@ def _sql_minhash_sigs(src: str = "documents") -> str:
         f"MIN(((h % {P}) * {a} + {b}) % {P}) AS mh_{i}" for i, (a, b) in enumerate(PERMS)
     )
     return f"""
-    toks AS (SELECT doc_id, {SQL_TOKENS} AS tk FROM {src}),
-    sh AS (SELECT doc_id, {_sql_shingles('tk')} AS sh FROM toks),
-    hvl AS (
-      SELECT doc_id, list_distinct(list_transform(sh, s -> {sql_hash64('s')})) AS hv
-      FROM sh
-    ),
+    {_sql_shingle_hashes(src)},
     hv AS (SELECT doc_id, unnest(hv) AS h FROM hvl),
     sigs AS (
       SELECT doc_id,
            {mins}
       FROM hv GROUP BY doc_id
     )"""
+
+
+# LSH band rows over the `sigs` CTE (one SELECT per band).
+_SQL_BANDS_UNION = " UNION ALL ".join(
+    f"SELECT doc_id, {b} AS band, concat_ws('_', "
+    + ", ".join(f"mh_{b * NROWS + r}" for r in range(NROWS))
+    + ") AS band_key FROM sigs"
+    for b in range(NBANDS)
+)
+
+# Exact shingle-set Jaccard of a candidate pair ``c`` joined to its two
+# hashed shingle sets ``a``/``b`` (_SQL_CAND_HV).
+_SQL_JACCARD = (
+    "CAST(len(list_intersect(a.hv, b.hv)) AS DOUBLE)"
+    " / (len(a.hv) + len(b.hv) - len(list_intersect(a.hv, b.hv)))"
+)
+_SQL_CAND_HV = "cand c JOIN hvl a ON c.id_a = a.doc_id JOIN hvl b ON c.id_b = b.doc_id"
+
+
+def _sql_lsh_cand() -> str:
+    """CTE text (no WITH) of the MinHash-LSH candidate index over
+    ``documents`` — operators/dedup.minhash_lsh_pairs in SQL: signatures,
+    band rows, the LSH_BUCKET_CAP bucket cap and the distinct
+    ``cand(id_a, id_b)`` band-bucket self-join."""
+    return f"""{_sql_minhash_sigs()},
+    bands AS ({_SQL_BANDS_UNION}),
+    capped AS (
+      SELECT doc_id, band, band_key FROM bands
+      QUALIFY row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id)
+              <= {LSH_BUCKET_CAP}
+    ),
+    cand AS (
+      SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
+      FROM capped l JOIN capped r
+        ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id
+    )"""
+
+
+def _sql_lsh_verified(name: str, min_jaccard: float | None = None) -> str:
+    """_sql_lsh_cand plus the exact-Jaccard verify as CTE ``name``:
+    ``name(id_a, id_b, jaccard)`` over every candidate, or, with
+    ``min_jaccard``, ``name(id_a, id_b)`` over the candidates at or above
+    it."""
+    if min_jaccard is None:
+        body = f"SELECT c.id_a, c.id_b, {_SQL_JACCARD} AS jaccard FROM {_SQL_CAND_HV}"
+    else:
+        body = (
+            f"SELECT c.id_a, c.id_b FROM {_SQL_CAND_HV}"
+            f" WHERE {_SQL_JACCARD} >= {min_jaccard}"
+        )
+    return f"""{_sql_lsh_cand()},
+    {name} AS ({body})"""
 
 
 @register(
@@ -258,31 +331,7 @@ def d3_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ``scored(id_a, id_b, jaccard)`` relation — shared by d4 (returns it) and d16
 # (aggregates it into the cross-source matrix).
 _SQL_SCORED_PAIRS_CTE = f"""
-    WITH {_sql_minhash_sigs()},
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, concat_ws('_', "
-        + ", ".join(f"mh_{b * NROWS + r}" for r in range(NROWS))
-        + ") AS band_key FROM sigs"
-        for b in range(NBANDS)
-      )}
-    ),
-    capped AS (
-      SELECT doc_id, band, band_key FROM bands
-      QUALIFY row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id)
-              <= {LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-      FROM capped l JOIN capped r
-        ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id
-    ),
-    scored AS (
-      SELECT c.id_a, c.id_b,
-             CAST(len(list_intersect(a.hv, b.hv)) AS DOUBLE)
-               / (len(a.hv) + len(b.hv) - len(list_intersect(a.hv, b.hv))) AS jaccard
-      FROM cand c JOIN hvl a ON c.id_a = a.doc_id JOIN hvl b ON c.id_b = b.doc_id
-    )
+    WITH {_sql_lsh_verified("scored")}
 """
 
 
@@ -321,12 +370,9 @@ def d4_lsh_jaccard_pairs(
     hv = _shared_hv(spark, sf_dir).join(
         keep.withColumnRenamed("doc_id", "id"), "id", "left_semi"
     )
-    cand = DD.minhash_lsh_pairs(
-        docs.join(keep, "doc_id", "left_semi"),
-        num_hashes=16, bands=NBANDS, precomputed_hashes=hv,
-        bucket_cap=LSH_BUCKET_CAP,
+    return _lsh_scored_pairs(docs.join(keep, "doc_id", "left_semi"), hv).select(
+        "id_a", "id_b", "jaccard"
     )
-    return DD.jaccard_pairs_hashed(hv, cand).select("id_a", "id_b", "jaccard")
 
 
 @register(
@@ -370,6 +416,25 @@ _LCG_C = 1442695040888963407
 _LCG_M = 1 << 63
 
 
+def _sql_lcg(n_values: str) -> str:
+    """Recursive CTE ``lcg(k, state)``: the first ``(n_values)`` states of
+    the plane stream (``n_values`` is a scalar subquery body)."""
+    return f"""lcg(k, state) AS (
+      SELECT 0, (CAST({_LCG_SEED} AS HUGEINT) * {_LCG_A} + {_LCG_C})
+                % CAST({_LCG_M} AS HUGEINT)
+      UNION ALL
+      SELECT k + 1, (state * {_LCG_A} + {_LCG_C}) % CAST({_LCG_M} AS HUGEINT)
+      FROM lcg WHERE k + 1 < ({n_values})
+    )"""
+
+
+# One plane's +-1 components, aggregated over its ``dim`` lcg states.
+_SQL_PLANE = """list(CASE WHEN (CAST(state AS BIGINT) >> 32) & 1 = 1
+                       THEN CAST(1.0 AS DOUBLE)
+                       ELSE CAST(-1.0 AS DOUBLE) END
+                  ORDER BY k)"""
+
+
 def _sql_fixed_planes_ctes(nbits: int) -> str:
     """CTE chain (w0 -> lcg -> psets -> vb) generating the first ``nbits``
     LCG hyperplanes at the corpus's MEASURED dim and bucketing every vector
@@ -381,19 +446,9 @@ def _sql_fixed_planes_ctes(nbits: int) -> str:
     return f"""w0 AS (
       SELECT CAST(any_value(len({SQL_VEC})) AS INT) AS dim FROM embeddings
     ),
-    lcg(k, state) AS (
-      SELECT 0, (CAST({_LCG_SEED} AS HUGEINT) * {_LCG_A} + {_LCG_C})
-                % CAST({_LCG_M} AS HUGEINT)
-      UNION ALL
-      SELECT k + 1, (state * {_LCG_A} + {_LCG_C}) % CAST({_LCG_M} AS HUGEINT)
-      FROM lcg WHERE k + 1 < (SELECT {nbits} * dim FROM w0)
-    ),
+    {_sql_lcg(f"SELECT {nbits} * dim FROM w0")},
     psets AS (
-      SELECT CAST(k // dim AS INT) AS i,
-             list(CASE WHEN (CAST(state AS BIGINT) >> 32) & 1 = 1
-                       THEN CAST(1.0 AS DOUBLE)
-                       ELSE CAST(-1.0 AS DOUBLE) END
-                  ORDER BY k) AS plane
+      SELECT CAST(k // dim AS INT) AS i, {_SQL_PLANE} AS plane
       FROM lcg, w0 GROUP BY 1
     ),
     vb AS (
@@ -404,6 +459,61 @@ def _sql_fixed_planes_ctes(nbits: int) -> str:
       FROM (SELECT vec_id, {SQL_VEC} AS v FROM embeddings) e
       CROSS JOIN psets p
       GROUP BY e.vec_id
+    )"""
+
+
+# Vectors as doubles plus their L2 norms: ``e(vec_id, v)``, ``n(vec_id, v, nrm)``.
+_SQL_VEC_NORMS = f"""e AS (SELECT vec_id, {SQL_VEC} AS v FROM embeddings),
+    n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e)"""
+
+# Exact top-5 cosine neighbours of queries vec_id < 5 (s1 and s5).
+_SQL_COSINE_TOP5 = f"""
+    WITH {_SQL_VEC_NORMS},
+    p AS (
+      SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
+             list_dot_product(q.v, b.v) / (q.nrm * b.nrm) AS score
+      FROM n q, n b
+      WHERE q.vec_id < 5 AND b.vec_id <> q.vec_id
+    )
+    SELECT query_id, neighbor_id,
+           CAST(row_number() OVER (PARTITION BY query_id
+                                   ORDER BY score DESC, neighbor_id) AS BIGINT) AS rnk,
+           round(score, 6) AS cos_sim
+    FROM p
+    QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) <= 5
+    """
+
+# The IVF index of s4/s7/s9 (_ivf_index in SQL): centroids ``c`` = the
+# first 8 vectors, every vector's nearest-centroid ``cell``, and each
+# query's (vec_id < 3) centroids ranked by cosine (``probes.rn``).
+_SQL_IVF_CELLS = f"""{_SQL_VEC_NORMS},
+    c AS (SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM n WHERE vec_id < 8),
+    assign AS (
+      SELECT a.vec_id, a.v, a.nrm, c.cid,
+             row_number() OVER (
+               PARTITION BY a.vec_id
+               ORDER BY list_dot_product(a.v, c.cv) / (a.nrm * c.cnrm) DESC, c.cid
+             ) AS rn
+      FROM n a, c
+    ),
+    cell AS (SELECT vec_id, v, nrm, cid AS cell FROM assign WHERE rn = 1)"""
+_SQL_IVF_PROBES = """probes AS (
+      SELECT q.vec_id AS query_id, q.v AS qv, q.nrm AS qnrm, c.cid AS cell,
+             row_number() OVER (
+               PARTITION BY q.vec_id
+               ORDER BY list_dot_product(q.v, c.cv) / (q.nrm * c.cnrm) DESC, c.cid
+             ) AS rn
+      FROM n q, c WHERE q.vec_id < 3
+    )"""
+# Exact top-5 cosine neighbours of the IVF queries: the recall baseline.
+_SQL_IVF_EXACT = """exact AS (
+      SELECT query_id, neighbor_id FROM (
+        SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
+               list_dot_product(q.v, b.v) / (q.nrm * b.nrm) AS score
+        FROM n q, n b WHERE q.vec_id < 3 AND b.vec_id <> q.vec_id
+      )
+      QUALIFY row_number() OVER (PARTITION BY query_id
+                                 ORDER BY score DESC, neighbor_id) <= 5
     )"""
 
 
@@ -426,22 +536,7 @@ def _sql_pround(expr: str, scale: int = 6) -> str:
 
 @register(
     "s1_cosine_topk",
-    oracle=f"""
-    WITH e AS (SELECT vec_id, {SQL_VEC} AS v FROM embeddings),
-    n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-    p AS (
-      SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-             list_dot_product(q.v, b.v) / (q.nrm * b.nrm) AS score
-      FROM n q, n b
-      WHERE q.vec_id < 5 AND b.vec_id <> q.vec_id
-    )
-    SELECT query_id, neighbor_id,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY score DESC, neighbor_id) AS BIGINT) AS rnk,
-           round(score, 6) AS cos_sim
-    FROM p
-    QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) <= 5
-    """,
+    oracle=_SQL_COSINE_TOP5,
     survey_ref="extension: brute-force cosine top-k (ANN baseline)",
 )
 def s1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -472,22 +567,7 @@ def s1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s5_cosine_topk_gemm",
-    oracle=f"""
-    WITH e AS (SELECT vec_id, {SQL_VEC} AS v FROM embeddings),
-    n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-    p AS (
-      SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-             list_dot_product(q.v, b.v) / (q.nrm * b.nrm) AS score
-      FROM n q, n b
-      WHERE q.vec_id < 5 AND b.vec_id <> q.vec_id
-    )
-    SELECT query_id, neighbor_id,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY score DESC, neighbor_id) AS BIGINT) AS rnk,
-           round(score, 6) AS cos_sim
-    FROM p
-    QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) <= 5
-    """,
+    oracle=_SQL_COSINE_TOP5,
     survey_ref="extension: brute-force cosine top-k, Arrow/NumPy GEMM path "
     "(mapInPandas; the production ANN scan — same oracle as s1, proving the "
     "vectorized path equals the JVM expression path)",
@@ -587,9 +667,18 @@ def tx1_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Per-doc quality heuristic (length/stopword/punctuation) — tx2's oracle,
 # also a CTE inside a14's calibration query.
-_SQL_QUALITY = f"""
-    WITH s AS (
-      SELECT doc_id,
+_SQL_QUALITY_EXPR = (
+    "least(n / 50.0, 1.0)"
+    " * (0.5 + 0.5 * least(CASE WHEN n > 0 THEN sw / n ELSE 0 END * 5.0, 1.0))"
+    " * (CASE WHEN np / nc > 0.2 THEN 0.5 ELSE 1.0 END)"
+)
+
+
+def _sql_quality_stats(cols: str = "doc_id") -> str:
+    """CTE ``s(cols..., n, sw, np, nc)``: per-doc token, stopword,
+    punctuation and character counts over ``documents``."""
+    return f"""s AS (
+      SELECT {cols},
              CAST(len({SQL_TOKENS}) AS DOUBLE) AS n,
              CAST(len(list_filter({SQL_TOKENS},
                   x -> x IN ('the','a','of','and','to','in','is','it','that','for'))) AS DOUBLE)
@@ -598,12 +687,18 @@ _SQL_QUALITY = f"""
                AS np,
              CAST(greatest(length(text), 1) AS DOUBLE) AS nc
       FROM documents
-    )
-    SELECT doc_id,
-           least(n / 50.0, 1.0)
-             * (0.5 + 0.5 * least(CASE WHEN n > 0 THEN sw / n ELSE 0 END * 5.0, 1.0))
-             * (CASE WHEN np / nc > 0.2 THEN 0.5 ELSE 1.0 END) AS quality
-    FROM s
+    )"""
+
+
+def _sql_quality_ctes(cols: str = "doc_id") -> str:
+    """``s`` plus ``q(cols..., quality)``: TXT.quality_score per doc."""
+    return f"""{_sql_quality_stats(cols)},
+    q AS (SELECT {cols}, {_SQL_QUALITY_EXPR} AS quality FROM s)"""
+
+
+_SQL_QUALITY = f"""
+    WITH {_sql_quality_stats()}
+    SELECT doc_id, {_SQL_QUALITY_EXPR} AS quality FROM s
 """
 
 
@@ -681,35 +776,11 @@ def tx4_source_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "d7_dedup_clusters",
-    oracle=f"""
+# d7's oracle body: the transitive closure ``walk(id, lbl)`` of the verified
+# (Jaccard >= 0.5) LSH edges, seeded with every doc as its own label.
+_SQL_LSH_WALK = f"""
     WITH RECURSIVE
-    {_sql_minhash_sigs()},
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, concat_ws('_', "
-        + ", ".join(f"mh_{b * NROWS + r}" for r in range(NROWS))
-        + ") AS band_key FROM sigs"
-        for b in range(NBANDS)
-      )}
-    ),
-    capped AS (
-      SELECT doc_id, band, band_key FROM bands
-      QUALIFY row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id)
-              <= {LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-      FROM capped l JOIN capped r
-        ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id
-    ),
-    scored AS (
-      SELECT c.id_a, c.id_b
-      FROM cand c JOIN hvl a ON c.id_a = a.doc_id JOIN hvl b ON c.id_b = b.doc_id
-      WHERE CAST(len(list_intersect(a.hv, b.hv)) AS DOUBLE)
-              / (len(a.hv) + len(b.hv) - len(list_intersect(a.hv, b.hv))) >= 0.5
-    ),
+    {_sql_lsh_verified("scored", 0.5)},
     e AS (
       SELECT id_a AS a, id_b AS b FROM scored
       UNION SELECT id_b, id_a FROM scored
@@ -719,8 +790,13 @@ def tx4_source_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
       UNION
       SELECT e.b, walk.lbl FROM walk JOIN e ON e.a = walk.id
     )
-    SELECT id AS doc_id, MIN(lbl) AS cluster_id FROM walk GROUP BY id
-    """,
+"""
+
+
+@register(
+    "d7_dedup_clusters",
+    oracle=_SQL_LSH_WALK
+    + "SELECT id AS doc_id, MIN(lbl) AS cluster_id FROM walk GROUP BY id",
     survey_ref="extension: dedup clustering (connected components over LSH-verified "
     "near-dup pairs; iterative label propagation vs recursive-CTE oracle)",
 )
@@ -828,6 +904,32 @@ def d6_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # width max_bits=16 can produce — the round-6 capped-shortfall regime
 # at sf10 (nbits=11 wanted 202 sets, got 64, measured recall 33.2%)
 # becomes (24 sets, radius 1, design union 0.507).
+# The multi-probe plane sets (d19/d20/c5, s13): ``psets(r, i, plane)``,
+# nbits planes per set r, generated from the design row ``w`` (nbits,
+# dim, r_sets).
+_SQL_MP_PLANES = f"""{_sql_lcg("SELECT nbits * dim * r_sets FROM w")},
+    psets AS (
+      SELECT CAST((k // dim) // nbits AS INT) AS r,
+             CAST((k // dim) % nbits AS INT) AS i,
+             {_SQL_PLANE} AS plane
+      FROM lcg, w GROUP BY 1, 2
+    )"""
+# Bit-flip probe masks of Hamming weight <= w.radius (operators/dedup.
+# probe_masks); range(16) is the nbits_for_corpus max_bits ceiling.
+_SQL_MP_MASKS = """bits AS (
+      SELECT i FROM range(16) t(i) WHERE i < (SELECT nbits FROM w)
+    ),
+    masks AS (
+      SELECT CAST(0 AS BIGINT) AS mask
+      UNION ALL
+      SELECT CAST(1 AS BIGINT) << i FROM bits
+      WHERE (SELECT radius FROM w) >= 1
+      UNION ALL
+      SELECT (CAST(1 AS BIGINT) << b1.i) | (CAST(1 AS BIGINT) << b2.i)
+      FROM bits b1, bits b2
+      WHERE b1.i < b2.i AND (SELECT radius FROM w) >= 2
+    )"""
+
 MP_THRESHOLD = 0.3  # design-point cosine == the operator's decision threshold
 MP_TARGET_RECALL = 0.5  # stated target recall for a pair AT the design point
 MP_MAX_SETS = 64  # plan-size cap; radius escalates before it can bind
@@ -951,22 +1053,7 @@ def _sql_mp_ctes(
       FROM embeddings
     ),
     {_sql_mp_design(threshold)},
-    lcg(k, state) AS (
-      SELECT 0, (CAST({_LCG_SEED} AS HUGEINT) * {_LCG_A} + {_LCG_C})
-                % CAST({_LCG_M} AS HUGEINT)
-      UNION ALL
-      SELECT k + 1, (state * {_LCG_A} + {_LCG_C}) % CAST({_LCG_M} AS HUGEINT)
-      FROM lcg WHERE k + 1 < (SELECT nbits * dim * r_sets FROM w)
-    ),
-    psets AS (
-      SELECT CAST((k // dim) // nbits AS INT) AS r,
-             CAST((k // dim) % nbits AS INT) AS i,
-             list(CASE WHEN (CAST(state AS BIGINT) >> 32) & 1 = 1
-                       THEN CAST(1.0 AS DOUBLE)
-                       ELSE CAST(-1.0 AS DOUBLE) END
-                  ORDER BY k) AS plane
-      FROM lcg, w GROUP BY 1, 2
-    ),
+    {_SQL_MP_PLANES},
     aug AS (
       SELECT vec_id, {SQL_VEC} AS v FROM embeddings
       {f"WHERE vec_id IN (SELECT doc_id FROM {restrict})" if restrict else ""}
@@ -986,19 +1073,7 @@ def _sql_mp_ctes(
       QUALIFY row_number() OVER (PARTITION BY r, bucket ORDER BY vec_id)
               <= {EMB_BUCKET_CAP}
     ),
-    bits AS (
-      SELECT i FROM range(16) t(i) WHERE i < (SELECT nbits FROM w)
-    ),
-    masks AS (
-      SELECT CAST(0 AS BIGINT) AS mask
-      UNION ALL
-      SELECT CAST(1 AS BIGINT) << i FROM bits
-      WHERE (SELECT radius FROM w) >= 1
-      UNION ALL
-      SELECT (CAST(1 AS BIGINT) << b1.i) | (CAST(1 AS BIGINT) << b2.i)
-      FROM bits b1, bits b2
-      WHERE b1.i < b2.i AND (SELECT radius FROM w) >= 2
-    ),
+    {_SQL_MP_MASKS},
     cand AS (
       SELECT DISTINCT l.vec_id AS id_a, r2.vec_id AS id_b
       FROM cb l CROSS JOIN masks m JOIN cb r2
@@ -1053,6 +1128,24 @@ def _augmented_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.unionByName(planted)
 
 
+def _mp_corpus(spark: SparkSession, sf_dir: str, augment: bool) -> DataFrame:
+    """The multi-probe corpus: embeddings, plus the planted rows when
+    ``augment``."""
+    if augment:
+        return _augmented_embeddings(spark, sf_dir)
+    return t(spark, sf_dir, "embeddings")
+
+
+def _mp_normed(spark: SparkSession, sf_dir: str, augment: bool) -> DataFrame:
+    """(vec_id, v, nrm) over the multi-probe corpus — the verify and
+    recall-audit side of d19/d20/d23/d24."""
+    return _mp_corpus(spark, sf_dir, augment).select(
+        "vec_id",
+        F.col("embedding").alias("v"),
+        VEC.norm(F.col("embedding")).alias("nrm"),
+    )
+
+
 def _shared_multiprobe_cands(
     spark: SparkSession,
     sf_dir: str,
@@ -1065,11 +1158,7 @@ def _shared_multiprobe_cands(
     radius) design derives from the RAW corpus stats in both engines;
     ``augment`` only adds the planted rows to the bucketed corpus."""
     def build() -> DataFrame:
-        e = (
-            _augmented_embeddings(spark, sf_dir)
-            if augment
-            else t(spark, sf_dir, "embeddings")
-        )
+        e = _mp_corpus(spark, sf_dir, augment)
         n, dim = _shared_emb_meta(spark, sf_dir)
         if n == 0 or dim == 0:
             return spark.createDataFrame([], "id_a long, id_b long")
@@ -1104,16 +1193,7 @@ def _multiprobe_verify(
     shape; exact-duplicate factoring keeps the cosine fold per distinct
     rep pair)."""
     cand = _shared_multiprobe_cands(spark, sf_dir, threshold, augment)
-    corpus = (
-        _augmented_embeddings(spark, sf_dir)
-        if augment
-        else t(spark, sf_dir, "embeddings")
-    )
-    n = corpus.select(
-        "vec_id",
-        F.col("embedding").alias("v"),
-        VEC.norm(F.col("embedding")).alias("nrm"),
-    )
+    n = _mp_normed(spark, sf_dir, augment)
 
     def _build_idmap() -> DataFrame:
         rep = n.groupBy("v").agg(F.min("vec_id").alias("rep_id"))
@@ -1244,16 +1324,7 @@ def _multiprobe_recall(
     """Recall audit of the multi-probe candidate union derived AT a
     design threshold, against exhaustive cosine truth on the fixed
     vec_id < 16 sample (see d20 docstring)."""
-    corpus = (
-        _augmented_embeddings(spark, sf_dir)
-        if augment
-        else t(spark, sf_dir, "embeddings")
-    )
-    n = corpus.select(
-        "vec_id",
-        F.col("embedding").alias("v"),
-        VEC.norm(F.col("embedding")).alias("nrm"),
-    )
+    n = _mp_normed(spark, sf_dir, augment)
     s = n.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("s_id"),
         F.col("v").alias("sv"),
@@ -1377,26 +1448,8 @@ def d24_multiprobe_recall_hi(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "s4_ivf_ann",
     oracle=f"""
-    WITH e AS (SELECT vec_id, {SQL_VEC} AS v FROM embeddings),
-    n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-    c AS (SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM n WHERE vec_id < 8),
-    assign AS (
-      SELECT a.vec_id, a.v, a.nrm, c.cid,
-             row_number() OVER (
-               PARTITION BY a.vec_id
-               ORDER BY list_dot_product(a.v, c.cv) / (a.nrm * c.cnrm) DESC, c.cid
-             ) AS rn
-      FROM n a, c
-    ),
-    cell AS (SELECT vec_id, v, nrm, cid AS cell FROM assign WHERE rn = 1),
-    probes AS (
-      SELECT q.vec_id AS query_id, q.v AS qv, q.nrm AS qnrm, c.cid AS cell,
-             row_number() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY list_dot_product(q.v, c.cv) / (q.nrm * c.cnrm) DESC, c.cid
-             ) AS rn
-      FROM n q, c WHERE q.vec_id < 3
-    ),
+    WITH {_SQL_IVF_CELLS},
+    {_SQL_IVF_PROBES},
     pr AS (SELECT query_id, qv, qnrm, cell FROM probes WHERE rn <= 2),
     cand AS (
       SELECT p.query_id, m.vec_id AS neighbor_id,
@@ -1422,58 +1475,12 @@ def s4_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow broadcast-join stage over the corpus; the probe join shuffles on
     the cell id only — at 100 TB the cell table is written DISTRIBUTE BY
     cell so a probe reads just its cells' files."""
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").alias("v"),
-        VEC.norm(F.col("embedding")).alias("nrm"),
-    )
-    cents = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cnrm"),
-    )
-    pair_cs = VEC.cosine_prenormed(
-        F.col("v"), F.col("cv"), F.col("nrm"), F.col("cnrm")
-    )
-    scored = e.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "v", "nrm", "cid", pair_cs.alias("cs")
-    )
-    wa = Window.partitionBy("vec_id").orderBy(F.desc("cs"), F.asc("cid"))
-    cell = (
-        scored.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "v", "nrm", F.col("cid").alias("cell"))
-    )
-    qscored = (
-        e.filter(F.col("vec_id") < 3)
-        .crossJoin(F.broadcast(cents))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qnrm"),
-            "cid",
-            pair_cs.alias("cs"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("cid"))
-    probed = (
-        qscored.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= 2)
-        .select("query_id", "qv", "qnrm", F.col("cid").alias("cell"))
-    )
-    cand = probed.join(cell, "cell").filter(F.col("vec_id") != F.col("query_id"))
-    wr = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        cand.select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            VEC.cosine_prenormed(
-                F.col("qv"), F.col("v"), F.col("qnrm"), F.col("nrm")
-            ).alias("score"),
-        )
-        .withColumn("rnk", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rnk") <= 5)
-        .select("query_id", "neighbor_id", "rnk", F.round("score", 6).alias("cos_sim"))
+    top = _ivf_probe_pairs(*_ivf_index(spark, sf_dir), nprobe=2)
+    return top.select(
+        "query_id",
+        "neighbor_id",
+        F.col("rnk").cast("long").alias("rnk"),
+        F.round("score", 6).alias("cos_sim"),
     )
 
 
@@ -1536,14 +1543,18 @@ def d8_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _split_col(id_col: str = "doc_id"):
+    """d9's deterministic 80/10/10 train/val/test label of an id column."""
+    bucket = DD._hash64(F.col(id_col).cast("string")) % 100
+    return F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
+
+
 @register(
     "d9_hash_split",
     oracle=f"""
     WITH assigned AS (
       SELECT doc_id, lang,
-             CASE WHEN {sql_hash64("CAST(doc_id AS VARCHAR)")} % 100 < 80 THEN 'train'
-                  WHEN {sql_hash64("CAST(doc_id AS VARCHAR)")} % 100 < 90 THEN 'val'
-                  ELSE 'test' END AS split
+             {_SQL_SPLIT} AS split
       FROM documents
     )
     SELECT split, lang, COUNT(*) AS n_docs
@@ -1559,15 +1570,40 @@ def d9_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample() cannot promise that). At 100 TB the split column becomes the
     output partition key so each split is contiguous files."""
     d = t(spark, sf_dir, "documents")
-    bucket = DD._hash64(F.col("doc_id").cast("string")) % 100
-    split = (
-        F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
-    )
     return (
-        d.select(split.alias("split"), "lang")
+        d.select(_split_col().alias("split"), "lang")
         .groupBy("split", "lang")
         .agg(F.count("*").alias("n_docs"))
     )
+
+
+def _doc4range_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents table replayed as 4 doc_id-ordered micro-batches
+    (maxFilesPerTrigger=1) — the input stream of st3/st11/st12. The chunk
+    files are read-only scaffolding, so they are session-cached; each
+    query's sink tables stay per-invocation."""
+    from nyc_open_data_pipeline_spark.streaming.replay import ordered_range_chunks
+    from nyc_open_data_pipeline_spark.streaming.windows import cached_fixture
+
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
+    stream_dir = cached_fixture(
+        spark, sf_dir, "doc4range",
+        lambda p: ordered_range_chunks(docs, "doc_id", p, n_chunks=4),
+    )
+    return (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stream_dir)
+    )
+
+
+def _stream_sink_storage(prefix: str):
+    """A fresh ParquetStorage root for one streaming query run."""
+    import tempfile
+
+    from nyc_open_data_pipeline_spark.pipeline.storage import ParquetStorage
+
+    return ParquetStorage(tempfile.mkdtemp(prefix=prefix))
 
 
 @register(
@@ -1593,38 +1629,11 @@ def st3_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus hash state, and appends survivors — the production flow for a
     100 TB corpus that grows daily (the output's hash column is the state;
     see streaming/dedup.py module docstring)."""
-    import tempfile
-
-    from nyc_open_data_pipeline_spark.pipeline.storage import ParquetStorage
     from nyc_open_data_pipeline_spark.streaming.dedup import run_incremental_dedup
-    from nyc_open_data_pipeline_spark.streaming.replay import ordered_range_chunks
-    from nyc_open_data_pipeline_spark.streaming.windows import cached_fixture
 
-    storage = ParquetStorage(tempfile.mkdtemp(prefix="st3_"))
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    # input chunks are read-only scaffolding -> session-cached (the output
-    # table stays per-invocation: each run is a fresh sink)
-    stream_dir = cached_fixture(
-        spark, sf_dir, "doc4range",
-        lambda p: ordered_range_chunks(docs, "doc_id", p, n_chunks=4),
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    run_incremental_dedup(spark, stream, storage.path("out"))
+    storage = _stream_sink_storage("st3_")
+    run_incremental_dedup(spark, _doc4range_stream(spark, sf_dir), storage.path("out"))
     return storage.read(spark, "out").select("doc_id", "content_hash")
-
-
-# LSH band rows over the shared `sigs` CTE (one SELECT per band) — the
-# banding text d22/st11 share; _SQL_SCORED_PAIRS_CTE carries its own copy.
-_SQL_BANDS_UNION = " UNION ALL ".join(
-    f"SELECT doc_id, {b} AS band, concat_ws('_', "
-    + ", ".join(f"mh_{b * NROWS + r}" for r in range(NROWS))
-    + ") AS band_key FROM sigs"
-    for b in range(NBANDS)
-)
 
 
 @register(
@@ -1739,31 +1748,14 @@ def st11_stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFra
     narrow columns — at 100 TB it is the bucketed band-key index of the
     corpus, NOT the corpus (same design as st3's hash table, SCALE.md
     streaming section)."""
-    import tempfile
-
-    from nyc_open_data_pipeline_spark.pipeline.storage import ParquetStorage
     from nyc_open_data_pipeline_spark.streaming.dedup import (
         run_incremental_neardup,
     )
-    from nyc_open_data_pipeline_spark.streaming.replay import (
-        ordered_range_chunks,
-    )
-    from nyc_open_data_pipeline_spark.streaming.windows import cached_fixture
 
-    storage = ParquetStorage(tempfile.mkdtemp(prefix="st11_"))
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    # same replay fixture as st3 (read-only, session-cached)
-    stream_dir = cached_fixture(
-        spark, sf_dir, "doc4range",
-        lambda p: ordered_range_chunks(docs, "doc_id", p, n_chunks=4),
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
+    storage = _stream_sink_storage("st11_")
     run_incremental_neardup(
-        spark, stream, storage.path("out"), storage.path("state")
+        spark, _doc4range_stream(spark, sf_dir), storage.path("out"),
+        storage.path("state"),
     )
     return storage.read(spark, "out").select("doc_id")
 
@@ -2028,24 +2020,7 @@ def mm6_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "c1_cleanroom_pipeline",
     oracle=f"""
-    WITH s AS (
-      SELECT doc_id,
-             CAST(len({SQL_TOKENS}) AS DOUBLE) AS n,
-             CAST(len(list_filter({SQL_TOKENS},
-                  x -> x IN ('the','a','of','and','to','in','is','it','that','for'))) AS DOUBLE)
-               AS sw,
-             CAST(length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS DOUBLE)
-               AS np,
-             CAST(greatest(length(text), 1) AS DOUBLE) AS nc
-      FROM documents
-    ),
-    q AS (
-      SELECT doc_id,
-             least(n / 50.0, 1.0)
-               * (0.5 + 0.5 * least(CASE WHEN n > 0 THEN sw / n ELSE 0 END * 5.0, 1.0))
-               * (CASE WHEN np / nc > 0.2 THEN 0.5 ELSE 1.0 END) AS quality
-      FROM s
-    ),
+    WITH {_sql_quality_ctes()},
     pass1 AS (
       SELECT d.doc_id, d.lang, d.text
       FROM documents d JOIN q ON d.doc_id = q.doc_id
@@ -2058,31 +2033,7 @@ def mm6_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, lang, text FROM hashed
       QUALIFY row_number() OVER (PARTITION BY h ORDER BY doc_id) = 1
     ),
-    {_sql_minhash_sigs()},
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, concat_ws('_', "
-        + ", ".join(f"mh_{b * NROWS + r}" for r in range(NROWS))
-        + ") AS band_key FROM sigs"
-        for b in range(NBANDS)
-      )}
-    ),
-    capped AS (
-      SELECT doc_id, band, band_key FROM bands
-      QUALIFY row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id)
-              <= {LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-      FROM capped l JOIN capped r
-        ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id
-    ),
-    edges AS (
-      SELECT c.id_a, c.id_b
-      FROM cand c JOIN hvl a ON c.id_a = a.doc_id JOIN hvl b ON c.id_b = b.doc_id
-      WHERE CAST(len(list_intersect(a.hv, b.hv)) AS DOUBLE)
-              / (len(a.hv) + len(b.hv) - len(list_intersect(a.hv, b.hv))) >= 0.5
-    ),
+    {_sql_lsh_verified("edges", 0.5)},
     dropped AS (
       SELECT DISTINCT e.id_b AS doc_id
       FROM edges e
@@ -2094,9 +2045,7 @@ def mm6_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
       LEFT JOIN dropped x ON p.doc_id = x.doc_id
       WHERE x.doc_id IS NULL
     )
-    SELECT CASE WHEN {sql_hash64("CAST(doc_id AS VARCHAR)")} % 100 < 80 THEN 'train'
-                WHEN {sql_hash64("CAST(doc_id AS VARCHAR)")} % 100 < 90 THEN 'val'
-                ELSE 'test' END AS split,
+    SELECT {_SQL_SPLIT} AS split,
            lang,
            COUNT(*) AS n_docs,
            CAST(SUM(len({SQL_TOKENS})) AS BIGINT) AS total_tokens
@@ -2170,9 +2119,7 @@ def cleanroom_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     pass3 = pass2.join(dropped, "doc_id", "left_anti")
-    bucket = DD._hash64(F.col("doc_id").cast("string")) % 100
-    split = F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
-    return pass3.select("doc_id", "lang", "text", split.alias("split"))
+    return pass3.select("doc_id", "lang", "text", _split_col().alias("split"))
 
 
 def write_cleanroom(spark: SparkSession, sf_dir: str, out_path: str) -> None:
@@ -2182,6 +2129,19 @@ def write_cleanroom(spark: SparkSession, sf_dir: str, out_path: str) -> None:
     cleanroom_docs(spark, sf_dir).write.mode("overwrite").partitionBy(
         "split"
     ).parquet(out_path)
+
+
+def _uni_bigrams():
+    """A token array column ``tk``'s unigrams followed by its space-joined
+    bigrams — the hashed n-gram features of tx14, mix6 and c5's gate."""
+    bi = F.when(
+        F.size("tk") >= 2,
+        F.expr(
+            "transform(sequence(1, size(tk) - 1), "
+            "i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1)))"
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    return F.concat(F.col("tk"), bi)
 
 
 @register(
@@ -2249,9 +2209,7 @@ def write_cleanroom(spark: SparkSession, sf_dir: str, out_path: str) -> None:
     dropped AS (SELECT DISTINCT v.id_b AS doc_id FROM verified v),
     p3 AS (SELECT p.doc_id, p.lang, p.cleaned FROM p2 p
            LEFT JOIN dropped x USING (doc_id) WHERE x.doc_id IS NULL)
-    SELECT CASE WHEN {sql_hash64("CAST(doc_id AS VARCHAR)")} % 100 < 80 THEN 'train'
-                WHEN {sql_hash64("CAST(doc_id AS VARCHAR)")} % 100 < 90 THEN 'val'
-                ELSE 'test' END AS split,
+    SELECT {_SQL_SPLIT} AS split,
            lang,
            COUNT(*) AS n_docs,
            CAST(SUM(len({_sql_tokens_of('cleaned')})) AS BIGINT) AS total_tokens
@@ -2298,14 +2256,7 @@ def c5_cleanroom_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = docs.select("doc_id", "lang").join(cleaned, "doc_id")
     tk = base.select("doc_id", TXT.tokens(F.col("cleaned")).alias("tk"))
-    bi = F.when(
-        F.size("tk") >= 2,
-        F.expr(
-            "transform(sequence(1, size(tk) - 1), "
-            "i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1)))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    grams = tk.select("doc_id", F.explode(F.concat(F.col("tk"), bi)).alias("g"))
+    grams = tk.select("doc_id", F.explode(_uni_bigrams()).alias("g"))
     bucket = DD._hash64(F.col("g")) % 1024
     milli = (
         DD._hash64(F.concat(F.lit("w#"), bucket.cast("string"))) % 2001
@@ -2371,13 +2322,9 @@ def c5_cleanroom_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         dropped = pairs.select(F.col("id_b").alias("doc_id")).distinct()
         p3 = p2.join(dropped, "doc_id", "left_anti")
-    sbucket = DD._hash64(F.col("doc_id").cast("string")) % 100
-    split = (
-        F.when(sbucket < 80, "train").when(sbucket < 90, "val").otherwise("test")
-    )
     return (
         p3.select(
-            split.alias("split"),
+            _split_col().alias("split"),
             "lang",
             TXT.token_count(F.col("cleaned")).alias("ntok"),
         )
@@ -2524,10 +2471,9 @@ def _sql_kmeans_update(assigned: str, out: str) -> str:
     )"""
 
 
-@register(
-    "s6_kmeans",
-    oracle=f"""
-    WITH e_norm AS (
+# _kmeans_fit in SQL: init centroids ``c0``, assignment ``a1``, updated
+# centroids ``c1(cid, cv)`` and the final assignment ``a2(vec_id, v, cid)``.
+_SQL_KMEANS_FIT = f"""e_norm AS (
       SELECT vec_id, {SQL_VEC} AS v FROM embeddings
     ),
     c0 AS (
@@ -2535,7 +2481,13 @@ def _sql_kmeans_update(assigned: str, out: str) -> str:
     ),
     {_sql_kmeans_assign("c0", "a1")},
     {_sql_kmeans_update("a1", "c1")},
-    {_sql_kmeans_assign("c1", "a2")}
+    {_sql_kmeans_assign("c1", "a2")}"""
+
+
+@register(
+    "s6_kmeans",
+    oracle=f"""
+    WITH {_SQL_KMEANS_FIT}
     SELECT a.cid AS cluster_id,
            COUNT(*) AS n_members,
            round(sqrt(list_dot_product(c.cv, c.cv)), 6) AS centroid_norm
@@ -2582,22 +2534,10 @@ def s6_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SPLIT = (
-    f"CASE WHEN {sql_hash64('CAST(doc_id AS VARCHAR)')} % 100 < 80 THEN 'train' "
-    f"WHEN {sql_hash64('CAST(doc_id AS VARCHAR)')} % 100 < 90 THEN 'val' "
-    f"ELSE 'test' END"
-)
-
-
 @register(
     "ctm1_contamination",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {SQL_TOKENS} AS tk FROM documents),
-    sh AS (SELECT doc_id, {_sql_shingles('tk')} AS sh FROM toks),
-    hvl AS (
-      SELECT doc_id, list_distinct(list_transform(sh, s -> {sql_hash64('s')})) AS hv
-      FROM sh
-    ),
+    WITH {_sql_shingle_hashes()},
     split AS (SELECT doc_id, {_SQL_SPLIT} AS split FROM documents),
     test_sh AS (
       SELECT h.doc_id, unnest(h.hv) AS sh
@@ -2635,9 +2575,7 @@ def ctm1_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     text — only 64-bit hashes. At 100 TB the train shingle set is a bucketed
     table reused across eval builds."""
     hv = _shared_hv(spark, sf_dir)
-    bucket = DD._hash64(F.col("id").cast("string")) % 100
-    split = F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
-    tagged = hv.withColumn("split", split)
+    tagged = hv.withColumn("split", _split_col("id"))
     test_docs = tagged.filter(F.col("split") == "test")
     train_sh = (
         tagged.filter(F.col("split") == "train")
@@ -2816,10 +2754,8 @@ def seq1_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nyc_open_data_pipeline_spark.operators.packing import with_group_running_sum
 
     d = t(spark, sf_dir, "documents")
-    bucket = DD._hash64(F.col("doc_id").cast("string")) % 100
-    split = F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
     n = d.select(
-        "doc_id", "lang", split.alias("split"),
+        "doc_id", "lang", _split_col().alias("split"),
         TXT.token_count(F.col("text")).cast("long").alias("n_tokens"),
     )
     c = with_group_running_sum(
@@ -2996,15 +2932,23 @@ def _mix_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _MIX_TOK_SQL = f"CAST(len({SQL_TOKENS}) AS BIGINT)"
-_MIX_THR_SQL = f"""
-    WITH tok AS (
+# Per-doc token counts ``tok(doc_id, source, n_tokens)`` and their per-source
+# rollups: ``agg(source, n_docs, n_tokens)`` / ``agg(source, unique_tokens)``.
+_SQL_MIX_TOK = f"""tok AS (
       SELECT doc_id, source, {_MIX_TOK_SQL} AS n_tokens FROM documents
-    ),
-    agg AS (
+    )"""
+_SQL_MIX_AGG = """agg AS (
       SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
              CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
       FROM tok GROUP BY source
-    ),
+    )"""
+_SQL_MIX_UNIQUE = """agg AS (
+      SELECT source, CAST(SUM(n_tokens) AS BIGINT) AS unique_tokens
+      FROM tok GROUP BY source
+    )"""
+_MIX_THR_SQL = f"""
+    WITH {_SQL_MIX_TOK},
+    {_SQL_MIX_AGG},
     thr AS (
       SELECT source, n_docs, n_tokens,
              least(1.0, {_MIX_CAP_TOKENS}.0 / CAST(n_tokens AS DOUBLE)) AS sample_rate,
@@ -3285,32 +3229,7 @@ _ED_MIN_JACCARD = 0.3
 _ED_PREFIX = 400
 
 _SQL_ED_PAIRS = f"""
-    {_sql_minhash_sigs()},
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, concat_ws('_', "
-        + ", ".join(f"mh_{b * NROWS + r}" for r in range(NROWS))
-        + ") AS band_key FROM sigs"
-        for b in range(NBANDS)
-      )}
-    ),
-    capped AS (
-      SELECT doc_id, band, band_key FROM bands
-      QUALIFY row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id)
-              <= {LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-      FROM capped l JOIN capped r
-        ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id
-    ),
-    pairs AS (
-      SELECT c.id_a, c.id_b,
-             CAST(len(list_intersect(a.hv, b.hv)) AS DOUBLE)
-               / (len(a.hv) + len(b.hv) - len(list_intersect(a.hv, b.hv)))
-               AS jaccard
-      FROM cand c JOIN hvl a ON c.id_a = a.doc_id JOIN hvl b ON c.id_b = b.doc_id
-    )
+    {_sql_lsh_verified("pairs")}
 """
 
 
@@ -3453,18 +3372,7 @@ def seq2_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "s7_ann_recall",
     oracle=f"""
-    WITH e AS (SELECT vec_id, {SQL_VEC} AS v FROM embeddings),
-    n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-    c AS (SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM n WHERE vec_id < 8),
-    assign AS (
-      SELECT a.vec_id, a.v, a.nrm, c.cid,
-             row_number() OVER (
-               PARTITION BY a.vec_id
-               ORDER BY list_dot_product(a.v, c.cv) / (a.nrm * c.cnrm) DESC, c.cid
-             ) AS rn
-      FROM n a, c
-    ),
-    cell AS (SELECT vec_id, v, nrm, cid AS cell FROM assign WHERE rn = 1),
+    WITH {_SQL_IVF_CELLS},
     probes AS (
       SELECT q.vec_id AS query_id, q.v AS qv, q.nrm AS qnrm, c.cid AS cell,
              row_number() OVER (
@@ -3485,15 +3393,7 @@ def seq2_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
       QUALIFY row_number() OVER (PARTITION BY query_id
                                  ORDER BY score DESC, neighbor_id) <= 5
     ),
-    exact AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-               list_dot_product(q.v, b.v) / (q.nrm * b.nrm) AS score
-        FROM n q, n b WHERE q.vec_id < 3 AND b.vec_id <> q.vec_id
-      )
-      QUALIFY row_number() OVER (PARTITION BY query_id
-                                 ORDER BY score DESC, neighbor_id) <= 5
-    ),
+    {_SQL_IVF_EXACT},
     m AS (
       SELECT a.query_id, CAST(COUNT(*) AS BIGINT) AS n_overlap
       FROM approx a JOIN exact x
@@ -3539,41 +3439,7 @@ def s7_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "c2_quality_representatives",
     oracle=f"""
-    WITH RECURSIVE
-    {_sql_minhash_sigs()},
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, concat_ws('_', "
-        + ", ".join(f"mh_{b * NROWS + r}" for r in range(NROWS))
-        + ") AS band_key FROM sigs"
-        for b in range(NBANDS)
-      )}
-    ),
-    capped AS (
-      SELECT doc_id, band, band_key FROM bands
-      QUALIFY row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id)
-              <= {LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-      FROM capped l JOIN capped r
-        ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id
-    ),
-    scored AS (
-      SELECT c.id_a, c.id_b
-      FROM cand c JOIN hvl a ON c.id_a = a.doc_id JOIN hvl b ON c.id_b = b.doc_id
-      WHERE CAST(len(list_intersect(a.hv, b.hv)) AS DOUBLE)
-              / (len(a.hv) + len(b.hv) - len(list_intersect(a.hv, b.hv))) >= 0.5
-    ),
-    e AS (
-      SELECT id_a AS a, id_b AS b FROM scored
-      UNION SELECT id_b, id_a FROM scored
-    ),
-    walk(id, lbl) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT e.b, walk.lbl FROM walk JOIN e ON e.a = walk.id
-    ),
+    {_SQL_LSH_WALK},
     clusters AS (SELECT id AS doc_id, MIN(lbl) AS cluster_id FROM walk GROUP BY id),
     q AS (
       SELECT doc_id,
@@ -3732,9 +3598,6 @@ _SH_BLOCK_BITS = 16
 _SH_MAX_HAM = _SH_BLOCKS - 1  # pigeonhole: <= blocks-1 flipped bits
 # share at least one untouched block
 
-_SQL_SIMHASH = None  # defined via d5's construction below
-
-
 def _sql_simhash_expr() -> str:
     """DuckDB SimHash identical to operators/dedup.simhash64 (reproduced
     from d5's oracle): per-bit +-1 votes over distinct-token hashes."""
@@ -3757,6 +3620,24 @@ def _sql_simhash_expr() -> str:
       SELECT doc_id, CAST(SUM(v * (1::BIGINT << bit)) AS BIGINT) AS h
       FROM sh_bits GROUP BY doc_id
     )"""
+
+
+def _simhash_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, h, blk, bv): each document's SimHash split into its
+    _SH_BLOCKS block keys — d11's candidate buckets. One narrow
+    posexplode per doc (pos = block index, col = block value) instead of
+    a _SH_BLOCKS-way union that would recompute the hash per branch."""
+    mask = (1 << _SH_BLOCK_BITS) - 1
+    block_vals = F.array(
+        *[
+            F.shiftrightunsigned(F.col("h"), i * _SH_BLOCK_BITS)
+            .bitwiseAND(F.lit(mask))
+            for i in range(_SH_BLOCKS)
+        ]
+    )
+    return _shared_simhash(spark, sf_dir).select(
+        "doc_id", "h", F.posexplode(block_vals).alias("blk", "bv")
+    )
 
 
 @register(
@@ -3797,27 +3678,8 @@ def d11_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bucket join shuffles 4 small (blk, bv) keys per doc, and the verify
     touches candidates only — the Manku web-dedup shape, vs d4's shingle-set
     Jaccard when token-level containment matters more than bit similarity."""
-    d = _shared_simhash(spark, sf_dir)
-    mask = (1 << _SH_BLOCK_BITS) - 1
-    # one narrow posexplode per doc (pos = block index, col = block value)
-    # instead of a _SH_BLOCKS-way union that would recompute the hash per
-    # branch: the 4 (blk, bv) keys come out of a single pass over the
-    # persisted hash frame.
-    block_vals = F.array(
-        *[
-            F.shiftrightunsigned(F.col("h"), i * _SH_BLOCK_BITS)
-            .bitwiseAND(F.lit(mask))
-            for i in range(_SH_BLOCKS)
-        ]
-    )
-    blocks = d.select(
-        "doc_id", "h", F.posexplode(block_vals).alias("blk", "bv")
-    )
-    wcap = Window.partitionBy("blk", "bv").orderBy("doc_id")
-    capped = (
-        blocks.withColumn("__rn", F.row_number().over(wcap))
-        .filter(F.col("__rn") <= LSH_BUCKET_CAP)
-        .drop("__rn")
+    capped = DD.cap_buckets(
+        _simhash_blocks(spark, sf_dir), LSH_BUCKET_CAP, ("blk", "bv"), "doc_id"
     )
     l = capped.select(
         F.col("blk"), F.col("bv"), F.col("doc_id").alias("id_a"), F.col("h").alias("ha")
@@ -3851,14 +3713,8 @@ _MIX3_SQL_RATE = (
 @register(
     "mix3_temperature_sampling",
     oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, source, {_MIX_TOK_SQL} AS n_tokens FROM documents
-    ),
-    agg AS (
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-             CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
-      FROM tok GROUP BY source
-    ),
+    WITH {_SQL_MIX_TOK},
+    {_SQL_MIX_AGG},
     w AS (
       SELECT source, n_docs, n_tokens,
              CAST(sqrt(CAST(n_tokens AS DOUBLE)) AS DECIMAL(38,12)) AS sw
@@ -3920,32 +3776,13 @@ _D12_THRESHOLD = 0.6
 @register(
     "d12_containment_neardup",
     oracle=f"""
-    WITH {_sql_minhash_sigs()},
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, concat_ws('_', "
-        + ", ".join(f"mh_{b * NROWS + r}" for r in range(NROWS))
-        + ") AS band_key FROM sigs"
-        for b in range(NBANDS)
-      )}
-    ),
-    capped AS (
-      SELECT doc_id, band, band_key FROM bands
-      QUALIFY row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id)
-              <= {LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-      FROM capped l JOIN capped r
-        ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id
-    ),
+    WITH {_sql_lsh_cand()},
     scored AS (
       SELECT c.id_a, c.id_b,
              CAST(len(list_intersect(a.hv, b.hv)) AS DOUBLE)
                / greatest(least(len(a.hv), len(b.hv)), 1) AS containment,
-             CAST(len(list_intersect(a.hv, b.hv)) AS DOUBLE)
-               / (len(a.hv) + len(b.hv) - len(list_intersect(a.hv, b.hv))) AS jaccard
-      FROM cand c JOIN hvl a ON c.id_a = a.doc_id JOIN hvl b ON c.id_b = b.doc_id
+             {_SQL_JACCARD} AS jaccard
+      FROM {_SQL_CAND_HV}
     )
     SELECT * FROM scored WHERE containment >= {_D12_THRESHOLD}
     """,
@@ -3986,12 +3823,7 @@ def d12_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "d13_ngram_dup_fraction",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {SQL_TOKENS} AS tk FROM documents),
-    sh AS (SELECT doc_id, {_sql_shingles('tk')} AS sh FROM toks),
-    hvl AS (
-      SELECT doc_id, list_distinct(list_transform(sh, s -> {sql_hash64('s')})) AS hv
-      FROM sh
-    ),
+    WITH {_sql_shingle_hashes()},
     ex AS (SELECT doc_id, unnest(hv) AS h FROM hvl),
     nd AS (SELECT doc_id, COUNT(*) OVER (PARTITION BY h) AS nd FROM ex),
     per AS (
@@ -4044,10 +3876,10 @@ def d13_ngram_dup_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "s8_label_centroids",
-    oracle=f"""
-    WITH e AS (SELECT vec_id, label, {SQL_VEC} AS v FROM embeddings),
+# Per-label decimal-exact centroids ``carr(label, cv)`` over ``e(vec_id,
+# label, v)`` (s8, c3; _label_centroids in SQL), and a member's cosine to
+# its centroid.
+_SQL_LABEL_CENTROIDS = f"""e AS (SELECT vec_id, label, {SQL_VEC} AS v FROM embeddings),
     ex AS (
       SELECT label, vec_id, g.i AS pos, v[g.i] AS val
       FROM e, unnest(generate_series(1, len(v))) AS g(i)
@@ -4057,12 +3889,47 @@ def d13_ngram_dup_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(SUM(CAST(val AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS cval
       FROM ex GROUP BY label, pos
     ),
-    carr AS (SELECT label, list(cval ORDER BY pos) AS cv FROM cent GROUP BY label),
+    carr AS (SELECT label, list(cval ORDER BY pos) AS cv FROM cent GROUP BY label)"""
+_SQL_LABEL_COS = """round(list_dot_product(e.v, c.cv)
+                   / (sqrt(list_dot_product(e.v, e.v))
+                      * sqrt(list_dot_product(c.cv, c.cv))), 6)"""
+
+
+def _label_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(label, vec_id, cos): each vector's 6-dp cosine to its label's
+    decimal-exact centroid — s8's statistic and c3's gate. The |labels|
+    centroid table broadcasts back onto the vectors."""
+    e = t(spark, sf_dir, "embeddings")
+    ex = e.select("label", "vec_id", F.posexplode("embedding").alias("pos", "val"))
+    cent = ex.groupBy("label", "pos").agg(
+        (F.sum(dec(F.col("val").cast("double"), 28, 12)).cast("double") / F.count("val")).alias(
+            "cval"
+        )
+    )
+    carr = cent.groupBy("label").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "cval"))), lambda s: s.cval
+        ).alias("cv")
+    )
+    cos = F.round(
+        VEC.cosine_prenormed(
+            F.col("embedding"),
+            F.col("cv"),
+            VEC.norm(F.col("embedding")),
+            VEC.norm(F.col("cv")),
+        ),
+        6,
+    )
+    return e.join(F.broadcast(carr), "label").select("label", "vec_id", cos.alias("cos"))
+
+
+@register(
+    "s8_label_centroids",
+    oracle=f"""
+    WITH {_SQL_LABEL_CENTROIDS},
     cs AS (
       SELECT e.label, e.vec_id,
-             round(list_dot_product(e.v, c.cv)
-                   / (sqrt(list_dot_product(e.v, e.v))
-                      * sqrt(list_dot_product(c.cv, c.cv))), 6) AS cos
+             {_SQL_LABEL_COS} AS cos
       FROM e JOIN carr c ON e.label = c.label
     )
     SELECT label,
@@ -4085,30 +3952,8 @@ def s8_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     onto the vectors (map-side join; the big side never shuffles). Cosine
     is the same deterministic left-to-right fold as s1 (oracle:
     list_dot_product), rounded to 6 dp before the decimal-exact mean."""
-    e = t(spark, sf_dir, "embeddings")
-    ex = e.select("label", "vec_id", F.posexplode("embedding").alias("pos", "val"))
-    cent = ex.groupBy("label", "pos").agg(
-        (F.sum(dec(F.col("val").cast("double"), 28, 12)).cast("double") / F.count("val")).alias(
-            "cval"
-        )
-    )
-    carr = cent.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cval"))), lambda s: s.cval
-        ).alias("cv")
-    )
-    withc = e.join(F.broadcast(carr), "label")
-    cos = F.round(
-        VEC.cosine_prenormed(
-            F.col("embedding"),
-            F.col("cv"),
-            VEC.norm(F.col("embedding")),
-            VEC.norm(F.col("cv")),
-        ),
-        6,
-    )
     return (
-        withc.select("label", "vec_id", cos.alias("cos"))
+        _label_cohesion(spark, sf_dir)
         .groupBy("label")
         .agg(
             F.count("*").alias("n_vectors"),
@@ -4126,33 +3971,11 @@ _D14_MATCHES = " + ".join(
 @register(
     "d14_minhash_estimate_error",
     oracle=f"""
-    WITH {_sql_minhash_sigs()},
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, concat_ws('_', "
-        + ", ".join(f"mh_{b * NROWS + r}" for r in range(NROWS))
-        + ") AS band_key FROM sigs"
-        for b in range(NBANDS)
-      )}
-    ),
-    capped AS (
-      SELECT doc_id, band, band_key FROM bands
-      QUALIFY row_number() OVER (PARTITION BY band, band_key ORDER BY doc_id)
-              <= {LSH_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-      FROM capped l JOIN capped r
-        ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id
-    ),
+    WITH {_sql_lsh_cand()},
     scored AS (
-      SELECT c.id_a, c.id_b,
-             CAST(len(list_intersect(a.hv, b.hv)) AS DOUBLE)
-               / (len(a.hv) + len(b.hv) - len(list_intersect(a.hv, b.hv))) AS jac,
+      SELECT c.id_a, c.id_b, {_SQL_JACCARD} AS jac,
              CAST({_D14_MATCHES} AS DOUBLE) / CAST(16 AS DOUBLE) AS est
-      FROM cand c
-      JOIN hvl a ON c.id_a = a.doc_id
-      JOIN hvl b ON c.id_b = b.doc_id
+      FROM {_SQL_CAND_HV}
       JOIN sigs sa ON sa.doc_id = c.id_a
       JOIN sigs sb ON sb.doc_id = c.id_b
     )
@@ -4300,11 +4123,11 @@ def ctm2_embedding_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(cell, qscored): the nprobe-INDEPENDENT halves of the IVF probe —
     the cell assignment of the whole corpus and the query-to-centroid
-    scores. Split out of ``_ivf_approx_pairs`` (round-13 optimization) so
-    s9's sweep can materialize the assignment ONCE and re-probe it per
-    width instead of rebuilding corpus x centroids scoring + the
-    assignment window for every sweep point — materializing the
-    assignment is exactly what building a real IVF index does."""
+    scores (centroids: the first 8 vectors; queries: vec_id < 3). s9's
+    sweep materializes the assignment ONCE and re-probes it per width
+    instead of rebuilding corpus x centroids scoring + the assignment
+    window for every sweep point — materializing the assignment is
+    exactly what building a real IVF index does."""
     e = t(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.col("embedding").alias("v"),
@@ -4340,10 +4163,10 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
 
 
 def _ivf_probe_pairs(cell: DataFrame, qscored: DataFrame, nprobe: int) -> DataFrame:
-    """(query_id, neighbor_id) of the IVF top-5 at a given probe width
-    over a prebuilt (cell, qscored) pair — s4's plan with nprobe as a
-    parameter (s4 itself is the nprobe=2 point with scores; the sweep
-    needs only the id pairs)."""
+    """(query_id, neighbor_id, score, rnk) of the IVF top-5 at a given
+    probe width over a prebuilt (cell, qscored) pair: each query probes
+    its ``nprobe`` closest cells and reranks their members by exact
+    cosine. s4 is the nprobe=2 point; s9's sweep keeps only the ids."""
     wq = Window.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("cid"))
     pr = (
         qscored.withColumn("rn", F.row_number().over(wq))
@@ -4357,10 +4180,8 @@ def _ivf_probe_pairs(cell: DataFrame, qscored: DataFrame, nprobe: int) -> DataFr
         .select("query_id", F.col("vec_id").alias("neighbor_id"), cand_cs.alias("score"))
     )
     wr = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rnk", F.row_number().over(wr))
-        .filter(F.col("rnk") <= 5)
-        .select("query_id", "neighbor_id")
+    return cand.withColumn("rnk", F.row_number().over(wr)).filter(
+        F.col("rnk") <= 5
     )
 
 
@@ -4391,35 +4212,9 @@ def _sql_ivf_recall_at(np_: int) -> str:
 @register(
     "s9_nprobe_sweep",
     oracle=f"""
-    WITH e AS (SELECT vec_id, {SQL_VEC} AS v FROM embeddings),
-    n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-    c AS (SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM n WHERE vec_id < 8),
-    assign AS (
-      SELECT a.vec_id, a.v, a.nrm, c.cid,
-             row_number() OVER (
-               PARTITION BY a.vec_id
-               ORDER BY list_dot_product(a.v, c.cv) / (a.nrm * c.cnrm) DESC, c.cid
-             ) AS rn
-      FROM n a, c
-    ),
-    cell AS (SELECT vec_id, v, nrm, cid AS cell FROM assign WHERE rn = 1),
-    probes AS (
-      SELECT q.vec_id AS query_id, q.v AS qv, q.nrm AS qnrm, c.cid AS cell,
-             row_number() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY list_dot_product(q.v, c.cv) / (q.nrm * c.cnrm) DESC, c.cid
-             ) AS rn
-      FROM n q, c WHERE q.vec_id < 3
-    ),
-    exact AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-               list_dot_product(q.v, b.v) / (q.nrm * b.nrm) AS score
-        FROM n q, n b WHERE q.vec_id < 3 AND b.vec_id <> q.vec_id
-      )
-      QUALIFY row_number() OVER (PARTITION BY query_id
-                                 ORDER BY score DESC, neighbor_id) <= 5
-    ),
+    WITH {_SQL_IVF_CELLS},
+    {_SQL_IVF_PROBES},
+    {_SQL_IVF_EXACT},
     {",".join(_sql_ivf_recall_at(np_) for np_ in (1, 2, 4))}
     SELECT nprobe, total_overlap,
            total_overlap / 15.0 AS mean_recall_at_5
@@ -4454,7 +4249,9 @@ def s9_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     qscored = qscored.localCheckpoint(eager=True)
     out = None
     for np_ in (1, 2, 4):
-        approx = _ivf_probe_pairs(cell, qscored, np_)
+        approx = _ivf_probe_pairs(cell, qscored, np_).select(
+            "query_id", "neighbor_id"
+        )
         rec = approx.join(exact, ["query_id", "neighbor_id"]).agg(
             F.lit(np_).cast("long").alias("nprobe"),
             F.count("*").cast("long").alias("total_overlap"),
@@ -4470,24 +4267,7 @@ def s9_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "seq3_curriculum_order",
     oracle=f"""
-    WITH s AS (
-      SELECT doc_id,
-             CAST(len({SQL_TOKENS}) AS DOUBLE) AS n,
-             CAST(len(list_filter({SQL_TOKENS},
-                  x -> x IN ('the','a','of','and','to','in','is','it','that','for'))) AS DOUBLE)
-               AS sw,
-             CAST(length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS DOUBLE)
-               AS np,
-             CAST(greatest(length(text), 1) AS DOUBLE) AS nc
-      FROM documents
-    ),
-    q AS (
-      SELECT doc_id,
-             least(n / 50.0, 1.0)
-               * (0.5 + 0.5 * least(CASE WHEN n > 0 THEN sw / n ELSE 0 END * 5.0, 1.0))
-               * (CASE WHEN np / nc > 0.2 THEN 0.5 ELSE 1.0 END) AS quality
-      FROM s
-    )
+    WITH {_sql_quality_ctes()}
     SELECT doc_id, round(quality, 6) AS quality,
            CAST(row_number() OVER (ORDER BY quality DESC, doc_id) AS BIGINT) AS position
     FROM q
@@ -4521,43 +4301,14 @@ _C3_Q, _C3_C = 0.5, 0.3
 @register(
     "c3_semantic_quality_filter",
     oracle=f"""
-    WITH e AS (SELECT vec_id, label, {SQL_VEC} AS v FROM embeddings),
-    ex AS (
-      SELECT label, vec_id, g.i AS pos, v[g.i] AS val
-      FROM e, unnest(generate_series(1, len(v))) AS g(i)
-    ),
-    cent AS (
-      SELECT label, pos,
-             CAST(SUM(CAST(val AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS cval
-      FROM ex GROUP BY label, pos
-    ),
-    carr AS (SELECT label, list(cval ORDER BY pos) AS cv FROM cent GROUP BY label),
+    WITH {_SQL_LABEL_CENTROIDS},
     coh AS (
       SELECT e.vec_id,
              e.label,
-             round(list_dot_product(e.v, c.cv)
-                   / (sqrt(list_dot_product(e.v, e.v))
-                      * sqrt(list_dot_product(c.cv, c.cv))), 6) AS cohesion
+             {_SQL_LABEL_COS} AS cohesion
       FROM e JOIN carr c ON e.label = c.label
     ),
-    s AS (
-      SELECT doc_id, lang,
-             CAST(len({SQL_TOKENS}) AS DOUBLE) AS n,
-             CAST(len(list_filter({SQL_TOKENS},
-                  x -> x IN ('the','a','of','and','to','in','is','it','that','for'))) AS DOUBLE)
-               AS sw,
-             CAST(length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS DOUBLE)
-               AS np,
-             CAST(greatest(length(text), 1) AS DOUBLE) AS nc
-      FROM documents
-    ),
-    q AS (
-      SELECT doc_id, lang,
-             least(n / 50.0, 1.0)
-               * (0.5 + 0.5 * least(CASE WHEN n > 0 THEN sw / n ELSE 0 END * 5.0, 1.0))
-               * (CASE WHEN np / nc > 0.2 THEN 0.5 ELSE 1.0 END) AS quality
-      FROM s
-    )
+    {_sql_quality_ctes("doc_id, lang")}
     SELECT q.doc_id, q.lang, coh.label,
            round(q.quality, 6) AS quality, coh.cohesion
     FROM q JOIN coh ON q.doc_id = coh.vec_id
@@ -4578,32 +4329,7 @@ def c3_semantic_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is an equi-join on the shared uniform id — one shuffle each side.
     Thresholds (quality >= 0.5, cohesion >= 0.3) are corpus-fit; the gate
     shape is what matters."""
-    e = t(spark, sf_dir, "embeddings")
-    ex = e.select("label", "vec_id", F.posexplode("embedding").alias("pos", "val"))
-    cent = ex.groupBy("label", "pos").agg(
-        (
-            F.sum(dec(F.col("val").cast("double"), 28, 12)).cast("double")
-            / F.count("val")
-        ).alias("cval")
-    )
-    carr = cent.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cval"))), lambda s: s.cval
-        ).alias("cv")
-    )
-    coh = e.join(F.broadcast(carr), "label").select(
-        "vec_id",
-        "label",
-        F.round(
-            VEC.cosine_prenormed(
-                F.col("embedding"),
-                F.col("cv"),
-                VEC.norm(F.col("embedding")),
-                VEC.norm(F.col("cv")),
-            ),
-            6,
-        ).alias("cohesion"),
-    )
+    coh = _label_cohesion(spark, sf_dir).withColumnRenamed("cos", "cohesion")
     d = t(spark, sf_dir, "documents")
     q = d.select("doc_id", "lang", TXT.quality_score(F.col("text")).alias("quality"))
     return (
@@ -4619,19 +4345,9 @@ def c3_semantic_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "d15_line_dedup",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, string_split(text, ' ') AS words FROM documents
-    ),
-    c AS (
-      SELECT doc_id, i AS chunk_idx,
-             array_to_string(words[(i*10+1):(i*10+10)], ' ') AS chunk_text
-      FROM w, UNNEST(generate_series(
-            0, CAST(ceil(len(words) / 10.0) AS BIGINT) - 1)) AS t(i)
-    ),
-    k AS (
+# Corpus-wide keep-first election over chunks ``c(doc_id, chunk_idx,
+# chunk_text)`` and per-doc reassembly (line_dedup / cdc_chunk_dedup).
+_SQL_KEEP_FIRST_CHUNKS = """k AS (
       SELECT doc_id, chunk_idx, chunk_text,
              doc_id = min(doc_id) OVER (PARTITION BY chunk_text) AS kept
       FROM c
@@ -4642,7 +4358,22 @@ def c3_semantic_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
            md5(COALESCE(string_agg(chunk_text, ' ' ORDER BY chunk_idx)
                           FILTER (WHERE kept), '')) AS cleaned_md5
     FROM k GROUP BY doc_id
-    """,
+"""
+
+
+@register(
+    "d15_line_dedup",
+    oracle=f"""
+    WITH w AS (
+      SELECT doc_id, string_split(text, ' ') AS words FROM documents
+    ),
+    c AS (
+      SELECT doc_id, i AS chunk_idx,
+             array_to_string(words[(i*10+1):(i*10+10)], ' ') AS chunk_text
+      FROM w, UNNEST(generate_series(
+            0, CAST(ceil(len(words) / 10.0) AS BIGINT) - 1)) AS t(i)
+    ),
+    {_SQL_KEEP_FIRST_CHUNKS}""",
     survey_ref="extension: C4-style global line-level dedup — fixed 10-word "
     "chunks deduplicated across the WHOLE corpus keep-first (min doc_id), "
     "documents reassembled from surviving chunks in original order. The "
@@ -4684,18 +4415,7 @@ def d15_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
              string_agg(word, ' ' ORDER BY pos) AS chunk_text
       FROM c0 GROUP BY 1, 2
     ),
-    k AS (
-      SELECT doc_id, chunk_idx, chunk_text,
-             doc_id = min(doc_id) OVER (PARTITION BY chunk_text) AS kept
-      FROM c
-    )
-    SELECT doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_chunks,
-           CAST(COUNT(*) FILTER (kept) AS BIGINT) AS n_kept,
-           md5(COALESCE(string_agg(chunk_text, ' ' ORDER BY chunk_idx)
-                          FILTER (WHERE kept), '')) AS cleaned_md5
-    FROM k GROUP BY doc_id
-    """,
+    {_SQL_KEEP_FIRST_CHUNKS}""",
     survey_ref="extension: content-defined chunking (CDC) dedup — chunk "
     "boundaries drawn from word-hash content (rolling-chunker property: an "
     "edit perturbs only the chunks it touches), corpus-wide keep-first "
@@ -4922,13 +4642,8 @@ _UNIMAX_KMAX = 4.0
 @register(
     "mix5_unimax_budget",
     oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, source, {_MIX_TOK_SQL} AS n_tokens FROM documents
-    ),
-    agg AS (
-      SELECT source, CAST(SUM(n_tokens) AS BIGINT) AS unique_tokens
-      FROM tok GROUP BY source
-    ),
+    WITH {_SQL_MIX_TOK},
+    {_SQL_MIX_UNIQUE},
     caps AS (
       SELECT source, unique_tokens,
              unique_tokens * {_UNIMAX_KMAX} AS cap,
@@ -5035,15 +4750,7 @@ def mix5_unimax_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "d17_semantic_dedup",
     oracle=f"""
-    WITH e_norm AS (
-      SELECT vec_id, {SQL_VEC} AS v FROM embeddings
-    ),
-    c0 AS (
-      SELECT vec_id AS cid, v AS cv FROM e_norm WHERE vec_id < {_KM_K}
-    ),
-    {_sql_kmeans_assign("c0", "a1")},
-    {_sql_kmeans_update("a1", "c1")},
-    {_sql_kmeans_assign("c1", "a2")},
+    WITH {_SQL_KMEANS_FIT},
     m AS (
       SELECT vec_id, cid, v, sqrt(list_dot_product(v, v)) AS nrm FROM a2
     ),
@@ -5114,36 +4821,58 @@ d17_semantic_dedup.__doc__ = d17_semantic_dedup.__doc__.format(tau=_SEMDEDUP_TAU
 
 _EPOCH_BUDGET_TOKENS = 10_000
 _EPOCH_MAX = 4.0
-
-
-@register(
-    "mix4_epoch_repeat",
-    oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, source, {_MIX_TOK_SQL} AS n_tokens FROM documents
-    ),
-    agg AS (
-      SELECT source, CAST(SUM(n_tokens) AS BIGINT) AS unique_tokens
-      FROM tok GROUP BY source
-    ),
-    wts AS (
+# mix4's epoch plan over ``agg(source, unique_tokens)``: sqrt weights
+# ``wts(source, unique_tokens, sw)``, their decimal-exact total ``tot(z)``,
+# and the capped per-source repeat factor.
+_SQL_EPOCH_WEIGHTS = f"""wts AS (
       SELECT source, unique_tokens,
              {_sql_pround("sqrt(CAST(unique_tokens AS DOUBLE))")} AS sw
       FROM agg
     ),
     tot AS (
       SELECT CAST(SUM(CAST(sw AS DECIMAL(28,10))) AS DOUBLE) AS z FROM wts
+    )"""
+_SQL_EPOCHS = _sql_pround(
+    f"least({_EPOCH_MAX}, {_EPOCH_BUDGET_TOKENS} * (sw / z)"
+    " / CAST(unique_tokens AS DOUBLE))"
+)
+
+
+def _epoch_weights(agg: DataFrame) -> DataFrame:
+    """(source, unique_tokens, sw, z): mix4's 6-dp sqrt weight per source
+    next to the decimal-exact total of all weights (a 1-row broadcast)."""
+    wts = agg.select(
+        "source",
+        "unique_tokens",
+        _pround(F.sqrt(F.col("unique_tokens").cast("double"))).alias("sw"),
     )
+    tot = wts.agg(F.sum(dec(F.col("sw"), 28, 10)).cast("double").alias("z"))
+    return wts.crossJoin(F.broadcast(tot))
+
+
+def _epochs_col():
+    """The per-source repeat factor over _epoch_weights' columns: the
+    budget share in tokens per unique token, capped at _EPOCH_MAX."""
+    return _pround(
+        F.least(
+            F.lit(_EPOCH_MAX),
+            F.lit(float(_EPOCH_BUDGET_TOKENS))
+            * (F.col("sw") / F.col("z"))
+            / F.col("unique_tokens").cast("double"),
+        )
+    )
+
+
+@register(
+    "mix4_epoch_repeat",
+    oracle=f"""
+    WITH {_SQL_MIX_TOK},
+    {_SQL_MIX_UNIQUE},
+    {_SQL_EPOCH_WEIGHTS}
     SELECT source, unique_tokens,
            {_sql_pround("sw / z")} AS weight,
-           {_sql_pround(
-               f"least({_EPOCH_MAX}, {_EPOCH_BUDGET_TOKENS} * (sw / z)"
-               " / CAST(unique_tokens AS DOUBLE))"
-           )} AS epochs,
-           CAST(floor(CAST(unique_tokens AS DOUBLE) * {_sql_pround(
-               f"least({_EPOCH_MAX}, {_EPOCH_BUDGET_TOKENS} * (sw / z)"
-               " / CAST(unique_tokens AS DOUBLE))"
-           )}) AS BIGINT) AS budget_tokens
+           {_SQL_EPOCHS} AS epochs,
+           CAST(floor(CAST(unique_tokens AS DOUBLE) * {_SQL_EPOCHS}) AS BIGINT) AS budget_tokens
     FROM wts, tot
     """,
     survey_ref="extension: data-constrained epoch planning — given a total "
@@ -5165,23 +4894,11 @@ def mix4_epoch_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", TXT.token_count(F.col("text")).alias("n_tokens")
     )
     agg = d.groupBy("source").agg(F.sum("n_tokens").cast("long").alias("unique_tokens"))
-    wts = agg.select(
+    epochs = _epochs_col()
+    return _epoch_weights(agg).select(
         "source",
         "unique_tokens",
-        _pround(F.sqrt(F.col("unique_tokens").cast("double"))).alias("sw"),
-    )
-    tot = wts.agg(F.sum(dec(F.col("sw"), 28, 10)).cast("double").alias("z"))
-    w = F.col("sw") / F.col("z")
-    epochs = _pround(
-        F.least(
-            F.lit(_EPOCH_MAX),
-            F.lit(float(_EPOCH_BUDGET_TOKENS)) * w / F.col("unique_tokens").cast("double"),
-        )
-    )
-    return wts.crossJoin(F.broadcast(tot)).select(
-        "source",
-        "unique_tokens",
-        _pround(w).alias("weight"),
+        _pround(F.col("sw") / F.col("z")).alias("weight"),
         epochs.alias("epochs"),
         F.floor(F.col("unique_tokens").cast("double") * epochs).cast("long").alias(
             "budget_tokens"
@@ -5277,15 +4994,14 @@ def _sql_pq_assign(cb: str, out: str) -> str:
     )"""
 
 
-@register(
-    "s10_pq_encode",
-    oracle=f"""
-    WITH e_norm AS (
-      SELECT vec_id, {SQL_VEC} AS v FROM embeddings
-    ),
-    subs AS (
+def _sql_pq_codebook(src: str) -> str:
+    """_pq_subvectors + _pq_trained_codebook in SQL over ``src(vec_id,
+    v)``: ``subs(vec_id, m, sub)``, the init codebook ``cb0``, its
+    assignment ``a1`` and the one-step Lloyd codebook ``cb1(m, code,
+    cw)``."""
+    return f"""subs AS (
       SELECT vec_id, m.m AS m, v[(m.m * {_PQ_SUB} + 1):((m.m + 1) * {_PQ_SUB})] AS sub
-      FROM e_norm, (SELECT unnest(generate_series(0, {_PQ_M - 1})) AS m) m
+      FROM {src}, (SELECT unnest(generate_series(0, {_PQ_M - 1})) AS m) m
     ),
     cb0 AS (
       SELECT m, vec_id AS code, sub AS cw FROM subs WHERE vec_id < {_PQ_K}
@@ -5300,7 +5016,16 @@ def _sql_pq_assign(cb: str, out: str) -> str:
         FROM a1 a, (SELECT unnest(generate_series(1, {_PQ_SUB})) AS pos) p
         GROUP BY a.m, a.code, p.pos
       ) GROUP BY m, code
+    )"""
+
+
+@register(
+    "s10_pq_encode",
+    oracle=f"""
+    WITH e_norm AS (
+      SELECT vec_id, {SQL_VEC} AS v FROM embeddings
     ),
+    {_sql_pq_codebook("e_norm")},
     {_sql_pq_assign("cb1", "a2")}
     SELECT m, code,
            CAST(COUNT(*) AS BIGINT) AS n_vectors,
@@ -5344,8 +5069,7 @@ def s10_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "s11_ivfpq_adc",
     oracle=f"""
-    WITH e AS (SELECT vec_id, {SQL_VEC} AS v FROM embeddings),
-    n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
+    WITH {_SQL_VEC_NORMS},
     c AS (SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM n WHERE vec_id < 8),
     assign AS (
       SELECT a.vec_id, a.nrm, c.cid,
@@ -5365,25 +5089,7 @@ def s10_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM n q, c WHERE q.vec_id < 3
     ),
     pr AS (SELECT query_id, qnrm, cell FROM probes WHERE rn <= 2),
-    subs AS (
-      SELECT vec_id, m.m AS m,
-             v[(m.m * {_PQ_SUB} + 1):((m.m + 1) * {_PQ_SUB})] AS sub
-      FROM e, (SELECT unnest(generate_series(0, {_PQ_M - 1})) AS m) m
-    ),
-    cb0 AS (
-      SELECT m, vec_id AS code, sub AS cw FROM subs WHERE vec_id < {_PQ_K}
-    ),
-    {_sql_pq_assign("cb0", "a1")},
-    cb1 AS (
-      SELECT m, code, list(mu ORDER BY pos) AS cw
-      FROM (
-        SELECT a.m, a.code, p.pos,
-               CAST(SUM(CAST(a.sub[p.pos] AS DECIMAL(38,12))) AS DOUBLE)
-                 / COUNT(*) AS mu
-        FROM a1 a, (SELECT unnest(generate_series(1, {_PQ_SUB})) AS pos) p
-        GROUP BY a.m, a.code, p.pos
-      ) GROUP BY m, code
-    ),
+    {_sql_pq_codebook("e")},
     {_sql_pq_assign("cb1", "a2")},
     codes AS (SELECT vec_id, m, code FROM a2),
     qsubs AS (SELECT vec_id AS query_id, m, sub FROM subs WHERE vec_id < 3),
@@ -5721,24 +5427,11 @@ def sk3_countmin_heavyhitters(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
       FROM tok GROUP BY 1, 2
     ),
-    agg AS (
-      SELECT source, CAST(SUM(n_tokens) AS BIGINT) AS unique_tokens
-      FROM tok GROUP BY source
-    ),
-    wts AS (
-      SELECT source, unique_tokens,
-             {_sql_pround("sqrt(CAST(unique_tokens AS DOUBLE))")} AS sw
-      FROM agg
-    ),
-    tot AS (
-      SELECT CAST(SUM(CAST(sw AS DECIMAL(28,10))) AS DOUBLE) AS z FROM wts
-    ),
+    {_SQL_MIX_UNIQUE},
+    {_SQL_EPOCH_WEIGHTS},
     plan AS (
       SELECT source,
-             {_sql_pround(
-                 f"least({_EPOCH_MAX}, {_EPOCH_BUDGET_TOKENS} * (sw / z)"
-                 " / CAST(unique_tokens AS DOUBLE))"
-             )} AS epochs
+             {_SQL_EPOCHS} AS epochs
       FROM wts, tot
     )
     SELECT c.source, c.split, c.n_docs, c.n_tokens, p.epochs,
@@ -5763,10 +5456,7 @@ def c4_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         TXT.token_count(F.col("text")).alias("n_tokens"),
-        F.when(DD._hash64(F.col("doc_id").cast("string")) % 100 < 80, "train")
-        .when(DD._hash64(F.col("doc_id").cast("string")) % 100 < 90, "val")
-        .otherwise("test")
-        .alias("split"),
+        _split_col().alias("split"),
     )
     cell = d.groupBy("source", "split").agg(
         F.count("*").alias("n_docs"),
@@ -5775,21 +5465,7 @@ def c4_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = d.groupBy("source").agg(
         F.sum("n_tokens").cast("long").alias("unique_tokens")
     )
-    wts = agg.select(
-        "source",
-        "unique_tokens",
-        _pround(F.sqrt(F.col("unique_tokens").cast("double"))).alias("sw"),
-    )
-    tot = wts.agg(F.sum(dec(F.col("sw"), 28, 10)).cast("double").alias("z"))
-    epochs = _pround(
-        F.least(
-            F.lit(_EPOCH_MAX),
-            F.lit(float(_EPOCH_BUDGET_TOKENS))
-            * (F.col("sw") / F.col("z"))
-            / F.col("unique_tokens").cast("double"),
-        )
-    )
-    plan = wts.crossJoin(F.broadcast(tot)).select("source", epochs.alias("epochs"))
+    plan = _epoch_weights(agg).select("source", _epochs_col().alias("epochs"))
     return cell.join(F.broadcast(plan), "source").select(
         "source",
         "split",
@@ -5994,10 +5670,8 @@ def _sql_bm25_values() -> str:
     )
 
 
-@register(
-    "bm1_bm25_topk",
-    oracle=f"""
-    WITH d AS (SELECT doc_id, {SQL_TOKENS} AS toks FROM documents),
+# _bm25_scored in SQL: ``scored(query_id, doc_id, score)`` (bm1, bm2).
+_SQL_BM25_SCORED = f"""WITH d AS (SELECT doc_id, {SQL_TOKENS} AS toks FROM documents),
     ex AS (SELECT doc_id, unnest(toks) AS term FROM d),
     tf AS (
       SELECT doc_id, term, CAST(COUNT(*) AS DOUBLE) AS tf
@@ -6024,7 +5698,13 @@ def _sql_bm25_values() -> str:
       JOIN dfreq ON dfreq.term = q.term
       JOIN dl ON dl.doc_id = tf.doc_id, stats s
       GROUP BY 1, 2
-    )
+    )"""
+
+
+@register(
+    "bm1_bm25_topk",
+    oracle=f"""
+    {_SQL_BM25_SCORED}
     SELECT query_id, doc_id,
            CAST(row_number() OVER (PARTITION BY query_id
                                    ORDER BY score DESC, doc_id) AS BIGINT) AS rnk,
@@ -6060,34 +5740,7 @@ def bm1_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "bm2_hybrid_rrf",
     oracle=f"""
-    WITH d AS (SELECT doc_id, {SQL_TOKENS} AS toks FROM documents),
-    ex AS (SELECT doc_id, unnest(toks) AS term FROM d),
-    tf AS (
-      SELECT doc_id, term, CAST(COUNT(*) AS DOUBLE) AS tf
-      FROM ex GROUP BY 1, 2
-    ),
-    dl AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dlen FROM d),
-    stats AS (
-      SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-             SUM(dlen) / COUNT(*) AS avglen
-      FROM dl
-    ),
-    dfreq AS (SELECT term, CAST(COUNT(*) AS DOUBLE) AS df FROM tf GROUP BY 1),
-    q(query_id, term) AS (VALUES {_sql_bm25_values()}),
-    scored AS (
-      SELECT q.query_id, tf.doc_id,
-             CAST(SUM(CAST(
-               {_sql_pround("ln((s.n - dfreq.df + 0.5) / (dfreq.df + 0.5) + 1)")}
-                 * tf.tf * ({_BM25_K1} + 1)
-                 / (tf.tf + {_BM25_K1}
-                    * (1 - {_BM25_B} + {_BM25_B} * dl.dlen / s.avglen))
-             AS DECIMAL(38,12))) AS DOUBLE) AS score
-      FROM q
-      JOIN tf ON tf.term = q.term
-      JOIN dfreq ON dfreq.term = q.term
-      JOIN dl ON dl.doc_id = tf.doc_id, stats s
-      GROUP BY 1, 2
-    ),
+    {_SQL_BM25_SCORED},
     lex AS (
       SELECT query_id, doc_id,
              row_number() OVER (PARTITION BY query_id
@@ -6292,14 +5945,7 @@ def tx14_hashed_ngram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents").select(
         "doc_id", TXT.tokens(F.col("text")).alias("tk")
     )
-    bi = F.when(
-        F.size("tk") >= 2,
-        F.expr(
-            "transform(sequence(1, size(tk) - 1), "
-            "i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1)))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    grams = d.select("doc_id", F.explode(F.concat(F.col("tk"), bi)).alias("g"))
+    grams = d.select("doc_id", F.explode(_uni_bigrams()).alias("g"))
     bucket = DD._hash64(F.col("g")) % 1024
     milli = (
         DD._hash64(F.concat(F.lit("w#"), bucket.cast("string"))) % 2001
@@ -6402,17 +6048,10 @@ def mix6_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents").select(
         "doc_id", "source", TXT.tokens(F.col("text")).alias("tk")
     )
-    bi = F.when(
-        F.size("tk") >= 2,
-        F.expr(
-            "transform(sequence(1, size(tk) - 1), "
-            "i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1)))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     grams = d.select(
         "doc_id",
         "source",
-        F.explode(F.concat(F.col("tk"), bi)).alias("g"),
+        F.explode(_uni_bigrams()).alias("g"),
     ).select(
         "doc_id", "source", (DD._hash64(F.col("g")) % _DSIR_B).alias("b")
     )
@@ -7782,22 +7421,7 @@ _S13_MAX_SETS = 16
       FROM embeddings
     ),
     {_sql_mp_design(_S13_T, _S13_MAX_SETS)},
-    lcg(k, state) AS (
-      SELECT 0, (CAST({_LCG_SEED} AS HUGEINT) * {_LCG_A} + {_LCG_C})
-                % CAST({_LCG_M} AS HUGEINT)
-      UNION ALL
-      SELECT k + 1, (state * {_LCG_A} + {_LCG_C}) % CAST({_LCG_M} AS HUGEINT)
-      FROM lcg WHERE k + 1 < (SELECT nbits * dim * r_sets FROM w)
-    ),
-    psets AS (
-      SELECT CAST((k // dim) // nbits AS INT) AS r,
-             CAST((k // dim) % nbits AS INT) AS i,
-             list(CASE WHEN (CAST(state AS BIGINT) >> 32) & 1 = 1
-                       THEN CAST(1.0 AS DOUBLE)
-                       ELSE CAST(-1.0 AS DOUBLE) END
-                  ORDER BY k) AS plane
-      FROM lcg, w GROUP BY 1, 2
-    ),
+    {_SQL_MP_PLANES},
     y AS (
       SELECT vec_id,
              list_transform({SQL_VEC},
@@ -7838,19 +7462,7 @@ _S13_MAX_SETS = 16
       FROM q qq CROSS JOIN psets p
       GROUP BY qq.query_id, p.r
     ),
-    bits AS (
-      SELECT i FROM range(16) t(i) WHERE i < (SELECT nbits FROM w)
-    ),
-    masks AS (
-      SELECT CAST(0 AS BIGINT) AS mask
-      UNION ALL
-      SELECT CAST(1 AS BIGINT) << i FROM bits
-      WHERE (SELECT radius FROM w) >= 1
-      UNION ALL
-      SELECT (CAST(1 AS BIGINT) << b1.i) | (CAST(1 AS BIGINT) << b2.i)
-      FROM bits b1, bits b2
-      WHERE b1.i < b2.i AND (SELECT radius FROM w) >= 2
-    ),
+    {_SQL_MP_MASKS},
     cand AS (
       SELECT DISTINCT qb.query_id, c.vec_id AS neighbor_id
       FROM qbm qb CROSS JOIN masks m
@@ -8068,9 +7680,12 @@ def s13_mips_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 _D26_N = 10
 
 
-@register(
-    "d26_substring_dedup",
-    oracle=f"""
+def _sql_substring_spans(hits: str) -> str:
+    """d26/st12 oracle: every ``_D26_N``-token window's gram hash
+    ``g(doc_id, p, g)`` (operators/dedup.token_gram_rows), the ``hits``
+    CTEs ending in the duplicated windows ``h(doc_id, p)``, then
+    maximal_spans' gaps-and-islands assembly."""
+    return f"""
     WITH tk AS (SELECT doc_id, {SQL_TOKENS} AS tk FROM documents),
     g AS (
       SELECT doc_id, i AS p,
@@ -8081,8 +7696,7 @@ _D26_N = 10
       FROM tk, UNNEST(generate_series(1, len(tk) - {_D26_N} + 1)) AS t(i)
       WHERE len(tk) >= {_D26_N}
     ),
-    dup AS (SELECT g FROM g GROUP BY g HAVING COUNT(DISTINCT doc_id) >= 2),
-    h AS (SELECT doc_id, p FROM g JOIN dup USING (g)),
+    {hits},
     isl AS (
       SELECT doc_id, p,
              p - row_number() OVER (PARTITION BY doc_id ORDER BY p) AS grp
@@ -8093,7 +7707,15 @@ _D26_N = 10
            CAST(MAX(p) + {_D26_N} - 1 AS BIGINT) AS end_pos,
            CAST(MAX(p) - MIN(p) + {_D26_N} AS BIGINT) AS span_len
     FROM isl GROUP BY doc_id, grp
-    """,
+    """
+
+
+@register(
+    "d26_substring_dedup",
+    oracle=_sql_substring_spans(
+        """dup AS (SELECT g FROM g GROUP BY g HAVING COUNT(DISTINCT doc_id) >= 2),
+    h AS (SELECT doc_id, p FROM g JOIN dup USING (g))"""
+    ),
     survey_ref="extension: EXACT SUBSTRING dedup (Lee et al. 2022 "
     "ExactSubstr) — the missing dedup modality between d15 (fixed "
     "10-word aligned lines) and d18 (CDC chunks): maximal spans of >= 10 "
@@ -8147,33 +7769,13 @@ def d26_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st12_stream_substring_dedup",
-    oracle=f"""
-    WITH tk AS (SELECT doc_id, {SQL_TOKENS} AS tk FROM documents),
-    g AS (
-      SELECT doc_id, i AS p,
-             {sql_hash64(
-                 "array_to_string(list_slice(tk, i, i + "
-                 + str(_D26_N - 1) + "), ' ')"
-             )} AS g
-      FROM tk, UNNEST(generate_series(1, len(tk) - {_D26_N} + 1)) AS t(i)
-      WHERE len(tk) >= {_D26_N}
-    ),
-    firstg AS (SELECT g, MIN(doc_id) AS first_doc FROM g GROUP BY g),
+    oracle=_sql_substring_spans(
+        """firstg AS (SELECT g, MIN(doc_id) AS first_doc FROM g GROUP BY g),
     h AS (
       SELECT x.doc_id, x.p FROM g x JOIN firstg f ON x.g = f.g
       WHERE x.doc_id > f.first_doc
+    )"""
     ),
-    isl AS (
-      SELECT doc_id, p,
-             p - row_number() OVER (PARTITION BY doc_id ORDER BY p) AS grp
-      FROM h
-    )
-    SELECT doc_id,
-           CAST(MIN(p) AS BIGINT) AS start_pos,
-           CAST(MAX(p) + {_D26_N} - 1 AS BIGINT) AS end_pos,
-           CAST(MAX(p) - MIN(p) + {_D26_N} AS BIGINT) AS span_len
-    FROM isl GROUP BY doc_id, grp
-    """,
     survey_ref="§2.13 Structured Streaming x substring-dedup extension: "
     "d26 run continuously via foreachBatch with a gram-hash state store "
     "(streaming/dedup.py incremental_substring_sink) in the keep-first "
@@ -8190,28 +7792,14 @@ def st12_stream_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-joined per micro-batch — the st3/st11 state discipline; per-batch
     span assembly is d26's window. Sinks are idempotent under replay: each
     table's manifest flip records the batch id with its rows."""
-    import tempfile
-
-    from nyc_open_data_pipeline_spark.pipeline.storage import ParquetStorage
     from nyc_open_data_pipeline_spark.streaming.dedup import (
         run_incremental_substring,
     )
-    from nyc_open_data_pipeline_spark.streaming.replay import ordered_range_chunks
-    from nyc_open_data_pipeline_spark.streaming.windows import cached_fixture
 
-    storage = ParquetStorage(tempfile.mkdtemp(prefix="st12_"))
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    stream_dir = cached_fixture(
-        spark, sf_dir, "doc4range",
-        lambda p: ordered_range_chunks(docs, "doc_id", p, n_chunks=4),
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
+    storage = _stream_sink_storage("st12_")
     run_incremental_substring(
-        spark, stream, storage.path("out"), storage.path("state")
+        spark, _doc4range_stream(spark, sf_dir), storage.path("out"),
+        storage.path("state"),
     )
     return storage.read(spark, "out").select(
         "doc_id", "start_pos", "end_pos", "span_len"

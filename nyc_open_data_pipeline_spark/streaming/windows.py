@@ -45,23 +45,6 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    stream: DataFrame,
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(dec("value", 28, 4)).cast("double").alias("total_value"),
-        )
-        .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
-    )
-
-
 def session_counts(
     stream: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
 ) -> DataFrame:

@@ -13,9 +13,11 @@ from nyc_open_data_pipeline_spark.functions.vectors import cosine_topk_pandas
 from nyc_open_data_pipeline_spark.operators.dedup import (
     dedup_keep_first,
     dedup_keep_last,
+    cap_buckets,
     hamming64,
-    jaccard_pairs,
+    jaccard_pairs_hashed,
     minhash_lsh_pairs,
+    shingle_hash_sets,
     simhash64,
 )
 
@@ -51,7 +53,10 @@ def test_minhash_lsh_finds_planted_near_dup(spark):
 def test_jaccard_scores(spark):
     docs = _docs(spark)
     cand = spark.createDataFrame([(1, 2), (1, 3)], ["id_a", "id_b"])
-    scores = {(r["id_a"], r["id_b"]): r["jaccard"] for r in jaccard_pairs(docs, cand).collect()}
+    scores = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in jaccard_pairs_hashed(shingle_hash_sets(docs), cand).collect()
+    }
     assert scores[(1, 2)] > 0.6  # near-dup: long shared shingle prefix
     assert scores[(1, 3)] == 0.0
 
@@ -645,6 +650,22 @@ def test_lsh_bucket_cap_adversarial(spark):
     assert n == 50 * 49 // 2
     # 4 bands x (5000 - 50) rows over cap
     assert obs.get["lsh_rows_over_cap"] == 4 * 4950
+
+
+def test_cap_buckets_keeps_lowest_ids_per_bucket(spark):
+    """The shared occupancy cap on caller-named bucket/id columns: a
+    degenerate 5k-row bucket keeps exactly its 50 lowest ids, and a small
+    second bucket is untouched."""
+    rows = spark.range(5010).select(
+        F.col("id").alias("doc_id"),
+        F.lit(0).alias("blk"),
+        F.when(F.col("id") < 5000, 7).otherwise(9).alias("bv"),
+    )
+    kept = cap_buckets(rows, 50, ("blk", "bv"), "doc_id").collect()
+    by_bucket = {}
+    for r in kept:
+        by_bucket.setdefault(r["bv"], set()).add(r["doc_id"])
+    assert by_bucket == {7: set(range(50)), 9: set(range(5000, 5010))}
 
 
 def test_lsh_bucket_cap_no_effect_below_cap(spark):
@@ -1258,24 +1279,9 @@ def test_cap_metrics_zero_at_gate_scale(spark):
     assert obs_emb.get["emb_rows_over_cap"] == 0
 
     # d11's block buckets: direct distributional check against the same cap
-    from nyc_open_data_pipeline_spark.plans.llmdata import (
-        _SH_BLOCK_BITS,
-        _SH_BLOCKS,
-        _shared_simhash,
-    )
+    from nyc_open_data_pipeline_spark.plans.llmdata import _simhash_blocks
 
-    mask = (1 << _SH_BLOCK_BITS) - 1
-    blocks = _shared_simhash(spark, sf01).select(
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("h"), i * _SH_BLOCK_BITS)
-                    .bitwiseAND(F.lit(mask))
-                    for i in range(_SH_BLOCKS)
-                ]
-            )
-        ).alias("blk", "bv")
-    )
+    blocks = _simhash_blocks(spark, sf01)
     mx = (
         blocks.groupBy("blk", "bv").count().agg(F.max("count")).collect()[0][0]
     )
