@@ -20,11 +20,6 @@ from pyspark.sql import functions as F
 from nyc_open_data_pipeline_spark.plans.common import t
 from nyc_open_data_pipeline_spark.plans.registry import register
 
-# Ordered funnel steps over the synthetic product events. Each step must
-# happen strictly AFTER the user's earliest completion of the previous step
-# (the standard "ordered funnel" semantics, not mere set membership).
-_FUNNEL_STEPS = ("view", "click", "purchase")
-
 
 @register(
     "f1_funnel",

@@ -49,7 +49,8 @@ def sql_davg(expr: str, alias: str, prec: int = 28, scale: int = 4) -> str:
 # fixtures) is paid in pass 1 and invisible in the min — honest amortization
 # requires REPORTING it. The session cache records each labelled build;
 # bench.py drains after the warm-up (discarding sf0.001 builds) and again at
-# the end, and emits one {"metric": "cache_build_sec", ...} line.
+# the end: per-label seconds on its detail line, their total as the summary's
+# cache_build_sec.
 drain_cache_build_secs = SESSION_CACHE.drain_build_secs
 
 

@@ -42,17 +42,8 @@ SEMANTIC_CONFS = {
 
 
 def ensure_semantic_confs(spark: SparkSession) -> None:
-    """Pin the semantics-critical confs on a possibly-foreign session.
-
-    SPARK_GRAFT_ANSI=true flips the ansi pin to TRUE — the dual-run probe
-    (tests/test_plans.py::test_relational_core_ansi_dual_run) that proves
-    the relational core does not silently depend on non-ANSI NULL
-    semantics beyond T1's documented coercing-cast sites. Not a
-    production mode: T1-family queries are EXPECTED to raise under it."""
-    confs = dict(SEMANTIC_CONFS)
-    if os.environ.get("SPARK_GRAFT_ANSI") == "true":
-        confs["spark.sql.ansi.enabled"] = "true"
-    for k, v in confs.items():
+    """Pin the semantics-critical confs on a possibly-foreign session."""
+    for k, v in SEMANTIC_CONFS.items():
         if spark.conf.get(k, None) != v:
             spark.conf.set(k, v)
 

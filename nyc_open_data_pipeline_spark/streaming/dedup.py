@@ -46,7 +46,6 @@ from nyc_open_data_pipeline_spark.pipeline.schema import TableSchema
 from nyc_open_data_pipeline_spark.pipeline.storage import ParquetStorage, table_at
 from nyc_open_data_pipeline_spark.session import retire_local_checkpoint
 from nyc_open_data_pipeline_spark.streaming.windows import (
-    begin_stream_pass,
     record_batch_metrics,
     record_frame_plan,
 )
@@ -132,7 +131,6 @@ def incremental_dedup_sink(spark: SparkSession, out_dir: str):
     manifest flip, so a replay either finds the id recorded (no-op) or
     finds nothing of the batch visible and recomputes it from the same
     pre-batch seen-set."""
-    _pass = begin_stream_pass()  # one token per sink construction = per pass
     storage, table = table_at(out_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -154,7 +152,6 @@ def incremental_dedup_sink(spark: SparkSession, out_dir: str):
             batch_id=batch_id,
             n_out=n_out,
             sec=round(time.perf_counter() - t0, 3),
-            pass_token=_pass,
         )
 
     return process
@@ -195,7 +192,6 @@ def incremental_neardup_sink(spark: SparkSession, out_dir: str, state_dir: str):
 
     Idempotence under checkpoint replay: the state table publishes first
     and the output last (see the module docstring)."""
-    _pass = begin_stream_pass()
     out_st, out = table_at(out_dir)
     state_st, state = table_at(state_dir)
 
@@ -248,7 +244,6 @@ def incremental_neardup_sink(spark: SparkSession, out_dir: str, state_dir: str):
             n_out=n_out,
             n_new_keys=n_new_keys,
             sec=round(time.perf_counter() - t0, 3),
-            pass_token=_pass,
         )
 
     return process
@@ -301,7 +296,6 @@ def incremental_substring_sink(spark: SparkSession, out_dir: str, state_dir: str
     streamed spans equal the batch keep-first answer exactly (st3's
     equivalence argument). Same idempotence discipline as the near-dup
     sink: state published first, output last, seen-set read ``batch < id``."""
-    _pass = begin_stream_pass()
     out_st, out = table_at(out_dir)
     state_st, state = table_at(state_dir)
 
@@ -349,7 +343,6 @@ def incremental_substring_sink(spark: SparkSession, out_dir: str, state_dir: str
             batch_id=batch_id,
             n_out=n_out,
             sec=round(time.perf_counter() - t0, 3),
-            pass_token=_pass,
         )
         retire_local_checkpoint(grams)
 

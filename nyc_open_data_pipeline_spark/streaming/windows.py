@@ -112,22 +112,7 @@ STREAM_BATCH_METRICS: list[dict] = []
 _STREAM_METRIC_CAP = 1024
 
 
-# Explicit pass token (ADVICE r8): bench.py previously inferred pass
-# boundaries from batch-id monotonicity, which silently merges a
-# checkpoint-resumed pass (ids keep increasing) into the prior pass. Each
-# sink FACTORY call bumps the token and stamps it on every record its
-# process closure emits; bench groups on (sink, pass_token) instead.
-_PASS_TOKEN = 0
-
-
-def begin_stream_pass() -> int:
-    global _PASS_TOKEN
-    _PASS_TOKEN += 1
-    return _PASS_TOKEN
-
-
 def record_batch_metrics(**m) -> None:
-    m.setdefault("pass_token", _PASS_TOKEN)
     STREAM_BATCH_METRICS.append(m)
     if len(STREAM_BATCH_METRICS) > _STREAM_METRIC_CAP:
         del STREAM_BATCH_METRICS[: len(STREAM_BATCH_METRICS) - _STREAM_METRIC_CAP]
@@ -213,7 +198,7 @@ def cached_fixture(spark, sf_dir: str, tag: str, build) -> str:
     in-session corpus regeneration rebuilds the fixture instead of serving
     stale replay chunks while the oracle reads the new parquet
     (cache.SessionCache). Fixture builds run real write jobs, so their
-    seconds land on the bench's cache_build_sec line."""
+    seconds land in the bench's cache_build_sec."""
     import shutil
     import tempfile
 

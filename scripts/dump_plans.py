@@ -4,10 +4,10 @@
 Usage: PYTHONPATH=. python scripts/dump_plans.py <tag> <query> [<query> ...]
 Round dir defaults to r14; override with SPARK_GRAFT_PLANS_ROUND.
 
-The optimization-round evidence artifact: the judge cannot run Spark, so every
-plan claim in OPTIMIZATION_rNN.md is backed by a committed before/after pair
-produced by this script (guide §7.2). Plans are captured at sf0.1 (the bench
-scale) with the same session the bench uses.
+A working aid for plan inspection: dump a before/after pair around a change
+and diff it. The dumps are local scratch output, not committed files (the
+repo-root plans/ directory is git-ignored). Plans are captured at sf0.1 (the
+bench scale) with the same session the bench uses.
 """
 
 from __future__ import annotations

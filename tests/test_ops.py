@@ -863,48 +863,6 @@ def test_write_bucketed_reclaims_orphan_location(spark, sf_dir):
         )
 
 
-def test_compaction_reduces_files_and_preserves_data(spark, tmp_path):
-    from nyc_open_data_pipeline_spark.operators.compact import compact
-
-    path = str(tmp_path / "tbl")
-    df = spark.range(1000).selectExpr("id", "id % 7 AS v")
-    df.repartition(20).write.parquet(path)
-    import os
-
-    n_before = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    assert n_before >= 10
-    stats = compact(spark, path, target_bytes=1 << 30)
-    assert stats.partitions_compacted == 1
-    assert stats.files_after < stats.files_before
-    n_after = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    assert n_after == 1  # 1000 tiny rows << 1 GiB target -> single file
-    got = spark.read.parquet(path)
-    assert got.count() == 1000
-    assert got.agg(F.sum("v")).collect()[0][0] == df.agg(F.sum("v")).collect()[0][0]
-    # idempotence: a second run touches nothing
-    stats2 = compact(spark, path, target_bytes=1 << 30)
-    assert stats2.partitions_compacted == 0
-
-
-def test_compaction_partitioned_skips_dense_partitions(spark, tmp_path):
-    from nyc_open_data_pipeline_spark.operators.compact import compact
-
-    path = str(tmp_path / "ptbl")
-    # p=0 fragmented (10 files), p=1 already dense (1 file)
-    spark.range(500).selectExpr("id", "0 AS p").repartition(10).write.partitionBy(
-        "p"
-    ).parquet(path)
-    spark.range(500, 600).selectExpr("id", "1 AS p").coalesce(1).write.mode(
-        "append"
-    ).partitionBy("p").parquet(path)
-    stats = compact(spark, path, target_bytes=1 << 30)
-    assert stats.partitions_seen == 2
-    assert stats.partitions_compacted == 1
-    got = spark.read.parquet(path)
-    assert got.count() == 600
-    assert got.filter("p = 1").count() == 100
-
-
 def test_bloom_membership_no_false_negatives(spark, sf_dir):
     """Bloom invariant: a true member may false-positive but can NEVER false-
     negative — every is_member=1 probe must have maybe_member=1."""
