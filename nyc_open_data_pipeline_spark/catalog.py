@@ -14,7 +14,6 @@ single files; Catalyst partition pruning replaces the reference's indexes.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -87,8 +86,7 @@ _EXPRESSION_HEAVY = {"documents", "embeddings"}
 # current plans while large inputs get spill-free widths with NO knob.
 # Within a session the width only grows, so scale switches don't flap. This
 # function is the conf's only writer, so the value the conf holds is the
-# session's high-water mark. SPARK_GRAFT_SHUFFLE_PARTITIONS remains as an
-# explicit operator override.
+# session's high-water mark.
 _AUTOSIZE_TARGET_DISK_BYTES = 32 * 1024 * 1024
 _AUTOSIZE_MAX = 4096
 _INITIAL_PARTITIONS = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
@@ -111,14 +109,6 @@ def _dir_input_bytes(sf_dir: str) -> int:
 def autosize_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     """Size AQE's initial shuffle-partition count from the input scale.
     Returns the target in effect (for tests/telemetry)."""
-    manual = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    if manual:
-        # explicit operator override: it must actually take effect, even
-        # after the autosizer raised the high-water in this session — pin
-        # initialPartitionNum to the override and report it as the target
-        t = int(manual)
-        spark.conf.set(_INITIAL_PARTITIONS, str(t))
-        return t
     par = spark.sparkContext.defaultParallelism
     target = max(
         par,
@@ -132,32 +122,6 @@ def autosize_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
         spark.conf.set(_INITIAL_PARTITIONS, str(target))
         return target
     return high_water
-
-
-def _dir_slug(sf_dir: str) -> str:
-    """Filesystem path -> identifier-safe slug for per-scale table names."""
-    return re.sub(r"[^A-Za-z0-9]+", "_", os.path.abspath(sf_dir)).strip("_")
-
-
-# Marker property recording that a bucketed copy was written from load_table
-# output (timestamp normalization applied). Checked before serving.
-NORMALIZED_PROP = "spark_graft.normalized"
-
-
-def _bucketed_key(spark: SparkSession, table: str) -> tuple:
-    """Session-cache key of a bucketed table's serving verdict; a rewrite
-    of the table (operators/bucketing.write_bucketed) invalidates it."""
-    return ("_bucketed_is_normalized", spark.sparkContext.applicationId, table)
-
-
-def _bucketed_is_normalized(spark: SparkSession, table: str) -> bool:
-    def probe() -> bool:
-        rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-        return any(
-            r["key"] == NORMALIZED_PROP and r["value"] == "true" for r in rows
-        )
-
-    return SESSION_CACHE.get(_bucketed_key(spark, table), probe)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -179,8 +143,6 @@ def _probe_schema(spark: SparkSession, sf_dir: str, name: str, path: str):
     instance makes two-role self-joins ambiguous — q8's nation-x-nation
     join failed analysis under a frame cache) lets every call build a fresh
     relation with spark.read.schema(...), skipping the inference.
-    Bucketed-layout mode bypasses the probe (its table choice depends on
-    session-catalog state, not just the dir).
 
     Cache-key scope note (ADVICE r13): the probed schema depends on
     session-level confs (nanosAsLong, TIMESTAMP_NTZ inference), which are
@@ -207,23 +169,6 @@ def _probe_schema(spark: SparkSession, sf_dir: str, name: str, path: str):
 
 
 def _build_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Bucketed-layout opt-in (operators/bucketing): when the session catalog
-    # holds a pre-bucketed copy (written once via write_bucketed, paying the
-    # join shuffle at write time) and the operator asks for it, serve that —
-    # equi-joins between identically-bucketed facts then plan with NO
-    # Exchange. Opt-in by env so the parquet path stays the default and the
-    # oracle contract is unaffected (same rows, different physical layout).
-    if os.environ.get("SPARK_GRAFT_USE_BUCKETED") == "1":
-        # the table name encodes the scale dir: a bucketed copy built from
-        # one scale can never be served for another; the NORMALIZED marker
-        # property (set by operators/bucketing.write_bucketed when its input
-        # came through load_table) proves the copy has the timestamp
-        # normalization below baked in — a bucketed table written from a raw
-        # spark.read.parquet would silently skip it (round-6 ADVICE), so an
-        # unmarked table is ignored rather than served.
-        bt = f"sg_bucketed_{_dir_slug(sf_dir)}_{name}"
-        if spark.catalog.tableExists(bt) and _bucketed_is_normalized(spark, bt):
-            return spark.table(bt)
     path = table_path(sf_dir, name)
     schema, nanos_cols, row_groups = _probe_schema(spark, sf_dir, name, path)
     # explicit schema: skips per-call footer inference (the probe above is

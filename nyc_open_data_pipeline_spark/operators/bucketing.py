@@ -18,9 +18,6 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from nyc_open_data_pipeline_spark.cache import SESSION_CACHE
-from nyc_open_data_pipeline_spark.catalog import NORMALIZED_PROP, _bucketed_key
-
 # Entry names a managed Spark parquet write leaves behind — anything else in
 # the directory means it is NOT ours to delete.
 _MANAGED_ENTRY = ("part-", "_SUCCESS", "_committed_", "_started_", "_temporary")
@@ -54,17 +51,9 @@ def write_bucketed(
     key: str | list[str],
     buckets: int = 32,
     sort: bool = True,
-    normalized: bool = False,
 ) -> None:
     """Write ``df`` as a bucketed (and bucket-sorted) catalog table. At
-    production scale pick buckets so each bucket file is ~128 MB-1 GB.
-
-    Pass ``normalized=True`` ONLY when ``df`` came through
-    ``catalog.load_table`` (timestamp normalization applied): it stamps the
-    marker property ``catalog.NORMALIZED_PROP`` that ``load_table`` checks
-    before serving the bucketed copy in place of the parquet path — an
-    unmarked table is never served, so a copy written from a raw
-    ``spark.read.parquet`` cannot silently skip normalization."""
+    production scale pick buckets so each bucket file is ~128 MB-1 GB."""
     keys = [key] if isinstance(key, str) else key
     sess = df.sparkSession
     if "." in table:
@@ -103,15 +92,6 @@ def write_bucketed(
             raise
         shutil.rmtree(orphan)
         writer.saveAsTable(table)
-    if normalized:
-        df.sparkSession.sql(
-            f"ALTER TABLE {table} SET TBLPROPERTIES ('{NORMALIZED_PROP}'='true')"
-        )
-    # a rewrite changes the marker's truth for this table: drop the cached
-    # serving verdict so load_table re-reads the table properties (a stale
-    # True would serve an unnormalized overwrite; a stale False would
-    # permanently bypass a now-valid copy)
-    SESSION_CACHE.invalidate(_bucketed_key(sess, table))
 
 
 def plan_string(df: DataFrame) -> str:

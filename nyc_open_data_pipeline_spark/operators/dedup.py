@@ -920,7 +920,7 @@ def star_components(
     rule) and convergence is an EXACT multiset check (counts equal +
     exceptAll empty) on the canonical edge set, not a heuristic.
 
-    SCRATCH RETIREMENT (round 9 — the gr1/gr2 disk-light discipline):
+    SCRATCH RETIREMENT (round 9):
     the superseded round's checkpoint blocks are freed as soon as the
     convergence check has consumed them — via the LogicalRDD's own RDD
     (``session.retire_local_checkpoint``; a plain DataFrame.unpersist
@@ -929,10 +929,9 @@ def star_components(
     ContextCleaner retire the round's shuffle files before round k+2.
     Without this every round's full edge set stayed live — ~13 rounds
     x fact-scale blocks was the sf100 storage wall (979.9 s, a 15x
-    decade, SCALE.md round 8); with it, live scratch is O(one round)
-    exactly as in gr1/gr2's measured ~linear sf100 modes. Output is
-    bit-identical: retirement only drops blocks that are re-computable
-    from lineage and never referenced again.
+    decade, SCALE.md round 8); with it, live scratch is O(one round).
+    Output is bit-identical: retirement only drops blocks that are
+    re-computable from lineage and never referenced again.
 
     ``nodes``: one column ``id``; ``pairs``: columns ``id_a``, ``id_b``.
     """

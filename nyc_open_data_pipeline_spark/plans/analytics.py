@@ -12,8 +12,6 @@ DuckDB oracles must match value-for-value with no float tolerance.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -446,41 +444,6 @@ def z1_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sum is exact and order-independent — the iterative-float-drift problem
 # that forces rounding in cosine pipelines simply does not arise, and the
 # DuckDB oracle replays the identical 10 integer iterations bit-for-bit.
-_FP_PROP = "spark_graft.src_mtime_ns"
-
-
-def _served_edge_table(spark, sf_dir, short, key, build):
-    """One-time bucketed materialization of a corpus-derived edge frame,
-    served from the session catalog on repeat calls. Staleness-guarded: the
-    corpus mtime fingerprint (cache._dir_mtime_ns) is stamped as a table
-    property at write time and checked at serve time, so a dataset
-    regenerated in place rebuilds the table instead of silently serving
-    results over old data (round-7 review). ``build`` is a thunk returning
-    the edge DataFrame; it only runs when a (re)write is needed."""
-    from nyc_open_data_pipeline_spark.cache import _dir_mtime_ns
-    from nyc_open_data_pipeline_spark.catalog import (
-        _dir_slug,
-        autosize_shuffle_partitions,
-    )
-    from nyc_open_data_pipeline_spark.operators.bucketing import write_bucketed
-
-    bt = f"sg_{short}_{_dir_slug(sf_dir)}"
-    fp = str(_dir_mtime_ns(sf_dir))
-    if spark.catalog.tableExists(bt):
-        props = {
-            r["key"]: r["value"]
-            for r in spark.sql(f"SHOW TBLPROPERTIES {bt}").collect()
-        }
-        if props.get(_FP_PROP) != fp:
-            spark.sql(f"DROP TABLE {bt}")
-    if not spark.catalog.tableExists(bt):
-        nb = autosize_shuffle_partitions(spark, sf_dir) or 32
-        write_bucketed(build().repartition(nb, key), bt, key, buckets=nb)
-        spark.sql(f"ALTER TABLE {bt} SET TBLPROPERTIES ('{_FP_PROP}'='{fp}')")
-        spark.sparkContext._jvm.System.gc()  # retire build shuffles
-    return spark.table(bt)
-
-
 _PR_SCALE = 1_000_000_000_000  # 1e12 micro-units of rank mass
 _PR_DAMP_NUM, _PR_DAMP_DEN = 85, 100  # d = 0.85 as an exact ratio
 _PR_ITERS = 10
@@ -572,33 +535,8 @@ def gr1_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     lazy projections of that checkpoint, so the stored bytes are ~60% of
     the naive both-directions frame. That matters because on offset-key
     corpora the pair table is fact-scale (sf100: ~5.5e8 pairs, ~22 GB
-    checkpointed — the round-6 single-box disk ceiling in SCALE.md); on
-    a cluster the checkpoint lands on executor storage and pre-bucketing
-    the pair table by src makes every round's join exchange-free on the
-    edge side.
-
-    DISK-LIGHT MODE (SPARK_GRAFT_GR1_DISKLIGHT=1, round 7): replace the
-    fact-scale pair checkpoint with a ONE-TIME bucketed edge table of
-    the LEAN schema (src, dst, w) — no degree column — and run the whole
-    iteration off bucketed scans. Keeping s_u off the fact table removes
-    the two fact-scale degree joins from the build (its only exchanges
-    are the pair join, the groupBy, and the write repartition), and the
-    degree lives in a node-level frame (|C|+|S| rows) that joins the
-    two-BIGINT rank frame per round BEFORE touching edges. nodes, N and
-    deg all derive from the bucketed table exchange-free, so after the
-    one-time write NOTHING re-runs the pair build — the failure mode
-    that killed the first two sf100 attempts (p2's lazy lineage was
-    re-shuffled by the edge write, by `nodes`, and by every round: ~6
-    live fact-scale exchanges, ~47-50 GB scratch high-water, twice the
-    single-box budget). Each round's big-side join is exchange-free on
-    the edge side (only ranks-join-deg shuffles to match the bucket
-    layout), the previous round's rank blocks are unpersisted eagerly,
-    and a GC nudge lets the ContextCleaner retire round-k shuffle files
-    before round k+2 — live scratch stays O(one round). Same integer
-    arithmetic, bit-identical output (pinned by
-    tests/test_plans.test_gr1_disklight_bit_identical); this is also
-    exactly the cluster design (pre-bucketed edge table on shared
-    storage, degree as a node dimension), demoted to a single box."""
+    checkpointed — the round-6 single-box disk ceiling in SCALE.md). On
+    a cluster the pair checkpoint lands on executor storage."""
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     pair = (
@@ -609,47 +547,24 @@ def gr1_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").cast("long").alias("w"))
     )
-    disklight = os.environ.get("SPARK_GRAFT_GR1_DISKLIGHT") == "1"
-    if disklight:
-        def _lean():
-            return pair.select(
-                F.col("c").alias("src"), F.col("s").alias("dst"), "w"
-            ).unionByName(
-                pair.select(
-                    F.col("s").alias("src"), F.col("c").alias("dst"), "w"
-                )
-            )
-
-        e2 = _served_edge_table(spark, sf_dir, "gr1_edges", "src", _lean)
-        # degree and node set read the bucketed layout exchange-free;
-        # both are node-level (two BIGINTs wide), checkpointed once
-        deg = (
-            e2.groupBy("src")
-            .agg(F.sum("w").cast("long").alias("s_u"))
-            .localCheckpoint(eager=True)
+    outc = pair.groupBy("c").agg(F.sum("w").cast("long").alias("s_c"))
+    outs = pair.groupBy("s").agg(F.sum("w").cast("long").alias("s_s"))
+    p2 = pair.join(outc, "c").join(outs, "s").localCheckpoint(eager=True)
+    e2 = p2.select(
+        F.col("c").alias("src"), F.col("s").alias("dst"), "w",
+        F.col("s_c").alias("s_u"),
+    ).unionByName(
+        p2.select(
+            F.col("s").alias("src"), F.col("c").alias("dst"), "w",
+            F.col("s_s").alias("s_u"),
         )
-        nodes = deg.select(F.col("src").alias("node")).localCheckpoint(
-            eager=True
-        )
-    else:
-        outc = pair.groupBy("c").agg(F.sum("w").cast("long").alias("s_c"))
-        outs = pair.groupBy("s").agg(F.sum("w").cast("long").alias("s_s"))
-        p2 = pair.join(outc, "c").join(outs, "s").localCheckpoint(eager=True)
-        e2 = p2.select(
-            F.col("c").alias("src"), F.col("s").alias("dst"), "w",
-            F.col("s_c").alias("s_u"),
-        ).unionByName(
-            p2.select(
-                F.col("s").alias("src"), F.col("c").alias("dst"), "w",
-                F.col("s_s").alias("s_u"),
-            )
-        )
-        nodes = (
-            p2.select(F.col("c").alias("node"))
-            .unionByName(p2.select(F.col("s").alias("node")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    )
+    nodes = (
+        p2.select(F.col("c").alias("node"))
+        .unionByName(p2.select(F.col("s").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
     n_nodes = nodes.count()  # control-plane scalar (graph order)
     if n_nodes == 0:
         return spark.createDataFrame(
@@ -660,17 +575,12 @@ def gr1_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "node", F.lit(_PR_SCALE // n_nodes).cast("long").alias("r")
     )
     for _ in range(_PR_ITERS):
-        # disk-light: fold the node-level degree onto the rank frame
-        # first (node-sized join), so the edge-side join stays a bucketed
-        # scan with no fact-scale exchange and identical arithmetic
-        rhs = ranks.join(deg, ranks.node == deg.src).select("node", "r", "s_u") if disklight else ranks
         inflow = (
-            e2.join(rhs, e2.src == rhs.node)
+            e2.join(ranks, e2.src == ranks.node)
             .select("dst", F.expr("(r * w) div s_u").alias("contrib"))
             .groupBy("dst")
             .agg(F.sum("contrib").cast("long").alias("inflow"))
         )
-        prev = ranks
         ranks = (
             nodes.join(inflow, nodes.node == inflow.dst, "left")
             .select(
@@ -684,16 +594,6 @@ def gr1_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-        if disklight:
-            # retire the previous round's scratch promptly: its rank
-            # blocks via the LogicalRDD (DataFrame.unpersist is a
-            # cache-manager no-op on checkpointed frames, ADVICE r11)
-            # and, via ContextCleaner after the GC nudge, its inflow
-            # shuffle files — live disk stays O(one round)
-            from nyc_open_data_pipeline_spark.session import retire_local_checkpoint
-
-            retire_local_checkpoint(prev)
-            spark.sparkContext._jvm.System.gc()
     return (
         ranks.orderBy(F.desc("r"), F.asc("node"))
         .limit(_PR_TOP)
@@ -788,33 +688,10 @@ def gr2_salsa(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .agg(F.count("*").cast("long").alias("w"))
     )
-    disklight = os.environ.get("SPARK_GRAFT_GR2_DISKLIGHT") == "1"
-    if disklight:
-        # DISK-LIGHT MODE (round 7): the half-steps alternate join keys
-        # (customer side, then supplier side), so ONE bucketing axis only
-        # serves half the rounds — store the lean (c, s, w) edge frame
-        # TWICE, bucketed by each axis (the sf100 bucketing-axes probe's
-        # lesson: bucket each copy on the key of the join where it is the
-        # big side). Degrees live in node-level frames derived from the
-        # bucketed scans exchange-free; nothing re-runs the pair build.
-        e_c = _served_edge_table(spark, sf_dir, "gr2_edges_c", "c", lambda: pair)
-        e_s = _served_edge_table(spark, sf_dir, "gr2_edges_s", "s", lambda: pair)
-        deg_c = (
-            e_c.groupBy("c")
-            .agg(F.sum("w").cast("long").alias("s_c"))
-            .localCheckpoint(eager=True)
-        )
-        deg_s = (
-            e_s.groupBy("s")
-            .agg(F.sum("w").cast("long").alias("s_s"))
-            .localCheckpoint(eager=True)
-        )
-        custs = deg_c.select("c")
-    else:
-        outc = pair.groupBy("c").agg(F.sum("w").cast("long").alias("s_c"))
-        outs = pair.groupBy("s").agg(F.sum("w").cast("long").alias("s_s"))
-        e = pair.join(outc, "c").join(outs, "s").localCheckpoint(eager=True)
-        custs = e.select("c").distinct()
+    outc = pair.groupBy("c").agg(F.sum("w").cast("long").alias("s_c"))
+    outs = pair.groupBy("s").agg(F.sum("w").cast("long").alias("s_s"))
+    e = pair.join(outc, "c").join(outs, "s").localCheckpoint(eager=True)
+    custs = e.select("c").distinct()
     n_c = custs.count()  # control-plane scalar (hub-side order)
     if n_c == 0:
         return spark.createDataFrame(
@@ -823,46 +700,20 @@ def gr2_salsa(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = custs.select("c", F.lit(_PR_SCALE // n_c).cast("long").alias("h"))
     a = None
     for _ in range(_SALSA_ROUNDS):
-        prev_a, prev_h = a, h
-        if disklight:
-            # fold the node-level degree onto the score frame first, so
-            # the edge-side join is a bucketed scan with no fact-scale
-            # exchange — identical integer arithmetic to the default path
-            a = (
-                e_c.join(h.join(deg_c, "c"), "c")
-                .select("s", F.expr("(h * w) div s_c").alias("m"))
-                .groupBy("s")
-                .agg(F.sum("m").cast("long").alias("a"))
-                .localCheckpoint(eager=True)
-            )
-            h = (
-                e_s.join(a.join(deg_s, "s"), "s")
-                .select("c", F.expr("(a * w) div s_s").alias("m"))
-                .groupBy("c")
-                .agg(F.sum("m").cast("long").alias("h"))
-                .localCheckpoint(eager=True)
-            )
-            from nyc_open_data_pipeline_spark.session import retire_local_checkpoint
-
-            for fr in (prev_a, prev_h):  # retire round-(k-1) scratch
-                if fr is not None:
-                    retire_local_checkpoint(fr)
-            spark.sparkContext._jvm.System.gc()
-        else:
-            a = (
-                e.join(h, "c")
-                .select("s", F.expr("(h * w) div s_c").alias("m"))
-                .groupBy("s")
-                .agg(F.sum("m").cast("long").alias("a"))
-                .localCheckpoint(eager=True)
-            )
-            h = (
-                e.join(a, "s")
-                .select("c", F.expr("(a * w) div s_s").alias("m"))
-                .groupBy("c")
-                .agg(F.sum("m").cast("long").alias("h"))
-                .localCheckpoint(eager=True)
-            )
+        a = (
+            e.join(h, "c")
+            .select("s", F.expr("(h * w) div s_c").alias("m"))
+            .groupBy("s")
+            .agg(F.sum("m").cast("long").alias("a"))
+            .localCheckpoint(eager=True)
+        )
+        h = (
+            e.join(a, "s")
+            .select("c", F.expr("(a * w) div s_s").alias("m"))
+            .groupBy("c")
+            .agg(F.sum("m").cast("long").alias("h"))
+            .localCheckpoint(eager=True)
+        )
     auth = (
         a.orderBy(F.desc("a"), F.asc("s"))
         .limit(_SALSA_TOP)

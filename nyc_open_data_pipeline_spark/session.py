@@ -85,14 +85,10 @@ def get_spark(
     # The DEFAULT path is automatic: catalog.load_table derives AQE's
     # initialPartitionNum from the scale dir's on-disk bytes and lets AQE
     # coalesce small stages back down (catalog.autosize_shuffle_partitions),
-    # so no knob is needed at any scale. The env var remains as an explicit
-    # operator override (it also disables the auto-sizing).
-    shuffle_default = int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus))
-    )
+    # so no knob is needed at any scale.
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or shuffle_default))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -108,13 +104,6 @@ def get_spark(
         # let custom Python data sources receive pushed filters (SoQL S2)
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
-        # partition-size ceiling so 100TB scans split into sane tasks;
-        # overridable for scan-width A/Bs (few-file tables cap CPU-heavy
-        # scan stages at bytes/ceiling tasks — see SCALE.md round 7)
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"),
-        )
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
     )

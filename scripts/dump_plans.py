@@ -1,8 +1,7 @@
 #!/usr/bin/env python
-"""Dump .explain('formatted') for named queries to plans/<round>/<query>_<tag>.txt.
+"""Dump .explain('formatted') for named queries to plans/<tag>/<query>.txt.
 
 Usage: PYTHONPATH=. python scripts/dump_plans.py <tag> <query> [<query> ...]
-Round dir defaults to r14; override with SPARK_GRAFT_PLANS_ROUND.
 
 A working aid for plan inspection: dump a before/after pair around a change
 and diff it. The dumps are local scratch output, not committed files (the
@@ -20,9 +19,8 @@ def main() -> int:
     tag = sys.argv[1]
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    rnd = os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r14")
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag
     )
     os.makedirs(out_dir, exist_ok=True)
 
@@ -43,7 +41,7 @@ def main() -> int:
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: {type(exc).__name__}: {exc}", file=sys.stderr)
             continue
-        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as f:
             f.write(plan)
         print(f"wrote {path}")

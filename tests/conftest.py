@@ -8,10 +8,17 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
     from nyc_open_data_pipeline_spark.session import get_spark
 
-    s = get_spark("tests", shuffle_partitions=8)
+    # managed catalog tables (bucketed-join tests) land in a temp dir, not
+    # in a spark-warehouse/ under the working directory
+    warehouse = str(tmp_path_factory.mktemp("warehouse"))
+    s = get_spark(
+        "tests",
+        shuffle_partitions=8,
+        extra_conf={"spark.sql.warehouse.dir": warehouse},
+    )
     yield s
 
 

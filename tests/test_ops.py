@@ -1749,33 +1749,6 @@ def test_hyperplane_bucket_dim_mismatch_raises(spark):
         df.select(guarded.alias("b")).collect()
 
 
-def test_bucketed_copy_served_only_when_normalized(spark, sf_dir, monkeypatch):
-    """load_table must serve a bucketed catalog copy ONLY when it carries
-    the normalized marker property (round-6 ADVICE: an unmarked table —
-    e.g. written from a raw spark.read.parquet — would silently skip the
-    timestamp normalization load_table applies to the parquet path)."""
-    from nyc_open_data_pipeline_spark import catalog
-    from nyc_open_data_pipeline_spark.cache import SESSION_CACHE
-    from nyc_open_data_pipeline_spark.operators.bucketing import write_bucketed
-
-    bt = f"sg_bucketed_{catalog._dir_slug(sf_dir)}_orders"
-    full = catalog.load_table(spark, sf_dir, "orders")
-    # a 5-row decoy distinguishes "served the catalog table" from "read the
-    # parquet path" by row count alone
-    decoy = full.limit(5)
-    monkeypatch.setenv("SPARK_GRAFT_USE_BUCKETED", "1")
-    try:
-        # write_bucketed itself must invalidate the cached serving verdict
-        # (round-7 review) — no manual cache clears between rewrites
-        write_bucketed(decoy, bt, "o_orderkey", buckets=2)
-        assert catalog.load_table(spark, sf_dir, "orders").count() == full.count()
-        write_bucketed(decoy, bt, "o_orderkey", buckets=2, normalized=True)
-        assert catalog.load_table(spark, sf_dir, "orders").count() == 5
-    finally:
-        SESSION_CACHE.invalidate(catalog._bucketed_key(spark, bt))
-        spark.sql(f"DROP TABLE IF EXISTS {bt}")
-
-
 def test_dir_bytes_cache_invalidates_on_growth(tmp_path):
     """The autosizer's byte cache must re-walk when the dataset dir changes
     (round-6 ADVICE: a dir probed while small kept its stale byte count

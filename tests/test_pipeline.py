@@ -293,13 +293,8 @@ def test_autosize_shuffle_partitions(spark, tmp_path):
     spill fix with NO env knob): small dirs pin core-count, a 20 GB dir gets
     ~640 partitions, and the per-session high-water never shrinks so a scale
     switch cannot flap a later big query back into the spill regime."""
-    import os
-
     from nyc_open_data_pipeline_spark import catalog as C
 
-    from nyc_open_data_pipeline_spark.cache import SESSION_CACHE
-
-    assert not os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     par = spark.sparkContext.defaultParallelism
     spark.conf.unset(C._INITIAL_PARTITIONS)
 
@@ -324,24 +319,8 @@ def test_autosize_shuffle_partitions(spark, tmp_path):
     # high-water: revisiting the small dir must not shrink the width
     assert C.autosize_shuffle_partitions(spark, str(small)) == 640
 
-    # explicit operator override replaces auto-sizing: it must take effect
-    # even after the autosizer raised the high-water (the review-caught
-    # bug: the old early-return left a stale initialPartitionNum active
-    # and reported 0/stale as the target in effect)
-    os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"] = "256"
-    try:
-        SESSION_CACHE.invalidate(("_dir_input_bytes", str(big)))
-        assert C.autosize_shuffle_partitions(spark, str(big)) == 256
-        assert (
-            spark.conf.get(
-                "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-            )
-            == "256"
-        )
-    finally:
-        del os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"]
-        # restore for the rest of the suite (sf0.001 fixtures -> core count)
-        spark.conf.unset(C._INITIAL_PARTITIONS)
+    # restore for the rest of the suite (sf0.001 fixtures -> core count)
+    spark.conf.unset(C._INITIAL_PARTITIONS)
 
 
 def test_storage_concurrent_upserts_serialize(spark, tmp_path):
