@@ -15,8 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nyc_open_data_pipeline_spark.cache import SESSION_CACHE
 from nyc_open_data_pipeline_spark.plans.common import t
 from nyc_open_data_pipeline_spark.plans.registry import register
+from nyc_open_data_pipeline_spark.session import retire_local_checkpoint
 
 
 @register(
@@ -447,7 +449,43 @@ def z1_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PR_SCALE = 1_000_000_000_000  # 1e12 micro-units of rank mass
 _PR_DAMP_NUM, _PR_DAMP_DEN = 85, 100  # d = 0.85 as an exact ratio
 _PR_ITERS = 10
+_PR_CKPT_ROUND = 5  # the one eager checkpoint, after this round
 _PR_TOP = 20
+
+
+def _purchase_graph(spark: SparkSession, sf_dir: str):
+    """``(frame, n_c, n_s)`` for the customer<->supplier purchase graph,
+    built once per session and corpus and shared by gr1 and gr2.
+
+    ``frame`` is the single-direction pair table over raw keys,
+    ``(s, c, w, s_c, s_s)``: w = lineitems linking customer c to supplier
+    s, s_c / s_s = the customer's / supplier's total out-weight; eagerly
+    localCheckpoint'd. ``n_c`` / ``n_s`` are the distinct customer and
+    supplier counts, taken in one aggregate job. The session cache
+    rebuilds it when the corpus under ``sf_dir`` changes and retires the
+    superseded checkpoint's blocks."""
+
+    def build():
+        li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+        o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+        pair = (
+            li.join(o, li.l_orderkey == o.o_orderkey)
+            .groupBy(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
+            .agg(F.count("*").cast("long").alias("w"))
+        )
+        outc = pair.groupBy("c").agg(F.sum("w").cast("long").alias("s_c"))
+        outs = pair.groupBy("s").agg(F.sum("w").cast("long").alias("s_s"))
+        g = pair.join(outc, "c").join(outs, "s").localCheckpoint(eager=True)
+        n_c, n_s = g.agg(F.countDistinct("c"), F.countDistinct("s")).first()
+        return g, n_c, n_s
+
+    return SESSION_CACHE.get(
+        ("purchase_graph", spark.sparkContext.applicationId, sf_dir),
+        build,
+        sf_dir=sf_dir,
+        release=lambda v: retire_local_checkpoint(v[0]),
+        label="purchase_graph",
+    )
 
 
 def _gr1_oracle() -> str:
@@ -517,83 +555,62 @@ def gr1_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Graph: node ids encode entity type in the low bit (customer = 2k,
     supplier = 2k+1); each (customer, supplier) pair that shares at least
     one lineitem contributes a symmetric weighted edge (w = lineitem
-    count), so every node in `nodes` has out-weight >= 1 and the walk has
-    no dangling mass to redistribute. Rank lives in BIGINT micro-units
-    (1e12 = total mass 1.0): per-edge contribution (r*w) div s_u, damping
-    as the exact ratio 85/100, so iteration k is a pure integer function
-    of iteration k-1 — exact, associative, order-independent, and
-    bit-reproducible in any engine (overflow-safe while r * max edge
-    weight < 2^63; here r <= 1e12 and w is a per-pair lineitem count).
+    count), so every node has out-weight >= 1 and the walk has no dangling
+    mass to redistribute. Rank lives in BIGINT micro-units (1e12 = total
+    mass 1.0): per-edge contribution (r*w) div s_u, damping as the exact
+    ratio 85/100, so iteration k is a pure integer function of iteration
+    k-1 — exact, associative, order-independent, and bit-reproducible in
+    any engine (overflow-safe while r * max edge weight < 2^63; here
+    r <= 1e12 and w is a per-pair lineitem count).
 
-    Scale shape: 10 rounds of (join ranks on src + groupBy dst) — one
-    hash exchange per round on a (node, r) frame that is two BIGINTs
-    wide; each round's result is eagerly localCheckpoint'd so the logical
-    plan stays one round deep instead of compounding into a 10-join
-    lineage (d7's discipline for iterative Spark jobs). The pair table is
-    checkpointed ONCE in single-direction form carrying BOTH directional
-    out-weights — the bidirectional edge frame the rounds consume is two
-    lazy projections of that checkpoint, so the stored bytes are ~60% of
-    the naive both-directions frame. That matters because on offset-key
-    corpora the pair table is fact-scale (sf100: ~5.5e8 pairs, ~22 GB
-    checkpointed — the round-6 single-box disk ceiling in SCALE.md). On
-    a cluster the pair checkpoint lands on executor storage."""
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pair = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .agg(F.count("*").cast("long").alias("w"))
-    )
-    outc = pair.groupBy("c").agg(F.sum("w").cast("long").alias("s_c"))
-    outs = pair.groupBy("s").agg(F.sum("w").cast("long").alias("s_s"))
-    p2 = pair.join(outc, "c").join(outs, "s").localCheckpoint(eager=True)
-    e2 = p2.select(
-        F.col("c").alias("src"), F.col("s").alias("dst"), "w",
-        F.col("s_c").alias("s_u"),
-    ).unionByName(
-        p2.select(
-            F.col("s").alias("src"), F.col("c").alias("dst"), "w",
-            F.col("s_s").alias("s_u"),
-        )
-    )
-    nodes = (
-        p2.select(F.col("c").alias("node"))
-        .unionByName(p2.select(F.col("s").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_nodes = nodes.count()  # control-plane scalar (graph order)
+    Scale shape: the purchase graph is built once per session and corpus
+    (``_purchase_graph``, shared with gr2): the single-direction pair table
+    carrying BOTH directional out-weights, checkpointed once; the
+    bidirectional edge frame the rounds consume is two lazy projections of
+    it (~60% of the naive both-directions frame's stored bytes, which
+    matters on offset-key corpora where the pair table is fact-scale).
+    Each round is one join of ranks on src plus one groupBy(dst) over a
+    (node, r) frame two BIGINTs wide; round 1 needs no join at all. One
+    eager localCheckpoint after round _PR_CKPT_ROUND bounds the lazy plan
+    at _PR_CKPT_ROUND rounds instead of a 10-join lineage."""
+    g, n_c, n_s = _purchase_graph(spark, sf_dir)
+    n_nodes = n_c + n_s  # customers are even ids, suppliers odd: disjoint
     if n_nodes == 0:
         return spark.createDataFrame(
             [], "entity string, entity_id long, rank_micro long"
         )
-    base = ((_PR_DAMP_DEN - _PR_DAMP_NUM) * _PR_SCALE) // (_PR_DAMP_DEN * n_nodes)
-    ranks = nodes.select(
-        "node", F.lit(_PR_SCALE // n_nodes).cast("long").alias("r")
-    )
-    for _ in range(_PR_ITERS):
-        inflow = (
-            e2.join(ranks, e2.src == ranks.node)
-            .select("dst", F.expr("(r * w) div s_u").alias("contrib"))
-            .groupBy("dst")
-            .agg(F.sum("contrib").cast("long").alias("inflow"))
+    e2 = g.select(
+        (F.col("c") * 2).alias("src"), (F.col("s") * 2 + 1).alias("dst"), "w",
+        F.col("s_c").alias("s_u"),
+    ).unionByName(
+        g.select(
+            (F.col("s") * 2 + 1).alias("src"), (F.col("c") * 2).alias("dst"),
+            "w", F.col("s_s").alias("s_u"),
         )
-        ranks = (
-            nodes.join(inflow, nodes.node == inflow.dst, "left")
+    )
+    base = ((_PR_DAMP_DEN - _PR_DAMP_NUM) * _PR_SCALE) // (_PR_DAMP_DEN * n_nodes)
+
+    def step(contrib: str, edges: DataFrame) -> DataFrame:
+        # Every edge has its mirror, so every node is the dst of at least
+        # one edge: the groupBy(dst) covers exactly the node set, and the
+        # oracle's `nodes LEFT JOIN inflow` adds no row and no NULL inflow.
+        return (
+            edges.groupBy(F.col("dst").alias("node"))
+            .agg(F.sum(F.expr(contrib)).cast("long").alias("inflow"))
             .select(
                 "node",
-                F.expr(
-                    f"{base} + ({_PR_DAMP_NUM} * coalesce(inflow, 0))"
-                    f" div {_PR_DAMP_DEN}"
-                )
+                F.expr(f"{base} + ({_PR_DAMP_NUM} * inflow) div {_PR_DAMP_DEN}")
                 .cast("long")
                 .alias("r"),
             )
-            .localCheckpoint(eager=True)
         )
+
+    # round 1: every starting rank is the constant SCALE div n
+    ranks = step(f"({_PR_SCALE // n_nodes} * w) div s_u", e2)
+    for k in range(2, _PR_ITERS + 1):
+        ranks = step("(r * w) div s_u", e2.join(ranks, e2.src == ranks.node))
+        if k == _PR_CKPT_ROUND:
+            ranks = ranks.localCheckpoint(eager=True)
     return (
         ranks.orderBy(F.desc("r"), F.asc("node"))
         .limit(_PR_TOP)
@@ -678,25 +695,16 @@ def gr2_salsa(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-reproducible cross-engine, like gr1.
 
     Scale shape: the single-direction pair table with both out-weights is
-    checkpointed once (gr1's layout); each half-step is one join + one
-    groupBy on a two-column score frame. Ten half-steps = ten bounded
-    exchanges; per-round eager localCheckpoint keeps the plan shallow."""
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pair = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .agg(F.count("*").cast("long").alias("w"))
-    )
-    outc = pair.groupBy("c").agg(F.sum("w").cast("long").alias("s_c"))
-    outs = pair.groupBy("s").agg(F.sum("w").cast("long").alias("s_s"))
-    e = pair.join(outc, "c").join(outs, "s").localCheckpoint(eager=True)
-    custs = e.select("c").distinct()
-    n_c = custs.count()  # control-plane scalar (hub-side order)
+    gr1's purchase graph, built once per session and corpus
+    (``_purchase_graph``); each half-step is one join + one groupBy on a
+    two-column score frame. Ten half-steps = ten bounded exchanges;
+    per-half-step eager localCheckpoint keeps the plan shallow."""
+    e, n_c, _ = _purchase_graph(spark, sf_dir)
     if n_c == 0:
         return spark.createDataFrame(
             [], "side string, entity_id long, score_micro long"
         )
+    custs = e.select("c").distinct()
     h = custs.select("c", F.lit(_PR_SCALE // n_c).cast("long").alias("h"))
     a = None
     for _ in range(_SALSA_ROUNDS):

@@ -1512,27 +1512,9 @@ def test_dsir_importance_ranks_target_vocabulary(spark, tmp_path):
     shutil.rmtree(sf, ignore_errors=True)
 
 
-def test_pagerank_matches_integer_reference(spark, tmp_path):
-    """gr1's distributed 10-round loop == an independent single-threaded
-    reimplementation of the SAME integer recurrence on a hand graph, for
-    EVERY node (not just the top-20 cut) — and total rank mass stays
-    within the floor-loss bound (each node loses < 1 micro-unit per
-    division, two divisions per round)."""
-    import shutil
-
-    from nyc_open_data_pipeline_spark.plans.analytics import (
-        _PR_DAMP_DEN,
-        _PR_DAMP_NUM,
-        _PR_ITERS,
-        _PR_SCALE,
-        gr1_pagerank,
-    )
-
-    # 3 customers x 2 suppliers; customer 1 dominates supplier 10's inflow
-    pairs = {  # (custkey, suppkey) -> lineitem count
-        (1, 10): 4, (1, 20): 1, (2, 10): 2, (3, 20): 1,
-    }
-    sf = str(tmp_path / "sf")
+def _write_purchase_graph(spark, sf: str, pairs: dict) -> None:
+    """orders + lineitem parquet under ``sf`` whose purchase graph is
+    ``pairs``: (custkey, suppkey) -> lineitem count, one order per pair."""
     orders, lineitem, oid = [], [], 0
     for (c, s), w in sorted(pairs.items()):
         oid += 1
@@ -1545,7 +1527,16 @@ def test_pagerank_matches_integer_reference(spark, tmp_path):
         f"{sf}/lineitem.parquet"
     )
 
-    # independent reference: same recurrence, plain dicts
+
+def _pagerank_reference(pairs: dict) -> dict:
+    """gr1's integer recurrence in plain dicts: node id -> rank_micro."""
+    from nyc_open_data_pipeline_spark.plans.analytics import (
+        _PR_DAMP_DEN,
+        _PR_DAMP_NUM,
+        _PR_ITERS,
+        _PR_SCALE,
+    )
+
     edges = []
     for (c, s), w in pairs.items():
         edges.append((2 * c, 2 * s + 1, w))
@@ -1562,20 +1553,86 @@ def test_pagerank_matches_integer_reference(spark, tmp_path):
         for src, dst, w in edges:
             inflow[dst] += (r[src] * w) // outw[src]
         r = {v: base + (_PR_DAMP_NUM * inflow[v]) // _PR_DAMP_DEN for v in nodes}
+    return r
 
-    got = {
+
+def _pagerank_rows(spark, sf: str) -> dict:
+    from nyc_open_data_pipeline_spark.plans.analytics import gr1_pagerank
+
+    return {
         (row["entity"], row["entity_id"]): row["rank_micro"]
         for row in gr1_pagerank(spark, sf).collect()
     }
-    exp = {
+
+
+def _by_entity(r: dict) -> dict:
+    return {
         ("customer" if v % 2 == 0 else "supplier", v // 2): rv
         for v, rv in r.items()
     }
-    assert got == exp
+
+
+# 3 customers x 2 suppliers; customer 1 dominates supplier 10's inflow
+_HAND_PAIRS = {(1, 10): 4, (1, 20): 1, (2, 10): 2, (3, 20): 1}
+
+
+def test_pagerank_matches_integer_reference(spark, tmp_path):
+    """gr1's distributed 10-round loop == an independent single-threaded
+    reimplementation of the SAME integer recurrence on a hand graph, for
+    EVERY node (not just the top-20 cut) — and total rank mass stays
+    within the floor-loss bound (each node loses < 1 micro-unit per
+    division, two divisions per round)."""
+    import shutil
+
+    from nyc_open_data_pipeline_spark.plans.analytics import _PR_ITERS, _PR_SCALE
+
+    sf = str(tmp_path / "sf")
+    _write_purchase_graph(spark, sf, _HAND_PAIRS)
+    r = _pagerank_reference(_HAND_PAIRS)
+    n = len(r)
+    assert _pagerank_rows(spark, sf) == _by_entity(r)
     # mass conservation up to floor losses: 2 floors/node/round
     assert _PR_SCALE >= sum(r.values()) > _PR_SCALE - 2 * n * _PR_ITERS - n
     # the dominant supplier earned the top rank
     assert max(r, key=r.get) == 2 * 10 + 1
+    shutil.rmtree(sf, ignore_errors=True)
+
+
+def test_purchase_graph_built_once_and_never_served_stale(spark, tmp_path):
+    """gr1 and gr2 share one purchase-graph build per session and corpus:
+    a warm gr1 run launches at most 30 jobs (84 when every run rebuilt the
+    graph and checkpointed each round), gr2 after gr1 records no graph
+    build, and a lineitem table rewritten in place with a different pair
+    set is answered from the new graph, never from the cached one."""
+    import shutil
+
+    from test_ingest_pass import _jobs_of
+
+    from nyc_open_data_pipeline_spark.cache import SESSION_CACHE
+    from nyc_open_data_pipeline_spark.plans.analytics import gr2_salsa
+
+    sf = str(tmp_path / "sf")
+    _write_purchase_graph(spark, sf, _HAND_PAIRS)
+    key = ("purchase_graph", spark.sparkContext.applicationId, sf)
+    try:
+        _pagerank_rows(spark, sf)  # cold: builds the graph
+        got, jobs = _jobs_of(spark, "gr1-warm", lambda: _pagerank_rows(spark, sf))
+        assert got == _by_entity(_pagerank_reference(_HAND_PAIRS))
+        assert jobs <= 30, jobs
+        SESSION_CACHE.drain_build_secs()
+        gr2_salsa(spark, sf).collect()
+        assert "purchase_graph" not in SESSION_CACHE.drain_build_secs()
+
+        # same orders (ids 1-4 by sorted pair); customer 3's order 4 now
+        # buys from supplier 10 and a new supplier 30
+        lineitem = [(1, 10)] * 4 + [(2, 20)] + [(3, 10)] * 2 + [(4, 10)] * 3 + [(4, 30)]
+        spark.createDataFrame(lineitem, "l_orderkey long, l_suppkey long").write.mode(
+            "overwrite"
+        ).parquet(f"{sf}/lineitem.parquet")
+        moved = {(1, 10): 4, (1, 20): 1, (2, 10): 2, (3, 10): 3, (3, 30): 1}
+        assert _pagerank_rows(spark, sf) == _by_entity(_pagerank_reference(moved))
+    finally:
+        SESSION_CACHE.invalidate(key)
     shutil.rmtree(sf, ignore_errors=True)
 
 
@@ -1674,19 +1731,9 @@ def test_salsa_matches_integer_reference(spark, tmp_path):
         gr2_salsa,
     )
 
-    pairs = {(1, 10): 4, (1, 20): 1, (2, 10): 2, (3, 20): 1}
+    pairs = _HAND_PAIRS
     sf = str(tmp_path / "sf")
-    orders, lineitem, oid = [], [], 0
-    for (c, s), w in sorted(pairs.items()):
-        oid += 1
-        orders.append((oid, c))
-        lineitem += [(oid, s)] * w
-    spark.createDataFrame(orders, "o_orderkey long, o_custkey long").write.parquet(
-        f"{sf}/orders.parquet"
-    )
-    spark.createDataFrame(lineitem, "l_orderkey long, l_suppkey long").write.parquet(
-        f"{sf}/lineitem.parquet"
-    )
+    _write_purchase_graph(spark, sf, pairs)
 
     s_c, s_s = {}, {}
     for (c, s), w in pairs.items():
@@ -2103,8 +2150,11 @@ def test_star_components_join_attach_is_aqe_skew_splittable(spark, monkeypatch):
 def test_retire_local_checkpoint_actually_frees_blocks(spark):
     """ADVICE r12: DataFrame.unpersist() is a silent no-op on a
     localCheckpoint'd frame (cache manager has no entry for the
-    LogicalRDD plan); retire_local_checkpoint must free the blocks NOW
-    — gr1/gr2/gr3's per-round scratch retirement depends on it."""
+    LogicalRDD plan); retire_local_checkpoint must free the blocks NOW.
+    Its callers depend on it: ``storage.staged`` (the staged batch),
+    ``star_components`` (gr3's per-round scratch), the streaming dedup
+    sinks' per-batch checkpoints and the session cache's release of a
+    superseded purchase graph (gr1/gr2)."""
     from nyc_open_data_pipeline_spark.session import retire_local_checkpoint
 
     jsc = spark.sparkContext._jsc.sc()
